@@ -5,10 +5,12 @@ The Spark-side machinery — schemas, batch iteration, partition sizing,
 UDF signatures — is real and tested. Decode is REAL, pure
 stdlib+numpy, for: PNG (zlib inflate + all five scanline filters),
 baseline JPEG (``jpeg.decode_jpeg``), GIF87a/89a (``gif.decode_gif``,
-LZW), WAV audio (``audio.decode_wav``, PCM + IEEE float), and AVI
-video (``video.decode_avi`` — MJPEG via the JPEG decoder or BI_RGB
-DIB frames; ≤4 sampled frames, temporally pooled). Remaining formats
-(WebP, MP3/OGG, modern video codecs) stay stubbed behind
+LZW), lossless WebP (``webp.decode_webp``, VP8L), WAV audio
+(``audio.decode_wav``, PCM + IEEE float), FLAC audio
+(``flac.decode_flac``), and AVI video (``video.decode_avi`` — MJPEG
+via the JPEG decoder or BI_RGB DIB frames; ≤4 sampled frames,
+temporally pooled). Remaining formats (lossy WebP/VP8, MP3/OGG,
+modern video codecs) stay stubbed behind
 ``KGAP_FAKE_DECODE`` (their codec libraries are not in this
 container); the stub is a deterministic pure function of the bytes, so
 tests exercise the full distributed path with stable outputs. Swapping
@@ -185,14 +187,15 @@ _GIF_SIG = b"GIF8"
 
 
 def _decode_image(payload: bytes) -> list[float] | None:
-    """PNG, baseline JPEG, and GIF → REAL decode (pure stdlib+numpy:
-    ``decode_png`` here, ``jpeg.decode_jpeg``, ``gif.decode_gif``) →
+    """PNG, baseline JPEG, GIF and lossless WebP → REAL decode (pure
+    stdlib+numpy: ``decode_png`` here, ``jpeg.decode_jpeg``,
+    ``gif.decode_gif``, ``webp.decode_webp``) →
     pooled features. A recognized-signature payload that fails to
     decode (corrupt, palette/16-bit/interlaced PNG,
     progressive JPEG or sampling factors >2, truncated) yields NULL
     features —
     per-row error isolation; one bad image in a 10¹²-doc corpus must
-    not fail the whole extract job. Remaining formats (WebP/…):
+    not fail the whole extract job. Remaining formats (lossy WebP/…):
     deterministic fake under ``KGAP_FAKE_DECODE`` (their codecs
     aren't in this container)."""
     data = payload or b""
@@ -234,10 +237,10 @@ def _decode_image(payload: bytes) -> list[float] | None:
 
 
 def _decode_audio(payload: bytes) -> list[float] | None:
-    """WAV (RIFF PCM/IEEE-float) → REAL decode (``audio.decode_wav``,
-    pure stdlib+numpy) → pooled features; a recognized RIFF payload
-    that fails to decode yields NULL features (same per-row isolation
-    as images). Compressed codecs (MP3/OGG/AAC): deterministic fake
+    """WAV (RIFF PCM/IEEE-float) and FLAC → REAL decode
+    (``audio.decode_wav``, ``flac.decode_flac``, pure stdlib+numpy) →
+    pooled features; a recognized payload that fails to decode yields
+    NULL features (same per-row isolation as images). Compressed codecs (MP3/OGG/AAC): deterministic fake
     under ``KGAP_FAKE_DECODE`` — soundfile/torchaudio aren't in this
     container."""
     data = payload or b""

@@ -245,15 +245,13 @@ def fts_search_indexed(
     # N_TOKEN_BUCKETS partitions just to prune them again cost ~0.3 s
     # per search locally and a full directory listing at scale;
     # basePath keeps the `_bucket` partition column in the schema.
-    # Buckets with no postings yet have no directory — skip them.
-    import os as _os
-
-    from kgap_spark.io.fs import join as _join
+    # Buckets with no postings yet have no directory — skip them (on
+    # any filesystem scheme, via the Hadoop FileSystem API).
+    from kgap_spark.io import fs
 
     dirs = [
-        _join(path, f"_bucket={b}") for b in bucket_ids
-        if _os.path.isdir(_os.path.join(path, f"_bucket={b}"))
-        or "://" in path  # non-local FS: let Spark resolve
+        d for d in (fs.join(path, f"_bucket={b}") for b in bucket_ids)
+        if fs.exists(spark, d)
     ]
     if not dirs:
         posting = spark.read.parquet(path)

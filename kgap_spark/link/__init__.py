@@ -1,2 +1,2 @@
-from kgap_spark.link.score import score_candidates, disambiguate  # noqa: F401
+from kgap_spark.link.score import link_mentions  # noqa: F401
 from kgap_spark.link.candidates import fuzzy_candidates  # noqa: F401

@@ -1,54 +1,26 @@
-"""Candidate scoring + disambiguation (argmax per mention).
+"""Linking: the argmax over candidate entities per mention.
 
 The published linking rule (shared with the fixture oracle,
 ``fixtures.linked_entity_for_alias``): among language-routed candidate
-entities for a mention, pick argmax by ``(score DESC, entity_id ASC)``
-where the score is the dictionary prior plus an (extensible) context
-term. The tie-break on ``entity_id`` makes disambiguation *totally
-deterministic* — float-equal scores can never flip results between runs
-or partitionings (SURVEY §7 risk list).
+entities for a mention, pick argmax by ``(prior DESC, entity_id ASC)``.
+The tie-break on ``entity_id`` makes linking *totally deterministic* —
+float-equal priors can never flip results between runs or
+partitionings (SURVEY §7 risk list).
 
-The score itself is computed in an Arrow-vectorized pandas UDF — the
-north star mandates linking "scored in pandas UDFs"; this is the hook
-where a real system plugs embedding-similarity context scores. The
-argmax is a window ``row_number() == 1`` (SURVEY §2.6: the reference has
-no window functions; this is our internal best-candidate selection).
+The argmax is a Catalyst aggregation on the dictionary prior; no row
+crosses into Python here (extraction is the pipeline's only pandas-UDF
+boundary).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
-@F.pandas_udf(T.DoubleType())
-def _score_udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-    """score = prior + log1p(tf) * 1e-3 (context hook).
-
-    Vectorized over Arrow batches; the tf term only breaks prior ties
-    within a page, never across the prior ordering (priors differ by
-    ≥ 0.0001 in the dictionary; 1e-3·log1p(tf) stays below that for the
-    tf ranges the tests cover — and the entity_id tie-break still makes
-    the result deterministic regardless).
-    """
-    import numpy as np
-
-    for prior, tf in it:
-        yield prior + np.log1p(tf.astype("float64")) * 1e-3
-
-
-def score_candidates(cands: DataFrame) -> DataFrame:
-    """(url, alias, entity_id, prior, tf) → + score column."""
-    return cands.withColumn("score", _score_udf(F.col("prior"), F.col("tf")))
-
-
-def disambiguate(cands: DataFrame) -> DataFrame:
-    """Per (url, alias): keep the argmax-(prior desc, entity_id asc)
-    candidate. Preserves all other columns.
+def link_mentions(cands: DataFrame) -> DataFrame:
+    """Per (url, lang, alias): keep the argmax-(prior desc, entity_id
+    asc) candidate. Preserves all other columns.
 
     Implemented as an aggregation argmax — ``min`` over a
     ``struct((-prior), entity_id, …)`` sort key — instead of a window
@@ -58,27 +30,15 @@ def disambiguate(cands: DataFrame) -> DataFrame:
     a mutable hash-agg buffer type); measured at sf1 the whole argmax
     stage costs ~0.3 s of the query's 6.5 s — the candidate explode +
     broadcast join dominates — so the per-group sort over the already
-    tf-aggregated candidate set is not worth an order-preserving
+    distinct candidate set is not worth an order-preserving
     string-encoding workaround.
     """
     keys = ["url", "lang", "alias"]
     payload = [c for c in cands.columns if c not in keys]
-    # the scored path ranks by score FIRST (that's the context hook's
-    # whole purpose — previously the UDF's score was computed and then
-    # ignored); unscored candidates fall back to prior. entity_id keeps
-    # the result total either way.
-    lead = ([(-F.col("score")).alias("_ns")] if "score" in cands.columns
-            else [])
     sort_struct = F.struct(
-        *lead,
         (-F.col("prior")).alias("_np"),
         F.col("entity_id").alias("_eid"),
         *[F.col(c).alias(c) for c in payload],
     )
     best = cands.groupBy(*keys).agg(F.min(sort_struct).alias("_b"))
     return best.select(*keys, *[F.col(f"_b.{c}").alias(c) for c in payload])
-
-
-def link_mentions(cands: DataFrame) -> DataFrame:
-    """Full linking: score (pandas UDF) then argmax disambiguation."""
-    return disambiguate(score_candidates(cands))

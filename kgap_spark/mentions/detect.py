@@ -14,7 +14,7 @@ language-tagged-literal filter ``FILTER(LANG(?label) = 'en')``
 
 Scale notes (100 TB): the n-gram explode multiplies rows by ~3× token
 count, but it feeds directly into a broadcast join + partial aggregation
-— no shuffle until the per-(url, alias) count, which AQE coalesces. The
+— no shuffle until the per-(url, alias) distinct, which AQE coalesces. The
 dictionary stays < autoBroadcastJoinThreshold by design (SURVEY §2.4 J6).
 """
 
@@ -102,17 +102,17 @@ def _first_token_grams(pages: DataFrame, alias_dict: DataFrame,
 
 # Direct-scan fast path: above this many distinct (valid) aliases the
 # per-document contains() chain stops being cheaper than the exploded
-# gram join; callers fall back to the generic path.
+# gram join; mention_entities then takes the general path.
 MAX_DIRECT_SCAN_ALIASES = 64
 
 
 def mention_entities_direct(
     pages: DataFrame, alias_dict: DataFrame, text_col: str = "text"
 ) -> DataFrame | None:
-    """Disambiguated ``(url, entity_id)`` mention pairs for a SMALL
-    dictionary via a direct substring scan — provably equivalent to
-    ``disambiguate(detect_mentions(pages, d)).select("url", "entity_id")``
-    but with no token explode, no join, and no tf aggregation.
+    """Linked ``(url, entity_id)`` mention pairs for a SMALL dictionary
+    via a direct substring scan — provably equivalent to
+    ``link_mentions(detect_mentions(pages, d)).select("url", "entity_id")``
+    but with no token explode, no join, and no candidate aggregation.
 
     Why it is equivalent (the knowledge Catalyst cannot use):
     - a gram is 1..MAX_ALIAS_TOKENS tokens of ``split(lower(text), \\s+)``
@@ -122,18 +122,22 @@ def mention_entities_direct(
       spaces); aliases whose own whitespace is not already
       single-space-normalized, or with > MAX_ALIAS_TOKENS tokens, can
       never equal a gram and are dropped up front;
-    - the argmax in ``disambiguate`` is per (url, alias) over the
+    - the argmax in ``link_mentions`` is per (url, alias) over the
       lang-routed candidate entities by (prior DESC, entity_id ASC) —
       a pure function of (alias, doc lang) that is precomputed
-      driver-side into a tiny CASE-on-lang expression per alias, so tf
-      (which only rides along in the payload) never matters.
+      driver-side into a tiny CASE-on-lang expression per alias;
+    - aliases are lowercased by Python's ``str.lower()`` here and by
+      the JVM's ``lower()`` on the general path; the two agree on the
+      non-ASCII case mappings the equivalence test pins (dotted
+      capital I, capital sharp s, Greek final sigma).
 
     Scale shape: one regexp pass + |aliases| codegen'd ``Contains``
     per document, one explode bounded by |aliases|, ONE shuffle (the
-    caller's distinct) — vs the generic path's corpus-sized explode,
+    caller's distinct) — vs the general path's corpus-sized explode,
     broadcast join and two aggregations. Returns None when the
     dictionary exceeds ``MAX_DIRECT_SCAN_ALIASES`` distinct aliases
-    (or cannot be collected) — the generic path stays the fallback.
+    (or cannot be collected); ``mention_entities`` then takes the
+    general path.
     """
     import re as _re
 
@@ -160,7 +164,7 @@ def mention_entities_direct(
         return None
 
     def _best(cands: list[tuple[str, float]]) -> str:
-        # argmax by (prior DESC, entity_id ASC) — disambiguate's key
+        # argmax by (prior DESC, entity_id ASC) — link_mentions' key
         return min(cands, key=lambda c: (-c[1], c[0]))[0]
 
     padded = F.col("_padded")
@@ -220,16 +224,36 @@ def mention_entities_direct(
     return matched
 
 
+def mention_entities(
+    pages: DataFrame, alias_dict: DataFrame, text_col: str = "text"
+) -> DataFrame:
+    """Linked ``(url, entity_id)`` mention pairs — the one mention
+    dispatcher shared by the pipeline (``build_triples``) and the
+    ``kg_mentions`` query. A dictionary of at most
+    ``MAX_DIRECT_SCAN_ALIASES`` aliases takes ``mention_entities_direct``;
+    a larger one takes ``link_mentions`` over ``detect_mentions``. Both
+    apply the same linking rule, so the choice changes cost, not rows.
+    A pair repeats once per linked alias; callers take the distinct."""
+    from kgap_spark.link.score import link_mentions
+
+    direct = mention_entities_direct(pages, alias_dict, text_col)
+    if direct is not None:
+        return direct
+    cands = detect_mentions(pages, alias_dict, text_col)
+    return link_mentions(cands).select("url", "entity_id")
+
+
 def detect_mentions(
     pages: DataFrame, alias_dict: DataFrame, text_col: str = "text"
 ) -> DataFrame:
     """pages(url, lang, text) × alias_dict → candidate mentions.
 
-    Returns ``(url, lang, alias, entity_id, prior, tf)`` — one row per
-    (page, alias, candidate entity) with the term frequency of the alias
-    in the page. The dictionary side is explicitly ``broadcast`` (J6);
-    the gram stream is start-position-pruned by the dictionary's first
-    tokens (identical result — the join drops non-hits regardless)."""
+    Returns ``(url, lang, alias, entity_id, prior)`` — one row per
+    (page, alias, candidate entity, prior), however often the alias
+    occurs in the page or the row repeats in the dictionary. The
+    dictionary side is explicitly ``broadcast`` (J6); the gram stream
+    is start-position-pruned by the dictionary's first tokens
+    (identical result — the join drops non-hits regardless)."""
     grams = _first_token_grams(
         pages.select("url", "lang", text_col), alias_dict, text_col
     )
@@ -252,10 +276,7 @@ def detect_mentions(
         ),
         "inner",
     )
-    return (
-        joined.groupBy("url", "lang", "alias", "entity_id", "prior")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    return joined.select("url", "lang", "alias", "entity_id", "prior").distinct()
 
 
 def detect_mentions_fuzzy(
@@ -273,7 +294,7 @@ def detect_mentions_fuzzy(
     typo'd/inflected surface forms. Scale shape: the fuzzy join's left
     side is the *distinct unmatched gram vocabulary* (anti-joined
     against aliases, length-filtered) — vocabulary-sized, NOT
-    corpus-sized; matches then re-join the gram stream to count tf.
+    corpus-sized; matches then re-join the gram stream to find pages.
     Fuzzy candidates carry ``prior × (1 − jaccard_dist)`` so an exact
     match always outranks a fuzzy one for the same entity."""
     from kgap_spark.link.candidates import fuzzy_candidates
@@ -300,10 +321,10 @@ def detect_mentions_fuzzy(
             | (F.col("alias_lang") == F.lit("*"))
             | F.col("alias_lang").isNull()
         )
-        .groupBy(
+        .select(
             "url", "lang", "alias", "entity_id",
             (F.col("prior") * (F.lit(1.0) - F.col("jaccard_dist"))).alias("prior"),
         )
-        .agg(F.count(F.lit(1)).alias("tf"))
+        .distinct()
     )
     return exact.unionByName(fuzzy)

@@ -104,8 +104,9 @@ def build_triples(
 ) -> DataFrame:
     """Full pipeline: pages + dictionary → quad DataFrame (lazy).
 
-    extract → detect → link → canonicalize → materialize. Each stage is
-    a pure DataFrame transformation; nothing is collected driver-side.
+    extract → detect + link (``mention_entities``) → canonicalize →
+    materialize. Each stage is a pure DataFrame transformation; only
+    dictionary-sized data is read driver-side.
 
     ``canon``: a precomputed ``canonical_mapping(alias_dict)`` — pass it
     when calling per micro-batch (streaming) so the CC iterations run
@@ -113,12 +114,10 @@ def build_triples(
     """
     from kgap_spark.canonicalize import canonical_mapping
     from kgap_spark.extract import with_extracted_text
-    from kgap_spark.link.score import link_mentions
-    from kgap_spark.mentions import detect_mentions
+    from kgap_spark.mentions import mention_entities
 
     pages_t = with_extracted_text(pages)
-    cands = detect_mentions(pages_t, alias_dict)
-    linked = link_mentions(cands)
+    linked = mention_entities(pages_t, alias_dict)
 
     # The canonical mapping is dictionary-sized and referenced by TWO
     # branches of the output union (mention rewrite + dict triples);

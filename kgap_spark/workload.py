@@ -72,11 +72,7 @@ def q_kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents × broadcast alias dict → (subj, pred, obj) mention
     triples with lang routing + prior-argmax disambiguation (SURVEY
     §2.4 J6, §2.6 argmax window)."""
-    from kgap_spark.link.score import disambiguate
-    from kgap_spark.mentions.detect import (
-        detect_mentions,
-        mention_entities_direct,
-    )
+    from kgap_spark.mentions import mention_entities
 
     docs = _t(spark, sf_dir, "documents").select(
         F.concat(F.lit("doc:"), F.col("doc_id").cast("string")).alias("url"),
@@ -86,16 +82,8 @@ def q_kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     alias_dict = spark.createDataFrame(
         MENTION_DICT, "alias string, entity_id string, lang string, prior double"
     )
-    # r07 optimization: small dictionaries take the direct-scan path
-    # (one contains() chain per doc, ONE shuffle) — equivalence with
-    # the generic explode+join+argmax path is proven in
-    # tests/test_functions.py::test_mention_entities_direct_equivalence
-    # and by the unchanged DuckDB oracle.
-    linked = mention_entities_direct(docs, alias_dict)
-    if linked is None:  # dictionary too large for the direct scan
-        linked = disambiguate(detect_mentions(docs, alias_dict))
     return (
-        linked.select(
+        mention_entities(docs, alias_dict).select(
             F.col("url").alias("subj"),
             F.lit("kgap:mentions").alias("pred"),
             F.col("entity_id").alias("obj"),
@@ -494,7 +482,7 @@ def q_latest_version(spark, sf_dir):
     event_id DESC) = 1`` because struct comparison is lexicographic and
     (ts, event_id) leads. Map-side partial aggregation replaces the
     per-partition sort, which also neutralizes hot-user skew at scale
-    (same pattern as link/score.disambiguate)."""
+    (same pattern as link.score.link_mentions)."""
     _utc(spark)
     e = _t(spark, sf_dir, "events")
     best = (

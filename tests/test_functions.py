@@ -378,6 +378,30 @@ def test_append_posting_table_incremental(spark, tmp_path):
     assert set((tmp_path / "bare").rglob("*.parquet")) == files_before
 
 
+def test_fts_search_indexed_uri_path_skips_absent_bucket(spark, tmp_path):
+    """A scheme-qualified index path must resolve bucket existence like
+    a local one: a query token whose bucket directory does not exist
+    is skipped, not read (PATH_NOT_FOUND)."""
+    from kgap_spark.index.fts import (
+        bucket_of_py,
+        build_posting_table,
+        fts_search_indexed,
+        write_posting_table,
+    )
+
+    docs = spark.createDataFrame(
+        [(0, "alpha beta"), (1, "beta gamma")], "doc_id long, text string"
+    )
+    local = str(tmp_path / "idx")
+    write_posting_table(build_posting_table(docs, "doc_id", "text"), local)
+    present = {bucket_of_py(t) for t in ("alpha", "beta", "gamma")}
+    absent = next(t for t in (f"zz{i}" for i in range(1000))
+                  if bucket_of_py(t) not in present)
+    for path in (local, "file://" + local):
+        hits = fts_search_indexed(spark, path, f"beta {absent}", k=5)
+        assert {r.subj for r in hits.collect()} == {0, 1}
+
+
 def test_cosine_topk_and_lsh_recall(spark):
     from kgap_spark.functions.similarity import cosine_topk, lsh_bucketed_topk
 
@@ -479,13 +503,13 @@ def test_detect_mentions_case_and_null_lang(spark):
 
 def test_mention_entities_direct_equivalence(spark):
     """The r07 direct-scan fast path must produce EXACTLY the same
-    (url, entity_id) set as disambiguate(detect_mentions(...)) on an
+    (url, entity_id) set as link_mentions(detect_mentions(...)) on an
     adversarial corpus: irregular whitespace, leading/trailing
     whitespace, ambiguous aliases, lang routing (specific, '*', NULL
     doc lang), multi-token aliases split across newlines/tabs, aliases
     that can never match a gram (4 tokens, internal double space,
     leading space, empty), and empty/whitespace-only documents."""
-    from kgap_spark.link.score import disambiguate
+    from kgap_spark.link.score import link_mentions
     from kgap_spark.mentions.detect import (
         detect_mentions,
         mention_entities_direct,
@@ -503,6 +527,12 @@ def test_mention_entities_direct_equivalence(spark):
             ("u8", "en", "   \t\n "),
             ("u9", "en", "wordspark sparkword spark"),  # boundary checks
             ("u10", "en", "a b c d quad gram here"),
+            # non-ASCII case mapping: dotted capital I, capital sharp s,
+            # Greek final sigma (alias side lowercased in Python on the
+            # direct path, in the JVM on the general path)
+            ("u11", "tr", "gezi İSTANBUL"),
+            ("u12", "de", "die STRAẞE hier"),
+            ("u13", "el", "μια ΟΔΟΣ εδώ"),
         ],
         "url string, lang string, text string",
     )
@@ -520,13 +550,16 @@ def test_mention_entities_direct_equivalence(spark):
             ("bad  alias", "e:bad", "*", 0.9),        # double space: never
             (" lead", "e:lead", "*", 0.9),            # leading space: never
             ("", "e:empty", "*", 0.9),                # empty: never
+            ("İstanbul", "e:istanbul", "*", 0.9),
+            ("Straße", "e:strasse", "*", 0.9),
+            ("ΟΔΟΣ", "e:odos", "*", 0.9),              # lowercases to οδος
         ],
         "alias string, entity_id string, lang string, prior double",
     )
     direct = mention_entities_direct(pages, alias)
     assert direct is not None
     got = {(r.url, r.entity_id) for r in direct.collect()}
-    generic = disambiguate(detect_mentions(pages, alias))
+    generic = link_mentions(detect_mentions(pages, alias))
     want = {(r.url, r.entity_id) for r in generic.collect()}
     assert got == want
     # spot-check the semantics the equivalence relies on
@@ -536,6 +569,42 @@ def test_mention_entities_direct_equivalence(spark):
     assert ("u6", "e:join-road") not in got
     assert not {u for u, _ in got} & {"u7", "u8", "u10"}
     assert ("u9", "e:spark") in got               # exact token boundary
+    assert {("u11", "e:istanbul"), ("u12", "e:strasse"),
+            ("u13", "e:odos")} <= got
+
+
+def test_duplicated_dictionary_rows_do_not_change_the_link(spark):
+    """A dictionary row repeated three times must not outrank a higher
+    prior: every linking path applies the published rule (prior DESC,
+    entity_id ASC) of ``fixtures.linked_entity_for_alias``."""
+    from kgap_spark.fixtures import linked_entity_for_alias
+    from kgap_spark.link.score import link_mentions
+    from kgap_spark.mentions.detect import detect_mentions, mention_entities
+    from kgap_spark.triples import build_triples
+
+    rows = [("x", "e:b", "*", 0.5)] * 3 + [("x", "e:a", "*", 0.5001)]
+    by_alias = {"x": [dict(alias=a, entity_id=e, lang=lg, prior=p)
+                      for a, e, lg, p in rows]}
+    assert linked_entity_for_alias("x", "en", by_alias) == "e:a"
+
+    url = "https://site001.example.org/page/1"
+    pages = spark.createDataFrame(
+        [(url, None, None, "we saw x here", "en")],
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string",
+    )
+    alias = spark.createDataFrame(
+        [(*r, True) for r in rows],
+        "alias string, entity_id string, lang string, prior double, "
+        "is_label boolean",
+    )
+    want = {(url, "e:a")}
+    assert {(r.url, r.entity_id)
+            for r in mention_entities(pages, alias).collect()} == want
+    assert {(r.url, r.entity_id) for r in
+            link_mentions(detect_mentions(pages, alias)).collect()} == want
+    quads = build_triples(pages, alias).filter(F.col("pred") == "kgap:mentions")
+    assert {(r.subj, r.obj) for r in quads.collect()} == want
 
 
 def test_mention_entities_direct_large_dict_falls_back(spark):

@@ -33,3 +33,41 @@ def test_labels_carry_language_tags(spark, tiny):
     assert labels.filter(F.col("obj_lang").isNull()).count() == 0
     langs = {r.obj_lang for r in labels.select("obj_lang").distinct().collect()}
     assert langs == {"en", "nl", "de"}
+
+
+def test_pipeline_direct_path_matches_golden(spark, monkeypatch):
+    """A dictionary within MAX_DIRECT_SCAN_ALIASES takes the direct scan
+    inside build_triples: golden P/R stays exact, and the quads equal
+    those of the general path (link_mentions over detect_mentions)
+    through the same materialization."""
+    import kgap_spark.mentions.detect as detect
+    from kgap_spark import schemas as S
+    from kgap_spark.fixtures import FixtureConfig, alias_rows, golden_rows, page_row
+
+    cfg = FixtureConfig(60, 10, 5)
+    pages = spark.createDataFrame(
+        [page_row(i, cfg) for i in range(cfg.n_pages)], S.WEB_PAGES)
+    alias = spark.createDataFrame(alias_rows(cfg), S.ALIAS_DICT)
+    golden = spark.createDataFrame(
+        golden_rows(cfg),
+        "subj string, pred string, obj string, obj_lang string, graph string")
+    assert alias.select("alias").distinct().count() <= detect.MAX_DIRECT_SCAN_ALIASES
+
+    taken = []
+    real = detect.mention_entities_direct
+
+    def spy(*args, **kwargs):
+        out = real(*args, **kwargs)
+        taken.append(out is not None)
+        return out
+
+    monkeypatch.setattr(detect, "mention_entities_direct", spy)
+    direct = build_triples(pages, alias).localCheckpoint(eager=True)
+    assert taken == [True]
+    pr = precision_recall(direct, golden)
+    assert pr["precision"] == 1.0 and pr["recall"] == 1.0, pr
+
+    monkeypatch.setattr(detect, "mention_entities_direct", lambda *a, **k: None)
+    general = build_triples(pages, alias)
+    assert direct.exceptAll(general).count() == 0
+    assert general.exceptAll(direct).count() == 0

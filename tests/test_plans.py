@@ -79,6 +79,19 @@ def test_extraction_udf_only_on_null_text_branch(spark, tiny):
     assert "IsNotNull(text)" in plan
 
 
+def test_pipeline_python_crossing_is_extraction_only(spark, tiny):
+    """Linking is a Catalyst argmax: every ArrowEvalPython node in the
+    pipeline plan is the extraction UDF, as many as extraction alone."""
+    from kgap_spark.extract import with_extracted_text
+    from kgap_spark.triples import build_triples
+
+    plan = _plan(build_triples(tiny["web_pages"], tiny["alias_dict"]))
+    alone = _plan(with_extracted_text(tiny["web_pages"]))
+    assert plan.count("ArrowEvalPython") == alone.count("ArrowEvalPython")
+    assert plan.count("ArrowEvalPython") == plan.count(
+        "ArrowEvalPython [extract_text_udf(")
+
+
 def test_semi_and_anti_join_operators(spark, sf):
     from kgap_spark.workload import QUERIES
 
