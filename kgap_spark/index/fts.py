@@ -359,7 +359,12 @@ def fts_search_boolean(
     per-doc term-set check as ``collect_set`` inside the existing
     score agg (no extra shuffle), and the exclusion set as one
     broadcast-able anti join on the (tiny) must_not posting slice —
-    never a full-corpus pass."""
+    never a full-corpus pass.
+
+    Contract: ``posting`` holds at most one row per (subj, token), as
+    ``build_posting_table`` writes it. Scoring counts rows, not
+    distinct tokens, so a duplicated (subj, token) row adds its tf
+    twice, adds one to ``n_terms`` and (tfidf) to the token's df."""
     q = parse_boolean_query(query)
     pos_tokens = q["should"] + q["must"]
     if not pos_tokens:
@@ -435,7 +440,12 @@ def fts_search(
     """Multi-token OR search over an in-memory posting table.
     ``scoring='tf'`` (score = Σ tf, the luc:score analog — deterministic
     and oracle-checkable) or ``'tfidf'`` (df-weighted; pass ``n_docs``
-    or the corpus is rescanned once to count it)."""
+    or the corpus is rescanned once to count it).
+
+    Contract: ``posting`` holds at most one row per (subj, token), as
+    ``build_posting_table`` writes it. Scoring counts rows, not
+    distinct tokens, so a duplicated (subj, token) row adds its tf
+    twice, adds one to ``n_terms`` and (tfidf) to the token's df."""
     q = query_tokens(query)
     hits = posting.filter(F.col("token").isin(q))
     if scoring == "tfidf" and n_docs is None:

@@ -23,6 +23,13 @@ def _jfs(spark: SparkSession, path: str):
     return fs, jpath
 
 
+def scheme(spark: SparkSession, path: str) -> str:
+    """Scheme of the file system ``path`` resolves to (``file``,
+    ``hdfs``, ``s3a``, …); a scheme-less path takes the default FS's."""
+    fs, _ = _jfs(spark, path)
+    return str(fs.getUri().getScheme())
+
+
 def exists(spark: SparkSession, path: str) -> bool:
     fs, p = _jfs(spark, path)
     return bool(fs.exists(p))

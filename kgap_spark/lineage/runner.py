@@ -46,7 +46,8 @@ class LineageLog:
             f.endswith(".parquet") for f in fs.list_names(self.spark, self.path)
         ):
             return self.spark.createDataFrame([], S.LINEAGE)
-        return self.spark.read.parquet(self.path)
+        # explicit schema: no footer-inference job on every resume
+        return self.spark.read.schema(S.LINEAGE).parquet(self.path)
 
     def completed_graphs(self) -> DataFrame:
         """Graphs whose latest status is 'ok' (a later failed retry of

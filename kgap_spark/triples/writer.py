@@ -25,7 +25,8 @@ parquet implementation keeps the exact same call surface and semantics
 One semantic gap vs Iceberg in THIS class — no snapshot isolation: a
 lazy DataFrame obtained from ``read()``/``read_graph()`` pins the
 *file listing* at creation time and becomes invalid once an
-overwriting write replaces those files. Callers that re-use a
+overwriting write replaces those files, whether this object or another
+one on the same path made the write. Callers that re-use a
 store-derived frame across writes must materialize it first
 (``df.localCheckpoint(eager=True)``); ``merge`` does this internally
 for its own read-then-overwrite cycle. ``SnapshotStore``
@@ -33,6 +34,17 @@ for its own read-then-overwrite cycle. ``SnapshotStore``
 immutable data files + versioned manifests + create-if-absent commit —
 with the same call surface plus time travel / rollback / vacuum; this
 class remains the plain-parquet fast path for one-shot bulk loads.
+
+Reads of an unchanged store are job-free: ``read()`` keeps its planned
+scan and returns it again while the sorted ``(name, mtime)`` list of
+the root's entries is unchanged. Every write changes that key — a
+dynamic overwrite renames in fresh ``graph=`` directories, an append
+adds files (bumping the directory's mtime), ``delete_graph`` removes a
+name — and the key does not rely on a ``_SUCCESS`` marker, which
+dynamic-overwrite commits do not write. The scan is reused only on
+``file`` and ``hdfs`` paths, where a directory's mtime follows its
+entries (at millisecond resolution); on any other scheme (``s3a``,
+``gs``, …) every ``read()`` plans a fresh scan.
 
 Layout for scale: partition by ``graph`` (the query workload is
 graph-scoped: per-feed counts, graph-scoped import/export/clear —
@@ -94,8 +106,14 @@ class TripleStore:
         # merge() itself) — an operator watching Sync cycles reads
         # this instead of diffing fs listings
         self.last_compactions: list[dict] = []
+        # (root listing key, planned scan) of the last read()
+        self._scan: tuple[list, DataFrame] | None = None
 
     # -- reads --------------------------------------------------------
+    # schemes whose directory mtimes change with their entries — the
+    # only ones where read()'s listing key can prove the store unchanged
+    _MTIME_SCHEMES = frozenset({"file", "hdfs"})
+
     def exists(self) -> bool:
         # Hadoop FS, not os.path: the store may live on s3a://hdfs://…
         # where a false "missing" would make merge() drop existing rows.
@@ -104,11 +122,29 @@ class TripleStore:
         )
 
     def read(self) -> DataFrame:
-        if not self.exists():
+        """The whole store as a lazy scan in canonical column order,
+        planned with the explicit canonical schema: no footer-inference
+        job, and ``graph`` is always a string (a graph named ``"1.50"``
+        is never inferred to a double). On ``file``/``hdfs`` paths the
+        scan is kept and returned again while the sorted
+        ``(name, mtime)`` list of root entries is unchanged, so a
+        repeated read of an unchanged store launches no Spark job; any
+        write, by this object or another on the same path, changes
+        that key. Frames taken before a write still go stale (see the
+        module docstring)."""
+        entries = fs.list_status(self.spark, self.path)
+        if not any(e["name"].startswith("graph=") for e in entries):
             return self.spark.createDataFrame([], S.TRIPLES)
-        df = self.spark.read.parquet(self.path)
+        key = sorted((e["name"], e["mtime"]) for e in entries)
+        if self._scan is not None and self._scan[0] == key:
+            return self._scan[1]
         # partition column comes back last; restore canonical order
-        return df.select([f.name for f in S.TRIPLES.fields])
+        df = self.spark.read.schema(S.TRIPLES).parquet(self.path).select(
+            [f.name for f in S.TRIPLES.fields]
+        )
+        if fs.scheme(self.spark, self.path) in self._MTIME_SCHEMES:
+            self._scan = (key, df)
+        return df
 
     def read_graph(self, graph: str) -> DataFrame:
         # predicate on the partition column → partition pruning

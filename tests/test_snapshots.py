@@ -252,11 +252,15 @@ def test_expire_sweeps_orphan_snapshot_dirs(spark, tmp_path):
     assert st.read().count() == 1  # live data untouched
 
 
-def test_graph_names_roundtrip_escaping_and_types(spark, tmp_path):
-    """Hive-escaped partition values unescape in the manifest, and a
-    numeric-looking graph name stays a string (explicit read schema —
-    no partition-type inference)."""
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+@pytest.mark.parametrize("store_cls", ["plain", "snapshot"])
+def test_graph_names_roundtrip_escaping_and_types(spark, tmp_path,
+                                                  store_cls):
+    """Hive-escaped partition values unescape on read (the manifest's
+    or the partition directories'), and a numeric-looking graph name
+    stays a string on both stores (explicit read schema — no
+    partition-type inference), also once it is the only graph left."""
+    cls = TripleStore if store_cls == "plain" else SnapshotStore
+    st = cls(spark, str(tmp_path / "s"))
     weird = "urn:g:x?f=1#frag"
     st.append(_quads(spark, [("a", "p", "1", weird),
                              ("b", "p", "2", "1.50")]))

@@ -311,3 +311,67 @@ def test_merge_reports_compaction_events(spark, tmp_path):
                          compact_threshold=None)
     stats = store2.merge(_quads(spark, [("s", "p", "o", g)]))
     assert stats["compacted"] == [] and store2.last_compactions == []
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs started by ``fn()``, counted under a fresh job group
+    once the listener bus has delivered every job-start event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeated_read_of_unchanged_store_launches_no_job(spark, tmp_path,
+                                                          monkeypatch):
+    """40 graphs put the root listing above Spark's 32-path parallel
+    discovery threshold, so planning a scan runs a listing job. Once a
+    warm read has planned it, reading the unchanged store again reuses
+    the scan and launches nothing; on a scheme outside the reuse rule
+    every read plans (and lists) afresh."""
+    store = TripleStore(spark, str(tmp_path / "t"))
+    store.append(_quads(spark, [(f"s{i}", "p", str(i), f"urn:g:{i}")
+                                for i in range(40)]))
+    assert store.read().count() == 40  # warm
+    assert _jobs_launched(spark, store.read) == 0
+    assert store.read().count() == 40
+
+    monkeypatch.setattr(TripleStore, "_MTIME_SCHEMES", frozenset())
+    fresh = TripleStore(spark, store.path)
+    fresh.read()
+    assert _jobs_launched(spark, fresh.read) >= 1
+
+
+def test_reused_read_sees_every_write(spark, tmp_path):
+    """The reuse key is the root listing, so a read reflects each write
+    — including writes made through a second store object on the same
+    path, and this object's own read → merge → read."""
+    path = str(tmp_path / "t")
+    a, b = TripleStore(spark, path), TripleStore(spark, path)
+    g1, g2 = "urn:g:1", "urn:g:2"
+
+    def rows(store):
+        return {(r.subj, r.obj, r.graph) for r in store.read().collect()}
+
+    b.append(_quads(spark, [("a", "p", "1", g1), ("b", "p", "2", g2)]))
+    assert rows(a) == {("a", "1", g1), ("b", "2", g2)}
+
+    b.overwrite_graphs(_quads(spark, [("a", "p", "9", g1)]))
+    assert rows(a) == {("a", "9", g1), ("b", "2", g2)}
+
+    b.append(_quads(spark, [("c", "p", "3", g2)]))
+    assert rows(a) == {("a", "9", g1), ("b", "2", g2), ("c", "3", g2)}
+
+    b.delete_graph(g1)
+    assert rows(a) == {("b", "2", g2), ("c", "3", g2)}
+
+    a.merge(_quads(spark, [("d", "p", "4", g2), ("e", "p", "5", g1)]))
+    assert rows(a) == {("b", "2", g2), ("c", "3", g2), ("d", "4", g2),
+                       ("e", "5", g1)}
