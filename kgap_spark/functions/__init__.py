@@ -1,5 +1,7 @@
 """Training-data-pipeline operations over document/embedding tables:
-deduplication, similarity search, text analysis, multimodal plumbing.
+deduplication, similarity search, text analysis, multimodal plumbing
+(``multimodal``: real PNG, JPEG and AVI decode, a deterministic stub
+for every other payload).
 
 These extend the reference's capabilities to what a 100 TB web-corpus
 pipeline needs (driver mandate); each has a `queries()` entry with a

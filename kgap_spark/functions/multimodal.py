@@ -4,17 +4,15 @@ columns with typed metadata, processed in Arrow-batched ``mapInPandas``.
 The Spark-side machinery — schemas, batch iteration, partition sizing,
 UDF signatures — is real and tested. Decode is REAL, pure
 stdlib+numpy, for: PNG (zlib inflate + all five scanline filters),
-baseline JPEG (``jpeg.decode_jpeg``), GIF87a/89a (``gif.decode_gif``,
-LZW), lossless WebP (``webp.decode_webp``, VP8L), WAV audio
-(``audio.decode_wav``, PCM + IEEE float), FLAC audio
-(``flac.decode_flac``), and AVI video (``video.decode_avi`` — MJPEG
-via the JPEG decoder or BI_RGB DIB frames; ≤4 sampled frames,
-temporally pooled). Remaining formats (lossy WebP/VP8, MP3/OGG,
-modern video codecs) stay stubbed behind
-``KGAP_FAKE_DECODE`` (their codec libraries are not in this
-container); the stub is a deterministic pure function of the bytes, so
-tests exercise the full distributed path with stable outputs. Swapping
-in a full decoder (PIL / torchaudio / pyav) changes only `_decode_*`.
+baseline JPEG (``jpeg.decode_jpeg``) and AVI video (``video.decode_avi``
+— MJPEG via the JPEG decoder or BI_RGB DIB frames; ≤4 sampled frames,
+temporally pooled). Every other payload, of any kind, gets a
+deterministic stub: the first ``FEATURE_DIM`` bytes of a sha256 digest
+of the bytes, scaled to [0, 1]. The stub is a pure function of the
+payload, so the full distributed path runs with stable outputs, and the
+``multimodal_features`` query's DuckDB oracle recomputes it exactly.
+Swapping in a full decoder (PIL / torchaudio / pyav) changes only
+`_decode_*`.
 """
 
 from __future__ import annotations
@@ -40,10 +38,8 @@ MEDIA_SCHEMA = T.StructType(
 
 FEATURE_DIM = 16
 
-KGAP_FAKE_DECODE = True  # flip off when real media libs are installed
-
-
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
+_JPEG_SIG = b"\xff\xd8"
 
 
 def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
@@ -182,22 +178,19 @@ def _image_features(w: int, h: int, ch: int, px: bytes) -> list[float]:
     return feats[:FEATURE_DIM]
 
 
-_JPEG_SIG = b"\xff\xd8"
-_GIF_SIG = b"GIF8"
+def _stub_features(data: bytes) -> list[float]:
+    digest = hashlib.sha256(data).digest()
+    return [b / 255.0 for b in digest[:FEATURE_DIM]]
 
 
 def _decode_image(payload: bytes) -> list[float] | None:
-    """PNG, baseline JPEG, GIF and lossless WebP → REAL decode (pure
-    stdlib+numpy: ``decode_png`` here, ``jpeg.decode_jpeg``,
-    ``gif.decode_gif``, ``webp.decode_webp``) →
-    pooled features. A recognized-signature payload that fails to
-    decode (corrupt, palette/16-bit/interlaced PNG,
-    progressive JPEG or sampling factors >2, truncated) yields NULL
-    features —
+    """PNG and baseline JPEG → REAL decode (``decode_png``,
+    ``jpeg.decode_jpeg``) → pooled features. A PNG or JPEG that fails
+    to decode (corrupt, truncated, palette/16-bit/interlaced PNG,
+    progressive JPEG or sampling factors >2) yields NULL features —
     per-row error isolation; one bad image in a 10¹²-doc corpus must
-    not fail the whole extract job. Remaining formats (lossy WebP/…):
-    deterministic fake under ``KGAP_FAKE_DECODE`` (their codecs
-    aren't in this container)."""
+    not fail the whole extract job. Every other payload gets the
+    deterministic sha256 stub."""
     data = payload or b""
     if data.startswith(_PNG_SIG):
         try:
@@ -211,58 +204,14 @@ def _decode_image(payload: bytes) -> list[float] | None:
             return _image_features(*decode_jpeg(data))
         except Exception:
             return None
-    if data.startswith(_GIF_SIG):
-        from kgap_spark.functions.gif import decode_gif
-
-        try:
-            return _image_features(*decode_gif(data))
-        except Exception:
-            return None
-    if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-        from kgap_spark.functions.webp import decode_webp
-
-        try:
-            return _image_features(*decode_webp(data))
-        except NotImplementedError:
-            pass  # lossy VP8 → the env-limited stub path below
-        except Exception:
-            return None
-    if not KGAP_FAKE_DECODE:  # pragma: no cover
-        raise NotImplementedError(
-            "non-PNG/JPEG/GIF/VP8L image decode requires PIL — not in "
-            "this image"
-        )
-    digest = hashlib.sha256(data).digest()
-    return [b / 255.0 for b in digest[:FEATURE_DIM]]
+    return _stub_features(data)
 
 
-def _decode_audio(payload: bytes) -> list[float] | None:
-    """WAV (RIFF PCM/IEEE-float) and FLAC → REAL decode
-    (``audio.decode_wav``, ``flac.decode_flac``, pure stdlib+numpy) →
-    pooled features; a recognized payload that fails to decode yields
-    NULL features (same per-row isolation as images). Compressed codecs (MP3/OGG/AAC): deterministic fake
-    under ``KGAP_FAKE_DECODE`` — soundfile/torchaudio aren't in this
-    container."""
-    data = payload or b""
-    if data[:4] == b"fLaC":
-        from kgap_spark.functions.audio import audio_features
-        from kgap_spark.functions.flac import decode_flac
-
-        try:
-            return audio_features(*decode_flac(data), dim=FEATURE_DIM)
-        except Exception:
-            return None
-    if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-        from kgap_spark.functions.audio import audio_features, decode_wav
-
-        try:
-            return audio_features(*decode_wav(data), dim=FEATURE_DIM)
-        except Exception:
-            return None
-    if not KGAP_FAKE_DECODE:  # pragma: no cover
-        raise NotImplementedError("non-WAV audio decode requires soundfile")
-    digest = hashlib.sha256(b"audio:" + data).digest()
-    return [b / 255.0 for b in digest[:FEATURE_DIM]]
+def _decode_audio(payload: bytes) -> list[float]:
+    """Every audio payload gets the deterministic sha256 stub, salted
+    with ``b"audio:"`` so the same bytes as image and as audio give
+    different features."""
+    return _stub_features(b"audio:" + (payload or b""))
 
 
 def _decode_video(payload: bytes) -> list[float] | None:
@@ -270,8 +219,7 @@ def _decode_video(payload: bytes) -> list[float] | None:
     samples ≤4 evenly-spaced frames; MJPEG frames reuse
     ``jpeg.decode_jpeg``) → temporally pooled features; a recognized
     AVI that fails to decode yields NULL features. Non-AVI payloads
-    fall through to the image pipeline (an animated GIF IS the video
-    analog there) or the deterministic fake."""
+    fall through to the image pipeline (PNG, JPEG or the stub)."""
     data = payload or b""
     if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
         from kgap_spark.functions.video import decode_avi, video_features

@@ -7,9 +7,8 @@ JPEG, decoded by ``jpeg.decode_jpeg``) or uncompressed BI_RGB 24-bit
 DIB frames (bottom-up BGR rows, 4-byte-aligned). The chunk walk
 handles 'hdrl' (avih + strl/strh/strf), 'movi' with nested 'rec '
 groups, and ignores 'idx1'/'JUNK'. Modern codecs (H.264/VP9/AV1…)
-stay behind the documented env-limited stub in
-``multimodal._decode_video`` — their decoders are not in this
-container (PIL/pyav slot in at the same seam).
+get the deterministic stub of ``multimodal._decode_image`` (pyav
+slots in at the ``multimodal._decode_video`` seam).
 
 Scale note: frame decode runs inside ``mapInPandas`` Arrow batches
 (``multimodal.extract_features``); only ``max_frames`` evenly-spaced

@@ -420,24 +420,37 @@ def test_cosine_topk_and_lsh_recall(spark):
 
 
 def test_multimodal_features_deterministic(spark):
+    import hashlib
+
     from kgap_spark.functions.multimodal import extract_features
 
+    # text that happens to start with another format's signature still
+    # gets the sha256 stub that the multimodal_features oracle computes
+    lookalikes = {"m4": b"GIF89a hello",
+                  "m5": b"RIFF\x00\x00\x00\x00WEBPVP8L x"}
     media = spark.createDataFrame(
         [("m1", "image", "image/png", b"\x89PNG fake", {}),
          ("m2", "audio", "audio/wav", b"RIFF fake", {}),
-         ("m3", "image", "image/png", None, {})],
+         ("m3", "image", "image/png", None, {}),
+         ("m6", "video", "video/x-msvideo", b"\x89PNG fake", {})]
+        + [(k, "image", "application/octet-stream", v, {})
+           for k, v in lookalikes.items()],
         "media_id string, kind string, mime string, payload binary, "
         "meta map<string,string>",
     )
     rows = {r.media_id: r for r in extract_features(media).collect()}
+    for k, payload in lookalikes.items():
+        assert rows[k].features == [
+            b / 255.0 for b in hashlib.sha256(payload).digest()[:16]]
     assert len(rows["m1"].features) == 16
     assert rows["m1"].n_bytes == 9 and rows["m3"].n_bytes == 0
     # determinism across repartitioning
     rows2 = {r.media_id: r for r in
              extract_features(media.repartition(3)).collect()}
     assert rows["m1"].features == rows2["m1"].features
-    # image vs audio decoders differ
+    # image vs audio decoders differ; non-AVI video falls through to the image decoder
     assert rows["m1"].features != rows["m2"].features
+    assert rows["m6"].features == rows["m1"].features
 
 
 def test_fuzzy_candidates_blocking(spark):
@@ -760,14 +773,17 @@ def test_png_decode_real_branch():
 
 def test_png_features_through_distributed_path(spark):
     """A PNG payload flows through the mapInPandas pipeline via the
-    REAL decode branch: features reflect actual pixel content."""
+    REAL decode branch: features reflect actual pixel content, and a
+    truncated PNG yields NULL features without failing its batch."""
     from kgap_spark.functions.multimodal import extract_features
 
     red = _encode_png(2, 2, bytes([255, 0, 0] * 4))
     green = _encode_png(2, 2, bytes([0, 255, 0] * 4))
+    truncated = _encode_png(2, 2, bytes([0, 0, 255] * 4))[:40]
     media = spark.createDataFrame(
         [("m1", "image", "image/png", bytearray(red), {}),
-         ("m2", "image", "image/png", bytearray(green), {})],
+         ("m2", "image", "image/png", bytearray(green), {}),
+         ("m3", "image", "image/png", bytearray(truncated), {})],
         "media_id string, kind string, mime string, payload binary, "
         "meta map<string,string>",
     )
@@ -777,6 +793,8 @@ def test_png_features_through_distributed_path(spark):
     assert feats["m1"][2] == 1.0 and feats["m1"][3] == 0.0   # pure red
     assert feats["m2"][2] == 0.0 and feats["m2"][3] == 1.0   # pure green
     assert feats["m1"][5] == 1.0  # opaque
+    # a PNG that fails to decode is isolated to its own NULL row
+    assert feats["m3"] is None
 
 
 def test_png_decode_large_mixed_filters():
@@ -1146,7 +1164,6 @@ def test_jpeg_features_through_distributed_path(spark):
     assert 0.4 < rows["j0"].features[2] < 0.6
     assert rows["j1"].features is None
 
-
 def test_lsh_bucket_cap_drops_hot_buckets(spark):
     """r07 scale guard (the round-6 verdict's one `weak` item): a hot
     LSH band bucket — e.g. a boilerplate cluster of identical docs —
@@ -1309,277 +1326,6 @@ def test_jpeg_truncated_sos_header_valueerror():
         decode_jpeg(b"\xff\xd8" + sof + seg(0xDA, bytes([3, 1, 0])))
 
 
-# ---------------------------------------------------------------------------
-# GIF decoder (round 6): real LZW branch, pure stdlib
-# ---------------------------------------------------------------------------
-
-def _lzw_encode(indices, min_code_size):
-    """Test-side GIF LZW encoder, 'uncompressed' flavor: every pixel
-    emitted as a literal code, a CLEAR inserted before the table
-    would force a width increase — keeps code width at
-    min_code_size+1 while remaining a fully spec-conformant stream."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    width = min_code_size + 1
-    out = bytearray()
-    bitbuf = 0
-    nbits = 0
-
-    def emit(code):
-        nonlocal bitbuf, nbits
-        bitbuf |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(bitbuf & 0xFF)
-            bitbuf >>= 8
-            nbits -= 8
-
-    emit(clear)
-    budget = (1 << width) - eoi - 2  # codes before width would grow
-    for i, c in enumerate(indices):
-        if i and i % budget == 0:
-            emit(clear)
-        emit(c)
-    emit(eoi)
-    if nbits:
-        out.append(bitbuf & 0xFF)
-    return bytes(out)
-
-
-def _encode_gif(width, height, indices, palette, interlace=False,
-                transparent=None, animated_tail=False):
-    import struct as st
-
-    size_bits = max((len(palette) - 1).bit_length(), 1) - 1
-    n = 2 << size_bits
-    gct = bytearray()
-    for r, g, b in palette:
-        gct += bytes((r, g, b))
-    gct += b"\x00" * (3 * n - len(gct))
-    out = bytearray(b"GIF89a")
-    out += st.pack("<HHBBB", width, height, 0x80 | size_bits, 0, 0)
-    out += gct
-    if transparent is not None:
-        out += b"\x21\xf9\x04" + bytes((1, 0, 0, transparent)) + b"\x00"
-    mcs = max(size_bits + 1, 2)
-    if interlace:
-        rows = [indices[y * width:(y + 1) * width] for y in range(height)]
-        order = [y for s, p in ((0, 8), (4, 8), (2, 4), (1, 2))
-                 for y in range(s, height, p)]
-        indices = [c for y in order for c in rows[y]]
-    out += b"\x2c" + st.pack("<HHHHB", 0, 0, width, height,
-                              0x40 if interlace else 0)
-    out += bytes((mcs,))
-    lzw = _lzw_encode(indices, mcs)
-    for i in range(0, len(lzw), 255):
-        chunk = lzw[i:i + 255]
-        out += bytes((len(chunk),)) + chunk
-    out += b"\x00"
-    if animated_tail:  # a second (ignored) frame
-        out += st.pack("<BHHHHB", 0x2C, 0, 0, 1, 1, 0)
-        out += bytes((mcs,))
-        tail = _lzw_encode([0], mcs)
-        out += bytes((len(tail),)) + tail + b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
-
-def test_gif_decode_roundtrip():
-    from kgap_spark.functions.gif import decode_gif
-
-    palette = [(0, 0, 0), (255, 0, 0), (0, 255, 0), (0, 0, 255)]
-    w, h = 7, 5
-    idx = [(x + y) % 4 for y in range(h) for x in range(w)]
-    data = _encode_gif(w, h, idx, palette)
-    gw, gh, ch, rgb = decode_gif(data)
-    assert (gw, gh, ch) == (w, h, 3)
-    expected = b"".join(bytes(palette[c]) for c in idx)
-    assert rgb == expected
-
-
-def test_gif_decode_larger_palette_and_multi_subblock():
-    from kgap_spark.functions.gif import decode_gif
-
-    # 64-color palette, enough pixels to span several 255-byte
-    # sub-blocks and several CLEAR resets
-    palette = [(i * 4, 255 - i * 4, (i * 7) % 256) for i in range(64)]
-    w, h = 101, 37
-    idx = [(x * y + x) % 64 for y in range(h) for x in range(w)]
-    gw, gh, ch, rgb = decode_gif(_encode_gif(w, h, idx, palette))
-    assert (gw, gh, ch) == (w, h, 3)
-    assert rgb == b"".join(bytes(palette[c]) for c in idx)
-
-
-def test_gif_decode_interlaced():
-    from kgap_spark.functions.gif import decode_gif
-
-    palette = [(0, 0, 0), (10, 20, 30), (40, 50, 60), (70, 80, 90)]
-    w, h = 6, 11
-    idx = [(3 * y + x) % 4 for y in range(h) for x in range(w)]
-    gw, gh, ch, rgb = decode_gif(
-        _encode_gif(w, h, idx, palette, interlace=True)
-    )
-    assert rgb == b"".join(bytes(palette[c]) for c in idx)
-
-
-def test_gif_transparency_and_first_frame_only():
-    from kgap_spark.functions.gif import decode_gif
-
-    palette = [(9, 9, 9), (255, 255, 255)]
-    w, h = 4, 2
-    idx = [0, 1, 0, 1, 1, 0, 1, 0]
-    data = _encode_gif(w, h, idx, palette, transparent=0,
-                       animated_tail=True)
-    gw, gh, ch, rgb = decode_gif(data)
-    # transparent index composites to black, not palette[0]
-    exp = b"".join(b"\x00\x00\x00" if c == 0 else bytes(palette[c])
-                   for c in idx)
-    assert rgb == exp and (gw, gh) == (w, h)
-
-
-def test_gif_malformed_raises_valueerror():
-    import pytest as _pt
-
-    from kgap_spark.functions.gif import decode_gif
-
-    with _pt.raises(ValueError, match="signature"):
-        decode_gif(b"NOTAGIF")
-    with _pt.raises(ValueError, match="truncated|image"):
-        decode_gif(b"GIF89a" + b"\x00" * 7)
-    # truncated LZW stream
-    palette = [(0, 0, 0), (1, 1, 1)]
-    good = _encode_gif(4, 4, [0, 1] * 8, palette)
-    with _pt.raises(ValueError):
-        decode_gif(good[:len(good) - 6] + b"\x00\x3b")
-
-
-def test_gif_through_multimodal_features():
-    from kgap_spark.functions.multimodal import _decode_image
-
-    palette = [(i, i, i) for i in range(16)]
-    idx = [(x + y) % 16 for y in range(8) for x in range(8)]
-    feats = _decode_image(_encode_gif(8, 8, idx, palette))
-    assert feats is not None and len(feats) == 16
-    # corrupt GIF isolates to NULL features, never an exception
-    assert _decode_image(b"GIF89a\xff\xff\xff") is None
-
-
-# --- WAV audio decoder (real branch) ---------------------------------------
-
-def test_wav_decode_roundtrip_16bit():
-    import numpy as np
-
-    from kgap_spark.functions.audio import decode_wav, encode_wav
-
-    t = np.arange(800) / 8000.0
-    stereo = np.stack(
-        [np.sin(2 * np.pi * 440 * t), np.sin(2 * np.pi * 220 * t)], axis=1
-    )
-    sr, ch, frames = decode_wav(encode_wav(8000, stereo))
-    assert (sr, ch) == (8000, 2)
-    assert frames.shape == (800, 2)
-    # 16-bit quantization: round-trip error ≤ 1/32768 scale mismatch
-    # (encode scales by 32767, decode by 32768) + half-LSB rounding
-    assert np.max(np.abs(frames - stereo)) < 1.0 / 16000
-
-
-def test_wav_decode_float32_and_8bit_and_24bit():
-    import struct
-
-    import numpy as np
-
-    from kgap_spark.functions.audio import decode_wav
-
-    def riff(tag, bits, body):
-        fmt = struct.pack("<HHIIHH", tag, 1, 8000, 0, 0, bits)
-        inner = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                 + b"data" + struct.pack("<I", len(body)) + body)
-        return b"RIFF" + struct.pack("<I", len(inner)) + inner
-
-    # IEEE float32 (tag 3)
-    src = np.linspace(-1, 1, 64)
-    _, _, fr = decode_wav(riff(3, 32, src.astype("<f4").tobytes()))
-    assert np.allclose(fr[:, 0], src, atol=1e-6)
-    # 8-bit unsigned PCM: 128 is zero
-    _, _, fr8 = decode_wav(riff(1, 8, bytes([0, 128, 255])))
-    assert fr8[1, 0] == 0.0 and fr8[0, 0] == -1.0
-    # 24-bit little-endian signed: 0x800000 = -1.0
-    _, _, fr24 = decode_wav(riff(1, 24, b"\x00\x00\x80" + b"\x00\x00\x00"))
-    assert fr24[0, 0] == -1.0 and fr24[1, 0] == 0.0
-
-
-def test_wav_extensible_and_chunk_skip():
-    """WAVE_FORMAT_EXTENSIBLE resolves via SubFormat; LIST chunks and
-    odd-length word alignment are walked over."""
-    import struct
-
-    import numpy as np
-
-    from kgap_spark.functions.audio import decode_wav
-
-    # 16-byte header + cbSize(22) = validbits, channelmask, then the
-    # 16-byte SubFormat GUID whose FIRST TWO bytes are the real tag
-    ext = struct.pack("<HHIIHHHHI", 0xFFFE, 1, 8000, 0, 0, 16, 22, 16, 1) \
-        + struct.pack("<H", 1) + b"\x00" * 14
-    body = np.array([16384, -16384], dtype="<i2").tobytes()
-    inner = (b"WAVE"
-             + b"LIST" + struct.pack("<I", 5) + b"INFOx" + b"\x00"  # odd+pad
-             + b"fmt " + struct.pack("<I", len(ext)) + ext
-             + b"data" + struct.pack("<I", len(body)) + body)
-    sr, ch, fr = decode_wav(b"RIFF" + struct.pack("<I", len(inner)) + inner)
-    assert (sr, ch) == (8000, 1) and abs(fr[0, 0] - 0.5) < 1e-4
-
-
-def test_wav_malformed_raises_valueerror():
-    import pytest
-
-    from kgap_spark.functions.audio import decode_wav
-
-    for bad in (b"", b"RIFX1234WAVE", b"RIFF\x04\x00\x00\x00WAVE",
-                b"RIFF\xff\x00\x00\x00WAVEdata\x02\x00\x00\x00ab"):
-        with pytest.raises(ValueError):
-            decode_wav(bad)
-
-
-def test_wav_through_multimodal_features():
-    import numpy as np
-
-    from kgap_spark.functions.audio import encode_wav
-    from kgap_spark.functions.multimodal import _decode_audio
-
-    t = np.arange(1600) / 16000.0
-    wav = encode_wav(16000, np.sin(2 * np.pi * 440 * t)[:, None])
-    feats = _decode_audio(wav)
-    assert feats is not None and len(feats) == 16
-    # sine RMS ≈ 1/sqrt(2); feature slots: [dur, sr, ch, rms, peak, zcr, ...]
-    assert abs(feats[3] - 0.707) < 0.01 and abs(feats[4] - 1.0) < 0.01
-    # corrupt RIFF isolates to NULL features; non-RIFF stays on the
-    # deterministic-fake path (list, not None)
-    assert _decode_audio(b"RIFF\x08\x00\x00\x00WAVEjunk") is None
-    assert isinstance(_decode_audio(b"\x00mp3-ish"), list)
-
-
-def test_wav_features_distributed(spark):
-    """End-to-end through extract_features mapInPandas: mixed WAV and
-    fake-path audio rows in one batch."""
-    import numpy as np
-
-    from kgap_spark.functions.audio import encode_wav
-    from kgap_spark.functions.multimodal import MEDIA_SCHEMA, extract_features
-
-    t = np.arange(400) / 8000.0
-    wav = encode_wav(8000, np.sin(2 * np.pi * 100 * t)[:, None])
-    rows = [
-        ("m1", "audio", "audio/wav", bytearray(wav), {}),
-        ("m2", "audio", "audio/mpeg", bytearray(b"\xffmp3"), {}),
-    ]
-    out = {r["media_id"]: r["features"]
-           for r in extract_features(
-               spark.createDataFrame(rows, MEDIA_SCHEMA)).collect()}
-    assert len(out["m1"]) == 16 and abs(out["m1"][3] - 0.707) < 0.01
-    assert len(out["m2"]) == 16  # deterministic fake path
-
-
 # --- AVI video decoder (real branch) ---------------------------------------
 
 def _mk_avi_mjpeg(n_frames=6, w=16, h=16):
@@ -1671,7 +1417,7 @@ def test_avi_through_multimodal_features():
     # luma ramp: temporal std is non-zero
     assert feats[5] > 0.05
     # corrupt AVI isolates to NULL; WAV payload routed to audio decoder
-    # does not leak into the video branch (falls through to image/fake)
+    # does not leak into the video branch (falls through to image/stub)
     assert _decode_video(b"RIFF\x08\x00\x00\x00AVI xxxx") is None
     assert isinstance(_decode_video(b"\x00notavideo"), list)
     # audio decoder no longer swallows AVI payloads as WAV
@@ -1689,1044 +1435,4 @@ def test_avi_features_distributed(spark):
            for r in extract_features(
                spark.createDataFrame(rows, MEDIA_SCHEMA)).collect()}
     assert len(out["v1"]) == 16 and abs(out["v1"][2] - 10.0 / 60.0) < 1e-6
-    assert len(out["v2"]) == 16  # deterministic fake path
-
-
-# ---------------------------------------------------------------------------
-# WebP VP8L: test-side encoder (spec-direct, independent of the decoder:
-# own bit/huffman writer, own predictor/color-transform math) + round-trips
-
-
-class _VP8LWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.cur = 0
-        self.n = 0
-
-    def bits(self, value, nbits):  # LSB-first stream order
-        for i in range(nbits):
-            self.cur |= ((value >> i) & 1) << self.n
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.cur)
-                self.cur = 0
-                self.n = 0
-
-    def code(self, code, length):  # prefix codes are walked MSB-first
-        for i in range(length - 1, -1, -1):
-            self.bits((code >> i) & 1, 1)
-
-    def payload(self):
-        return bytes(self.out) + (bytes((self.cur,)) if self.n else b"")
-
-
-def _vp8l_hlengths(freq):
-    import heapq
-
-    items = sorted((f, s) for s, f in freq.items() if f > 0)
-    if not items:
-        return {}
-    if len(items) == 1:
-        return {items[0][1]: 1}
-    lengths = {s: 0 for _, s in items}
-    heap = [(f, i, [s]) for i, (f, s) in enumerate(items)]
-    heapq.heapify(heap)
-    tie = len(heap)
-    while len(heap) > 1:
-        f1, _, g1 = heapq.heappop(heap)
-        f2, _, g2 = heapq.heappop(heap)
-        for s in g1 + g2:
-            lengths[s] += 1
-        heapq.heappush(heap, (f1 + f2, tie, g1 + g2))
-        tie += 1
-    assert max(lengths.values()) <= 15
-    return lengths
-
-
-def _vp8l_canon(lengths):
-    used = sorted((l, s) for s, l in lengths.items() if l)
-    codes = {}
-    code = 0
-    prev = used[0][0]
-    for l, s in used:
-        code <<= l - prev
-        prev = l
-        codes[s] = (code, l)
-        code += 1
-    return codes
-
-
-_VP8L_CLC_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12,
-                   13, 14, 15)
-
-
-def _vp8l_emit_code(bw, lengths_list, alphabet_size):
-    from collections import Counter
-
-    used = [(s, l) for s, l in enumerate(lengths_list) if l]
-    assert used
-    if len(used) <= 2 and all(s < 256 for s, _ in used):
-        bw.bits(1, 1)  # simple code
-        bw.bits(len(used) - 1, 1)
-        s0 = used[0][0]
-        if s0 >= 2:
-            bw.bits(1, 1)
-            bw.bits(s0, 8)
-        else:
-            bw.bits(0, 1)
-            bw.bits(s0, 1)
-        if len(used) == 2:
-            bw.bits(used[1][0], 8)
-        return
-    bw.bits(0, 1)  # normal code: clc over the 19-symbol alphabet, no RLE
-    clc_map = _vp8l_hlengths(Counter(lengths_list))
-    assert max(clc_map.values()) <= 7
-    clc_list = [clc_map.get(v, 0) for v in range(19)]
-    num_clc = max(
-        max((i for i in range(19) if clc_list[_VP8L_CLC_ORDER[i]]),
-            default=0) + 1, 4)
-    bw.bits(num_clc - 4, 4)
-    for i in range(num_clc):
-        bw.bits(clc_list[_VP8L_CLC_ORDER[i]], 3)
-    bw.bits(0, 1)  # lengths for the whole alphabet (no max_symbol)
-    ccodes = _vp8l_canon(clc_map) if len(clc_map) > 1 else None
-    if ccodes:
-        for v in lengths_list:
-            c, l = ccodes[v]
-            bw.code(c, l)
-
-
-def _t_prefix(v):
-    """Inverse of the LZ77 prefix decode: value -> (prefix, extra, nbits)."""
-    x = v - 1
-    if x < 4:
-        return x, 0, 0
-    eb = x.bit_length() - 2
-    lb = (x >> eb) - 2
-    return 2 * eb + 2 + lb, x - ((2 + lb) << eb), eb
-
-
-def _t_cache_slot(px, cache_bits):
-    return ((0x1E35A7BD * px) & 0xFFFFFFFF) >> (32 - cache_bits)
-
-
-def _vp8l_entropy_image(bw, pixels, is_main, cache_bits=0, lz77=False):
-    from collections import Counter
-
-    if cache_bits:
-        bw.bits(1, 1)
-        bw.bits(cache_bits, 4)
-    else:
-        bw.bits(0, 1)
-    if is_main:
-        bw.bits(0, 1)  # single prefix group (no meta image)
-    cache = [None] * (1 << cache_bits) if cache_bits else None
-    tokens = []
-    i, n = 0, len(pixels)
-    while i < n:
-        p = pixels[i]
-        if cache is not None and cache[_t_cache_slot(p, cache_bits)] == p:
-            tokens.append(("cache", _t_cache_slot(p, cache_bits)))
-            i += 1
-            continue
-        if lz77 and i and pixels[i - 1] == p:
-            run = 0
-            while i + run < n and pixels[i + run] == p:
-                run += 1
-            tokens.append(("copy", run, 1))
-            if cache is not None:
-                cache[_t_cache_slot(p, cache_bits)] = p
-            i += run
-            continue
-        tokens.append(("lit", p))
-        if cache is not None:
-            cache[_t_cache_slot(p, cache_bits)] = p
-        i += 1
-    gfreq, rfreq, bfreq, afreq, dfreq = (Counter() for _ in range(5))
-    for t in tokens:
-        if t[0] == "lit":
-            p = t[1]
-            gfreq[(p >> 8) & 0xFF] += 1
-            rfreq[(p >> 16) & 0xFF] += 1
-            bfreq[p & 0xFF] += 1
-            afreq[p >> 24] += 1
-        elif t[0] == "copy":
-            gfreq[256 + _t_prefix(t[1])[0]] += 1
-            dfreq[_t_prefix(t[2] + 120)[0]] += 1
-        else:
-            gfreq[280 + t[1]] += 1
-    for fr in (rfreq, bfreq, afreq, dfreq):
-        if not fr:
-            fr[0] = 1  # unused code: 1-symbol simple code, zero bits/use
-    cache_syms = (1 << cache_bits) if cache_bits else 0
-    cmaps = []
-    for fr, asize in ((gfreq, 280 + cache_syms), (rfreq, 256), (bfreq, 256),
-                      (afreq, 256), (dfreq, 40)):
-        lmap = _vp8l_hlengths(fr)
-        _vp8l_emit_code(bw, [lmap.get(s, 0) for s in range(asize)], asize)
-        cmaps.append(_vp8l_canon(lmap) if len(lmap) > 1 else None)
-    gc, rc, bc, ac, dc = cmaps
-
-    def emit(cmap, s):
-        if cmap:
-            c, l = cmap[s]
-            bw.code(c, l)
-
-    for t in tokens:
-        if t[0] == "lit":
-            p = t[1]
-            emit(gc, (p >> 8) & 0xFF)
-            emit(rc, (p >> 16) & 0xFF)
-            emit(bc, p & 0xFF)
-            emit(ac, p >> 24)
-        elif t[0] == "copy":
-            pl, ex, eb = _t_prefix(t[1])
-            emit(gc, 256 + pl)
-            bw.bits(ex, eb)
-            dl, dex, deb = _t_prefix(t[2] + 120)
-            emit(dc, dl)
-            bw.bits(dex, deb)
-        else:
-            emit(gc, 280 + t[1])
-
-
-def _t_chans(p):
-    return [(p >> s) & 0xFF for s in (24, 16, 8, 0)]
-
-
-def _t_pack(c):
-    return (c[0] << 24) | (c[1] << 16) | (c[2] << 8) | c[3]
-
-
-def _t_avg2(a, b):
-    return _t_pack([(x + y) // 2 for x, y in zip(_t_chans(a), _t_chans(b))])
-
-
-def _t_predict(mode, l, t, tr, tl):
-    """Independent predictor reimplementation from the spec text."""
-    if mode == 0:
-        return 0xFF000000
-    if mode == 1:
-        return l
-    if mode == 2:
-        return t
-    if mode == 3:
-        return tr
-    if mode == 4:
-        return tl
-    if mode == 5:
-        return _t_avg2(_t_avg2(l, tr), t)
-    if mode == 6:
-        return _t_avg2(l, tl)
-    if mode == 7:
-        return _t_avg2(l, t)
-    if mode == 8:
-        return _t_avg2(tl, t)
-    if mode == 9:
-        return _t_avg2(t, tr)
-    if mode == 10:
-        return _t_avg2(_t_avg2(l, tl), _t_avg2(t, tr))
-    if mode == 11:
-        p_l = sum(abs(x - y) for x, y in zip(_t_chans(t), _t_chans(tl)))
-        p_t = sum(abs(x - y) for x, y in zip(_t_chans(l), _t_chans(tl)))
-        return l if p_l < p_t else t
-    if mode == 12:
-        return _t_pack([max(0, min(255, lc + tc - tlc)) for lc, tc, tlc in
-                        zip(_t_chans(l), _t_chans(t), _t_chans(tl))])
-    a = [(lc + tc) // 2 for lc, tc in zip(_t_chans(l), _t_chans(t))]
-    out = []
-    for ac, tlc in zip(a, _t_chans(tl)):
-        d = ac - tlc
-        half = d // 2 if d >= 0 else -((-d) // 2)
-        out.append(max(0, min(255, ac + half)))
-    return _t_pack(out)
-
-
-def _t_sub_mod(a, b):
-    return _t_pack([(x - y) % 256 for x, y in zip(_t_chans(a), _t_chans(b))])
-
-
-def _t_s8(v):
-    return v - 256 if v >= 128 else v
-
-
-def _t_delta(t, c):
-    return (_t_s8(t) * _t_s8(c)) >> 5
-
-
-def _encode_vp8l(rgba, w, h, subtract_green=False, cache_bits=0, lz77=False,
-                 palette=False, predictor_mode=None, color_cte=None):
-    px = [(a << 24) | (r << 16) | (g << 8) | b for r, g, b, a in rgba]
-    bw = _VP8LWriter()
-    bw.bits(w - 1, 14)
-    bw.bits(h - 1, 14)
-    bw.bits(1, 1)  # alpha hint
-    bw.bits(0, 3)  # version
-    cur_w = w
-    if subtract_green:
-        bw.bits(1, 1)
-        bw.bits(2, 2)
-        px = [(p & 0xFF00FF00)
-              | ((((p >> 16) & 0xFF) - ((p >> 8) & 0xFF)) % 256) << 16
-              | ((p & 0xFF) - ((p >> 8) & 0xFF)) % 256 for p in px]
-    if color_cte is not None:
-        g2r, g2b, r2b = color_cte
-        bw.bits(1, 1)
-        bw.bits(1, 2)
-        bits = 2
-        bw.bits(bits - 2, 3)
-        sw, sh = (cur_w + 3) >> 2, (h + 3) >> 2
-        cte_px = (0xFF000000 | ((r2b & 0xFF) << 16) | ((g2b & 0xFF) << 8)
-                  | (g2r & 0xFF))
-        _vp8l_entropy_image(bw, [cte_px] * (sw * sh), is_main=False)
-        out = []
-        for p in px:
-            _a, r, g, b = _t_chans(p)
-            tr_ = (r - _t_delta(g2r & 0xFF, g)) % 256
-            tb = (b - _t_delta(g2b & 0xFF, g) - _t_delta(r2b & 0xFF, r)) % 256
-            out.append((p & 0xFF00FF00) | (tr_ << 16) | tb)
-        px = out
-    if predictor_mode is not None:
-        bw.bits(1, 1)
-        bw.bits(0, 2)
-        bits = 2  # 4x4 blocks
-        bw.bits(bits - 2, 3)
-        sw, sh = (cur_w + 3) >> 2, (h + 3) >> 2
-        _vp8l_entropy_image(bw, [0xFF000000 | (predictor_mode << 8)] * (sw * sh),
-                            is_main=False)
-        res = [0] * (cur_w * h)
-        for pos in range(cur_w * h):
-            x, y = pos % cur_w, pos // cur_w
-            if pos == 0:
-                pred = 0xFF000000
-            elif y == 0:
-                pred = px[pos - 1]
-            elif x == 0:
-                pred = px[pos - cur_w]
-            else:
-                pred = _t_predict(predictor_mode, px[pos - 1], px[pos - cur_w],
-                                  px[pos - cur_w + 1], px[pos - cur_w - 1])
-            res[pos] = _t_sub_mod(px[pos], pred)
-        px = res
-    if palette:
-        pal = []
-        seen = {}
-        for p in px:
-            if p not in seen:
-                seen[p] = len(pal)
-                pal.append(p)
-        n = len(pal)
-        assert n <= 256
-        bw.bits(1, 1)
-        bw.bits(3, 2)
-        bw.bits(n - 1, 8)
-        deltas = [pal[0]] + [_t_sub_mod(pal[i], pal[i - 1])
-                             for i in range(1, n)]
-        _vp8l_entropy_image(bw, deltas, is_main=False)
-        wb = 3 if n <= 2 else 2 if n <= 4 else 1 if n <= 16 else 0
-        idx = [seen[p] for p in px]
-        if wb == 0:
-            px = [0xFF000000 | (i << 8) for i in idx]
-            # width unchanged
-        else:
-            per = 8 >> wb
-            packed_w = (cur_w + (1 << wb) - 1) >> wb
-            rows = []
-            for y in range(h):
-                row = idx[y * cur_w:(y + 1) * cur_w]
-                for px_x in range(packed_w):
-                    byte = 0
-                    for k in range(1 << wb):
-                        x = (px_x << wb) + k
-                        if x < cur_w:
-                            byte |= row[x] << (k * per)
-                    rows.append(0xFF000000 | (byte << 8))
-            px = rows
-            cur_w = packed_w
-    bw.bits(0, 1)  # end of transforms
-    _vp8l_entropy_image(bw, px, is_main=True, cache_bits=cache_bits,
-                        lz77=lz77)
-    return b"\x2f" + bw.payload()
-
-
-def _wrap_webp(payload, vp8x=False, tag=b"VP8L"):
-    import struct as st
-
-    chunks = b""
-    if vp8x:
-        chunks += b"VP8X" + st.pack("<I", 10) + bytes(10)
-    chunks += tag + st.pack("<I", len(payload)) + payload
-    if len(payload) & 1:
-        chunks += b"\x00"
-    riff = b"WEBP" + chunks
-    return b"RIFF" + st.pack("<I", len(riff)) + riff
-
-
-def _encode_webp(rgba, w, h, **kw):
-    return _wrap_webp(_encode_vp8l(rgba, w, h, **kw))
-
-
-def _grad_rgba(w, h):
-    return [((x * 7 + y * 13) % 256, (x * 3 + 11 * y) % 256, (y * 5 + x) % 256,
-             255 if (x + y) % 3 else 128)
-            for y in range(h) for x in range(w)]
-
-
-def _rgba_bytes(rgba):
-    return bytes(b for p in rgba for b in p)
-
-
-def test_vp8l_literal_roundtrip():
-    from kgap_spark.functions.webp import decode_webp
-
-    rgba = _grad_rgba(13, 9)
-    w, h, ch, pix = decode_webp(_encode_webp(rgba, 13, 9))
-    assert (w, h, ch) == (13, 9, 4)
-    assert pix == _rgba_bytes(rgba)
-
-
-def test_vp8l_simple_codes():
-    from kgap_spark.functions.webp import decode_webp
-
-    # 1 color -> every code single-symbol (zero data bits)
-    one = [(10, 20, 30, 255)] * 12
-    assert decode_webp(_encode_webp(one, 4, 3))[3] == _rgba_bytes(one)
-    # 2 colors -> 2-symbol simple codes
-    two = [(0, 0, 0, 255) if i % 2 else (200, 100, 50, 255)
-           for i in range(20)]
-    assert decode_webp(_encode_webp(two, 5, 4))[3] == _rgba_bytes(two)
-
-
-def test_vp8l_subtract_green():
-    from kgap_spark.functions.webp import decode_webp
-
-    rgba = _grad_rgba(8, 8)
-    got = decode_webp(_encode_webp(rgba, 8, 8, subtract_green=True))
-    assert got[3] == _rgba_bytes(rgba)
-
-
-def test_vp8l_palette_bundled():
-    from kgap_spark.functions.webp import decode_webp
-
-    pal = [(255, 0, 0, 255), (0, 255, 0, 255), (0, 0, 255, 128)]
-    rgba = [pal[(x + y) % 3] for y in range(7) for x in range(11)]
-    got = decode_webp(_encode_webp(rgba, 11, 7, palette=True))
-    assert got[:3] == (11, 7, 4)
-    assert got[3] == _rgba_bytes(rgba)
-    # 2-color palette: 8 pixels per packed byte
-    rgba2 = [pal[(x * y) % 2] for y in range(5) for x in range(19)]
-    assert decode_webp(_encode_webp(rgba2, 19, 5,
-                                    palette=True))[3] == _rgba_bytes(rgba2)
-
-
-def test_vp8l_palette_unbundled():
-    from kgap_spark.functions.webp import decode_webp
-
-    colors = [(i * 3 % 256, i * 7 % 256, i * 11 % 256, 255)
-              for i in range(20)]
-    rgba = [colors[(x * 13 + y * 5) % 20] for y in range(6) for x in range(9)]
-    assert decode_webp(_encode_webp(rgba, 9, 6,
-                                    palette=True))[3] == _rgba_bytes(rgba)
-
-
-def test_vp8l_cache_and_lz77():
-    from kgap_spark.functions.webp import decode_webp
-
-    rgba = []
-    for y in range(10):
-        run = [(y * 20 % 256, 50, 200 - y * 10 % 200, 255)] * 12
-        rgba.extend(run)
-        rgba.extend([(5, 5, 5, 255), (y * 20 % 256, 50, 200 - y * 10 % 200,
-                                      255)] * 2)
-    w, h = 16, 10
-    data = _encode_webp(rgba, w, h, cache_bits=4, lz77=True)
-    assert decode_webp(data)[3] == _rgba_bytes(rgba)
-    # and lz77 without cache
-    data2 = _encode_webp(rgba, w, h, lz77=True)
-    assert decode_webp(data2)[3] == _rgba_bytes(rgba)
-
-
-def test_vp8l_predictor_modes():
-    from kgap_spark.functions.webp import decode_webp
-
-    rgba = _grad_rgba(11, 10)
-    for mode in (0, 1, 2, 3, 4, 5, 7, 10, 11, 12, 13):
-        got = decode_webp(_encode_webp(rgba, 11, 10, predictor_mode=mode))
-        assert got[3] == _rgba_bytes(rgba), f"predictor mode {mode}"
-
-
-def test_vp8l_color_transform():
-    from kgap_spark.functions.webp import decode_webp
-
-    rgba = _grad_rgba(9, 7)
-    for cte in ((32, 224, 16), (0, 0, 0), (255, 1, 128)):
-        got = decode_webp(_encode_webp(rgba, 9, 7, color_cte=cte))
-        assert got[3] == _rgba_bytes(rgba), f"cte {cte}"
-
-
-def test_vp8l_transform_combo():
-    from kgap_spark.functions.webp import decode_webp
-
-    rgba = _grad_rgba(12, 5)
-    data = _encode_webp(rgba, 12, 5, subtract_green=True, predictor_mode=7,
-                        cache_bits=3, lz77=True)
-    assert decode_webp(data)[3] == _rgba_bytes(rgba)
-
-
-def test_vp8l_vp8x_container_and_errors():
-    import pytest
-
-    from kgap_spark.functions.webp import decode_webp
-
-    rgba = _grad_rgba(4, 4)
-    payload = _encode_vp8l(rgba, 4, 4)
-    assert decode_webp(_wrap_webp(payload, vp8x=True))[3] == _rgba_bytes(rgba)
-    with pytest.raises(NotImplementedError):
-        decode_webp(_wrap_webp(b"\x00" * 10, tag=b"VP8 "))
-    with pytest.raises(ValueError):
-        decode_webp(b"RIFF\x04\x00\x00\x00WAVE")
-    with pytest.raises(ValueError):
-        decode_webp(_wrap_webp(b"\x00" + payload[1:]))  # bad signature
-    with pytest.raises(ValueError):
-        decode_webp(_wrap_webp(payload[:8]))  # truncated stream
-    # version != 0: flip the 3 version bits (bits 29-31 after signature)
-    bad = bytearray(payload)
-    bad[4] |= 0xE0
-    with pytest.raises(ValueError):
-        decode_webp(_wrap_webp(bytes(bad)))
-
-
-def test_webp_through_multimodal_features():
-    from kgap_spark.functions.multimodal import _decode_image
-
-    feats = _decode_image(_encode_webp(_grad_rgba(16, 12), 16, 12))
-    assert feats is not None and len(feats) == 16
-    assert feats[0] == 16.0 / 4096 and feats[1] == 12.0 / 4096
-    # corrupt VP8L isolates to NULL; lossy VP8 falls to deterministic fake
-    assert _decode_image(_wrap_webp(b"\x2f\x00")) is None
-    lossy = _decode_image(_wrap_webp(b"\x00" * 10, tag=b"VP8 "))
-    assert isinstance(lossy, list) and len(lossy) == 16
-
-
-# ---------------------------------------------------------------------------
-# FLAC: test-side encoder (spec-direct, independent MSB-first writer,
-# own Rice/fixed/LPC/stereo math) + round-trips
-
-
-class _FlacWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.cur = 0
-        self.n = 0
-
-    def bits(self, v, n):  # MSB-first
-        for i in range(n - 1, -1, -1):
-            self.cur = (self.cur << 1) | ((v >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.cur)
-                self.cur = 0
-                self.n = 0
-
-    def signed(self, v, n):
-        self.bits(v & ((1 << n) - 1), n)
-
-    def unary(self, q):  # q zeros then a terminating 1
-        self.bits(1, q + 1)
-
-    def align(self):
-        while self.n:
-            self.bits(0, 1)
-
-    def data(self):
-        assert self.n == 0
-        return bytes(self.out)
-
-
-def _f_crc8(data):
-    crc = 0
-    for b in data:
-        crc ^= b
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x07) & 0xFF if crc & 0x80 \
-                else (crc << 1) & 0xFF
-    return crc
-
-
-def _f_zigzag(v):
-    return (v << 1) if v >= 0 else ((-v << 1) - 1)
-
-
-def _f_rice(bw, residuals, order, blocksize, param=None, part_order=0,
-            escape_nbits=None):
-    bw.bits(0, 2)  # 4-bit rice method
-    bw.bits(part_order, 4)
-    idx = 0
-    for part in range(1 << part_order):
-        count = (blocksize >> part_order) - (order if part == 0 else 0)
-        if escape_nbits is not None and part == 0:
-            bw.bits(15, 4)  # escape
-            bw.bits(escape_nbits, 5)
-            for _ in range(count):
-                bw.signed(residuals[idx], escape_nbits)
-                idx += 1
-        else:
-            seg = residuals[idx:idx + count]
-            p = param
-            if p is None:  # adaptive: bound unary runs on noisy data
-                top = max((_f_zigzag(r) for r in seg), default=0)
-                p = min(14, max(0, top.bit_length() - 2))
-            bw.bits(p, 4)
-            for _ in range(count):
-                u = _f_zigzag(residuals[idx])
-                bw.unary(u >> p)
-                bw.bits(u & ((1 << p) - 1), p)
-                idx += 1
-
-
-def _f_subframe(bw, samples, bps, kind, wasted=0):
-    bw.bits(0, 1)
-    if wasted:
-        samples = [s >> wasted for s in samples]
-        bps -= wasted
-    n = len(samples)
-    # a (final partial) block shorter than the predictor order cannot
-    # use that predictor — real encoders fall back too
-    if kind in ("fixed1", "fixed2", "lpc2") and n <= int(kind[-1]):
-        kind = "verbatim"
-    if kind == "constant":
-        bw.bits(0, 6)
-    elif kind == "verbatim":
-        bw.bits(1, 6)
-    elif kind == "fixed0_escape":
-        bw.bits(8, 6)  # fixed order 0
-    elif kind.startswith("fixed"):
-        order = int(kind[-1])
-        bw.bits(8 + order, 6)
-    else:  # lpc2
-        order = 2
-        bw.bits(32 + order - 1, 6)
-    if wasted:
-        bw.bits(1, 1)
-        bw.unary(wasted - 1)
-    else:
-        bw.bits(0, 1)
-    if kind == "constant":
-        assert all(s == samples[0] for s in samples)
-        bw.signed(samples[0], bps)
-        return
-    if kind == "verbatim":
-        for s in samples:
-            bw.signed(s, bps)
-        return
-    if kind == "fixed1":
-        for s in samples[:1]:
-            bw.signed(s, bps)
-        res = [samples[i] - samples[i - 1] for i in range(1, n)]
-        _f_rice(bw, res, 1, n)
-    elif kind == "fixed2":
-        for s in samples[:2]:
-            bw.signed(s, bps)
-        res = [samples[i] - 2 * samples[i - 1] + samples[i - 2]
-               for i in range(2, n)]
-        # two partitions only when the block size divides evenly
-        _f_rice(bw, res, 2, n, part_order=1 if n % 2 == 0 else 0)
-    elif kind == "fixed0_escape":
-        _f_rice(bw, samples, 0, n, param=0, part_order=0,
-                escape_nbits=bps)
-    else:  # lpc2: coefficients (2, -1) at shift 1 -> pred = s[i-1]
-        for s in samples[:2]:
-            bw.signed(s, bps)
-        bw.bits(4, 4)  # precision-1 -> 5 bits
-        bw.signed(1, 5)  # shift 1
-        bw.signed(2, 5)  # c0 (applies to s[i-1])
-        bw.signed(0, 5)  # c1
-        res = [samples[i] - ((2 * samples[i - 1]) >> 1)
-               for i in range(2, n)]
-        _f_rice(bw, res, 2, n)
-
-
-def _encode_flac(sr, chans, bps=16, blocksize=64, kind="verbatim",
-                 stereo=None, wasted=0, total_override=None):
-    """chans: per-channel int sample lists. stereo: None | 'left_side'
-    | 'right_side' | 'mid_side' (2-channel only)."""
-    import struct as st
-
-    n_total = len(chans[0])
-    out = bytearray(b"fLaC")
-    info = _FlacWriter()
-    info.bits(blocksize, 16)
-    info.bits(blocksize, 16)
-    info.bits(0, 24)
-    info.bits(0, 24)
-    info.bits(sr, 20)
-    info.bits(len(chans) - 1, 3)
-    info.bits(bps - 1, 5)
-    info.bits(n_total if total_override is None else total_override, 36)
-    body = info.data() + bytes(16)  # zero MD5
-    out += bytes((0x80,)) + st.pack(">I", len(body))[1:] + body
-    frame_no = 0
-    for start in range(0, n_total, blocksize):
-        bsz = min(blocksize, n_total - start)
-        hdr = _FlacWriter()
-        hdr.bits(0x3FFE, 14)
-        hdr.bits(0, 1)
-        hdr.bits(0, 1)  # fixed blocking
-        hdr.bits(7, 4)  # 16-bit blocksize-1 follows
-        hdr.bits(0, 4)  # sample rate from STREAMINFO
-        if stereo is None:
-            hdr.bits(len(chans) - 1, 4)
-        else:
-            hdr.bits({"left_side": 8, "right_side": 9,
-                      "mid_side": 10}[stereo], 4)
-        hdr.bits(0, 3)  # sample size from STREAMINFO
-        hdr.bits(0, 1)
-        assert frame_no < 128
-        hdr.bits(frame_no, 8)  # coded number, single byte
-        hdr.bits(bsz - 1, 16)
-        hbytes = hdr.data()
-        bw = _FlacWriter()
-        for b in hbytes:
-            bw.bits(b, 8)
-        bw.bits(_f_crc8(hbytes), 8)
-        segs = [c[start:start + bsz] for c in chans]
-        if stereo is None:
-            for seg in segs:
-                _f_subframe(bw, seg, bps, kind, wasted=wasted)
-        else:
-            left, right = segs
-            side = [l - r for l, r in zip(left, right)]
-            if stereo == "left_side":
-                _f_subframe(bw, left, bps, kind)
-                _f_subframe(bw, side, bps + 1, kind)
-            elif stereo == "right_side":
-                _f_subframe(bw, side, bps + 1, kind)
-                _f_subframe(bw, right, bps, kind)
-            else:
-                mid = [(l + r) >> 1 for l, r in zip(left, right)]
-                _f_subframe(bw, mid, bps, kind)
-                _f_subframe(bw, side, bps + 1, kind)
-        bw.align()
-        bw.bits(0, 16)  # footer CRC-16 (decoder does not validate)
-        out += bw.data()
-        frame_no += 1
-    return bytes(out)
-
-
-def _f_ints(arr, bps):
-    import numpy as np
-
-    return np.rint(arr * float(1 << (bps - 1))).astype(int)
-
-
-def test_flac_constant_and_verbatim():
-    import numpy as np
-
-    from kgap_spark.functions.flac import decode_flac
-
-    const = [-123] * 96
-    sr, ch, arr = decode_flac(_encode_flac(8000, [const], kind="constant"))
-    assert (sr, ch) == (8000, 1)
-    assert np.array_equal(_f_ints(arr[:, 0], 16), const)
-    samples = [((i * 37) % 1024) - 512 for i in range(200)]
-    sr, ch, arr = decode_flac(_encode_flac(44100, [samples],
-                                           kind="verbatim"))
-    assert np.array_equal(_f_ints(arr[:, 0], 16), samples)
-
-
-def test_flac_fixed_and_lpc_predictors():
-    import numpy as np
-
-    from kgap_spark.functions.flac import decode_flac
-
-    samples = [int(100 * (i % 17)) - 800 + (i // 3) for i in range(256)]
-    for kind in ("fixed1", "fixed2", "lpc2"):
-        sr, ch, arr = decode_flac(
-            _encode_flac(16000, [samples], kind=kind, blocksize=64))
-        assert np.array_equal(_f_ints(arr[:, 0], 16), samples), kind
-
-
-def test_flac_escape_partition_and_wasted_bits():
-    import numpy as np
-
-    from kgap_spark.functions.flac import decode_flac
-
-    samples = [((i * 13) % 200) - 100 for i in range(128)]
-    sr, ch, arr = decode_flac(
-        _encode_flac(8000, [samples], kind="fixed0_escape"))
-    assert np.array_equal(_f_ints(arr[:, 0], 16), samples)
-    shifted = [s * 4 for s in samples]  # 2 wasted bits
-    sr, ch, arr = decode_flac(
-        _encode_flac(8000, [shifted], kind="verbatim", wasted=2))
-    assert np.array_equal(_f_ints(arr[:, 0], 16), shifted)
-
-
-def test_flac_stereo_decorrelation():
-    import numpy as np
-
-    from kgap_spark.functions.flac import decode_flac
-
-    left = [((i * 31) % 500) - 250 for i in range(192)]
-    right = [((i * 7) % 300) - 150 + (1 if i % 2 else 0)
-             for i in range(192)]
-    for mode in ("left_side", "right_side", "mid_side"):
-        sr, ch, arr = decode_flac(
-            _encode_flac(22050, [left, right], stereo=mode, kind="verbatim"))
-        assert ch == 2
-        assert np.array_equal(_f_ints(arr[:, 0], 16), left), mode
-        assert np.array_equal(_f_ints(arr[:, 1], 16), right), mode
-
-
-def test_flac_multichannel_and_rates():
-    import numpy as np
-
-    from kgap_spark.functions.flac import decode_flac
-
-    chans = [[(i * k) % 256 - 128 for i in range(96)] for k in (3, 5, 7)]
-    sr, ch, arr = decode_flac(_encode_flac(48000, chans, kind="verbatim"))
-    assert (sr, ch) == (48000, 3)
-    for k in range(3):
-        assert np.array_equal(_f_ints(arr[:, k], 16), chans[k])
-
-
-def test_flac_malformed():
-    import pytest
-
-    from kgap_spark.functions.flac import decode_flac
-
-    good = _encode_flac(8000, [[1, 2, 3, 4] * 16], kind="verbatim")
-    with pytest.raises(ValueError):
-        decode_flac(b"fLaX" + good[4:])
-    with pytest.raises(ValueError):
-        decode_flac(good[:40])  # truncated mid-stream
-    bad = bytearray(good)
-    bad[-10] ^= 0xFF  # corrupt subframe payload tail
-    # either CRC/sync failure or truncation — must raise, not garbage
-    with pytest.raises(ValueError):
-        corrupt_hdr = bytearray(good)
-        hdr_at = good.index(b"\xff\xf8")
-        corrupt_hdr[hdr_at + 2] ^= 0x40
-        decode_flac(bytes(corrupt_hdr))
-
-
-def test_flac_through_multimodal_features():
-    from kgap_spark.functions.multimodal import _decode_audio
-
-    samples = [((i * 37) % 1024) - 512 for i in range(400)]
-    feats = _decode_audio(_encode_flac(16000, [samples], kind="fixed1"))
-    assert feats is not None and len(feats) == 16
-    assert feats[1] == 16000 / 48000.0  # sample-rate slot
-    # corrupt FLAC isolates to NULL
-    assert _decode_audio(b"fLaC" + b"\x00" * 8) is None
-
-
-# ---------------------------------------------------------------------------
-# WAV ADPCM (IMA 0x11 / Microsoft 0x02): test-side encoders that track
-# their own decoder-identical reconstruction — the round-trip asserts
-# the decoder reproduces the encoder's state machine EXACTLY
-
-
-def _wav_wrap(tag, ch, sr, block_align, bits, spb, body):
-    import struct as st
-
-    fmt = st.pack("<HHIIHHHH", tag, ch, sr, sr * block_align, block_align,
-                  bits, 2, spb)
-    chunks = (b"WAVE" + b"fmt " + st.pack("<I", len(fmt)) + fmt
-              + b"data" + st.pack("<I", len(body)) + body)
-    return b"RIFF" + st.pack("<I", len(chunks)) + chunks
-
-
-def _ima_encode(sr, chans):
-    import struct as st
-
-    from kgap_spark.functions.audio import _IMA_INDEX, _IMA_STEPS
-
-    ch = len(chans)
-    block_align = 4 * ch + 16 * ch  # 4 nibble groups per channel
-    spb = 1 + 32
-    n = len(chans[0])
-    nblocks = (n + spb - 1) // spb
-    padded = [list(c) + [c[-1]] * (nblocks * spb - n) for c in chans]
-    body = bytearray()
-    recon = [[] for _ in range(ch)]
-    idxs = [0] * ch
-    for b in range(nblocks):
-        seg = [c[b * spb:(b + 1) * spb] for c in padded]
-        nibs = [[] for _ in range(ch)]
-        for c in range(ch):
-            pred = seg[c][0]
-            body += st.pack("<hBB", pred, idxs[c], 0)
-            recon[c].append(pred)
-            index = idxs[c]
-            for x in seg[c][1:]:
-                step = _IMA_STEPS[index]
-                d = x - pred
-                nib = 0
-                if d < 0:
-                    nib = 8
-                    d = -d
-                if d >= step:
-                    nib |= 4
-                    d -= step
-                if d >= step >> 1:
-                    nib |= 2
-                    d -= step >> 1
-                if d >= step >> 2:
-                    nib |= 1
-                diff = step >> 3
-                if nib & 1:
-                    diff += step >> 2
-                if nib & 2:
-                    diff += step >> 1
-                if nib & 4:
-                    diff += step
-                pred += -diff if nib & 8 else diff
-                pred = max(-32768, min(32767, pred))
-                index = max(0, min(88, index + _IMA_INDEX[nib & 7]))
-                nibs[c].append(nib)
-                recon[c].append(pred)
-            idxs[c] = index
-        for g in range(4):
-            for c in range(ch):
-                for k in range(4):
-                    body.append(nibs[c][g * 8 + 2 * k]
-                                | (nibs[c][g * 8 + 2 * k + 1] << 4))
-    return _wav_wrap(0x11, ch, sr, block_align, 4, spb, bytes(body)), recon
-
-
-def _ms_encode(sr, chans, pidx=0):
-    import struct as st
-
-    from kgap_spark.functions.audio import _MS_ADAPT, _MS_COEFS
-
-    c1, c2 = _MS_COEFS[pidx]
-    ch = len(chans)
-    datab = 32 * ch
-    spb = 2 + (2 * datab) // ch
-    block_align = 7 * ch + datab
-    n = len(chans[0])
-    nblocks = (n + spb - 1) // spb
-    padded = [list(c) + [c[-1]] * (nblocks * spb - n) for c in chans]
-    body = bytearray()
-    recon = [[] for _ in range(ch)]
-    for b in range(nblocks):
-        seg = [c[b * spb:(b + 1) * spb] for c in padded]
-        deltas = [32] * ch
-        s2 = [seg[c][0] for c in range(ch)]
-        s1 = [seg[c][1] for c in range(ch)]
-        for c in range(ch):
-            body.append(pidx)
-        for vals in (deltas, s1, s2):
-            for c in range(ch):
-                body += st.pack("<h", vals[c])
-        for c in range(ch):
-            recon[c].append(s2[c])
-            recon[c].append(s1[c])
-        nibbles = []
-        pos = [2] * ch
-        for which in range((spb - 2) * ch):
-            c = which % ch
-            x = seg[c][pos[c]]
-            pos[c] += 1
-            # decoder-identical: C '/ 256' truncates toward zero
-            acc = s1[c] * c1 + s2[c] * c2
-            pred = acc // 256 if acc >= 0 else -((-acc) // 256)
-            s = max(-8, min(7, round((x - pred) / deltas[c])))
-            nib = s & 0xF
-            new = max(-32768, min(32767, pred + deltas[c] * s))
-            s2[c], s1[c] = s1[c], new
-            deltas[c] = max(16, (_MS_ADAPT[nib] * deltas[c]) >> 8)
-            recon[c].append(new)
-            nibbles.append(nib)
-        for k in range(0, len(nibbles), 2):
-            body.append((nibbles[k] << 4) | nibbles[k + 1])
-    return _wav_wrap(0x02, ch, sr, block_align, 4, spb, bytes(body)), recon
-
-
-def _sig(n, k, amp=3000):
-    import math
-
-    return [int(amp * math.sin(i / k)) + (i % 7) * 11 for i in range(n)]
-
-
-def test_ima_adpcm_roundtrip():
-    import numpy as np
-
-    from kgap_spark.functions.audio import decode_wav
-
-    chans = [_sig(200, 9.0)]
-    data, recon = _ima_encode(8000, chans)
-    sr, ch, arr = decode_wav(data)
-    assert (sr, ch) == (8000, 1)
-    got = np.rint(arr[:, 0] * 32768.0).astype(int)
-    assert np.array_equal(got, recon[0][:len(got)])
-    # tracks the source once the adaptive step ramps up (the first
-    # samples lag while the step index climbs from 0)
-    assert np.max(np.abs(got[50:200] - np.array(chans[0][50:]))) < 150
-
-
-def test_ima_adpcm_stereo():
-    import numpy as np
-
-    from kgap_spark.functions.audio import decode_wav
-
-    chans = [_sig(150, 7.0), _sig(150, 13.0, amp=1500)]
-    data, recon = _ima_encode(22050, chans)
-    sr, ch, arr = decode_wav(data)
-    assert (sr, ch) == (22050, 2)
-    for c in range(2):
-        got = np.rint(arr[:, c] * 32768.0).astype(int)
-        assert np.array_equal(got, recon[c][:len(got)])
-
-
-def test_ms_adpcm_roundtrip():
-    import numpy as np
-
-    from kgap_spark.functions.audio import decode_wav
-
-    # pidx 0 = (256, 0): products are multiples of 256 (floor == trunc);
-    # pidx 3 = (192, 64): negative zero-crossing sums exercise the
-    # C-style truncation-toward-zero prediction divide
-    for chans, sr, pidx in (
-            ([_sig(180, 11.0)], 16000, 0),
-            ([_sig(140, 5.0), _sig(140, 17.0, amp=800)], 44100, 0),
-            ([_sig(200, 9.0, amp=-2500)], 22050, 3),
-            ([_sig(150, 6.0), _sig(150, 13.0, amp=-900)], 8000, 3)):
-        data, recon = _ms_encode(sr, chans, pidx=pidx)
-        got_sr, ch, arr = decode_wav(data)
-        assert (got_sr, ch) == (sr, len(chans))
-        for c in range(ch):
-            got = np.rint(arr[:, c] * 32768.0).astype(int)
-            assert np.array_equal(got, recon[c][:len(got)])
-
-
-def test_adpcm_malformed():
-    import struct as st
-
-    import pytest
-
-    from kgap_spark.functions.audio import decode_wav
-
-    data, _ = _ima_encode(8000, [_sig(50, 9.0)])
-    # corrupt the first block's step index to 200 (> 88)
-    arr = bytearray(data)
-    at = arr.index(b"data") + 8
-    arr[at + 2] = 200
-    with pytest.raises(ValueError, match="step index"):
-        decode_wav(bytes(arr))
-    # MS predictor index out of range
-    data2, _ = _ms_encode(8000, [_sig(80, 9.0)])
-    arr2 = bytearray(data2)
-    at2 = arr2.index(b"data") + 8
-    arr2[at2] = 9
-    with pytest.raises(ValueError, match="predictor index"):
-        decode_wav(bytes(arr2))
-
-
-def test_adpcm_through_multimodal():
-    from kgap_spark.functions.multimodal import _decode_audio
-
-    data, _ = _ima_encode(16000, [_sig(300, 8.0)])
-    feats = _decode_audio(data)
-    assert feats is not None and len(feats) == 16
-    assert feats[1] == 16000 / 48000.0
+    assert len(out["v2"]) == 16  # deterministic stub path

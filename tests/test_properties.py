@@ -201,71 +201,3 @@ def test_sparql_parser_never_crashes_on_garbage(text):
         parse_sparql("SELECT * WHERE { " + text + " }")
     except ValueError:
         pass
-
-
-# ---------------------------------------------------------------------------
-# codec round-trip properties: random pixels/signals × random encoder
-# options through the independent test-side encoders must reproduce
-# the input exactly (no Spark involved — pure decode-path fuzz)
-
-
-@given(
-    w=st.integers(1, 17), h=st.integers(1, 13),
-    seed=st.integers(0, 2**31),
-    subtract_green=st.booleans(),
-    cache_bits=st.sampled_from([0, 2, 5]),
-    lz77=st.booleans(),
-    predictor=st.sampled_from([None, 1, 2, 7, 11, 12, 13]),
-)
-@settings(max_examples=40, deadline=None)
-def test_vp8l_roundtrip_property(w, h, seed, subtract_green, cache_bits,
-                                 lz77, predictor):
-    import random
-
-    from kgap_spark.functions.webp import decode_webp
-    from tests.test_functions import _encode_webp
-
-    rng = random.Random(seed)
-    # mix of flat runs (exercises LZ77/cache) and noise
-    rgba = []
-    px = (rng.randrange(256), rng.randrange(256), rng.randrange(256), 255)
-    for _ in range(w * h):
-        if rng.random() < 0.6:
-            rgba.append(px)
-        else:
-            px = (rng.randrange(256), rng.randrange(256),
-                  rng.randrange(256), rng.choice((128, 255)))
-            rgba.append(px)
-    data = _encode_webp(rgba, w, h, subtract_green=subtract_green,
-                        cache_bits=cache_bits, lz77=lz77,
-                        predictor_mode=predictor)
-    ww, hh, ch, pix = decode_webp(data)
-    assert (ww, hh, ch) == (w, h, 4)
-    assert pix == bytes(b for p in rgba for b in p)
-
-
-@given(
-    n=st.integers(1, 300), seed=st.integers(0, 2**31),
-    stereo=st.sampled_from([None, "left_side", "right_side", "mid_side"]),
-    kind=st.sampled_from(["verbatim", "fixed1", "fixed2", "lpc2"]),
-)
-@settings(max_examples=40, deadline=None)
-def test_flac_roundtrip_property(n, seed, stereo, kind):
-    import random
-
-    import numpy as np
-
-    from kgap_spark.functions.flac import decode_flac
-    from tests.test_functions import _encode_flac
-
-    rng = random.Random(seed)
-    ch = 2 if stereo else 1
-    chans = [[rng.randrange(-30000, 30000) for _ in range(n)]
-             for _ in range(ch)]
-    data = _encode_flac(22050, chans, kind=kind, stereo=stereo,
-                        blocksize=64)
-    sr, got_ch, arr = decode_flac(data)
-    assert (sr, got_ch) == (22050, ch)
-    for c in range(ch):
-        got = np.rint(arr[:n, c] * 32768.0).astype(int)
-        assert np.array_equal(got, np.array(chans[c])), (kind, stereo, c)

@@ -83,9 +83,14 @@ def test_parse_turtle_escapes_and_long_literals():
 def test_parse_reference_config_ttl():
     """The reference's real repo-config TTL must parse (bnodes, prefixed
     names, nested property lists)."""
+    import os
+
     from kgap_spark.io.turtle import parse_turtle
 
-    text = open("/root/reference/graphdb/kgap/template-repo-config.ttl").read()
+    path = "/root/reference/graphdb/kgap/template-repo-config.ttl"
+    if not os.path.exists(path):
+        pytest.skip(f"reference config TTL not present at {path}")
+    text = open(path).read()
     quads = parse_turtle(text, default_graph="urn:cfg")
     assert len(quads) > 20
     assert any("repositoryID" in q[1] for q in quads)
