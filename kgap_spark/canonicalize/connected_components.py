@@ -76,16 +76,16 @@ def duplicate_edges(
 
 
 def _salted_min_label(assign: DataFrame, salt: int) -> DataFrame:
-    """groupBy(node) → min(label) in two phases via a deterministic salt
-    derived from the label value (pure; no rand()). Partial/map-side
-    aggregation already dampens skew; the explicit salt guarantees no
-    single reducer sees a hub node's full edge list."""
+    """groupBy(node) → min(label), max(_old) in two phases via a
+    deterministic salt derived from the label value (pure; no rand()).
+    Partial/map-side aggregation already dampens skew; the explicit salt
+    guarantees no single reducer sees a hub node's full edge list."""
     salted = assign.withColumn("_salt", F.pmod(F.xxhash64("label"), F.lit(salt)))
     return (
         salted.groupBy("node", "_salt")
-        .agg(F.min("label").alias("label"))
+        .agg(F.min("label").alias("label"), F.max("_old").alias("_old"))
         .groupBy("node")
-        .agg(F.min("label").alias("label"))
+        .agg(F.min("label").alias("label"), F.max("_old").alias("_old"))
     )
 
 
@@ -100,8 +100,9 @@ def connected_components(
     (lexicographic) in the component.
 
     Iterative min-label propagation; each round is one shuffle on
-    ``node`` plus the salted aggregation. ``localCheckpoint`` truncates
-    the plan so round N doesn't recompute rounds 1..N-1.
+    ``node`` plus the salted aggregation (round 1 is a single
+    aggregation of the edges). ``localCheckpoint`` truncates the plan so
+    round N doesn't recompute rounds 1..N-1.
 
     ``num_partitions`` pins the iteration partitioning: dictionary-size
     edge sets (10⁴–10⁶ rows) drown in task-scheduling overhead at the
@@ -117,34 +118,31 @@ def connected_components(
         sym = sym.repartition(num_partitions, "src")
     sym = sym.localCheckpoint(eager=True)
 
+    # round 1 needs no join: every node starts labelled with itself, so
+    # its first label is the least of itself and its neighbours. Each
+    # round's rows carry the label they replace as _old, so its own
+    # output shows whether anything moved.
     labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
+        sym.groupBy("src")
+        .agg(F.least(F.col("src"), F.min("dst")).alias("label"))
+        .select(F.col("src").alias("node"), "label", F.col("src").alias("_old"))
         .localCheckpoint(eager=True)
     )
-
-    converged = False
-    for _ in range(max_iter):
+    no_old = F.lit(None).cast(labels.schema["label"].dataType).alias("_old")
+    converged = labels.filter(F.col("label") != F.col("_old")).isEmpty()
+    rounds = 1
+    while not converged and rounds < max_iter:
         # candidate labels flowing along edges
         neighbor_labels = sym.join(
             labels, sym["dst"] == labels["node"], "inner"
-        ).select(F.col("src").alias("node"), "label")
-        new_labels = _salted_min_label(
-            labels.select("node", "label").union(neighbor_labels), salt
+        ).select(F.col("src").alias("node"), "label", no_old)
+        labels = _salted_min_label(
+            labels.select("node", "label", F.col("label").alias("_old"))
+            .union(neighbor_labels),
+            salt,
         ).localCheckpoint(eager=True)
-
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
+        converged = labels.filter(F.col("label") != F.col("_old")).isEmpty()
+        rounds += 1
     if not converged and strict:
         # partially-propagated labels split one component into several —
         # silently returning them would be wrong canonicalization

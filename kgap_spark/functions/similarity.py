@@ -18,6 +18,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgap_spark.session import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -196,8 +198,8 @@ def embedding_near_dup_pairs(
     disagreement probability θ/π; multiprobe covers 1-bit misses."""
     dim = _dim_of(embeddings, vec_col)
     if dim is None:  # empty corpus → empty pair set
-        return embeddings.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cosine double"
+        return local_frame(
+            embeddings.sparkSession, [], "id_a long, id_b long, cosine double"
         )
     planes = _hyperplanes(dim, n_planes, seed)
     base = embeddings.select(

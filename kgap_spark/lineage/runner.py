@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgap_spark import schemas as S
+from kgap_spark.session import local_frame
 from kgap_spark.triples.materialize import build_triples, graph_of
 from kgap_spark.triples.writer import TripleStore
 
@@ -45,7 +46,7 @@ class LineageLog:
         if not any(
             f.endswith(".parquet") for f in fs.list_names(self.spark, self.path)
         ):
-            return self.spark.createDataFrame([], S.LINEAGE)
+            return local_frame(self.spark, [], S.LINEAGE)
         # explicit schema: no footer-inference job on every resume
         return self.spark.read.schema(S.LINEAGE).parquet(self.path)
 
@@ -62,7 +63,8 @@ class LineageLog:
     def append(self, rows: list[dict]) -> None:
         if not rows:
             return
-        df = self.spark.createDataFrame(
+        df = local_frame(
+            self.spark,
             [
                 (
                     r["graph"],
@@ -111,7 +113,7 @@ def run_pipeline_resumable(
     if fail_graphs:
         # simulate a mid-run death: drop the failing graphs' rows from
         # this run and log them as failed (skip-and-continue semantics)
-        fail_df = spark.createDataFrame([(g,) for g in fail_graphs], "graph string")
+        fail_df = local_frame(spark, [(g,) for g in fail_graphs], "graph string")
         pending_pages = pending_pages.join(F.broadcast(fail_df), "graph", "left_anti")
 
     # one materialization serves the count-collect AND build_triples
@@ -137,7 +139,7 @@ def run_pipeline_resumable(
         # still yields complete *per-graph* output because graphs are
         # site-disjoint)
         keep = set(pending_graphs) | ({S.GRAPH_DICT} if include_dict_graph else set())
-        keep_df = spark.createDataFrame([(g,) for g in sorted(keep)], "graph string")
+        keep_df = local_frame(spark, [(g,) for g in sorted(keep)], "graph string")
         triples = triples.join(F.broadcast(keep_df), "graph", "left_semi")
 
         triples = triples.localCheckpoint(eager=True)  # compute once: counts + write

@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 from kgap_spark.query.patterns import (
     Var, bgp, _is_meta, PathNeg, TypedLit, XSD_STRING,
 )
+from kgap_spark.session import local_frame
 
 LUCENE_NS = "http://www.ontotext.com/owlim/lucene#"
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -2327,7 +2328,7 @@ def _path_pairs(triples: DataFrame, p, s_term, o_term,
     )
     if start is not None:
         # constant subject: zero-length yields exactly (start, start)
-        nodes = spark.createDataFrame([(start,)], f"{_PN} string")
+        nodes = local_frame(spark, [(start,)], f"{_PN} string")
         if graph_var:
             nodes = nodes.crossJoin(graphs_df)
     else:
@@ -2347,8 +2348,8 @@ def _path_pairs(triples: DataFrame, p, s_term, o_term,
                 # ZeroLengthPath(term) holds for literal terms too
                 consts.append(_write_term(c))
         if consts:
-            extra = spark.createDataFrame(
-                [(c,) for c in sorted(set(consts))], f"{_PN} string"
+            extra = local_frame(
+                spark, [(c,) for c in sorted(set(consts))], f"{_PN} string"
             )
             if graph_var:
                 extra = extra.crossJoin(graphs_df)
@@ -2574,7 +2575,8 @@ def _apply_values(triples: DataFrame, df: DataFrame | None, maybe: set,
               if any(isinstance(r[i], Lit) for r in rows)}
     spark = triples.sparkSession
     if not tagged:
-        vdf = spark.createDataFrame(
+        vdf = local_frame(
+            spark,
             [tuple(r) for r in rows],
             ", ".join(f"{n} string" for n in names),
         )
@@ -2594,7 +2596,7 @@ def _apply_values(triples: DataFrame, df: DataFrame | None, maybe: set,
                 row.append(t.lang if isinstance(t, Lit) else None)
                 row.append(t.datatype if isinstance(t, Lit) else None)
         out_rows.append(tuple(row))
-    vdf = spark.createDataFrame(out_rows, ", ".join(fields))
+    vdf = local_frame(spark, out_rows, ", ".join(fields))
     if df is None:
         # the VALUES table IS the solution; tagged columns' meta rides
         # along as the binding's {var}__lang/{var}__dt
@@ -3447,7 +3449,8 @@ def execute_sparql_update(store, text: str,
     if u.form in ("insert_data", "delete_data"):
         # nullable staging schema: a DELETE DATA row with no graph term
         # is a cross-graph wildcard (graph = NULL here, resolved below)
-        quads = spark.createDataFrame(
+        quads = local_frame(
+            spark,
             _ground_rows(u.data, default_graph),
             "subj string, pred string, obj string, obj_lang string, "
             "obj_datatype string, graph string, src_url string",

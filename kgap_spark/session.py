@@ -13,13 +13,50 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 # Arrow batch size for pandas-UDF stages. The reference tunes its ingest
 # batch between 500 and 5000 members (ldes-consumer/app.py:334,
 # docs/components/ldes-consumer.md:228); 4096 rows per Arrow batch plays
 # the same role for the extraction/scoring UDFs here.
 ARROW_BATCH_ROWS = 4096
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: StructType | str
+) -> DataFrame:
+    """Driver-side rows as a DataFrame that no Python worker scans.
+
+    ``spark.createDataFrame(<list>)`` parallelizes the pickled rows
+    into a PythonRDD, so every scan of the frame runs one Python-worker
+    task per partition. Here the rows become a ``pyarrow.Table`` that
+    the JVM reads directly: under
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default) the plan is a ``LocalRelation``; above it the table is cut
+    into Arrow batches of ``ARROW_BATCH_ROWS`` rows (the
+    ``maxRecordsPerBatch`` that ``get_spark`` sets), one partition each.
+
+    ``schema`` is a ``StructType`` or a DDL string (``"graph string"``,
+    whose fields are nullable). Each row is a tuple in field order.
+    ``None`` in a non-nullable field raises ``ValueError`` naming the
+    field, as the list path does.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    width = len(arrow_schema)
+    if any(len(r) != width for r in rows):
+        raise ValueError(f"every row needs {width} values: {schema.simpleString()}")
+    columns = list(zip(*rows)) if rows else [()] * width
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(

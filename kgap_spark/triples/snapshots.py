@@ -91,6 +91,7 @@ from pyspark.sql import functions as F
 
 from kgap_spark import schemas as S
 from kgap_spark.io import fs
+from kgap_spark.session import local_frame
 from kgap_spark.triples.writer import (
     QUAD_KEY,
     TripleStore,
@@ -418,7 +419,7 @@ class SnapshotStore(TripleStore):
         ("1.50") can never be inferred to double and round-trip
         wrong, and footer-sampling schema inference is skipped."""
         if not entries:
-            return self.spark.createDataFrame([], S.TRIPLES)
+            return local_frame(self.spark, [], S.TRIPLES)
         by_dir: dict[str, list[str]] = defaultdict(list)
         for e in entries:
             snap_rel = e["path"].split("/", 1)[0]
@@ -677,8 +678,8 @@ class SnapshotStore(TripleStore):
         live = {e["graph"] for e in self._files(base)}
         graphs = self._graph_list(dels)
         if graphs is None:
-            live_df = self.spark.createDataFrame(
-                [(g,) for g in sorted(live)], "graph string")
+            live_df = local_frame(
+                self.spark, [(g,) for g in sorted(live)], "graph string")
             graphs = [
                 r.graph for r in dels.select("graph").distinct()
                 .join(F.broadcast(live_df), "graph", "left_semi")

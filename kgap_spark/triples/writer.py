@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 
 from kgap_spark import schemas as S
 from kgap_spark.io import fs
+from kgap_spark.session import local_frame
 
 # Quad identity: the object TERM includes its language tag / datatype —
 # "Paris"@en and "Paris"@fr are distinct statements, so merge/delete
@@ -134,7 +135,7 @@ class TripleStore:
         module docstring)."""
         entries = fs.list_status(self.spark, self.path)
         if not any(e["name"].startswith("graph=") for e in entries):
-            return self.spark.createDataFrame([], S.TRIPLES)
+            return local_frame(self.spark, [], S.TRIPLES)
         key = sorted((e["name"], e["mtime"]) for e in entries)
         if self._scan is not None and self._scan[0] == key:
             return self._scan[1]

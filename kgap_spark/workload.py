@@ -21,6 +21,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kgap_spark.session import local_frame
+
 
 def _cache_key(sf_dir: str, table: str) -> str:
     """Content-aware key for the build-once index caches in /tmp: the
@@ -79,8 +81,8 @@ def q_kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang"),
         F.col("text"),
     )
-    alias_dict = spark.createDataFrame(
-        MENTION_DICT, "alias string, entity_id string, lang string, prior double"
+    alias_dict = local_frame(
+        spark, MENTION_DICT, "alias string, entity_id string, lang string, prior double"
     )
     return (
         mention_entities(docs, alias_dict).select(

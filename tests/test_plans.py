@@ -92,6 +92,59 @@ def test_pipeline_python_crossing_is_extraction_only(spark, tiny):
         "ArrowEvalPython [extract_text_udf(")
 
 
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_driver_frames_are_local_relations(spark, tmp_path):
+    """Frames built from driver-side rows (the empty lineage log, the
+    lineage append, the empty store) are LocalRelations: no PythonRDD,
+    so no scan of them runs a Python worker."""
+    from kgap_spark import schemas as S
+    from kgap_spark.lineage import LineageLog
+    from kgap_spark.session import local_frame
+    from kgap_spark.triples import TripleStore
+
+    appended = local_frame(
+        spark, [("urn:g:a", 0, "run1", 3, 5, 1, "ok", None)], S.LINEAGE
+    )
+    for df in (
+        LineageLog(spark, str(tmp_path / "lineage")).completed_graphs(),
+        appended,
+        TripleStore(spark, str(tmp_path / "triples")).read(),
+    ):
+        plan = _optimized(df)
+        assert "LocalRelation" in plan, plan
+        assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
+
+
+def test_create_data_frame_only_in_local_frame():
+    """One way to build driver frames: every ``createDataFrame`` call in
+    the package sits inside ``session.local_frame``."""
+    import ast
+    from pathlib import Path
+
+    import kgap_spark
+
+    root = Path(kgap_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        allowed = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
+                allowed.update(id(n) for n in ast.walk(node))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+                and id(node) not in allowed
+            ):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert offenders == []
+
+
 def test_semi_and_anti_join_operators(spark, sf):
     from kgap_spark.workload import QUERIES
 

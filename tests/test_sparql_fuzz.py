@@ -272,11 +272,14 @@ def test_engine_agrees_with_naive_evaluator(spark, case):
 
     from kgap_spark import schemas as S
     from kgap_spark.query.sparql import execute_sparql
+    from kgap_spark.session import local_frame
 
     # plain literals carry no datatype; IRIs are written as-is in this
-    # store convention — mark nothing, both are plain strings
+    # store convention — mark nothing, both are plain strings. A local
+    # frame: every BGP slice re-scans it, and a list-built frame would
+    # run Python-worker tasks on each scan.
     rows = [(s, p, o, None, None, g, None) for s, p, o, g in kb]
-    t = spark.createDataFrame(rows, S.TRIPLES)
+    t = local_frame(spark, rows, S.TRIPLES)
 
     df = execute_sparql(t, query)
     # None-safe total sort key: unbound vars (None) sort before any
