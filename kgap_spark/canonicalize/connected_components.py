@@ -29,7 +29,7 @@ shallow (near-clique), so 2–3 rounds in practice. Skew handling:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_SALT = 8
@@ -43,30 +43,36 @@ def duplicate_edges(
 ) -> DataFrame:
     """alias_dict → undirected duplicate edges (src < dst).
 
-    Self-join on (alias, lang) restricted to groups of ≤ ``max_group``
-    candidate entities, then count shared surface forms per pair.
+    One aggregation per (alias, lang) collects the sorted distinct
+    entity ids of groups of ≤ ``max_group`` entities (a NULL id counts
+    toward the cap but never pairs; a NULL alias or lang never pairs),
+    emits each group's ``i < j`` pairs from the array, and one count
+    per pair keeps those sharing ≥ ``min_shared`` surface forms. Two
+    exchanges: no distinct, window or self-join.
     """
-    keyed = (
-        alias_dict.select("alias", "lang", "entity_id")
-        .distinct()
-        .withColumn(
-            "_gsz",
-            F.count(F.lit(1)).over(Window.partitionBy("alias", "lang")),
+    groups = (
+        alias_dict.filter(F.col("alias").isNotNull() & F.col("lang").isNotNull())
+        .groupBy("alias", "lang")
+        .agg(
+            F.array_sort(F.collect_set("entity_id")).alias("ids"),
+            F.max(F.col("entity_id").isNull().cast("int")).alias("_null"),
         )
-        .filter(F.col("_gsz") <= max_group)
-        .drop("_gsz")
+        .filter(F.size("ids") + F.col("_null") <= max_group)
     )
-    a = keyed.alias("a")
-    b = keyed.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.alias") == F.col("b.alias"))
-        & (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.entity_id") < F.col("b.entity_id")),
-        "inner",
-    ).select(
-        F.col("a.entity_id").alias("src"), F.col("b.entity_id").alias("dst")
-    )
+    ids = F.col("ids")
+    pairs = groups.select(
+        F.explode(
+            F.flatten(
+                F.transform(
+                    ids,
+                    lambda x, i: F.transform(
+                        F.slice(ids, i + 2, F.size(ids)),
+                        lambda y: F.struct(x.alias("src"), y.alias("dst")),
+                    ),
+                )
+            )
+        ).alias("p")
+    ).select("p.src", "p.dst")
     return (
         pairs.groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("shared"))

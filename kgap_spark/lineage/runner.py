@@ -102,12 +102,22 @@ def run_pipeline_resumable(
     driver loops would serialize the cluster (SURVEY §2.4 J9 is the
     anti-pattern); isolation is at commit time, where dynamic partition
     overwrite makes each graph's write independent and idempotent.
+    Within that run, ``build_triples`` materializes its two branches
+    concurrently: canonicalization of the dictionary on a second thread,
+    extract → detect → link of the pending pages on this one. The
+    triples are then checkpointed once for the counts and the write.
+
+    A site whose graph equals the dictionary graph (``https://dict.…``)
+    raises ``ValueError`` before any triples are built: its page triples
+    could not be told apart from the dictionary's.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.monotonic()
 
     pages_g = pages.withColumn("graph", graph_of(F.col("url")))
-    done = lineage.completed_graphs()
+    # the dictionary graph's own 'ok' rows never complete a site: pages
+    # of a site named like it stay pending and fail below
+    done = lineage.completed_graphs().filter(F.col("graph") != S.GRAPH_DICT)
     pending_pages = pages_g.join(F.broadcast(done), "graph", "left_anti")
 
     if fail_graphs:
@@ -126,21 +136,28 @@ def run_pipeline_resumable(
         for r in pending_pages.groupBy("graph").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     pending_graphs = sorted(rows_in)
+    if S.GRAPH_DICT in rows_in:
+        # graph_of(url) of a site named like the dictionary graph: its
+        # page triples would share (or, without the dictionary graph,
+        # silently lose) their graph
+        raise ValueError(
+            f"site {S.GRAPH_DICT.rsplit(':', 1)[1]!r} maps to the dictionary "
+            f"graph {S.GRAPH_DICT}; rename the site or move its pages out "
+            "of this run"
+        )
 
     metrics_rows: list[dict] = []
     n_triples_by_graph: dict[str, int] = {}
     n_mentions_by_graph: dict[str, int] = {}
 
     if pending_graphs:
+        # page triples take graph_of(url) of the pending pages, so the
+        # output holds exactly the pending graphs plus the dictionary
+        # graph (a partial input still yields complete per-graph output
+        # because graphs are site-disjoint)
         triples = build_triples(pending_pages.drop("graph"), alias_dict)
         if not include_dict_graph:
             triples = triples.filter(F.col("graph") != S.GRAPH_DICT)
-        # restrict to pending page graphs + dict graph (a partial input
-        # still yields complete *per-graph* output because graphs are
-        # site-disjoint)
-        keep = set(pending_graphs) | ({S.GRAPH_DICT} if include_dict_graph else set())
-        keep_df = local_frame(spark, [(g,) for g in sorted(keep)], "graph string")
-        triples = triples.join(F.broadcast(keep_df), "graph", "left_semi")
 
         triples = triples.localCheckpoint(eager=True)  # compute once: counts + write
         counts = (

@@ -98,39 +98,85 @@ def dict_graph_triples(alias_dict: DataFrame, canon: DataFrame) -> DataFrame:
     return labels.unionByName(same_as)
 
 
+def page_mentions(pages: DataFrame, alias_dict: DataFrame) -> DataFrame:
+    """The page branch of ``build_triples``: extract → detect + link
+    (``mention_entities``) → linked ``(url, entity_id)`` pairs, one per
+    linked alias."""
+    from kgap_spark.extract import with_extracted_text
+    from kgap_spark.mentions import mention_entities
+
+    return mention_entities(with_extracted_text(pages), alias_dict)
+
+
 def build_triples(
     pages: DataFrame, alias_dict: DataFrame,
     canon: DataFrame | None = None,
 ) -> DataFrame:
-    """Full pipeline: pages + dictionary → quad DataFrame (lazy).
+    """Full pipeline: pages + dictionary → quad DataFrame.
 
-    extract → detect + link (``mention_entities``) → canonicalize →
-    materialize. Each stage is a pure DataFrame transformation; only
-    dictionary-sized data is read driver-side.
+    Two branches meet in the materialization: the page branch
+    (``page_mentions``: extract → detect + link) and the dictionary
+    branch (``canonical_mapping``: duplicate edges → connected
+    components). With ``canon=None`` both are checkpointed concurrently:
+    the dictionary branch on an ``InheritableThread`` started first (its
+    jobs keep the caller's job group), the page branch on the caller's
+    thread, so the page branch's fresh-JVM costs (case-mapping start-up
+    on the first ``lower()``, the extraction UDF's Python worker) run
+    while connected components iterates. The thread is joined before
+    anything is returned or raised; an error in either branch propagates
+    after both have stopped. Jobs are described ``build_triples:
+    canonicalize`` / ``build_triples: mentions``, and the caller's
+    description is restored. The returned union over the two
+    checkpoints is lazy.
 
     ``canon``: a precomputed ``canonical_mapping(alias_dict)`` — pass it
     when calling per micro-batch (streaming) so the CC iterations run
-    once per dictionary, not once per batch.
+    once per dictionary, not once per batch. The page branch then stays
+    lazy and no thread is started.
     """
+    if canon is not None:
+        return _materialize(pages, page_mentions(pages, alias_dict), alias_dict, canon)
+
+    from pyspark import InheritableThread
+
     from kgap_spark.canonicalize import canonical_mapping
-    from kgap_spark.extract import with_extracted_text
-    from kgap_spark.mentions import mention_entities
 
-    pages_t = with_extracted_text(pages)
-    linked = mention_entities(pages_t, alias_dict)
+    sc = pages.sparkSession.sparkContext
+    out: dict = {}
 
-    # The canonical mapping is dictionary-sized and referenced by TWO
-    # branches of the output union (mention rewrite + dict triples);
-    # materialize it once so a single write action doesn't run the CC
-    # iterations twice.
-    if canon is None:
-        canon = canonical_mapping(alias_dict).localCheckpoint(eager=True)
+    def canonicalize() -> None:
+        sc.setJobDescription("build_triples: canonicalize")
+        try:
+            # referenced twice below (mention rewrite + dict triples):
+            # materialized once, so the CC iterations run once
+            out["canon"] = canonical_mapping(alias_dict).localCheckpoint(eager=True)
+        except BaseException as e:  # re-raised on the caller's thread
+            out["error"] = e
+
+    worker = InheritableThread(target=canonicalize)
+    worker.start()
+    caller_description = sc.getLocalProperty("spark.job.description")
+    try:
+        sc.setJobDescription("build_triples: mentions")
+        linked = page_mentions(pages, alias_dict).distinct().localCheckpoint(eager=True)
+    finally:
+        sc.setJobDescription(caller_description)
+        worker.join()
+    if "error" in out:
+        raise out["error"]
+    return _materialize(pages, linked, alias_dict, out["canon"])
+
+
+def _materialize(
+    pages: DataFrame, linked: DataFrame, alias_dict: DataFrame, canon: DataFrame
+) -> DataFrame:
+    """Rewrite linked ``(url, entity_id)`` pairs to canonical ids and
+    union the page-graph and dictionary-graph triples."""
     linked_canon = linked.join(
         F.broadcast(canon), "entity_id", "left"
     ).withColumn(
         "canonical_id", F.coalesce(F.col("canonical_id"), F.col("entity_id"))
     )
-
-    return page_graph_triples(pages_t, linked_canon).unionByName(
+    return page_graph_triples(pages, linked_canon).unionByName(
         dict_graph_triples(alias_dict, canon)
     )

@@ -51,6 +51,77 @@ def test_duplicate_edges_rule(spark):
     assert edges == {("e1", "e2")}
 
 
+def _edges_reference(rows, min_shared, max_group):
+    """The published rule in plain Python: per (alias, lang) the set of
+    entity ids (NULL alias or lang never pairs; a NULL id counts toward
+    ``max_group`` but never pairs), every pair of a group within the cap
+    shares one form, and pairs sharing ≥ ``min_shared`` forms are edges."""
+    from collections import Counter, defaultdict
+    from itertools import combinations
+
+    groups = defaultdict(set)
+    for alias, lang, eid in rows:
+        if alias is not None and lang is not None:
+            groups[(alias, lang)].add(eid)
+    shared = Counter()
+    for ids in groups.values():
+        if len(ids) <= max_group:
+            shared.update(combinations(sorted(i for i in ids if i is not None), 2))
+    return {p for p, n in shared.items() if n >= min_shared}
+
+
+def test_duplicate_edges_matches_reference(spark):
+    """duplicate_edges == the pure-Python rule on the edge cases: NULLs,
+    repeated rows, groups of exactly max_group and max_group + 1, and
+    pairs sharing one form against two."""
+    rows = [
+        # e1/e2 share two forms, each repeated: one edge
+        ("n1", "en", "e1"), ("n1", "en", "e1"), ("n1", "en", "e2"),
+        ("n2", "en", "e1"), ("n2", "en", "e2"), ("n2", "en", "e2"),
+        # e3/e4 share one form only (plus a NULL-lang and a NULL-alias
+        # row, which never pair): no edge
+        ("amb", "*", "e3"), ("amb", "*", "e4"),
+        ("amb", None, "e3"), ("amb", None, "e4"),
+        (None, "*", "e3"), (None, "*", "e4"),
+        # exactly max_group=3 ids, twice: all three pairs are edges
+        ("g3", "en", "f1"), ("g3", "en", "f2"), ("g3", "en", "f3"),
+        ("h3", "en", "f1"), ("h3", "en", "f2"), ("h3", "en", "f3"),
+        # max_group + 1 ids: capped, no edges from these groups
+        ("g4", "en", "k1"), ("g4", "en", "k2"), ("g4", "en", "k3"),
+        ("g4", "en", "k4"),
+        ("h4", "en", "k1"), ("h4", "en", "k2"), ("h4", "en", "k3"),
+        ("h4", "en", "k4"),
+        # 3 ids + a NULL id = max_group + 1: capped as well
+        ("g5", "nl", "m1"), ("g5", "nl", "m2"), ("g5", "nl", "m3"),
+        ("g5", "nl", None), ("g5", "nl", None),
+        ("h5", "nl", "m1"), ("h5", "nl", "m2"), ("h5", "nl", "m3"),
+        ("h5", "nl", None),
+        # 2 ids + a NULL id, twice: within the cap, the NULL never pairs
+        ("g6", "de", "p1"), ("g6", "de", "p2"), ("g6", "de", None),
+        ("h6", "de", "p1"), ("h6", "de", "p2"), ("h6", "de", None),
+    ]
+    alias = spark.createDataFrame(
+        rows, "alias string, lang string, entity_id string"
+    )
+    want2 = {("e1", "e2"), ("f1", "f2"), ("f1", "f3"), ("f2", "f3"),
+             ("p1", "p2")}
+    assert _edges_reference(rows, 2, 3) == want2
+    for min_shared, max_group in ((2, 3), (1, 3), (2, 4), (1, 128)):
+        got = {(r.src, r.dst) for r in
+               duplicate_edges(alias, min_shared, max_group).collect()}
+        assert got == _edges_reference(rows, min_shared, max_group), (
+            min_shared, max_group)
+
+
+def test_duplicate_edges_plan_is_two_aggregations(spark, tiny):
+    """The edge build is one aggregation per (alias, lang) and one per
+    pair: two shuffle exchanges, no window and no join."""
+    plan = duplicate_edges(tiny["alias_dict"])._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+    assert "Window" not in plan and "Join" not in plan, plan
+
+
 def test_canonical_mapping_matches_fixture_rule(spark, tiny):
     """Pipeline CC over the fixture dictionary == the fixture's own
     union-find result, entity for entity."""

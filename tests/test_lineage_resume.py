@@ -3,6 +3,7 @@ kill after some graphs, rerun, assert no dupes + complete lineage."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kgap_spark.lineage import LineageLog, run_pipeline_resumable
@@ -87,3 +88,56 @@ def test_per_graph_wall_time_attribution(spark, tiny, tmp_path):
     gmax = max(work, key=work.get)
     gmin = min(work, key=work.get)
     assert walls[gmax] >= walls[gmin]
+
+
+def _with_dict_site(pages):
+    """The tiny pages plus one page of a site named ``dict``."""
+    return pages.unionByName(
+        pages.limit(1).withColumn("url", F.lit("https://dict.example.org/page/1"))
+    )
+
+
+def test_dict_site_fails_loudly(spark, tiny, tmp_path):
+    """A site whose graph equals the dictionary graph raises, whether the
+    dictionary graph is written or not, and also once an earlier run has
+    recorded the dictionary graph as done."""
+    pages = _with_dict_site(tiny["web_pages"])
+    store = TripleStore(spark, str(tmp_path / "triples"))
+    lin = LineageLog(spark, str(tmp_path / "lineage"))
+    for include in (False, True):
+        with pytest.raises(ValueError, match="'dict'"):
+            run_pipeline_resumable(spark, pages, tiny["alias_dict"], store, lin,
+                                   include_dict_graph=include)
+    run_pipeline_resumable(spark, tiny["web_pages"], tiny["alias_dict"], store, lin)
+    with pytest.raises(ValueError, match="'dict'"):
+        run_pipeline_resumable(spark, pages, tiny["alias_dict"], store, lin)
+
+
+def test_written_triples_are_not_semi_joined(spark, tiny, tmp_path, monkeypatch):
+    """The frame handed to overwrite_graphs is a checkpoint of the
+    triples with no semi-join against the pending graph list: page
+    triples already carry exactly the pending graphs."""
+    frame_cls = type(tiny["web_pages"])
+    checkpoints = []  # (checkpointed frame, optimized plan of its source)
+    real_checkpoint = frame_cls.localCheckpoint
+
+    def checkpoint(self, *args, **kwargs):
+        out = real_checkpoint(self, *args, **kwargs)
+        checkpoints.append(
+            (out, self._jdf.queryExecution().optimizedPlan().toString()))
+        return out
+
+    def source_plan(df):
+        return next(plan for out, plan in checkpoints if out is df)
+
+    written = []
+    monkeypatch.setattr(frame_cls, "localCheckpoint", checkpoint)
+    monkeypatch.setattr(TripleStore, "overwrite_graphs",
+                        lambda self, df: written.append(source_plan(df)))
+    store = TripleStore(spark, str(tmp_path / "triples"))
+    lin = LineageLog(spark, str(tmp_path / "lineage"))
+    run_pipeline_resumable(spark, tiny["web_pages"], tiny["alias_dict"], store, lin,
+                           include_dict_graph=False)
+    (plan,) = written
+    assert "LeftSemi" not in plan, plan
+    assert "Union" in plan, plan

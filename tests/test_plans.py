@@ -81,15 +81,20 @@ def test_extraction_udf_only_on_null_text_branch(spark, tiny):
 
 def test_pipeline_python_crossing_is_extraction_only(spark, tiny):
     """Linking is a Catalyst argmax: every ArrowEvalPython node in the
-    pipeline plan is the extraction UDF, as many as extraction alone."""
+    page branch of the pipeline is the extraction UDF, as many as
+    extraction alone. build_triples materializes that branch, so its
+    output plan crosses into Python nowhere."""
     from kgap_spark.extract import with_extracted_text
     from kgap_spark.triples import build_triples
+    from kgap_spark.triples.materialize import page_mentions
 
-    plan = _plan(build_triples(tiny["web_pages"], tiny["alias_dict"]))
+    plan = _plan(page_mentions(tiny["web_pages"], tiny["alias_dict"]))
     alone = _plan(with_extracted_text(tiny["web_pages"]))
     assert plan.count("ArrowEvalPython") == alone.count("ArrowEvalPython")
     assert plan.count("ArrowEvalPython") == plan.count(
         "ArrowEvalPython [extract_text_udf(")
+    out = _plan(build_triples(tiny["web_pages"], tiny["alias_dict"]))
+    assert "ArrowEvalPython" not in out and "BatchEvalPython" not in out
 
 
 def _optimized(df) -> str:
