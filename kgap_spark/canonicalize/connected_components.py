@@ -12,10 +12,19 @@ duplicates. Sharing a single alias is mere ambiguity (e.g. one surface
 form naming two real entities) and must not merge.
 
 Algorithm: min-label propagation to fixpoint —
-    label(v) ← min(label(v), min over neighbors u of label(u))
+    label(v) ← min(label(v), min over candidates u of label(u))
 iterated with ``localCheckpoint`` each round to cut the lineage chain.
-Convergence takes O(component diameter) rounds; duplicate clusters are
-shallow (near-clique), so 2–3 rounds in practice. Skew handling:
+A node's candidates are its neighbours plus two Shiloach–Vishkin-style
+kinds of row drawn from the round's own labels: the node its label
+names (shortcut: v pulls label(label(v))) and every node whose previous
+label it was (hook: an old label pulls that node's new label). Both
+ride in the one join a round already runs, so a round runs as many jobs
+as a plain one; every candidate is a label from v's own component, so
+results equal plain propagation's. Plain propagation
+needs O(diameter) rounds; with shortcut and hook 1,024- and 4,096-node
+paths converge in 12-23 rounds (``BENCH/CC.md``), and duplicate
+clusters (shallow near-cliques) in 2–3. Each round's labels drop the
+planner's size estimate (``_checkpoint``). Skew handling:
 
 - the edge build pre-aggregates per (alias, lang) and *caps the group
   size* (``max_group``): an alias shared by thousands of entities is a
@@ -95,34 +104,40 @@ def _salted_min_label(assign: DataFrame, salt: int) -> DataFrame:
     )
 
 
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)`` with the planner's size
+    estimate reset to the session default. A checkpoint keeps the
+    estimate of the plan it ran, and a round joins two sides built from
+    the previous labels, whose estimates multiply: kept, the estimate
+    squares every round (its decimal digits double), and from about
+    round 18 planning on it takes seconds, then minutes. The rows are
+    the checkpoint's own."""
+    spark = df.sparkSession
+    rdd = df.localCheckpoint(eager=True)._jdf.queryExecution().logical().rdd()
+    return DataFrame(
+        spark._jsparkSession.internalCreateDataFrame(rdd, df._jdf.schema(), False),
+        spark,
+    )
+
+
 def connected_components(
     edges: DataFrame,
-    max_iter: int = 20,
+    max_iter: int = 64,
     salt: int = DEFAULT_SALT,
-    num_partitions: int | None = None,
-    strict: bool = True,
 ) -> DataFrame:
     """edges(src, dst) → (node, component) with component = min node id
-    (lexicographic) in the component.
+    (lexicographic) in the component; isolated nodes don't appear.
 
-    Iterative min-label propagation; each round is one shuffle on
-    ``node`` plus the salted aggregation (round 1 is a single
-    aggregation of the edges). ``localCheckpoint`` truncates the plan so
-    round N doesn't recompute rounds 1..N-1.
-
-    ``num_partitions`` pins the iteration partitioning: dictionary-size
-    edge sets (10⁴–10⁶ rows) drown in task-scheduling overhead at the
-    session's shuffle width — a handful of partitions makes each of the
-    O(diameter) rounds a few fat tasks instead of hundreds of empty
-    ones. Leave None to inherit the session width for web-scale graphs.
+    Iterative min-label propagation with shortcut and hook rows; each
+    round is one join on the candidate's node plus the salted
+    aggregation (round 1 is a single aggregation of the edges).
+    ``localCheckpoint`` truncates the plan so round N doesn't recompute
+    rounds 1..N-1. Raises ``RuntimeError`` if labels still move after
+    ``max_iter`` rounds.
     """
-    spark = edges.sparkSession
     sym = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    if num_partitions:
-        sym = sym.repartition(num_partitions, "src")
-    sym = sym.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
 
     # round 1 needs no join: every node starts labelled with itself, so
     # its first label is the least of itself and its neighbours. Each
@@ -138,138 +153,41 @@ def connected_components(
     converged = labels.filter(F.col("label") != F.col("_old")).isEmpty()
     rounds = 1
     while not converged and rounds < max_iter:
-        # candidate labels flowing along edges
-        neighbor_labels = sym.join(
-            labels, sym["dst"] == labels["node"], "inner"
+        # src pulls dst's label along: edges, node → label (shortcut)
+        # and _old → node (hook)
+        pulls = (
+            sym.union(labels.select("node", "label"))
+            .union(labels.select("_old", "node"))
+            .filter(F.col("src") != F.col("dst"))
+        )
+        candidates = pulls.join(
+            labels.select(F.col("node").alias("dst"), "label"), "dst"
         ).select(F.col("src").alias("node"), "label", no_old)
-        labels = _salted_min_label(
+        labels = _checkpoint(_salted_min_label(
             labels.select("node", "label", F.col("label").alias("_old"))
-            .union(neighbor_labels),
+            .union(candidates),
             salt,
-        ).localCheckpoint(eager=True)
+        ))
         converged = labels.filter(F.col("label") != F.col("_old")).isEmpty()
         rounds += 1
-    if not converged and strict:
+    if not converged:
         # partially-propagated labels split one component into several —
         # silently returning them would be wrong canonicalization
-        # (strict=False is for diagnostics/benchmarks only)
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(component diameter exceeds max_iter); raise max_iter or use "
-            "connected_components_star (O(log² n) rounds)"
+            f"connected_components did not converge in {max_iter} rounds; "
+            "raise max_iter"
         )
     return labels.select("node", F.col("label").alias("component"))
 
 
-def connected_components_star(
-    edges: DataFrame,
-    max_iter: int = 50,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14 — public
-    algorithm): converges in O(log² n) rounds vs O(diameter) for
-    min-label propagation, so this is the scale path for DEEP
-    components (web-graph chains, long sameAs paths), where label
-    propagation would need hundreds of shuffles.
-
-    Each round is two pure join+partial-agg passes — no per-node
-    adjacency lists are ever materialized (hub-safe):
-
-    - large-star: every node links its larger neighbors to the minimum
-      of its neighborhood (∪ itself);
-    - small-star: every node links its smaller neighbors (and itself)
-      to that minimum.
-
-    Returns (node, component) with component = min node id, matching
-    ``connected_components``; isolated nodes don't appear (same
-    contract)."""
-    e = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    if num_partitions:
-        e = e.repartition(num_partitions, "u")
-    e = e.localCheckpoint(eager=True)
-
-    def _checksum(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: int64 hash sums overflow under ANSI mode
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    def _large_star(cur: DataFrame) -> DataFrame:
-        sym = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        bigs = sym.filter(F.col("v") > F.col("u"))
-        return (
-            bigs.join(m, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def _small_star(cur: DataFrame) -> DataFrame:
-        # orient big → small: each undirected edge appears exactly once
-        d = cur.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-        m = d.groupBy("u").agg(F.min("v").alias("m"))  # v < u ⇒ min is over N∪{u}
-        linked = d.join(m, "u").select(F.col("v").alias("u"), F.col("m").alias("v"))
-        self_link = m.select(F.col("u"), F.col("m").alias("v"))
-        return (
-            linked.union(self_link)
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    prev_sig = _checksum(e)
-    converged = False
-    for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        sig = _checksum(e)
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-    if not converged:
-        # a non-star residual maps one node to several "components" and
-        # would fan out canonical_mapping's join — fail loudly instead
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "rounds; raise max_iter"
-        )
-
-    # converged: stars (child → root). Roots label themselves.
-    child = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    roots = e.select(F.col("v").alias("node"), F.col("v").alias("component"))
-    return child.union(roots).distinct()
-
-
-def canonical_mapping(
-    alias_dict: DataFrame, algorithm: str = "label", **cc_kwargs
-) -> DataFrame:
+def canonical_mapping(alias_dict: DataFrame) -> DataFrame:
     """alias_dict → (entity_id, canonical_id) for every entity in the
     dictionary (identity rows included, so downstream rewrites are a
     single left join + coalesce).
 
-    Dictionary CC is a small-graph problem (entities, not pages); the
-    session's shuffle width is inherited — pass ``num_partitions`` to
-    pin it when running inside a wide session.
-
-    ``algorithm``: 'label' (min-label propagation — fewest shuffles for
-    the shallow near-clique clusters alias sharing produces) or 'star'
-    (large-star/small-star — O(log² n) rounds, for dictionaries whose
-    sameAs chains run deep)."""
-    edges = duplicate_edges(alias_dict)
-    cc = {"label": connected_components,
-          "star": connected_components_star}[algorithm]
-    comps = cc(edges, **cc_kwargs)
+    Dictionary CC is a small-graph problem (entities, not pages) and
+    inherits the session's shuffle width."""
+    comps = connected_components(duplicate_edges(alias_dict))
     all_ents = alias_dict.select("entity_id").distinct()
     return all_ents.join(
         comps, all_ents["entity_id"] == comps["node"], "left"

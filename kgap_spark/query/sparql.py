@@ -77,6 +77,14 @@ WELL_KNOWN_PREFIXES = {
     "skos": "http://www.w3.org/2004/02/skos/core#",
 }
 
+
+class DeclaredPair(tuple):
+    """The any-of ``(full IRI, compact)`` of a pname whose PREFIX line
+    binds a well-known prefix to its standard namespace: it matches
+    both forms, like the undeclared pname, but is written, bound and
+    named as the full IRI its PREFIX line declares."""
+
+
 # ---------------------------------------------------------------------------
 # Tokenizer.
 
@@ -530,6 +538,8 @@ class _Parser:
         undeclared well-known prefix expands to an any-of tuple —
         ambiguous as a graph IDENTITY, so it is rejected here)."""
         t = self.term(as_predicate=False)
+        if isinstance(t, DeclaredPair):
+            return t[0]
         if isinstance(t, str):
             return t
         if isinstance(t, tuple):
@@ -880,8 +890,8 @@ class _Parser:
             return t.text
         if isinstance(t, Var):
             raise ValueError("variables not allowed inside VALUES data")
-        if isinstance(t, tuple):  # any-of well-known pname: as typed
-            return t[1]
+        if isinstance(t, tuple):  # any-of well-known pname
+            return _write_term(t)
         return t
 
     _path_counter = 0
@@ -1222,13 +1232,16 @@ class _Parser:
         return Lit(value)
 
     def expand_pname(self, pname: str):
-        """Declared prefix → full IRI; undeclared well-known prefix →
-        any-of (full IRI, compact); other undeclared → keep compact
-        (the repo's compact-IRI stores; see module docstring)."""
+        """Declared prefix → full IRI; well-known prefix, undeclared
+        or declared as its standard namespace → any-of (full IRI,
+        compact); other undeclared → keep compact (the repo's
+        compact-IRI stores; see module docstring)."""
         if ":" not in pname:
             return pname
         pfx, local = pname.split(":", 1)
         if pfx in self.prefixes:
+            if self.prefixes[pfx] == WELL_KNOWN_PREFIXES.get(pfx):
+                return DeclaredPair((self.prefixes[pfx] + local, pname))
             return self.prefixes[pfx] + local
         if pfx in WELL_KNOWN_PREFIXES:
             return (WELL_KNOWN_PREFIXES[pfx] + local, pname)
@@ -1534,6 +1547,8 @@ def _compile_expr(e, df: DataFrame,
             return F.lit(e.value)
         if isinstance(e, str):       # IRI / pname constant
             return F.lit(e)
+        if isinstance(e, DeclaredPair):
+            return F.lit(e[0])
         if isinstance(e, NotExpr):
             return ~to(e.inner)
         if isinstance(e, tuple):
@@ -1554,13 +1569,15 @@ def _compile_expr(e, df: DataFrame,
                 r = to(e.right).try_cast("double")
                 return {"+": l + r, "-": l - r, "*": l * r,
                         "/": F.try_divide(l, r)}[e.op]
-            # any-of constant (undeclared well-known pname): = → isin
+            # any-of constant (well-known pname): = → isin
             for a, b in ((e.left, e.right), (e.right, e.left)):
                 if isinstance(b, tuple):
                     if e.op == "=":
                         return to(a).isin(*b)
                     if e.op == "!=":
                         return ~to(a).isin(*b)
+                    if isinstance(b, DeclaredPair):
+                        continue
                     raise ValueError(
                         "any-of constant only valid in = / != comparisons"
                     )
@@ -3236,13 +3253,14 @@ def _construct(q: Query, sols: DataFrame) -> DataFrame:
 
 def _write_term(t) -> str:
     """Constant term → the string written into the store. An any-of
-    tuple (undeclared well-known pname) writes the form as typed —
-    compact, matching the repo's store convention. A literal writes
-    its LEXICAL form — its @lang/^^datatype travel in the meta
-    columns, never inside the value (``_const_of``'s TypedLit wrapper
-    is a pattern-matching construct only)."""
+    tuple writes the form as typed: compact for an undeclared
+    well-known pname (the repo's store convention), the full IRI for a
+    declared one. A literal writes its LEXICAL form — its
+    @lang/^^datatype travel in the meta columns, never inside the
+    value (``_const_of``'s TypedLit wrapper is a pattern-matching
+    construct only)."""
     if isinstance(t, tuple):
-        return t[1]
+        return t[0] if isinstance(t, DeclaredPair) else t[1]
     if isinstance(t, Lit):
         return t.value
     if isinstance(t, Num):

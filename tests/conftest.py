@@ -16,6 +16,28 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def jobs_launched(spark):
+    """``jobs_launched(fn)`` → Spark jobs started by ``fn()``, counted
+    under a fresh job group once the listener bus has delivered every
+    job-start event."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"probe-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job-count probe")
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def fixture_dir(tmp_path_factory) -> str:
     from kgap_spark.fixtures import write_fixtures

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from kgap_spark.canonicalize import (
     canonical_mapping,
     connected_components,
@@ -136,54 +134,92 @@ def test_canonical_mapping_matches_fixture_rule(spark, tiny):
     assert got == expected
 
 
-def test_star_cc_matches_label_propagation(spark):
-    """large-star/small-star must produce the same components as
-    min-label propagation on a mixed graph (clusters + bridges)."""
-    from kgap_spark.canonicalize.connected_components import (
-        connected_components,
-        connected_components_star,
-    )
+def _components_reference(edges):
+    """Union-find over ``edges`` (src, dst pairs): node → least node id
+    of its component, isolated nodes excluded (the CC contract)."""
+    parent = {}
 
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("d", "e"), ("f", "g"), ("g", "h"),
-         ("h", "a")],  # {a,b,c,f,g,h} and {d,e}
-        "src string, dst string",
-    )
-    lp = {r.node: r.component for r in
-          connected_components(edges, num_partitions=2).collect()}
-    star = {r.node: r.component for r in
-            connected_components_star(edges, num_partitions=2).collect()}
-    assert star == lp
-    assert star["h"] == "a" and star["e"] == "d"
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def _chain(n, seed=None):
+    """A path of ``n`` nodes (diameter n − 1). Ids are n00000… in path
+    order, or a seeded shuffle of them, so the least id sits anywhere
+    on the path and labels arrive from both directions."""
+    import random
+
+    ids = [f"n{i:05d}" for i in range(n)]
+    if seed is not None:
+        random.Random(seed).shuffle(ids)
+    return [(ids[i], ids[i + 1]) for i in range(n - 1)]
+
+
+def test_star_cc_matches_label_propagation(spark):
+    """A mixed graph (a 6-node path with its least id inside, and a
+    pair) gives the union-find components."""
+    rows = [("a", "b"), ("b", "c"), ("d", "e"), ("f", "g"), ("g", "h"),
+            ("h", "a")]  # {a,b,c,f,g,h} and {d,e}
+    edges = spark.createDataFrame(rows, "src string, dst string")
+    got = {r.node: r.component for r in connected_components(edges).collect()}
+    assert got == _components_reference(rows)
+    assert got["h"] == "a" and got["e"] == "d"
 
 
 def test_star_cc_deep_chain(spark):
-    """A 64-node path (diameter 63): the O(log² n) star algorithm must
-    resolve it — this is the case label propagation needs ~diameter
-    rounds for."""
-    from kgap_spark.canonicalize.connected_components import (
-        connected_components_star,
-    )
-
-    n = 64
-    edges = spark.createDataFrame(
-        [(f"n{i:03d}", f"n{i+1:03d}") for i in range(n - 1)],
-        "src string, dst string",
-    )
-    comps = {r.node: r.component for r in
-             connected_components_star(edges, num_partitions=2).collect()}
-    assert len(comps) == n
-    assert set(comps.values()) == {"n000"}
+    """Paths far deeper than plain min-label propagation's round budget
+    converge to one component, equal to union-find: a 1,024-node path
+    in id order and 256- and 1,024-node paths with shuffled ids (the
+    last takes 22 rounds). The planner's size estimate of the result
+    stays a plain int64: it does not compound over the rounds."""
+    for n, seed in ((1024, None), (256, 7), (1024, 11)):
+        rows = _chain(n, seed)
+        edges = spark.createDataFrame(rows, "src string, dst string")
+        comps = connected_components(edges)
+        got = {r.node: r.component for r in comps.collect()}
+        assert got == _components_reference(rows), (n, seed)
+        assert set(got.values()) == {"n00000"}, (n, seed)
+        stats = comps._jdf.queryExecution().optimizedPlan().stats()
+        assert stats.sizeInBytes() < 2**63, (n, seed)
 
 
-def test_canonical_mapping_star_algorithm_agrees(spark, tiny):
-    """canonical_mapping(algorithm='star') must produce the same
-    entity→canonical map as the default label propagation."""
-    from kgap_spark.canonicalize.connected_components import canonical_mapping
+def test_canonical_mapping_deep_alias_chain(spark):
+    """An alias dictionary whose duplicate edges form a 160-entity
+    chain (neighbours share two (alias, lang) forms; ids shuffled) plus
+    one unrelated entity: every chain entity maps to one canonical id,
+    equal to union-find over the chain."""
+    n = 160
+    chain = _chain(n, seed=3)
+    rows = [(f"{form}{i}", "en", e)
+            for i, (a, b) in enumerate(chain)
+            for form in ("x", "y") for e in (a, b)]
+    rows.append(("solo", "en", "z"))
+    alias = spark.createDataFrame(rows, "alias string, lang string, entity_id string")
+    got = {r.entity_id: r.canonical_id
+           for r in canonical_mapping(alias).collect()}
+    want = _components_reference(chain)
+    assert {e: got[e] for e in want} == want
+    assert set(want.values()) == {"n00000"}
+    assert got["z"] == "z" and len(got) == n + 1
 
-    lab = {r.entity_id: r.canonical_id for r in
-           canonical_mapping(tiny["alias_dict"], num_partitions=2).collect()}
-    star = {r.entity_id: r.canonical_id for r in
-            canonical_mapping(tiny["alias_dict"], algorithm="star",
-                              num_partitions=2).collect()}
-    assert lab == star
+
+def test_canonical_mapping_job_count(spark, tiny, jobs_launched):
+    """Materializing the tiny dictionary's canonical mapping launches
+    at most 15 Spark jobs, the count of plain min-label propagation:
+    shortcut and hook rows ride in each round's one join, so a change
+    that adds a join or a check per round shows here."""
+    def run():
+        canonical_mapping(tiny["alias_dict"]).localCheckpoint(eager=True)
+
+    run()  # warm: the first run also reads the fixture's footers
+    assert jobs_launched(run) <= 15

@@ -277,6 +277,55 @@ def test_compact_store_convention(spark):
     assert [r.s for r in df.collect()] == ["e1"]
 
 
+def test_declared_well_known_prefix_matches_compact_store(spark, tmp_path):
+    """A PREFIX line binding rdf: to its standard namespace matches
+    the compact rdf:type too, as the undeclared rdf: does: the shipped
+    type_counts query counts a pipeline-style store's kgap:WebPage
+    rows. Any other binding expands to its IRI only, and INSERT DATA
+    and CONSTRUCT with the declared prefix still write the full IRI."""
+    from kgap_spark.query.sparql import execute_sparql_update
+    from kgap_spark.query.templates import QueryTemplates
+    from kgap_spark.triples import TripleStore
+
+    rows = [(f"urn:p:{i}", "rdf:type", "kgap:WebPage", None, None, "urn:g",
+             None) for i in range(3)]
+    rows.append(("urn:e:1", RDF + "type", "kgap:Entity", None, None, "urn:g",
+                 None))
+    t = spark.createDataFrame(rows, S.TRIPLES)
+    got = QueryTemplates(spark, "queries", triples=t) \
+        .execute_to_df("type_counts").collect()
+    assert [(r.type, r["count"]) for r in got] == [
+        ("kgap:WebPage", 3), ("kgap:Entity", 1)]
+    # = matches both forms; BIND and VALUES bind the declared full IRI
+    q = execute_sparql(t, f"""
+        PREFIX rdf: <{RDF}>
+        SELECT DISTINCT ?t WHERE {{
+          ?s ?p ?o FILTER(?p = rdf:type) BIND(rdf:type AS ?t) }}""")
+    assert [r.t for r in q.collect()] == [RDF + "type"]
+    q = execute_sparql(t, f"""
+        PREFIX rdf: <{RDF}>
+        SELECT ?s WHERE {{ VALUES ?p {{ rdf:type }} ?s ?p ?o }}""")
+    assert [r.s for r in q.collect()] == ["urn:e:1"]
+
+    other = execute_sparql(t, """
+        PREFIX rdf: <urn:other#>
+        SELECT ?s WHERE { ?s rdf:type ?o }""")
+    assert other.count() == 0
+
+    built = execute_sparql(t, f"""
+        PREFIX rdf: <{RDF}>
+        CONSTRUCT {{ ?s rdf:type <urn:c:Page> }}
+        WHERE {{ ?s rdf:type kgap:WebPage }}""")
+    assert {r.pred for r in built.collect()} == {RDF + "type"}
+
+    store = TripleStore(spark, str(tmp_path / "s"))
+    execute_sparql_update(store, f"""
+        PREFIX rdf: <{RDF}>
+        INSERT DATA {{ <urn:s> rdf:type <urn:c:Doc> . }}""",
+        default_graph="urn:g")
+    assert [r.pred for r in store.read().collect()] == [RDF + "type"]
+
+
 def test_sparql_template_file(spark, kb, tmp_path):
     """.sparql templates load and execute like kgap_tools.py:17-26,
     with ${var} slots (advanced-topics.md template pattern)."""

@@ -313,24 +313,9 @@ def test_merge_reports_compaction_events(spark, tmp_path):
     assert stats["compacted"] == [] and store2.last_compactions == []
 
 
-def _jobs_launched(spark, fn) -> int:
-    """Spark jobs started by ``fn()``, counted under a fresh job group
-    once the listener bus has delivered every job-start event."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"probe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job-count probe")
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_repeated_read_of_unchanged_store_launches_no_job(spark, tmp_path,
-                                                          monkeypatch):
+                                                          monkeypatch,
+                                                          jobs_launched):
     """40 graphs put the root listing above Spark's 32-path parallel
     discovery threshold, so planning a scan runs a listing job. Once a
     warm read has planned it, reading the unchanged store again reuses
@@ -340,13 +325,13 @@ def test_repeated_read_of_unchanged_store_launches_no_job(spark, tmp_path,
     store.append(_quads(spark, [(f"s{i}", "p", str(i), f"urn:g:{i}")
                                 for i in range(40)]))
     assert store.read().count() == 40  # warm
-    assert _jobs_launched(spark, store.read) == 0
+    assert jobs_launched(store.read) == 0
     assert store.read().count() == 40
 
     monkeypatch.setattr(TripleStore, "_MTIME_SCHEMES", frozenset())
     fresh = TripleStore(spark, store.path)
     fresh.read()
-    assert _jobs_launched(spark, fresh.read) >= 1
+    assert jobs_launched(fresh.read) >= 1
 
 
 def test_reused_read_sees_every_write(spark, tmp_path):
