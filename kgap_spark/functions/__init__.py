@@ -1,7 +1,6 @@
 """Training-data-pipeline operations over document/embedding tables:
 deduplication, similarity search, text analysis, multimodal plumbing
-(``multimodal``: real PNG, JPEG and AVI decode, a deterministic stub
-for every other payload).
+(``multimodal``: a sha256 stub for every payload, computed in Catalyst).
 
 These extend the reference's capabilities to what a 100 TB web-corpus
 pipeline needs (driver mandate); each has a `queries()` entry with a

@@ -432,27 +432,6 @@ class TripleStore:
         self.overwrite_graphs(data)
         self.delete_graph(src)
 
-    def write_bucketed_table(
-        self, table_name: str, n_buckets: int = 64
-    ) -> None:
-        """Register the store as a subj-bucketed catalog table: BGP
-        self-joins (SPARQL's core access pattern — n patterns sharing
-        ?s) become exchange-free sort-merge joins, because both sides
-        are pre-hashed into the same subj buckets at write time. At
-        100 TB the BGP workload's repeated subj-shuffles are the
-        dominant query cost; bucketing pays that shuffle ONCE at write.
-        The parquet-partitioned store stays the ingest/clear surface;
-        this is the query-optimized projection of it (the Iceberg
-        sorted-table analog)."""
-        (
-            self.read()
-            .write.bucketBy(n_buckets, "subj")
-            .sortBy("subj")
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(table_name)
-        )
-
     # -- accounting (docs/components/ldes-consumer.md:330-336) ---------
     def counts_by_graph(self) -> DataFrame:
         return (

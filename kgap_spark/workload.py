@@ -2278,9 +2278,8 @@ def q_minhash_lsh_ml(spark, sf_dir):
 
 
 def q_multimodal_features(spark, sf_dir):
-    """Multimodal plumbing: binary payload → mapInPandas feature
-    extraction (decode stubbed deterministically; Spark-side machinery
-    real).
+    """Multimodal plumbing: binary payload → sha256-stub features,
+    computed in Catalyst (``extract_features`` is one projection).
 
     The feature vector is projected to an integer-CSV canonical form so
     the driver can hash it (arrays of doubles are unhashable in the

@@ -28,40 +28,6 @@ def test_shacl_pattern_flags_validated(spark):
             pattern_violations(t, a)
 
 
-# --- ADVICE #3: JPEG restart scan bounded + fill bytes before markers ------
-
-def test_jpeg_restart_desync_raises_valueerror():
-    from kgap_spark.functions.jpeg import _BitReader
-
-    # garbage (non-FF) byte where the restart marker should be
-    br = _BitReader(b"\x12\x34\xff\xd0", 0)
-    with pytest.raises(ValueError, match="desync"):
-        br.restart()
-    # truncated stream: must be ValueError, not IndexError
-    br2 = _BitReader(b"\xff", 0)
-    with pytest.raises(ValueError, match="truncated"):
-        br2.restart()
-    # fill bytes before the RSTn are consumed
-    br3 = _BitReader(b"\xff\xff\xff\xd3\x00", 0)
-    br3.restart()
-    assert br3.pos == 4
-    # a non-RST marker after the fill raises loudly
-    br4 = _BitReader(b"\xff\xd9", 0)
-    with pytest.raises(ValueError, match="FFD9"):
-        br4.restart()
-
-
-def test_jpeg_marker_walk_accepts_fill_padding():
-    from kgap_spark.functions.jpeg import decode_jpeg
-
-    # SOI, a fill byte before COM, then EOI: must not be read as
-    # marker 0xFF ("bad marker alignment" / unknown marker), and the
-    # stream still fails later for the RIGHT reason (no frame)
-    data = b"\xff\xd8" + b"\xff\xff\xfe\x00\x04hi" + b"\xff\xd9"
-    with pytest.raises(ValueError, match="SOF|frame|scan"):
-        decode_jpeg(data)
-
-
 # --- ADVICE #4: boolean FTS operands may not vanish silently ---------------
 
 def test_boolean_query_zero_token_operands_raise():

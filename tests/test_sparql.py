@@ -1149,38 +1149,6 @@ def test_review_fixes_round4(spark, kb, tmp_path):
     assert got == {("urn:sensor:0", "mariene sensor")}
 
 
-def test_png_corrupt_payload_isolated(spark):
-    """One corrupt/unsupported PNG must not fail the extract job —
-    its features come back NULL; good rows still decode."""
-    import struct
-    import zlib
-
-    from kgap_spark.functions.multimodal import extract_features
-    from tests.test_functions import _encode_png
-
-    good = _encode_png(2, 2, bytes([255, 0, 0] * 4))
-    truncated = good[:20]                      # signature + partial IHDR
-    # interlaced flag set → unsupported → NULL, not a crash
-    def chunk(ctype, data):
-        return (struct.pack(">I", len(data)) + ctype + data
-                + struct.pack(">I", zlib.crc32(ctype + data)))
-    interlaced = (b"\x89PNG\r\n\x1a\n"
-                  + chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 2, 0, 0, 1))
-                  + chunk(b"IDAT", zlib.compress(b"\x00\xff\x00\x00"))
-                  + chunk(b"IEND", b""))
-    media = spark.createDataFrame(
-        [("ok", "image", "image/png", bytearray(good), {}),
-         ("trunc", "image", "image/png", bytearray(truncated), {}),
-         ("inter", "image", "image/png", bytearray(interlaced), {})],
-        "media_id string, kind string, mime string, payload binary, "
-        "meta map<string,string>",
-    )
-    feats = {r.media_id: r.features for r in extract_features(media).collect()}
-    assert feats["ok"] is not None and feats["ok"][2] == 1.0
-    assert feats["trunc"] is None
-    assert feats["inter"] is None
-
-
 def test_sparql11_builtins(kb):
     """IN/NOT IN, COALESCE, STRBEFORE/STRAFTER, REPLACE, SUBSTR,
     isIRI/isLiteral/isBlank, numeric ABS/ROUND/CEIL/FLOOR."""
