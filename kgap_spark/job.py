@@ -202,9 +202,8 @@ def _clear(rest: list[str]) -> int:
     spark = _session(args)
     store = TripleStore(spark, args.store)
     if args.all:
-        graphs = [r.graph for r in store.read().select("graph").distinct().collect()]
-        for g_ in graphs:
-            store.delete_graph(g_)
+        graphs = store.graphs()   # a partition listing, no job
+        store.delete_graphs(graphs)
         print(json.dumps({"cleared": graphs}))
     else:
         store.delete_graph(args.graph)

@@ -147,11 +147,9 @@ def _pattern_order(patterns: list[tuple]) -> list[int]:
     so the rewrite is semantics-free; the one order-sensitive artifact
     — meta columns (``{var}__lang``/``__dt``) are textually-first-
     binding-wins — is preserved by ``bgp``'s owner tracking, not by
-    restricting the order. Set ``KGAP_BGP_REORDER=0`` to disable (A/B
-    yardstick; see BENCH/BGP_ORDER.md)."""
-    import os
-
-    if len(patterns) < 2 or os.environ.get("KGAP_BGP_REORDER") == "0":
+    restricting the order. BENCH/BGP_ORDER.md measures it against
+    textual order."""
+    if len(patterns) < 2:
         return list(range(len(patterns)))
 
     def pvars(p) -> set:

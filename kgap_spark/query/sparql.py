@@ -434,6 +434,9 @@ class _Parser:
             self.next()
             q = Query(form="construct")
             q.template = self.template_group()
+            if any(isinstance(g, Var) for *_, g in q.template):
+                raise ValueError("GRAPH ?var not allowed in a CONSTRUCT "
+                                 "template")
             if self.at_kw("WHERE"):
                 self.next()
             q.where = self.group()
@@ -666,8 +669,8 @@ class _Parser:
 
     def template_group(self) -> list:
         """A CONSTRUCT/INSERT/DELETE template → (s, p, o, graph|None)
-        quads; GRAPH <g> { … } blocks scope their triples' graph term
-        (previously these were silently discarded)."""
+        quads; GRAPH <g> { … } and GRAPH ?g { … } blocks scope their
+        triples' graph term (a variable binds per WHERE solution)."""
         tg = self.group()
         if _has_nontriple_features(tg):
             raise ValueError("template must contain only triples")
@@ -679,8 +682,6 @@ class _Parser:
 
         out = [(*check(s, p, o), None) for s, p, o in tg.triples]
         for term, sub in tg.graph_scopes:
-            if isinstance(term, Var):
-                raise ValueError("GRAPH ?var not allowed in a template")
             if _has_nontriple_features(sub) or sub.graph_scopes:
                 raise ValueError("template must contain only triples")
             out.extend((*check(s, p, o), term) for s, p, o in sub.triples)
@@ -3300,15 +3301,26 @@ def _instantiate(template: list, sols: DataFrame) -> DataFrame:
         return F.lit(None).cast("string")
 
     def graph_term(g):
-        # GRAPH ?g { … } in DELETE WHERE: the graph binds per-solution
+        # GRAPH ?g { … }: the graph binds per-solution
         if isinstance(g, Var):
             return F.col(g.name)
         if g is not None:
             return F.lit(_write_term(g))
         return F.lit(None)
 
+    def bound(quad):
+        # SPARQL 1.1 Update §3.1.3: a solution leaving a template
+        # variable unbound instantiates no quad — a NULL term would
+        # insert a broken quad, a NULL graph would make a delete match
+        # every graph
+        out = sols
+        for t in quad:
+            if isinstance(t, Var):
+                out = out.filter(F.col(t.name).isNotNull())
+        return out
+
     outs = [
-        sols.select(
+        bound((s, p, o, g)).select(
             term(s).cast("string").alias("subj"),
             term(p).cast("string").alias("pred"),
             term(o).cast("string").alias("obj"),

@@ -49,12 +49,13 @@ What this buys over the parent class, with the same call surface:
 - **Snapshot isolation**: a DataFrame from ``read()`` remains valid —
   and keeps returning the data as of its snapshot — across any number
   of subsequent writes. No defensive ``localCheckpoint`` of
-  table-sized data: the read-transform-overwrite paths
-  (``delete_quads``, ``rewrite``) re-implement the parent's flow
-  without materializing the SURVIVORS side (at 100 TB that
-  checkpoint is an O(affected-partitions) copy per delete; only the
-  small delete-key set is materialized, and only because it is
-  consumed twice).
+  table-sized data: the parent's logical operators (``delete_quads``,
+  ``compact``, ``move_graph``) run unchanged over this class's two
+  physical primitives — ``_scan_graphs`` plans from the manifest
+  pinned at the operation's start, ``_replace_graphs`` writes one
+  snapshot dir and commits one manifest validated against it — so
+  the rewritten side is never materialized (at 100 TB that
+  checkpoint is an O(affected-partitions) copy per delete).
 - **Time travel**: ``read(version=K)``, ``snapshots()``,
   ``rollback(K)`` (an O(metadata) commit restoring K's file list).
 - **O(metadata) deletes**: ``delete_graph`` edits the manifest; the
@@ -92,12 +93,7 @@ from pyspark.sql import functions as F
 from kgap_spark import schemas as S
 from kgap_spark.io import fs
 from kgap_spark.session import local_frame
-from kgap_spark.triples.writer import (
-    QUAD_KEY,
-    TripleStore,
-    _nullsafe_anti,
-    _unescape_partition,
-)
+from kgap_spark.triples.writer import TripleStore, _unescape_partition
 
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
 
@@ -119,11 +115,10 @@ class SnapshotNotFoundError(ValueError):
 class SnapshotStore(TripleStore):
     """Drop-in ``TripleStore`` with manifest-based snapshot commits.
 
-    Inherits the logical operations (``merge`` dedup semantics,
-    ``compact`` policy, orphan cleanup, accounting) and overrides the
-    physical layer: reads plan from the current manifest, writes land
-    in immutable snapshot dirs and commit by manifest swap.
-    ``delete_quads``/``rewrite`` are re-implemented checkpoint-free.
+    Inherits every logical operation (``merge`` dedup semantics,
+    ``delete_quads``, ``compact``, ``move_graph``) and overrides the
+    physical layer: reads plan from a manifest, writes land in
+    immutable snapshot dirs and commit by manifest swap.
     """
 
     # a torn (unparseable) manifest younger than this may still be
@@ -143,7 +138,7 @@ class SnapshotStore(TripleStore):
         # version → parsed manifest; safe because a manifest is
         # immutable once it parses (bounded: recent entries only)
         self._man_cache: dict[int, dict] = {}
-        # (version, Counter) for _graph_file_counts
+        # (version, Counter) for _n_graph_files
         self._counts_cache: tuple[int, Counter] | None = None
         # part id → entries; parts are immutable once a version
         # references them (bounded, cleared past 256 entries)
@@ -444,16 +439,6 @@ class SnapshotStore(TripleStore):
         v = self.current_version() if version is None else version
         return self._load_files(self._files(v))
 
-    def read_graph(self, graph: str,
-                   version: int | None = None) -> DataFrame:
-        """Graph-scoped read with manifest-level pruning: only the
-        graph's files enter the plan — no directory listing, no
-        partition-filter evaluation at scan time."""
-        v = self.current_version() if version is None else version
-        return self._load_files(
-            [e for e in self._files(v) if e["graph"] == graph]
-        )
-
     def _diff_filesets(self, files_a: list[dict],
                        files_b: list[dict]) -> tuple[DataFrame, DataFrame]:
         """(inserts, deletes) going from file list ``a`` to ``b``,
@@ -546,40 +531,32 @@ class SnapshotStore(TripleStore):
             return empty.withColumn("_commit_version", F.lit(0)).limit(0)
         return reduce(lambda a, b: a.unionByName(b), parts)
 
-    def _graph_pruned_scan(self, update: DataFrame,
-                           graphs: list | None = ...) -> DataFrame:
-        """Manifest-pruned variant of the parent's scan: with a bounded
-        graph list, plan exactly those graphs' files; past
-        MAX_GRAPH_LIST, fall back to the broadcast semi-join over the
-        full snapshot."""
-        if graphs is ...:
-            graphs = self._graph_list(update)
+    def _pin(self) -> int:
+        """The version an operation reads and validates against: the
+        tip at its start."""
+        return self.current_version()
+
+    def _scan_graphs(self, graphs: list[str] | None,
+                     at: int | None = None) -> DataFrame:
+        """Manifest-level pruning: exactly ``graphs``' files (None:
+        every graph) as of version ``at`` (default: current) enter
+        the plan — no directory listing, no partition filter."""
+        files = self._files(self.current_version() if at is None else at)
         if graphs is not None:
             gset = set(graphs)
-            return self._load_files([
-                e for e in self._files(self.current_version())
-                if e["graph"] in gset
-            ])
-        return self.read().join(
-            F.broadcast(update.select("graph").distinct()), "graph",
-            "left_semi",
-        )
+            files = [e for e in files if e["graph"] in gset]
+        return self._load_files(files)
 
     def _n_graph_files(self, graph: str) -> int:
-        """Live file count of one graph — a (memoized) manifest scan,
-        not an fs listing. Batch callers (``compact``) use
-        ``_graph_file_counts`` for one pass over the manifest."""
-        return self._graph_file_counts()[graph]
-
-    def _graph_file_counts(self) -> Counter:
-        """Per-graph live file counts, memoized per version — the
-        inherited ``merge`` calls ``_n_graph_files`` once per affected
-        graph, which must not re-scan the manifest each time."""
+        """Live file count of one graph — a manifest scan, not an fs
+        listing, memoized per version: ``merge`` and ``compact`` ask
+        once per graph, which must not re-scan the manifest each
+        time."""
         v = self.current_version()
         if self._counts_cache is None or self._counts_cache[0] != v:
             self._counts_cache = (
                 v, Counter(e["graph"] for e in self._files(v)))
-        return self._counts_cache[1]
+        return self._counts_cache[1][graph]
 
     # -- writes -------------------------------------------------------
     def append(self, df: DataFrame) -> None:
@@ -612,6 +589,18 @@ class SnapshotStore(TripleStore):
                           drop_graphs={e["graph"] for e in entries},
                           expected_base=base)
 
+    def _replace_graphs(self, df: DataFrame, graphs: list[str],
+                        at: int | None, op: str) -> None:
+        """Afterwards exactly ``graphs`` hold ``df``'s rows, in ONE
+        commit validated against version ``at``: ``df`` lands in a
+        fresh snapshot dir and one manifest swap drops every file of
+        ``graphs`` while adding the new ones, so graphs ``df`` leaves
+        empty leave the manifest. No checkpoint: ``df``'s plan reads
+        immutable files the commit never touches."""
+        snap_rel, entries = self._write_snap(df)
+        self._commit_snap(op, snap_rel, entries, drop_graphs=set(graphs),
+                          expected_base=at)
+
     def delete_graph(self, graph: str) -> None:
         """Graph-scoped clear as a metadata-only commit: zero data
         movement regardless of graph size (the real partition-drop
@@ -633,86 +622,6 @@ class SnapshotStore(TripleStore):
         return sorted({
             e["graph"] for e in self._files(self.current_version())
         })
-
-    def move_graph(self, src: str, dst: str) -> None:
-        """Rename graph ``src`` to ``dst`` (dst replaced) in ONE
-        atomic commit: the rewritten data lands in a fresh snapshot
-        dir, and a single manifest swap drops BOTH the old src files
-        and dst's previous files while adding the new ones — no
-        intermediate state where both graphs are populated (the
-        parent's copy-then-delete exposes one)."""
-        if src == dst:
-            return
-        base = self.current_version()
-        if not any(e["graph"] == src for e in self._files(base)):
-            # absent/empty source: no-op — the parent's dynamic
-            # overwrite of zero partitions behaves the same way, and
-            # committing drop_graphs={src, dst} here would silently
-            # WIPE dst (review finding)
-            return
-        data = self.read_graph(src, version=base).withColumn(
-            "graph", F.lit(dst))
-        snap_rel, entries = self._write_snap(data)
-        self._commit_snap("move-graph", snap_rel, entries,
-                          drop_graphs={src, dst}, expected_base=base)
-
-    def delete_quads(self, quads: DataFrame) -> None:
-        """U2: DELETE DATA in ONE commit. The delete-KEY set is
-        materialized once — it is consumed twice (graph discovery,
-        anti-join) and, for SPARQL DELETE WHERE, may be an expensive
-        derived plan. The SURVIVORS side stays checkpoint-free: its
-        plan reads immutable snapshot files the commit never touches
-        (the parent must materialize it — its overwrite deletes the
-        files its own plans read). Graphs emptied by the delete are
-        dropped by the same commit — their old files leave the
-        manifest and no new files replace them.
-
-        The affected-graph list honors the parent's MAX_GRAPH_LIST
-        bound: a delete set naming more graphs than that is
-        intersected with the manifest's LIVE graphs via a broadcast
-        semi-join — the result is bounded by the manifest, which is
-        already driver-held state, so no new unboundedness."""
-        base = self.current_version()
-        dels = quads.select(*QUAD_KEY).distinct().localCheckpoint(
-            eager=True)
-        live = {e["graph"] for e in self._files(base)}
-        graphs = self._graph_list(dels)
-        if graphs is None:
-            live_df = local_frame(
-                self.spark, [(g,) for g in sorted(live)], "graph string")
-            graphs = [
-                r.graph for r in dels.select("graph").distinct()
-                .join(F.broadcast(live_df), "graph", "left_semi")
-                .collect()
-            ]
-        else:
-            graphs = [g for g in graphs if g in live]
-        if not graphs:
-            return
-        gset = set(graphs)
-        existing = self._load_files([
-            e for e in self._files(base) if e["graph"] in gset
-        ])
-        remaining = _nullsafe_anti(existing, dels, QUAD_KEY)
-        snap_rel, entries = self._write_snap(remaining)
-        self._commit_snap("delete-quads", snap_rel, entries,
-                          drop_graphs=gset, expected_base=base)
-
-    def rewrite(self, match_pred: str, new_pred: str) -> None:
-        """U3 predicate rename — the parent's read-transform-overwrite
-        minus the defensive checkpoint (snapshot reads cannot be
-        invalidated by the overwrite)."""
-        base = self.current_version()
-        current = self.read(version=base)
-        affected = current.filter(
-            F.col("pred") == match_pred).select("graph").distinct()
-        scoped = current.join(F.broadcast(affected), "graph", "left_semi")
-        rewritten = scoped.withColumn(
-            "pred",
-            F.when(F.col("pred") == match_pred,
-                   F.lit(new_pred)).otherwise(F.col("pred")),
-        )
-        self.overwrite_graphs(rewritten, expected_base=base)
 
     # -- snapshot management ------------------------------------------
     def snapshots(self) -> list[dict]:
@@ -884,26 +793,3 @@ class SnapshotStore(TripleStore):
         )
         if not live:
             fs.delete(self.spark, snap_dir)
-
-    # the parent's physical-layout helper targets Hive partition dirs;
-    # keep the API but route through the manifest layer
-    def compact(self, graphs: list[str] | None = None) -> dict:
-        """Same policy as the parent (consolidate fragmented graphs
-        into the canonical range-partitioned layout) — but old
-        snapshots keep reading the pre-compaction files, so no
-        checkpoint is needed, and file accounting is one manifest pass
-        per side, not one listing per graph."""
-        base = self.current_version()
-        counts = self._graph_file_counts()
-        if graphs is None:
-            graphs = sorted(counts)
-        if not graphs:
-            return {"graphs": 0, "files_before": 0, "files_after": 0}
-        before = sum(counts[g] for g in graphs)
-        self.overwrite_graphs(
-            self.read(version=base).filter(F.col("graph").isin(graphs)),
-            expected_base=base,
-        )
-        after_counts = self._graph_file_counts()
-        return {"graphs": len(graphs), "files_before": before,
-                "files_after": sum(after_counts[g] for g in graphs)}

@@ -14,7 +14,19 @@ a ``graph``-partitioned table:
   deduplicated (A7 — "no duplicate data ingestion",
   docs/components/ldes-consumer.md:589-590);
 - ``delete_graph``      → graph-scoped clear (S7,
-  docs/quick-reference.md:330-336).
+  docs/quick-reference.md:330-336);
+- ``delete_quads``, ``compact``, ``move_graph`` → graph-scoped
+  rewrites (U2, rewrite_data_files, SPARQL MOVE).
+
+One logical layer, two physical primitives. The graph-scoped
+rewrites and ``merge``'s pruned scan are written once, here, over
+``_scan_graphs(graphs, at)`` (the store restricted to some graphs)
+and ``_replace_graphs(df, graphs, at, op)`` (afterwards exactly
+``graphs`` hold ``df``'s rows). ``SnapshotStore`` overrides only the
+primitives: a manifest file list instead of a partition filter, and
+one snapshot dir plus one manifest commit instead of checkpoint,
+dynamic overwrite and directory deletes. ``at`` is the version an
+operation pinned at its start (``_pin``); this store has none.
 
 Physical format: partitioned parquet. In production this class is the
 seam where an Iceberg catalog plugs in (``writeTo(...).append()`` /
@@ -28,8 +40,8 @@ lazy DataFrame obtained from ``read()``/``read_graph()`` pins the
 overwriting write replaces those files, whether this object or another
 one on the same path made the write. Callers that re-use a
 store-derived frame across writes must materialize it first
-(``df.localCheckpoint(eager=True)``); ``merge`` does this internally
-for its own read-then-overwrite cycle. ``SnapshotStore``
+(``df.localCheckpoint(eager=True)``); ``_replace_graphs`` does this
+internally for the rewrites above. ``SnapshotStore``
 (``triples/snapshots.py``) closes the gap from first principles —
 immutable data files + versioned manifests + create-if-absent commit —
 with the same call surface plus time travel / rollback / vacuum; this
@@ -149,7 +161,7 @@ class TripleStore:
 
     def read_graph(self, graph: str) -> DataFrame:
         # predicate on the partition column → partition pruning
-        return self.read().filter(F.col("graph") == graph)
+        return self._scan_graphs([graph])
 
     # -- writes -------------------------------------------------------
     def _prep(self, df: DataFrame) -> DataFrame:
@@ -238,10 +250,17 @@ class TripleStore:
         if self.exists():
             update = update.localCheckpoint(eager=True)  # O(update), reused 2×
             graphs = self._graph_list(update)
-            existing_keys = self._graph_pruned_scan(update, graphs).select(
-                *QUAD_KEY
+            if graphs is not None:
+                existing = self._scan_graphs(graphs)
+            else:
+                # past MAX_GRAPH_LIST: dynamic pruning, bounded driver
+                existing = self._scan_graphs(None).join(
+                    F.broadcast(update.select("graph").distinct()), "graph",
+                    "left_semi",
+                )
+            new_quads = _nullsafe_anti(
+                update, existing.select(*QUAD_KEY), QUAD_KEY
             )
-            new_quads = _nullsafe_anti(update, existing_keys, QUAD_KEY)
         else:
             new_quads = update
         self.append(new_quads)
@@ -285,21 +304,58 @@ class TripleStore:
         ]
         return graphs if len(graphs) <= self.MAX_GRAPH_LIST else None
 
-    def _graph_pruned_scan(self, update: DataFrame,
-                           graphs: list | None = ...) -> DataFrame:
-        """The existing-store scan restricted to ``update``'s graphs:
-        a driver-side isin list (static partition pruning) while the
-        distinct-graph count stays feed-bounded; past MAX_GRAPH_LIST,
-        a broadcast left-semi join (dynamic pruning, bounded driver
-        memory)."""
-        if graphs is ...:
-            graphs = self._graph_list(update)
-        if graphs is not None:
-            return self.read().filter(F.col("graph").isin(graphs))
-        return self.read().join(
-            F.broadcast(update.select("graph").distinct()), "graph",
-            "left_semi",
-        )
+    def _live_graphs_of(self, update: DataFrame) -> list[str]:
+        """``update``'s graphs that the store holds now. The live set
+        comes from ``graphs()`` (a listing, no scan); past
+        MAX_GRAPH_LIST the intersection runs as a broadcast semi-join
+        against it, so the collect is bounded by the store's own graph
+        count."""
+        live = set(self.graphs())
+        graphs = self._graph_list(update)
+        if graphs is None:
+            live_df = local_frame(
+                self.spark, [(g,) for g in sorted(live)], "graph string")
+            graphs = [
+                r.graph for r in update.select("graph").distinct()
+                .join(F.broadcast(live_df), "graph", "left_semi")
+                .collect()
+            ]
+        return sorted(g for g in graphs if g in live)
+
+    # -- physical primitives (SnapshotStore overrides these three) ----
+    def _pin(self) -> int | None:
+        """The version an operation reads and validates against: None
+        here (this store keeps no versions)."""
+        return None
+
+    def _scan_graphs(self, graphs: list[str] | None,
+                     at: int | None = None) -> DataFrame:
+        """The store restricted to ``graphs`` (None: every graph). A
+        partition filter: a driver-side isin list (static pruning) up
+        to MAX_GRAPH_LIST graphs, a broadcast left-semi join (dynamic
+        pruning) past it. ``at`` is unused here."""
+        df = self.read()
+        if graphs is None:
+            return df
+        if len(graphs) <= self.MAX_GRAPH_LIST:
+            return df.filter(F.col("graph").isin(graphs))
+        keep = local_frame(self.spark, [(g,) for g in graphs], "graph string")
+        return df.join(F.broadcast(keep), "graph", "left_semi")
+
+    def _replace_graphs(self, df: DataFrame, graphs: list[str],
+                        at: int | None, op: str) -> None:
+        """Afterwards exactly ``graphs`` hold ``df``'s rows (``df``
+        lies inside ``graphs``). ``df`` is materialized first: it is
+        usually derived from this store, and the overwrite deletes the
+        files its plan reads. Graphs ``df`` leaves empty produce no
+        output partition under dynamic overwrite, so they are deleted
+        after the write — two physical steps, and a crash between them
+        leaves those graphs populated (re-running the operation is the
+        recovery). ``at`` and ``op`` are unused here."""
+        df = df.localCheckpoint(eager=True)
+        self.overwrite_graphs(df)
+        kept = {r.graph for r in df.select("graph").distinct().collect()}
+        self.delete_graphs([g for g in graphs if g not in kept])
 
     def _n_graph_files(self, graph: str) -> int:
         """Parquet file count of one graph partition (one fs listing)."""
@@ -309,85 +365,55 @@ class TripleStore:
             if name.endswith(".parquet")
         )
 
+    # -- logical update operators (over the primitives above) ---------
     def delete_quads(self, quads: DataFrame) -> None:
         """U2: DELETE DATA — remove specific quads
         (docs/quick-reference.md:234-237). Anti-join the affected
-        graphs' content against the delete set, rewrite only those
-        partitions (Iceberg row-level delete analog).
+        graphs' content against the delete set and replace only those
+        graphs (Iceberg row-level delete analog); graphs the delete
+        empties are dropped. A delete set naming only absent graphs
+        writes nothing.
 
-        The delete set is materialized FIRST: ``quads`` may itself be
-        derived from this store (SPARQL DELETE WHERE), and any of its
-        plans re-evaluated after the overwrite would read files the
-        overwrite just deleted."""
+        The delete set is materialized FIRST: it is consumed twice
+        (graph discovery, anti-join), and ``quads`` may itself be
+        derived from this store (SPARQL DELETE WHERE)."""
+        at = self._pin()
         dels = quads.select(*QUAD_KEY).distinct().localCheckpoint(eager=True)
-        existing = self._graph_pruned_scan(dels)
-        remaining = _nullsafe_anti(existing, dels, QUAD_KEY).localCheckpoint(
-            eager=True
-        )
-        self.overwrite_graphs(remaining)
-        # graphs whose every quad was deleted produce no output
-        # partition under dynamic overwrite — drop them explicitly.
-        # Collect only the EMPTIED graphs (anti join), not every
-        # affected graph — bounded by the work actually done
-        emptied = [
-            r.graph for r in dels.select("graph").distinct()
-            .join(remaining.select("graph").distinct(), "graph", "left_anti")
-            .collect()
-        ]
-        for g in emptied:
-            self.delete_graph(g)
-
-    def rewrite(self, match_pred: str, new_pred: str) -> None:
-        """U3: DELETE { ?s old ?o } INSERT { ?s new ?o } WHERE —
-        predicate renaming rewrite (docs/quick-reference.md:240-243),
-        as a read-transform-overwrite of the affected partitions."""
-        current = self.read()
-        affected = current.filter(F.col("pred") == match_pred)
-        graphs = affected.select("graph").distinct()
-        scoped = current.join(F.broadcast(graphs), "graph", "left_semi")
-        rewritten = scoped.withColumn(
-            "pred",
-            F.when(F.col("pred") == match_pred, F.lit(new_pred)).otherwise(
-                F.col("pred")
-            ),
-        ).localCheckpoint(eager=True)
-        self.overwrite_graphs(rewritten)
+        graphs = self._live_graphs_of(dels)
+        if not graphs:
+            return
+        remaining = _nullsafe_anti(self._scan_graphs(graphs, at), dels,
+                                   QUAD_KEY)
+        self._replace_graphs(remaining, graphs, at, "delete-quads")
 
     def compact(self, graphs: list[str] | None = None) -> dict:
-        """Rewrite fragmented graph partitions into the canonical
+        """Rewrite fragmented graphs (default: all) into the canonical
         range-partitioned layout. The append-only ``merge`` trades
         rewrite I/O for file-count growth — every Sync delta adds
         files — so periodic compaction is the operational counterpart
-        (Iceberg's rewrite_data_files analog): read the affected
-        graphs once, re-`_prep`, dynamic-partition-overwrite them.
-        Returns per-call file accounting."""
+        (Iceberg's rewrite_data_files analog): read the graphs once,
+        re-``_prep``, replace them. Returns per-call file accounting."""
+        at = self._pin()
         if graphs is None:
-            graphs = [
-                r.graph for r in self.read().select("graph").distinct().collect()
-            ]
+            graphs = self.graphs()
         if not graphs:
             return {"graphs": 0, "files_before": 0, "files_after": 0}
-
-        def n_files() -> int:
-            return sum(self._n_graph_files(g) for g in graphs)
-
-        before = n_files()
-        df = self.read().filter(F.col("graph").isin(graphs)).localCheckpoint(
-            eager=True
-        )
-        self.overwrite_graphs(df)
+        before = sum(self._n_graph_files(g) for g in graphs)
+        self._replace_graphs(self._scan_graphs(graphs, at), graphs, at,
+                             "compact")
         return {"graphs": len(graphs), "files_before": before,
-                "files_after": n_files()}
+                "files_after": sum(self._n_graph_files(g) for g in graphs)}
 
-    def cleanup_orphan_graphs(self, active_graphs: list[str]) -> list[str]:
-        """T7: drop graphs no longer in the source config (the analog of
-        removing feed containers for deleted feeds, app.py:242-272).
-        Returns the dropped graph names."""
-        current = [r.graph for r in self.read().select("graph").distinct().collect()]
-        dropped = [g for g in current if g not in set(active_graphs)]
-        for g in dropped:
-            self.delete_graph(g)
-        return dropped
+    def move_graph(self, src: str, dst: str) -> None:
+        """Rename graph ``src`` to ``dst`` (dst replaced). An absent
+        source is a no-op: it never wipes ``dst``. On this store the
+        replace is copy-then-delete (see ``_replace_graphs``); the
+        snapshot store commits it atomically."""
+        at = self._pin()
+        if src == dst or src not in self.graphs():
+            return
+        data = self._scan_graphs([src], at).withColumn("graph", F.lit(dst))
+        self._replace_graphs(data, [src, dst], at, "move-graph")
 
     def delete_graph(self, graph: str) -> None:
         """Graph-scoped clear (reference: DELETE ?context=graph,
@@ -414,31 +440,6 @@ class TripleStore:
             _unescape_partition(name[len("graph="):])
             for name in fs.list_names(self.spark, self.path)
             if name.startswith("graph=")
-        )
-
-    def move_graph(self, src: str, dst: str) -> None:
-        """Rename graph ``src`` to ``dst`` (dst replaced). On this
-        store this is copy-then-delete — TWO physical steps; a crash
-        between them leaves both populated (re-running the MOVE is
-        the recovery). The snapshot store overrides with one atomic
-        commit."""
-        if src == dst:
-            return
-        # no checkpoint needed: the plan scans only src partitions
-        # while the overwrite rewrites only dst partitions (no
-        # read-overwrite overlap), and delete_graph(src) runs after
-        # the write job completes
-        data = self.read_graph(src).withColumn("graph", F.lit(dst))
-        self.overwrite_graphs(data)
-        self.delete_graph(src)
-
-    # -- accounting (docs/components/ldes-consumer.md:330-336) ---------
-    def counts_by_graph(self) -> DataFrame:
-        return (
-            self.read()
-            .groupBy("graph")
-            .agg(F.count(F.lit(1)).alias("n_triples"))
-            .orderBy("graph")
         )
 
 

@@ -111,3 +111,20 @@ def test_job_cli_import_validate_export_clear(tmp_path):
 
     rc = main(["clear", "--store", store, "--all", *base])
     assert rc == 0
+
+
+def test_clear_all_is_a_listing(spark, jobs_launched, tmp_path):
+    """``clear --all`` drops the graphs a partition listing names: no
+    data scan, so no Spark job."""
+    from kgap_spark import schemas as S
+    from kgap_spark.job import main
+    from kgap_spark.triples import TripleStore
+
+    path = str(tmp_path / "store")
+    TripleStore(spark, path).append(spark.createDataFrame(
+        [("a", "p", "1", None, None, "urn:g:1", None),
+         ("b", "p", "2", None, None, "urn:g:2", None)], S.TRIPLES))
+    argv = ["clear", "--store", path, "--all",
+            "--master", "local[4]", "--shuffle-partitions", "4"]
+    assert jobs_launched(lambda: main(argv)) == 0
+    assert TripleStore(spark, path).graphs() == []

@@ -210,10 +210,8 @@ def test_construct_template_instantiation(spark):
 def test_bgp_pattern_order_selectivity_and_connectivity():
     """Static BGP join ordering: most selective pattern first, then
     always a CONNECTED pattern (never a cartesian while one exists);
-    repeated object variables keep textual order (meta columns are
-    first-binding-wins); KGAP_BGP_REORDER=0 disables."""
-    import os
-
+    repeated object variables reorder too (meta columns are
+    first-binding-wins by original index, tracked in bgp)."""
     from kgap_spark.query.patterns import Var, _pattern_order
 
     v = Var
@@ -244,18 +242,18 @@ def test_bgp_pattern_order_selectivity_and_connectivity():
     ]
     assert _pattern_order(pats3) == [1, 0]
 
-    os.environ["KGAP_BGP_REORDER"] = "0"
-    try:
-        assert _pattern_order(pats) == [0, 1, 2]
-    finally:
-        del os.environ["KGAP_BGP_REORDER"]
+
+def _textual_order(monkeypatch):
+    """Reordering off: bgp joins in textual pattern order."""
+    from kgap_spark.query import patterns
+
+    monkeypatch.setattr(patterns, "_pattern_order",
+                        lambda ps: list(range(len(ps))))
 
 
-def test_bgp_reorder_results_unchanged(spark):
+def test_bgp_reorder_results_unchanged(spark, monkeypatch):
     """The rewrite is semantics-free: a badly-ordered query returns
     identical rows with reordering on and off."""
-    import os
-
     rows = [(f"u:s{i}", "u:knows", f"u:s{i+1}", None, None, "g", None)
             for i in range(30)]
     rows += [(f"u:s{i}", "u:name", f"n{i}", None, None, "g", None)
@@ -276,20 +274,15 @@ def test_bgp_reorder_results_unchanged(spark):
                 for r in bgp(t, pats).collect()}
 
     fast = run()
-    os.environ["KGAP_BGP_REORDER"] = "0"
-    try:
-        slow = run()
-    finally:
-        del os.environ["KGAP_BGP_REORDER"]
+    _textual_order(monkeypatch)
+    slow = run()
     assert fast == slow and fast
 
 
-def test_bgp_reorder_preserves_textual_meta_ownership(spark):
+def test_bgp_reorder_preserves_textual_meta_ownership(spark, monkeypatch):
     """A variable bound in OBJECT position by two patterns carries the
     TEXTUALLY-first pattern's @lang meta even when the optimizer joins
     the textually-later (more selective) pattern first."""
-    import os
-
     rows = [
         # p1 binds ?o with @en; p2 binds the same lexical form @fr
         ("u:s0", "u:p1", "label", "en", None, "g", None),
@@ -313,9 +306,6 @@ def test_bgp_reorder_preserves_textual_meta_ownership(spark):
         return out[0]["o__lang"]
 
     reordered = lang()
-    os.environ["KGAP_BGP_REORDER"] = "0"
-    try:
-        textual = lang()
-    finally:
-        del os.environ["KGAP_BGP_REORDER"]
+    _textual_order(monkeypatch)
+    textual = lang()
     assert reordered == textual == "en"

@@ -61,12 +61,16 @@ def test_read_derived_write_needs_no_checkpoint(spark, tmp_path):
 
 def test_parity_with_triplestore_operation_script(spark, tmp_path):
     """Same logical surface, same results: run one operation script
-    against both stores and compare final content."""
+    against both stores and compare final content and graphs."""
+    from kgap_spark.query.sparql import execute_sparql_update
+
     ops_rows = {
         "append1": [("a", "p", "1", "urn:g:1"), ("b", "p", "2", "urn:g:2")],
         "merge1": [("a", "p", "1", "urn:g:1"), ("c", "p", "3", "urn:g:1")],
         "over": [("d", "p", "4", "urn:g:2")],
         "merge2": [("c", "p", "3", "urn:g:1"), ("e", "p", "5", "urn:g:3")],
+        "append2": [("f", "old:p", "6", "urn:g:4"), ("g", "p", "7", "urn:g:5"),
+                    ("h", "p", "8", "urn:g:5"), ("x", "p", "0", "urn:g:6")],
     }
     results = []
     for cls, name in ((TripleStore, "plain"), (SnapshotStore, "snap")):
@@ -79,12 +83,47 @@ def test_parity_with_triplestore_operation_script(spark, tmp_path):
         st.delete_quads(_quads(spark, [("c", "p", "3", "urn:g:1")]))
         # a delete that EMPTIES a graph must drop it entirely
         st.delete_quads(_quads(spark, [("d", "p", "4", "urn:g:2")]))
-        results.append(
+        st.append(_quads(spark, ops_rows["append2"]))
+        st.compact()
+        st.move_graph("urn:g:4", "urn:g:6")       # dst replaced
+        st.move_graph("urn:g:absent", "urn:g:5")  # no-op, dst kept
+        execute_sparql_update(st, """
+            DELETE { GRAPH ?g { ?s <old:p> ?o } }
+            INSERT { GRAPH ?g { ?s <new:p> ?o } }
+            WHERE  { GRAPH ?g { ?s <old:p> ?o } }""")
+        results.append((
             sorted((r.subj, r.pred, r.obj, r.graph)
-                   for r in st.read().collect())
-        )
+                   for r in st.read().collect()),
+            st.graphs(),
+        ))
     assert results[0] == results[1]
-    assert results[0] == [("a", "p", "1", "urn:g:1")]
+    assert results[0] == (
+        [("a", "p", "1", "urn:g:1"), ("f", "new:p", "6", "urn:g:6"),
+         ("g", "p", "7", "urn:g:5"), ("h", "p", "8", "urn:g:5")],
+        ["urn:g:1", "urn:g:5", "urn:g:6"],
+    )
+
+
+def test_logical_operators_are_one_commit_each(spark, tmp_path):
+    """delete_quads, compact and move_graph each advance the snapshot
+    store by exactly one version."""
+    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st.append(_quads(spark, [("a", "p", "1", "urn:g:1"),
+                             ("b", "p", "2", "urn:g:1"),
+                             ("c", "p", "3", "urn:g:2")]))
+    ops = {
+        "delete-quads": lambda: st.delete_quads(
+            _quads(spark, [("a", "p", "1", "urn:g:1")])),
+        "compact": st.compact,
+        "move-graph": lambda: st.move_graph("urn:g:2", "urn:g:3"),
+    }
+    for name, op in ops.items():
+        v = st.current_version()
+        op()
+        assert st.current_version() == v + 1
+        assert st.snapshots()[-1]["operation"] == name
+    assert sorted((r.subj, r.graph) for r in st.read().collect()) == [
+        ("b", "urn:g:1"), ("c", "urn:g:3")]
 
 
 def test_time_travel_and_commit_log(spark, tmp_path):

@@ -1,12 +1,12 @@
-"""Update operators U2 (DELETE DATA), U3 (DELETE/INSERT rewrite),
-T7 (orphan cleanup) — quick-reference.md:228-243, app.py:242-272."""
+"""Update operators U2 (DELETE DATA) and U3 (DELETE/INSERT rewrite) —
+quick-reference.md:228-243."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import pytest
 
 from kgap_spark import schemas as S
-from kgap_spark.triples import TripleStore
+from kgap_spark.triples import SnapshotStore, TripleStore
 
 
 def _quads(spark, rows):
@@ -32,23 +32,53 @@ def test_delete_quads(spark, tmp_path):
     assert store.read().count() == 2
 
 
-def test_rewrite_predicate(spark, tmp_path):
-    store = TripleStore(spark, str(tmp_path / "t"))
+# U3 as a SPARQL modify: ``GRAPH ?g`` binds per solution, so the
+# rename stays inside each quad's own graph (delete_quads + merge)
+RENAME_PRED = """
+    DELETE { GRAPH ?g { ?s <old:p> ?o } }
+    INSERT { GRAPH ?g { ?s <new:p> ?o } }
+    WHERE  { GRAPH ?g { ?s <old:p> ?o } }
+"""
+
+
+@pytest.mark.parametrize("store_kind", ["plain", "snapshot"])
+def test_rewrite_predicate(spark, tmp_path, store_kind):
+    from kgap_spark.query.sparql import execute_sparql_update
+
+    cls = TripleStore if store_kind == "plain" else SnapshotStore
+    store = cls(spark, str(tmp_path / "t"))
     store.append(_quads(spark, [
         ("a", "old:p", "1", "urn:g:1"), ("b", "keep:p", "2", "urn:g:1"),
         ("c", "old:p", "3", "urn:g:2"), ("d", "keep:p", "4", "urn:g:3"),
     ]))
-    store.rewrite("old:p", "new:p")
+    execute_sparql_update(store, RENAME_PRED)
     preds = {(r.subj, r.pred) for r in store.read().collect()}
     assert preds == {("a", "new:p"), ("b", "keep:p"), ("c", "new:p"), ("d", "keep:p")}
 
 
-def test_cleanup_orphan_graphs(spark, tmp_path):
+def test_template_unbound_variable_instantiates_nothing(spark, tmp_path):
+    """``GRAPH ?g`` in an update template takes each WHERE solution's
+    graph; a solution that leaves a template variable unbound
+    instantiates no quad (SPARQL 1.1 Update §3.1.3): a NULL graph would
+    make the delete match every graph, a NULL object would insert a
+    broken quad. CONSTRUCT templates still reject ``GRAPH ?g``."""
+    from kgap_spark.query.sparql import execute_sparql_update, parse_sparql
+
     store = TripleStore(spark, str(tmp_path / "t"))
     store.append(_quads(spark, [
-        ("a", "p", "1", "urn:g:1"), ("b", "p", "2", "urn:g:2"),
-        ("c", "p", "3", "urn:g:3"),
+        ("a", "p", "1", "urn:g:1"), ("a", "q", "x", "urn:g:1"),
+        ("b", "p", "2", "urn:g:2"),
     ]))
-    dropped = store.cleanup_orphan_graphs(["urn:g:1", "urn:g:3"])
-    assert dropped == ["urn:g:2"]
-    assert {r.graph for r in store.read().collect()} == {"urn:g:1", "urn:g:3"}
+    execute_sparql_update(store, """
+        DELETE { GRAPH ?g { ?s <p> ?o } }
+        WHERE  { ?s <p> ?o OPTIONAL { GRAPH ?g { ?s <q> ?x } } }""")
+    left = {(r.subj, r.pred, r.graph) for r in store.read().collect()}
+    assert left == {("a", "q", "urn:g:1"), ("b", "p", "urn:g:2")}
+    execute_sparql_update(store, """
+        INSERT { GRAPH <urn:g:2> { ?s <r> ?x } }
+        WHERE  { ?s ?pp ?o OPTIONAL { ?s <q> ?x } }""")
+    assert {(r.subj, r.obj) for r in store.read().collect()
+            if r.pred == "r"} == {("a", "x")}
+    with pytest.raises(ValueError, match="CONSTRUCT"):
+        parse_sparql("CONSTRUCT { GRAPH ?g { ?s ?p ?o } } "
+                     "WHERE { GRAPH ?g { ?s ?p ?o } }")

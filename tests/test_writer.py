@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from kgap_spark import schemas as S
+from kgap_spark.query import counts_by_graph
 from kgap_spark.triples import TripleStore
 
 
@@ -42,7 +43,7 @@ def test_append_overwrite_merge_delete(spark, tmp_path):
     assert store.read_graph(g2).count() == 1
 
     # counts_by_graph over what's left
-    rows = store.counts_by_graph().collect()
+    rows = counts_by_graph(store.read()).collect()
     assert [(r.graph, r.n_triples) for r in rows] == [(g2, 1)]
 
 
