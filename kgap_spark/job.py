@@ -111,11 +111,8 @@ def _import(rest: list[str]) -> int:
 
     spark = _session(args)
     kwargs = {"lines": True} if args.lines else {}
-    fmt_norm = args.format.lower().replace("-", "").replace("/", "")
-    if fmt_norm in ("ntriples", "nquads", "nt", "nq", "turtle", "ttl",
-                    "trig", "jsonld", "ldjson", "json", "rdfxml", "xml"):
-        kwargs["on_error"] = args.on_error
-    quads = read_rdf(spark, args.path, args.format, args.graph, **kwargs)
+    quads = read_rdf(spark, args.path, args.format, args.graph,
+                     on_error=args.on_error, **kwargs)
     store = TripleStore(spark, args.store)
     # count the INCOMING quads, not the store total after the write (a
     # second import into a non-empty store would report a misleading
@@ -127,8 +124,7 @@ def _import(rest: list[str]) -> int:
     else:
         store.append(quads)
     out = {"imported": n_in, "mode": args.mode}
-    fmt = args.format.lower().replace("-", "").replace("/", "")
-    if fmt in ("ntriples", "nquads", "nt", "nq"):
+    if args.format in ("ntriples", "nquads"):
         from kgap_spark.io.rdf import ntriples_rejects
 
         out["rejected_lines"] = ntriples_rejects(spark, args.path).count()

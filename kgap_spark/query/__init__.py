@@ -1,8 +1,6 @@
 from kgap_spark.query.patterns import (  # noqa: F401
     Var,
     bgp,
-    optional_pattern,
-    not_exists,
     counts_by_graph,
     type_distribution,
     entities_without_label,

@@ -1,12 +1,14 @@
-"""SPARQL-workload operator patterns over the triple table.
+"""Basic-graph-pattern compiler over the triple table.
 
-k-gap's entire query surface is SPARQL evaluated by GraphDB; the
-patterns its docs prescribe (SURVEY.md §2.2–2.8) compile to DataFrame
-operations here. The centerpiece is ``bgp`` — a basic-graph-pattern
-compiler: SPARQL's n-way self-join of the triple relation on shared
-variables (e.g. the 4-pattern observation query,
-``docs/advanced-topics.md:299-311``) becomes a chain of equi-joins over
-predicate-filtered slices, which Catalyst then reorders/broadcasts.
+k-gap's entire query surface is SPARQL evaluated by GraphDB. Here the
+SPARQL text goes through ``query.sparql``, which compiles every query
+form (OPTIONAL, FILTER NOT EXISTS, MINUS, ASK, CONSTRUCT, DESCRIBE, …)
+onto this module's one primitive, ``bgp``: SPARQL's n-way
+self-join of the triple relation on shared variables (e.g. the
+4-pattern observation query, ``docs/advanced-topics.md:299-311``) as a
+chain of equi-joins over predicate-filtered slices, which Catalyst
+then reorders/broadcasts. The canned accounting queries at the end are
+plain DataFrame aggregates the registered workload calls directly.
 
 Scale design: each pattern's slice starts with a ``pred = <iri>``
 filter — with the triple table partitioned by graph and the store
@@ -243,112 +245,6 @@ def bgp(
                 textual.append(t.name)
     rest = [c for c in acc.columns if c not in seen]
     return acc.select(*textual, *rest)
-
-
-def optional_pattern(base: DataFrame, triples: DataFrame, pattern: tuple,
-                     graph: str | None = None) -> DataFrame:
-    """OPTIONAL { pattern } → left outer join (J3,
-    docs/components/sembench.md:176-177)."""
-    if graph is not None:
-        triples = triples.filter(F.col("graph") == graph)
-    sl, _ = _slice(triples, pattern, 0)
-    shared = sorted(set(base.columns) & set(sl.columns))
-    return base.join(sl, on=shared, how="left")
-
-
-def not_exists(base: DataFrame, triples: DataFrame, pattern: tuple,
-               graph: str | None = None) -> DataFrame:
-    """FILTER NOT EXISTS { pattern } → anti join (J4,
-    docs/components/jupyter.md:557-566)."""
-    if graph is not None:
-        triples = triples.filter(F.col("graph") == graph)
-    sl, _ = _slice(triples, pattern, 0)
-    shared = sorted(set(base.columns) & set(sl.columns))
-    return base.join(sl, on=shared, how="left_anti")
-
-
-def ask(triples: DataFrame, patterns: list[tuple],
-        graph: str | None = None) -> bool:
-    """SPARQL ASK { patterns } → boolean
-    (docs/components/jupyter.md:594-600): does the BGP have at least
-    one solution? ``limit(1)`` caps the scan — Spark stops at the first
-    matching row, so this never materializes the full solution set."""
-    return bgp(triples, patterns, graph).limit(1).count() > 0
-
-
-def construct(
-    triples: DataFrame,
-    where: list[tuple],
-    template: list[tuple],
-    graph: str | None = None,
-    out_graph: str | None = None,
-) -> DataFrame:
-    """SPARQL CONSTRUCT { template } WHERE { BGP }: evaluate the basic
-    graph pattern, then instantiate each template triple per solution —
-    the generic graph-to-graph rewriting verb (U4; the KG pipeline's
-    ``build_triples`` is the specialized fast path). Template terms are
-    ``Var`` (bound from the solution) or constants. Output rows carry
-    the TRIPLES schema so they feed straight into ``TripleStore``."""
-    sols = bgp(triples, where, graph)
-
-    def term(t):
-        return F.col(t.name) if isinstance(t, Var) else F.lit(t)
-
-    outs = []
-    for s, p, o in template:
-        outs.append(
-            sols.select(
-                term(s).cast("string").alias("subj"),
-                term(p).cast("string").alias("pred"),
-                term(o).cast("string").alias("obj"),
-                F.lit(None).cast("string").alias("obj_lang"),
-                F.lit(None).cast("string").alias("obj_datatype"),
-                F.lit(out_graph).cast("string").alias("graph"),
-                F.lit(None).cast("string").alias("src_url"),
-            )
-        )
-    result = outs[0]
-    for df in outs[1:]:
-        result = result.unionByName(df)
-    return result.distinct()
-
-
-def describe(triples: DataFrame, uri: str, hops: int = 1) -> DataFrame:
-    """SPARQL DESCRIBE <uri>: every triple where the resource is
-    subject or object, optionally following blank-node/object closure
-    ``hops`` deep (the concise-bounded-description analog). Pure
-    filtered scans + the frontier join of ``traverse`` for hops > 1."""
-    direct = triples.filter(
-        (F.col("subj") == uri) | (F.col("obj") == uri)
-    )
-    if hops <= 1:
-        return direct
-    from kgap_spark.query.traverse import recursive_dereference
-
-    start = direct.filter(F.col("subj") == uri).select("obj")
-    edges = recursive_dereference(triples, start, max_depth=hops - 1)
-    expanded = edges.select(
-        F.col("src").alias("subj"), "pred", F.col("node").alias("obj")
-    )
-    return (
-        direct.select("subj", "pred", "obj")
-        .unionByName(expanded)
-        .distinct()
-    )
-
-
-def graph_diff(triples: DataFrame, graph_a: str, graph_b: str) -> DataFrame:
-    """Triple-level diff between two named graphs (feed-version
-    comparison: what changed between LDES harvests). Returns
-    (subj, pred, obj, change) with change ∈ {added, removed} —
-    added = in B not A, removed = in A not B. Two partition-pruned
-    scans + two anti joins."""
-    key = ["subj", "pred", "obj"]
-    a = triples.filter(F.col("graph") == graph_a).select(*key)
-    b = triples.filter(F.col("graph") == graph_b).select(*key)
-    added = b.join(a, key, "left_anti").withColumn("change", F.lit("added"))
-    removed = a.join(b, key, "left_anti").withColumn("change", F.lit("removed"))
-    return added.unionByName(removed)
 
 
 # ---------------------------------------------------------------------------

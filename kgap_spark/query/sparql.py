@@ -11,10 +11,12 @@ scoping, GROUP BY/HAVING, ORDER BY/LIMIT/OFFSET, aggregates
 COUNT/MAX/MIN/SUM/AVG (reference queries:
 ``docs/quick-reference.md:186-222``, ``docs/components/jupyter.md:
 557-566``, ``docs/advanced-topics.md:299-311,377-394``) — and compiles
-it onto the existing ``bgp``/``optional_pattern``/``not_exists`` plans,
-so every query stays a Catalyst DataFrame plan (pruned scans,
+it onto ``bgp`` slices joined by this module's own operators (left
+outer joins for OPTIONAL, semi/anti joins for FILTER [NOT] EXISTS and
+MINUS), so every query stays a Catalyst DataFrame plan (pruned scans,
 re-orderable equi-joins, partial aggregation — never an interpreter
-loop).
+loop). It is the only evaluator of these forms; CONSTRUCT and UPDATE
+templates are instantiated by one function, ``_instantiate``.
 
 GraphDB's Lucene magic predicates (``?e luc:searchIndex "q"`` +
 ``?e luc:score ?s``, docs/quick-reference.md:215-222) are recognized
@@ -3205,51 +3207,15 @@ def _select_result_scoped(q: Query, df: DataFrame, graph_var: str):
 
 
 def _construct(q: Query, sols: DataFrame) -> DataFrame:
-    """CONSTRUCT template instantiation over compiled solutions —
-    output rows carry the TRIPLES schema (feeds TripleStore). Literal
-    metadata survives: a template Lit keeps its @lang/^^dt, and a
-    variable object carries the solution's ``__lang``/``__dt`` binding
-    (round-tripping a labeled graph must not strip its tags)."""
-    def term(t):
-        if isinstance(t, Var):
-            return F.col(t.name)
-        if isinstance(t, tuple):  # any-of: emit the full-IRI form
-            return F.lit(t[0])
-        # lexical form only — a template Lit's @lang/^^dt go through
-        # meta(), not the value (TypedLit is pattern-side only)
-        return F.lit(_write_term(t))
-
-    cols = set(sols.columns)
-
-    def meta(t, kind: str):
-        if isinstance(t, Var) and f"{t.name}__{kind}" in cols:
-            return F.col(f"{t.name}__{kind}")
-        if isinstance(t, Lit):
-            v = t.lang if kind == "lang" else t.datatype
-            return F.lit(v).cast("string")
-        return F.lit(None).cast("string")
-
-    outs = []
-    for s, p, o, graph in q.template:
-        outs.append(
-            sols.select(
-                term(s).cast("string").alias("subj"),
-                term(p).cast("string").alias("pred"),
-                term(o).cast("string").alias("obj"),
-                meta(o, "lang").alias("obj_lang"),
-                meta(o, "dt").alias("obj_datatype"),
-                (F.lit(_write_term(graph)) if graph is not None
-                 else F.lit(None)).cast("string").alias("graph"),
-                F.lit(None).cast("string").alias("src_url"),
-            )
-        )
-    result = outs[0]
-    for df in outs[1:]:
-        result = result.unionByName(df)
-    result = result.distinct()
-    if q.limit is not None:
-        result = result.limit(q.limit)
-    return result
+    """CONSTRUCT: the template quads ``_instantiate`` builds, in the
+    TRIPLES schema (feeds TripleStore). An any-of template constant
+    (``a``, an undeclared ``rdfs:label``) writes its full IRI here,
+    where an update template writes the store's compact form."""
+    template = [(*(t[0] if isinstance(t, tuple) else t for t in spo), g)
+                for *spo, g in q.template]
+    out = _instantiate(template, sols).withColumn(
+        "src_url", F.lit(None).cast("string"))
+    return out if q.limit is None else out.limit(q.limit)
 
 
 def _write_term(t) -> str:
@@ -3283,10 +3249,11 @@ def _ground_rows(data: list, default_graph: str | None):
 def _instantiate(template: list, sols: DataFrame) -> DataFrame:
     """Template quads × solutions → distinct
     (subj, pred, obj, obj_lang, obj_datatype, graph); graph is NULL for
-    template triples outside a GRAPH block. Literal metadata flows the
-    same way as in _construct — a template Lit keeps its @lang/^^dt, a
-    variable object carries the solution's meta binding — so deletes
-    match the exact term and inserts don't strip tags."""
+    template triples outside a GRAPH block. CONSTRUCT, INSERT and DELETE
+    all build their quads here. Literal metadata survives — a template
+    Lit keeps its @lang/^^dt, a variable object carries the solution's
+    meta binding — so deletes match the exact term and neither inserts
+    nor constructed graphs strip tags."""
     def term(t):
         return F.col(t.name) if isinstance(t, Var) else F.lit(_write_term(t))
 
@@ -3550,12 +3517,11 @@ def execute_sparql(triples: DataFrame, text: str):
             "SPARQL Update request; use execute_sparql_update(store, text)"
         )
     if q.form == "describe":
-        from kgap_spark.query.patterns import describe
-
+        # the resources' triples: a resource set (the named IRIs, or
+        # DESCRIBE ?x WHERE { … }'s bindings), then one
+        # semi-join per role (subject / object) — never a driver-side
+        # loop over resources
         if q.projections:
-            # DESCRIBE ?x WHERE { … }: the selected resources' triples
-            # — distinct resource set, one semi-join per role (subject
-            # / object), never a driver-side loop over resources
             sols = _compile_group(triples, q.where)
             res = None
             for v in q.projections:
@@ -3572,19 +3538,19 @@ def execute_sparql(triples: DataFrame, text: str):
             # subtree, and Spark would otherwise recompute the whole
             # WHERE-pattern plan per join
             res = res.distinct().localCheckpoint(eager=True)
-            # two equi semi-joins (hash/broadcast-able) instead of one
-            # OR-condition join (which would fall back to nested-loop)
-            by_subj = triples.join(
-                res.withColumnRenamed("__r", "subj"), "subj", "left_semi"
-            )
-            by_obj = triples.join(
-                res.withColumnRenamed("__r", "obj"), "obj", "left_semi"
-            )
-            return by_subj.unionByName(by_obj).distinct()
-        out = describe(triples, q.describe_iris[0])
-        for iri in q.describe_iris[1:]:
-            out = out.unionByName(describe(triples, iri))
-        return out.distinct()
+        else:
+            res = local_frame(
+                triples.sparkSession,
+                [(iri,) for iri in q.describe_iris], "__r string")
+        # two equi semi-joins (hash/broadcast-able) instead of one
+        # OR-condition join (which would fall back to nested-loop)
+        by_subj = triples.join(
+            res.withColumnRenamed("__r", "subj"), "subj", "left_semi"
+        )
+        by_obj = triples.join(
+            res.withColumnRenamed("__r", "obj"), "obj", "left_semi"
+        )
+        return by_subj.unionByName(by_obj).distinct()
     df = _compile_group(triples, q.where)
     if q.form == "ask":
         return df.limit(1).count() > 0

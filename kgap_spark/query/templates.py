@@ -16,6 +16,8 @@ from string import Template
 
 from pyspark.sql import DataFrame, SparkSession
 
+from kgap_spark.io import fs
+
 # no quote characters: a value like "x' OR ..." must not break out of a
 # string literal. Table names get the stricter identifier class below.
 _VALUE = re.compile(r"^[A-Za-z0-9_.:/\- ]*$")
@@ -64,15 +66,21 @@ class QueryTemplates:
         self.triples = triples
         self.templates: dict[str, str] = dict(BUILTIN)
         self.sparql_names: set[str] = set()
-        if templates_folder and os.path.isdir(templates_folder):
-            for fn in sorted(os.listdir(templates_folder)):
-                if fn.endswith(".sql"):
-                    with open(os.path.join(templates_folder, fn)) as f:
-                        self.templates[fn[:-4]] = f.read()
-                elif fn.endswith(".sparql"):
-                    with open(os.path.join(templates_folder, fn)) as f:
-                        self.templates[fn[:-7]] = f.read()
-                    self.sparql_names.add(fn[:-7])
+        if templates_folder is None:
+            return
+        # through the Hadoop FS, so a file:// or object-store folder
+        # lists like a local one; a missing folder fails here, naming
+        # the path, rather than at the first template lookup
+        if not fs.exists(spark, templates_folder):
+            raise ValueError(
+                f"templates folder does not exist: {templates_folder}")
+        for fn in sorted(fs.list_names(spark, templates_folder)):
+            name, ext = os.path.splitext(fn)
+            if ext in (".sql", ".sparql"):
+                self.templates[name] = fs.read_text_file(
+                    spark, fs.join(templates_folder, fn))
+                if ext == ".sparql":
+                    self.sparql_names.add(name)
 
     def generate_sql(self, name: str, **vars: object) -> str:
         """The ``generate_sparql`` analog (kgap_tools.py:17-19):

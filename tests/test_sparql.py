@@ -496,6 +496,22 @@ def test_repo_queries_folder(spark, kb):
     assert df4.collect()[0]["count"] == 5
 
 
+def test_query_templates_folder_through_hadoop_fs(spark, kb, tmp_path):
+    """The templates folder is read through the Hadoop FS: a file://
+    folder loads like a local one, and a missing folder fails at
+    construction, naming the path."""
+    import os
+
+    from kgap_spark.query.templates import QueryTemplates
+
+    missing = str(tmp_path / "no_such_folder")
+    with pytest.raises(ValueError, match="no_such_folder"):
+        QueryTemplates(spark, missing, triples=kb)
+    qt = QueryTemplates(spark, "file://" + os.path.abspath("queries"),
+                        triples=kb)
+    assert qt.execute_to_df("type_counts").collect()[0]["count"] == 5
+
+
 def test_construct_from_text(kb):
     df = execute_sparql(kb, """
         PREFIX sosa: <http://www.w3.org/ns/sosa/>
@@ -510,6 +526,40 @@ def test_construct_from_text(kb):
     assert ("urn:sensor:0", "urn:obs:0") in got
     assert ("urn:sensor:1", "urn:obs:3") in got
     assert len(got) == 4
+
+
+def test_construct_and_insert_template_forms(spark, tmp_path):
+    """CONSTRUCT and INSERT build quads the same way but for one
+    thing: an undeclared ``a`` / ``rdfs:label`` in the template comes
+    out of CONSTRUCT as the full IRI and goes into the store from
+    INSERT in its compact form. Lang and datatype tags survive both."""
+    from kgap_spark.query.sparql import execute_sparql_update
+    from kgap_spark.triples import TripleStore
+
+    xsd_int = "http://www.w3.org/2001/XMLSchema#integer"
+    t = spark.createDataFrame(
+        [("urn:s", "urn:p", "x", "en", None, "urn:g", None),
+         ("urn:s", "urn:n", "5", None, xsd_int, "urn:g", None)], S.TRIPLES)
+    template = "?s a <urn:C> ; rdfs:label ?l ; <urn:v> ?n"
+    where = "WHERE { ?s <urn:p> ?l ; <urn:n> ?n }"
+
+    def quads(df):
+        return {(r.subj, r.pred, r.obj, r.obj_lang, r.obj_datatype)
+                for r in df.collect()}
+
+    def expect(a, label):
+        return {("urn:s", a, "urn:C", None, None),
+                ("urn:s", label, "x", "en", None),
+                ("urn:s", "urn:v", "5", None, xsd_int)}
+
+    built = execute_sparql(t, f"CONSTRUCT {{ {template} }} {where}")
+    assert quads(built) == expect(RDF + "type", RDFS + "label")
+    store = TripleStore(spark, str(tmp_path / "s"))
+    store.append(t)
+    execute_sparql_update(store, f"INSERT {{ {template} }} {where}",
+                          default_graph="urn:g2")
+    assert quads(store.read_graph("urn:g2")) == expect("rdf:type",
+                                                        "rdfs:label")
 
 
 def test_describe_from_text(kb):
@@ -549,6 +599,28 @@ def test_job_sparql_subcommand(spark, tmp_path, capsys):
     derived = TripleStore(spark, store_path).read_graph("urn:g:derived")
     assert derived.count() == 2
     assert {r.pred for r in derived.collect()} == {"urn:p:isA"}
+
+
+def test_job_sparql_construct_into_drops_unbound(spark, tmp_path):
+    """CONSTRUCT --into merges no quad for a template triple whose
+    variable a solution leaves unbound (SPARQL 1.1 §16.2): the OPTIONAL
+    miss on urn:x writes nothing, not a NULL object."""
+    from kgap_spark.job import main as job_main
+    from kgap_spark.triples import TripleStore
+
+    store_path = str(tmp_path / "store")
+    TripleStore(spark, store_path).append(spark.createDataFrame(
+        [("urn:x", "urn:p", "o1", None, None, "urn:g", None),
+         ("urn:y", "urn:p", "o2", None, None, "urn:g", None),
+         ("urn:y", "urn:q", "v", None, None, "urn:g", None)], S.TRIPLES))
+    rc = job_main(["sparql", "--store", store_path, "--query",
+                   "CONSTRUCT { ?s <urn:r> ?x } WHERE { ?s <urn:p> ?o "
+                   "OPTIONAL { ?s <urn:q> ?x } }", "--into", "urn:g2"])
+    assert rc == 0
+    derived = TripleStore(spark, store_path).read_graph("urn:g2")
+    assert derived.filter("obj IS NULL").count() == 0
+    assert {(r.subj, r.pred, r.obj) for r in derived.collect()} == {
+        ("urn:y", "urn:r", "v")}
 
 
 def test_review_fixes(spark, kb, chain_kb, tmp_path):

@@ -206,15 +206,15 @@ def test_validate_with_shape(spark):
 # ASK + Excel export
 
 def test_ask(spark):
-    from kgap_spark.query.patterns import Var, ask
+    from kgap_spark.query.sparql import execute_sparql
 
     triples = spark.createDataFrame(
         [("s1", "rdf:type", "Person", None, None, "g", None)],
         "subj string, pred string, obj string, obj_lang string, "
         "obj_datatype string, graph string, src_url string",
     )
-    assert ask(triples, [(Var("s"), "rdf:type", "Person")]) is True
-    assert ask(triples, [(Var("s"), "rdf:type", "Robot")]) is False
+    assert execute_sparql(triples, "ASK { ?s rdf:type <Person> }") is True
+    assert execute_sparql(triples, "ASK { ?s rdf:type <Robot> }") is False
 
 
 def test_export_xlsx(spark, tmp_path):
