@@ -1,4 +1,4 @@
-"""Full-text search: materialized posting table + scored search.
+"""Full-text search: materialized posting table + one query evaluator.
 
 k-gap enables GraphDB's Lucene FTS (reference:
 ``graphdb/kgap/template-repo-config.ttl:29-32``) and queries it as
@@ -8,11 +8,25 @@ the pipeline materializes one (SURVEY §4): a ``(token, subj, tf)``
 posting table built once per corpus; a search is then a broadcast-join
 of query tokens against the posting table with a term-frequency score —
 a pruned scan + partial agg at any scale, never a full-corpus regex.
+
+A query text is evaluated in one place, ``fts_matches``: it is parsed
+as the Lucene subset (``parse_boolean_query``: uppercase ``AND`` /
+``OR`` / ``NOT`` and a leading ``+`` / ``-`` are operators), scored,
+and filtered by its required and excluded terms. ``fts_search`` adds
+the top-k, SPARQL's ``luc:searchIndex`` uses the unsorted matches, and
+``fts_search_indexed`` reads the buckets of every token the query names
+from a materialized index and runs ``fts_search`` over that slice.
+
+The materialized index is partitioned by ``_crc_bucket`` =
+``crc32(token) % 64``; ``zlib.crc32`` computes the same bucket on the
+driver, so a search lists only its buckets without a Spark job. The
+corpus size for tf-idf is kept in a ``_doc_count`` sidecar file.
 """
 
 from __future__ import annotations
 
 import re
+import zlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -47,88 +61,19 @@ def build_posting_table(
 
 
 N_TOKEN_BUCKETS = 64
+# named after the hash: an index partitioned by another bucket function
+# has no such column, so searching it fails instead of under-returning
+BUCKET_COL = "_crc_bucket"
 
 
 def bucket_of(token_col):
-    """Stable token → bucket id (content hash, reproducible anywhere)."""
-    return F.pmod(F.xxhash64(token_col), F.lit(N_TOKEN_BUCKETS))
-
-
-# --- driver-side twin of bucket_of ---------------------------------------
-# xxHash64 (public spec, Yann Collet) over UTF-8 bytes with Spark's
-# seed 42 — so a search computes its query tokens' bucket ids in pure
-# Python instead of running a 2-row Spark job per query (r07: that job
-# was ~0.2 s of every indexed search). Equality with F.xxhash64 is
-# pytest-asserted over an adversarial token set.
-
-_P1 = 0x9E3779B185EBCA87
-_P2 = 0xC2B2AE3D27D4EB4F
-_P3 = 0x165667B19E3779F9
-_P4 = 0x85EBCA77C2B2AE63
-_P5 = 0x27D4EB2F165667C5
-_M = (1 << 64) - 1
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M
-
-
-def _xxh64(data: bytes, seed: int = 42) -> int:
-    """xxHash64 of ``data`` (unsigned). Matches Spark's XXH64."""
-    n = len(data)
-    i = 0
-    if n >= 32:
-        v1 = (seed + _P1 + _P2) & _M
-        v2 = (seed + _P2) & _M
-        v3 = seed & _M
-        v4 = (seed - _P1) & _M
-        while i <= n - 32:
-            for j, v in enumerate((v1, v2, v3, v4)):
-                k = int.from_bytes(data[i + 8 * j:i + 8 * j + 8], "little")
-                v = (v + k * _P2) & _M
-                v = (_rotl(v, 31) * _P1) & _M
-                if j == 0:
-                    v1 = v
-                elif j == 1:
-                    v2 = v
-                elif j == 2:
-                    v3 = v
-                else:
-                    v4 = v
-            i += 32
-        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M
-        for v in (v1, v2, v3, v4):
-            v = (_rotl((v * _P2) & _M, 31) * _P1) & _M
-            h = (((h ^ v) * _P1) + _P4) & _M
-    else:
-        h = (seed + _P5) & _M
-    h = (h + n) & _M
-    while i <= n - 8:
-        k = int.from_bytes(data[i:i + 8], "little")
-        k = (_rotl((k * _P2) & _M, 31) * _P1) & _M
-        h = ((_rotl(h ^ k, 27) * _P1) + _P4) & _M
-        i += 8
-    if i <= n - 4:
-        k = int.from_bytes(data[i:i + 4], "little")
-        h = ((_rotl(h ^ ((k * _P1) & _M), 23) * _P2) + _P3) & _M
-        i += 4
-    while i < n:
-        h = (_rotl(h ^ ((data[i] * _P5) & _M), 11) * _P1) & _M
-        i += 1
-    h ^= h >> 33
-    h = (h * _P2) & _M
-    h ^= h >> 29
-    h = (h * _P3) & _M
-    h ^= h >> 32
-    return h
+    """Stable token → bucket id: crc32 of the UTF-8 bytes, mod 64."""
+    return F.pmod(F.crc32(token_col), F.lit(N_TOKEN_BUCKETS))
 
 
 def bucket_of_py(token: str) -> int:
-    """Driver-side ``bucket_of``: pmod of the SIGNED xxhash64 value,
-    exactly as Spark's ``pmod(xxhash64(token), N_TOKEN_BUCKETS)``."""
-    u = _xxh64(token.encode("utf-8"))
-    signed = u - (1 << 64) if u >= (1 << 63) else u
-    return signed % N_TOKEN_BUCKETS  # python % is already non-negative
+    """Driver-side ``bucket_of`` (Spark's ``crc32`` is zlib's)."""
+    return zlib.crc32(token.encode("utf-8")) % N_TOKEN_BUCKETS
 
 
 def write_posting_table(posting: DataFrame, path: str, n_docs: int | None = None) -> None:
@@ -141,10 +86,10 @@ def write_posting_table(posting: DataFrame, path: str, n_docs: int | None = None
     sidecar — parquet readers ignore underscore files — so a tf-idf
     search never rescans the whole index to learn N."""
     (
-        posting.withColumn("_bucket", bucket_of(F.col("token")))
-        .repartition("_bucket")
+        posting.withColumn(BUCKET_COL, bucket_of(F.col("token")))
+        .repartition(BUCKET_COL)
         .write.mode("overwrite")
-        .partitionBy("_bucket")
+        .partitionBy(BUCKET_COL)
         .parquet(path)
     )
     spark = posting.sparkSession
@@ -155,55 +100,6 @@ def write_posting_table(posting: DataFrame, path: str, n_docs: int | None = None
     from kgap_spark.io.fs import write_text_file
 
     write_text_file(spark, path.rstrip("/") + "/_doc_count", str(n_docs))
-
-
-def append_posting_table(posting: DataFrame, path: str,
-                         n_new_docs: int | None = None) -> None:
-    """Incremental index maintenance: append NEW documents' postings
-    into the existing bucket-partitioned index (no rebuild — the
-    Lucene segment-add analog). Token bucketing is content-hashed, so
-    new rows land in the same bucket scheme; the `_doc_count` sidecar
-    is bumped by ``n_new_docs`` (pass None to derive it as the
-    appended postings' distinct subjects NOT already in the index —
-    re-appended updated documents must not inflate the corpus size;
-    the derivation anti-joins against one index scan, so callers that
-    know the count should pass it).
-    Searches need no change — a token's postings just span more files
-    until the next compaction (`posting.repartition` keeps the
-    per-append file count at one per touched bucket).
-
-    The sidecar is validated BEFORE the data write: appending first
-    and then discovering a missing `_doc_count` would leave the index
-    and its corpus size permanently inconsistent (silently inverted
-    tf-idf rankings)."""
-    spark = posting.sparkSession
-    current = read_doc_count(spark, path)
-    if current is None:
-        # treating an unknown N as 0 would write a tiny corpus size
-        # and silently invert tf-idf rankings
-        raise ValueError(
-            f"{path} has no _doc_count sidecar; rebuild with "
-            "write_posting_table before appending"
-        )
-    if n_new_docs is None:
-        existing = spark.read.parquet(path).select("subj").distinct()
-        n_new_docs = (
-            posting.select("subj").distinct()
-            .join(existing, "subj", "left_anti").count()
-        )
-    (
-        posting.withColumn("_bucket", bucket_of(F.col("token")))
-        .repartition("_bucket")
-        .write.mode("append")
-        .partitionBy("_bucket")
-        .parquet(path)
-    )
-    from kgap_spark.io.fs import write_text_file
-
-    write_text_file(
-        spark, path.rstrip("/") + "/_doc_count",
-        str(current + n_new_docs),
-    )
 
 
 def read_doc_count(spark, path: str) -> int | None:
@@ -218,50 +114,40 @@ def read_doc_count(spark, path: str) -> int | None:
         return None
 
 
-def _scored(hits: DataFrame, n_docs: int | None, scoring: str, k: int) -> DataFrame:
-    """Shared scoring tail: groupBy subj, TF or TF-IDF score, top-k.
-    One definition of the scoring math — `_scored_with_terms` — serves
-    both plain and boolean search, so the DuckDB oracles track a
-    single formula."""
-    return (
-        _scored_with_terms(hits, n_docs, scoring)
-        .drop("_toks")
-        .orderBy(F.desc("score"), F.desc("n_terms"), "subj")
-        .limit(k)
-    )
-
-
 def fts_search_indexed(
     spark, path: str, query: str, k: int = 20, scoring: str = "tf"
 ) -> DataFrame:
-    """Search against the materialized posting table: bucket ids are
-    computed driver-side from the query tokens, so the scan prunes to
-    those partitions AND pushes the token equality filter."""
-    q = query_tokens(query)
-    # bucket ids computed driver-side (pure-python xxh64 twin of
-    # bucket_of) — no per-search Spark job for a handful of tokens
-    bucket_ids = sorted({bucket_of_py(t) for t in q})
+    """``fts_search`` over the materialized index, reading only the
+    buckets of the tokens the query names — its exclusions included,
+    so a ``-term`` is checked against that term's postings. tf-idf
+    takes N from the ``_doc_count`` sidecar (never from the pruned
+    slice) and raises without one."""
+    q = parse_boolean_query(query)
+    bucket_ids = sorted({bucket_of_py(t) for toks in q.values() for t in toks})
     # list ONLY the probed bucket directories (r07): discovering all
     # N_TOKEN_BUCKETS partitions just to prune them again cost ~0.3 s
     # per search locally and a full directory listing at scale;
-    # basePath keeps the `_bucket` partition column in the schema.
+    # basePath keeps the bucket partition column in the schema.
     # Buckets with no postings yet have no directory — skip them (on
     # any filesystem scheme, via the Hadoop FileSystem API).
     from kgap_spark.io import fs
 
     dirs = [
-        d for d in (fs.join(path, f"_bucket={b}") for b in bucket_ids)
+        d for d in (fs.join(path, f"{BUCKET_COL}={b}") for b in bucket_ids)
         if fs.exists(spark, d)
     ]
     if not dirs:
         posting = spark.read.parquet(path)
     else:
         posting = spark.read.option("basePath", path).parquet(*dirs)
-    hits = posting.filter(
-        F.col("_bucket").isin(bucket_ids) & F.col("token").isin(q)
-    )
-    n_docs = read_doc_count(spark, path) if scoring == "tfidf" else None
-    return _scored(hits, n_docs, scoring, k)
+    n_docs = None
+    if scoring == "tfidf":
+        n_docs = read_doc_count(spark, path)
+        if n_docs is None:
+            raise ValueError(f"{path} has no _doc_count sidecar: tfidf "
+                             "scoring needs n_docs (corpus size)")
+    return fts_search(posting.filter(F.col(BUCKET_COL).isin(bucket_ids)),
+                      query, k, scoring, n_docs)
 
 
 def parse_boolean_query(query: str) -> dict:
@@ -273,6 +159,9 @@ def parse_boolean_query(query: str) -> dict:
     - ``a OR b``     → explicit should (the default operator)
     - ``+a``         → must, ``-a`` / ``NOT a`` → must_not
     - mixed ``+a b -c`` → a required, b optional scorer, c excluded
+
+    Operators are case-sensitive, as in Lucene: ``and`` / ``or`` /
+    ``not`` are plain terms.
 
     Returns ``{"should": [...], "must": [...], "must_not": [...]}`` of
     index-normalized tokens. ``AND`` binds pairwise like Lucene's
@@ -288,8 +177,7 @@ def parse_boolean_query(query: str) -> dict:
     i = 0
     while i < len(raw):
         w = raw[i]
-        up = w.upper()
-        if up == "AND":
+        if w == "AND":
             if last is not None and last[0] is should and last[1]:
                 moved = should[-last[1]:]
                 del should[-last[1]:]
@@ -298,11 +186,11 @@ def parse_boolean_query(query: str) -> dict:
             and_next = True
             i += 1
             continue
-        if up == "OR":
+        if w == "OR":
             and_next = False
             i += 1
             continue
-        if up == "NOT":
+        if w == "NOT":
             i += 1
             if i >= len(raw):
                 raise ValueError(
@@ -340,51 +228,6 @@ def parse_boolean_query(query: str) -> dict:
         last = (target, len(toks)) if target is not must_not else None
         i += 1
     return {"should": should, "must": must, "must_not": must_not}
-
-
-def fts_search_boolean(
-    posting: DataFrame,
-    query: str,
-    k: int = 20,
-    scoring: str = "tf",
-    n_docs: int | None = None,
-) -> DataFrame:
-    """Boolean full-text search over the posting table. Matching:
-    every *must* token present; at least one *should* token present
-    when no must terms exist; no *must_not* token present. Score =
-    the usual Σ tf(·idf) over the matched should+must postings.
-
-    Plan shape at scale: one token-pruned posting scan for the
-    positive terms (bucket/partition pruning applies unchanged), the
-    per-doc term-set check as ``collect_set`` inside the existing
-    score agg (no extra shuffle), and the exclusion set as one
-    broadcast-able anti join on the (tiny) must_not posting slice —
-    never a full-corpus pass.
-
-    Contract: ``posting`` holds at most one row per (subj, token), as
-    ``build_posting_table`` writes it. Scoring counts rows, not
-    distinct tokens, so a duplicated (subj, token) row adds its tf
-    twice, adds one to ``n_terms`` and (tfidf) to the token's df."""
-    q = parse_boolean_query(query)
-    pos_tokens = q["should"] + q["must"]
-    if not pos_tokens:
-        raise ValueError("boolean FTS query needs at least one "
-                         "positive term")
-    hits = posting.filter(F.col("token").isin(pos_tokens))
-    if scoring == "tfidf" and n_docs is None:
-        n_docs = posting.select("subj").distinct().count()
-    scored = _scored_with_terms(hits, n_docs, scoring)
-    for t in q["must"]:
-        scored = scored.filter(F.array_contains(F.col("_toks"), t))
-    scored = scored.drop("_toks")
-    if q["must_not"]:
-        excl = posting.filter(
-            F.col("token").isin(q["must_not"])
-        ).select("subj").distinct()
-        scored = scored.join(F.broadcast(excl), "subj", "left_anti")
-    return scored.orderBy(
-        F.desc("score"), F.desc("n_terms"), "subj"
-    ).limit(k)
 
 
 def _scored_with_terms(hits: DataFrame, n_docs: int | None,
@@ -430,6 +273,53 @@ def _scored_with_terms(hits: DataFrame, n_docs: int | None,
     )
 
 
+def fts_matches(
+    posting: DataFrame,
+    query: str,
+    scoring: str = "tf",
+    n_docs: int | None = None,
+) -> DataFrame:
+    """Every document matching ``query``, as unsorted
+    ``(subj, score, n_terms)``. The one evaluator of a query text.
+
+    Matching: every *must* token present; at least one *should* token
+    present when no must terms exist; no *must_not* token present. A
+    query with no positive term raises ``ValueError``. Score = Σ tf
+    (``scoring='tf'``, the luc:score analog — deterministic and
+    oracle-checkable) or Σ tf·idf (``'tfidf'``; pass ``n_docs`` or the
+    posting table is scanned once to count it) over the matched
+    should + must postings.
+
+    Plan shape at scale: one token-pruned posting scan for the
+    positive terms, the per-doc term check as ``collect_list`` inside
+    the score agg (no extra shuffle), and the exclusion set as one
+    broadcast anti join on the (tiny) must_not posting slice — never
+    a full-corpus pass.
+
+    Contract: ``posting`` holds at most one row per (subj, token), as
+    ``build_posting_table`` writes it. Scoring counts rows, not
+    distinct tokens, so a duplicated (subj, token) row adds its tf
+    twice, adds one to ``n_terms`` and (tfidf) to the token's df."""
+    q = parse_boolean_query(query)
+    pos_tokens = q["should"] + q["must"]
+    if not pos_tokens:
+        raise ValueError("FTS query needs at least one positive term: "
+                         f"{query!r}")
+    hits = posting.filter(F.col("token").isin(pos_tokens))
+    if scoring == "tfidf" and n_docs is None:
+        n_docs = posting.select("subj").distinct().count()
+    scored = _scored_with_terms(hits, n_docs, scoring)
+    for t in q["must"]:
+        scored = scored.filter(F.array_contains(F.col("_toks"), t))
+    scored = scored.drop("_toks")
+    if q["must_not"]:
+        excl = posting.filter(
+            F.col("token").isin(q["must_not"])
+        ).select("subj").distinct()
+        scored = scored.join(F.broadcast(excl), "subj", "left_anti")
+    return scored
+
+
 def fts_search(
     posting: DataFrame,
     query: str,
@@ -437,17 +327,8 @@ def fts_search(
     scoring: str = "tf",
     n_docs: int | None = None,
 ) -> DataFrame:
-    """Multi-token OR search over an in-memory posting table.
-    ``scoring='tf'`` (score = Σ tf, the luc:score analog — deterministic
-    and oracle-checkable) or ``'tfidf'`` (df-weighted; pass ``n_docs``
-    or the corpus is rescanned once to count it).
-
-    Contract: ``posting`` holds at most one row per (subj, token), as
-    ``build_posting_table`` writes it. Scoring counts rows, not
-    distinct tokens, so a duplicated (subj, token) row adds its tf
-    twice, adds one to ``n_terms`` and (tfidf) to the token's df."""
-    q = query_tokens(query)
-    hits = posting.filter(F.col("token").isin(q))
-    if scoring == "tfidf" and n_docs is None:
-        n_docs = posting.select("subj").distinct().count()
-    return _scored(hits, n_docs, scoring, k)
+    """Top-k of ``fts_matches``, ordered by score, then matched terms,
+    then subject."""
+    return fts_matches(posting, query, scoring, n_docs).orderBy(
+        F.desc("score"), F.desc("n_terms"), "subj"
+    ).limit(k)

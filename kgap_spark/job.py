@@ -124,7 +124,8 @@ def _import(rest: list[str]) -> int:
     else:
         store.append(quads)
     out = {"imported": n_in, "mode": args.mode}
-    if args.format in ("ntriples", "nquads"):
+    # under --on-error fail an unparseable line already failed the scan
+    if args.on_error == "skip" and args.format in ("ntriples", "nquads"):
         from kgap_spark.io.rdf import ntriples_rejects
 
         out["rejected_lines"] = ntriples_rejects(spark, args.path).count()

@@ -10,8 +10,10 @@ logs on death (``app.py:394-426``). Here:
 - the unit of work is a **named graph** (= source site, the per-feed
   analog of ``app.py:309``);
 - ``LineageLog`` is an append-only parquet log with one row per
-  (graph, run): rows_in, triples_out, status, wall_ms — the metrics
-  sink replacing captured container logs (S8/S9);
+  (graph, run): rows_in, triples_out, mentions_out, status — the
+  metrics sink replacing captured container logs (S8/S9). One Spark
+  job serves every graph of a run, so wall time is measured per run
+  (the returned ``wall_ms``), not per graph;
 - a re-run anti-joins pending graphs against ``status='ok'`` lineage
   rows, processes only the remainder in ONE Spark job, and commits each
   graph partition idempotently with dynamic partition overwrite — so a
@@ -74,7 +76,6 @@ class LineageLog:
                     r.get("triples_out"),
                     r.get("mentions_out"),
                     r["status"],
-                    r.get("wall_ms"),
                 )
                 for r in rows
             ],
@@ -173,43 +174,23 @@ def run_pipeline_resumable(
         store.overwrite_graphs(triples)
 
     wall_ms = int((time.monotonic() - t0) * 1000)
-    # Per-graph cost attribution (the per-feed log analog,
-    # app.py:394-426): one shared Spark job processes every graph — the
-    # alternative, timing each graph's own job, is the J9 driver-loop
-    # anti-pattern — so the run's wall time is apportioned by each
-    # graph's share of the work (rows in + triples out), the same
-    # accounting a task-metrics listener would approximate once
-    # partitions are graph-contiguous (repartitionByRange(graph, subj)).
-    work = {
-        g: rows_in.get(g, 0) + n_triples_by_graph.get(g, 0)
-        for g in pending_graphs
-    }
-    if include_dict_graph and pending_graphs:
-        work[S.GRAPH_DICT] = n_triples_by_graph.get(S.GRAPH_DICT, 0)
-    total_work = sum(work.values()) or 1
-
-    def attributed(g: str) -> int:
-        return max(1, int(round(wall_ms * work.get(g, 0) / total_work)))
-
     for g in pending_graphs:
         metrics_rows.append(
             dict(graph=g, run_id=run_id, rows_in=rows_in.get(g, 0),
                  triples_out=n_triples_by_graph.get(g, 0),
-                 mentions_out=n_mentions_by_graph.get(g, 0), status="ok",
-                 wall_ms=attributed(g))
+                 mentions_out=n_mentions_by_graph.get(g, 0), status="ok")
         )
     if include_dict_graph and pending_graphs:
         metrics_rows.append(
             dict(graph=S.GRAPH_DICT, run_id=run_id, rows_in=0,
                  triples_out=n_triples_by_graph.get(S.GRAPH_DICT, 0),
                  mentions_out=n_mentions_by_graph.get(S.GRAPH_DICT, 0),
-                 status="ok", wall_ms=attributed(S.GRAPH_DICT))
+                 status="ok")
         )
     for g in sorted(fail_graphs or ()):
-        # a skipped graph did no work in this run; no attributed time
         metrics_rows.append(
             dict(graph=g, run_id=run_id, rows_in=None, triples_out=None,
-                 status="failed", wall_ms=None)
+                 status="failed")
         )
     lineage.append(metrics_rows)
     return {

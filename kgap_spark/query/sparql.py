@@ -1987,8 +1987,7 @@ def _lucene_score_map(triple_list: list) -> dict[str, str]:
     return score_vars
 
 
-def _split_lucene(triple_list: list,
-                  score_map: dict[str, str] | None = None):
+def _split_lucene(triple_list: list, score_map: dict[str, str]):
     """Pull GraphDB's Lucene magic patterns out of a TriplesBlock:
     (?e luc:searchIndex "query") joins at ITS textual position with
     the score variable from ``score_map`` (paired group-wide by
@@ -1996,25 +1995,16 @@ def _split_lucene(triple_list: list,
     they appear. Returns (remaining_triples, searches) with
     searches = [(entity_var, query_string, score_var|None)]."""
     remaining, searches = [], {}
-    score_vars = dict(score_map or {})
     for (s, p, o) in triple_list:
         if p in _LUC_SEARCH_PREDS and isinstance(s, Var):
-            q = o.value if isinstance(o, Lit) else str(o)
-            searches[s.name] = q
-        elif p in _LUC_SCORE_PREDS and isinstance(s, Var) and isinstance(o, Var):
-            score_vars[s.name] = o.name
+            searches[s.name] = o.value if isinstance(o, Lit) else str(o)
+        elif p in _LUC_SCORE_PREDS and isinstance(s, Var) \
+                and isinstance(o, Var):
+            continue  # already paired in score_map
         else:
             remaining.append((s, p, o))
-    orphans = {e for e in score_vars if e not in searches
-               and any(p in _LUC_SCORE_PREDS for (s, p, _o) in triple_list
-                       if isinstance(s, Var) and s.name == e)}
-    if score_map is None and orphans:
-        raise ValueError(
-            "luc:score without a matching luc:searchIndex pattern for "
-            f"?{sorted(orphans)[0]}"
-        )
     return remaining, [
-        (ent, q, score_vars.get(ent)) for ent, q in searches.items()
+        (ent, q, score_map.get(ent)) for ent, q in searches.items()
     ]
 
 
@@ -2028,7 +2018,8 @@ def _eval_lucene(triples: DataFrame, ent: str, query: str,
                  graph_var: str | None = None) -> DataFrame:
     """luc:searchIndex over the store's literal objects: ad-hoc posting
     table (production uses the materialized bucket-pruned index), TF
-    score — the luc:score analog.
+    score — the luc:score analog. The query text is evaluated by
+    ``fts_matches`` (the Lucene operator subset), every match kept.
 
     ``graph_var`` (the GRAPH ?var scope): the document key becomes
     (graph, subject) — an entity matches per named graph on that
@@ -2037,7 +2028,7 @@ def _eval_lucene(triples: DataFrame, ent: str, query: str,
     scoring is exact; a tfidf variant would need per-graph document
     frequencies). Result carries the graph column bound as the
     variable."""
-    from kgap_spark.index.fts import build_posting_table, fts_search
+    from kgap_spark.index.fts import build_posting_table, fts_matches
 
     lits = triples.filter(
         F.col("obj_lang").isNotNull()
@@ -2052,7 +2043,7 @@ def _eval_lucene(triples: DataFrame, ent: str, query: str,
             F.col("obj").alias("_txt"),
         )
     posting = build_posting_table(docs, "_doc", "_txt")
-    hits = fts_search(posting, query, k=1 << 30)
+    hits = fts_matches(posting, query)
     score = F.col("score").cast("double").alias(score_var or "__score")
     if graph_var is None:
         out = hits.select(F.col("subj").alias(ent), score)
@@ -2471,7 +2462,7 @@ _PATH_NODES = (PathPlus, PathStar, PathOpt, PathSeq, PathAlt)
 
 def _compile_triples_chunk(base_triples: DataFrame, chunk: list,
                            graph_var: str | None,
-                           score_map: dict[str, str] | None = None,
+                           score_map: dict[str, str],
                            ) -> DataFrame | None:
     """Compile one textual run of triple patterns (a SPARQL
     TriplesBlock): plain BGP joins + luc: magic-pattern searches +

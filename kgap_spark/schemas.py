@@ -71,7 +71,6 @@ LINEAGE = T.StructType(
         # linking stage's yield, derived from the committed output
         T.StructField("mentions_out", T.LongType(), True),
         T.StructField("status", T.StringType(), False),
-        T.StructField("wall_ms", T.LongType(), True),
     ]
 )
 

@@ -1088,9 +1088,9 @@ def q_fts_search_indexed(spark, sf_dir):
         write_posting_table,
     )
 
-    # v2: tfidf needs the _doc_count sidecar — bust pre-sidecar caches
+    # v3: crc32 token buckets — bust the xxhash64-bucketed v2 caches
     idx_dir = os.path.join(
-        "/tmp/kgap_fts_v2", _cache_key(sf_dir, "documents")
+        "/tmp/kgap_fts_v3", _cache_key(sf_dir, "documents")
     )
     if not os.path.exists(os.path.join(idx_dir, "_SUCCESS")):
         docs = _t(spark, sf_dir, "documents")
@@ -1736,12 +1736,12 @@ def q_fts_boolean(spark, sf_dir):
     optional scorer, docs containing slow excluded (the operator mix
     GraphDB's luc:searchIndex accepts). One token-pruned scan + the
     usual score agg + a broadcast anti join for the exclusion."""
-    from kgap_spark.index.fts import build_posting_table, fts_search_boolean
+    from kgap_spark.index.fts import build_posting_table, fts_search
 
     posting = build_posting_table(
         _t(spark, sf_dir, "documents"), "doc_id", "text"
     )
-    return fts_search_boolean(posting, "+join stream -slow", k=20)
+    return fts_search(posting, "+join stream -slow", k=20)
 
 
 ORACLE_FTS_BOOLEAN = """

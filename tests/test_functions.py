@@ -327,54 +327,6 @@ def test_length_quantile_labels():
     assert f"p{int(0.29 * 100)}" == "p28"  # the old bug
 
 
-def test_append_posting_table_incremental(spark, tmp_path):
-    """Index maintenance: appending a new doc's postings (no rebuild)
-    makes it searchable and bumps the corpus-size sidecar."""
-    from kgap_spark.index.fts import (
-        append_posting_table,
-        build_posting_table,
-        fts_search_indexed,
-        read_doc_count,
-        write_posting_table,
-    )
-
-    idx = str(tmp_path / "idx")
-    base = spark.createDataFrame(
-        [(0, "alpha beta"), (1, "beta gamma")], "doc_id long, text string"
-    )
-    write_posting_table(build_posting_table(base, "doc_id", "text"), idx,
-                        n_docs=2)
-    assert read_doc_count(spark, idx) == 2
-    assert fts_search_indexed(spark, idx, "zeta", k=5).count() == 0
-
-    newdocs = spark.createDataFrame([(2, "zeta beta")], "doc_id long, text string")
-    append_posting_table(build_posting_table(newdocs, "doc_id", "text"), idx,
-                         n_new_docs=1)
-    assert read_doc_count(spark, idx) == 3
-    hits = fts_search_indexed(spark, idx, "zeta", k=5).collect()
-    assert [r.subj for r in hits] == [2]
-    # old postings still intact, tfidf path works over the merged index
-    beta = fts_search_indexed(spark, idx, "beta", k=5, scoring="tfidf")
-    assert {r.subj for r in beta.collect()} == {0, 1, 2}
-
-    # n_new_docs omitted → derived from the postings (never silently 0)
-    more = spark.createDataFrame([(3, "delta")], "doc_id long, text string")
-    append_posting_table(build_posting_table(more, "doc_id", "text"), idx)
-    assert read_doc_count(spark, idx) == 4
-
-    # a sidecar-less index refuses BEFORE any data lands
-    import pytest
-
-    bare = str(tmp_path / "bare")
-    build_posting_table(base, "doc_id", "text").write.parquet(bare)
-    files_before = set((tmp_path / "bare").rglob("*.parquet"))
-    with pytest.raises(ValueError, match="_doc_count"):
-        append_posting_table(
-            build_posting_table(more, "doc_id", "text"), bare, n_new_docs=1
-        )
-    assert set((tmp_path / "bare").rglob("*.parquet")) == files_before
-
-
 def test_fts_search_indexed_uri_path_skips_absent_bucket(spark, tmp_path):
     """A scheme-qualified index path must resolve bucket existence like
     a local one: a query token whose bucket directory does not exist
@@ -397,6 +349,56 @@ def test_fts_search_indexed_uri_path_skips_absent_bucket(spark, tmp_path):
     for path in (local, "file://" + local):
         hits = fts_search_indexed(spark, path, f"beta {absent}", k=5)
         assert {r.subj for r in hits.collect()} == {0, 1}
+
+
+def test_fts_search_indexed_reads_exclusion_buckets(spark, tmp_path):
+    """An excluded term whose bucket no positive term shares is still
+    read: the document containing it is dropped, not returned."""
+    from kgap_spark.index.fts import (
+        bucket_of_py,
+        build_posting_table,
+        fts_search_indexed,
+        write_posting_table,
+    )
+
+    zeta = next(t for t in ["zeta"] + [f"zeta{i}" for i in range(100)]
+                if bucket_of_py(t) != bucket_of_py("alpha"))
+    docs = spark.createDataFrame(
+        [(0, "alpha beta"), (1, f"alpha {zeta}")], "doc_id long, text string"
+    )
+    idx = str(tmp_path / "idx")
+    write_posting_table(build_posting_table(docs, "doc_id", "text"), idx)
+    hits = fts_search_indexed(spark, idx, f"alpha -{zeta}", k=5).collect()
+    assert [r.subj for r in hits] == [0]
+
+
+@pytest.mark.parametrize("scoring", ["tf", "tfidf"])
+def test_fts_search_indexed_equals_fts_search(spark, tmp_path, scoring):
+    """The bucket-pruned search is the in-memory search over the same
+    postings: same rows, scores and order for a should / must /
+    must_not mix (tf-idf N from the sidecar on one side, passed on the
+    other)."""
+    from kgap_spark.index.fts import (
+        build_posting_table,
+        fts_search,
+        fts_search_indexed,
+        write_posting_table,
+    )
+
+    docs = spark.createDataFrame(
+        [(0, "spark joins streams fast"), (1, "spark streams slow"),
+         (2, "spark spark fast"), (3, "streams fast fast"),
+         (4, "ducks join ponds")],
+        "doc_id long, text string",
+    )
+    posting = build_posting_table(docs, "doc_id", "text")
+    idx = str(tmp_path / "idx")
+    write_posting_table(posting, idx, n_docs=5)
+    query = "+spark streams fast -slow"
+    want = fts_search(posting, query, k=10, scoring=scoring, n_docs=5).collect()
+    got = fts_search_indexed(spark, idx, query, k=10, scoring=scoring).collect()
+    assert len(want) > 1
+    assert got == want
 
 
 def test_cosine_topk_and_lsh_recall(spark):
@@ -739,12 +741,10 @@ def test_lsh_bucket_cap_drops_hot_buckets(spark):
     assert uncapped == 20 * 19 // 2 + 1
 
 
-def test_bucket_of_py_matches_spark_xxhash64(spark):
-    """The driver-side xxh64 twin must agree with Spark's
-    pmod(xxhash64(token), N) for every token shape: short/long (past
-    the 32-byte stripe path), multi-byte UTF-8, 4-byte tail, empty."""
-    from pyspark.sql import functions as F
-
+def test_bucket_of_py_matches_spark_crc32(spark):
+    """The driver-side bucket function must agree with Spark's
+    pmod(crc32(token), N) for every token shape: short/long,
+    multi-byte UTF-8, empty."""
     from kgap_spark.index.fts import N_TOKEN_BUCKETS, bucket_of, bucket_of_py
 
     tokens = [
@@ -759,6 +759,25 @@ def test_bucket_of_py_matches_spark_xxhash64(spark):
     for t in tokens:
         assert bucket_of_py(t) == got[t], t
         assert 0 <= bucket_of_py(t) < N_TOKEN_BUCKETS
+
+
+def test_fts_search_indexed_rejects_old_bucket_layout(spark, tmp_path):
+    """An index partitioned by the earlier pmod(xxhash64(token), 64)
+    buckets fails loudly instead of reading the wrong buckets."""
+    from pyspark.errors import AnalysisException
+
+    from kgap_spark.index.fts import build_posting_table, fts_search_indexed
+
+    docs = spark.createDataFrame(
+        [(0, "alpha beta"), (1, "beta gamma")], "doc_id long, text string"
+    )
+    idx = str(tmp_path / "old")
+    (build_posting_table(docs, "doc_id", "text")
+     .withColumn("_bucket", F.pmod(F.xxhash64("token"), F.lit(64)))
+     .write.partitionBy("_bucket").parquet(idx))
+    (tmp_path / "old" / "_doc_count").write_text("2")
+    with pytest.raises(AnalysisException, match="_crc_bucket"):
+        fts_search_indexed(spark, idx, "beta", k=5).collect()
 
 
 def test_fts_boolean_query_parse():
@@ -779,31 +798,35 @@ def test_fts_boolean_query_parse():
     # query tokens normalize with the index rule (punctuation split)
     assert parse_boolean_query("+Data-Driven") == {
         "should": [], "must": ["data", "driven"], "must_not": []}
+    # operators are case-sensitive, as in Lucene
+    assert parse_boolean_query("salt and pepper not") == {
+        "should": ["salt", "and", "pepper", "not"], "must": [],
+        "must_not": []}
 
 
 def test_fts_boolean_search(spark, docs):
-    from kgap_spark.index.fts import build_posting_table, fts_search_boolean
+    from kgap_spark.index.fts import build_posting_table, fts_search
 
     posting = build_posting_table(docs, "doc_id", "text")
     # must: docs 0,1,2 contain fox; dog optional scorer (0 and 2)
     hits = {r.subj: (r.score, r.n_terms)
-            for r in fts_search_boolean(posting, "fox AND dog").collect()}
+            for r in fts_search(posting, "fox AND dog").collect()}
     assert set(hits) == {0, 2}
     assert hits[0] == (2, 2)
     # exclusion: fox docs without cat
     hits2 = {r.subj for r in
-             fts_search_boolean(posting, "fox -cat").collect()}
+             fts_search(posting, "fox -cat").collect()}
     assert hits2 == {0, 2}
     # plain should with an exclusion keeps single-term matches
     hits3 = {r.subj for r in
-             fts_search_boolean(posting, "fox katze -cat").collect()}
+             fts_search(posting, "fox katze -cat").collect()}
     assert hits3 == {0, 2, 4}
     # must term absent everywhere -> empty
-    assert fts_search_boolean(posting, "+zzz fox").count() == 0
+    assert fts_search(posting, "+zzz fox").count() == 0
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="positive term"):
-        fts_search_boolean(posting, "-only -negatives")
+        fts_search(posting, "-only -negatives")
 
 
 def test_fts_boolean_and_promotes_whole_word():

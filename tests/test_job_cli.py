@@ -128,3 +128,41 @@ def test_clear_all_is_a_listing(spark, jobs_launched, tmp_path):
             "--master", "local[4]", "--shuffle-partitions", "4"]
     assert jobs_launched(lambda: main(argv)) == 0
     assert TripleStore(spark, path).graphs() == []
+
+
+def test_import_skip_reports_rejected_lines(tmp_path, capsys):
+    """``--on-error skip`` imports the parseable lines and reports the
+    rejected ones."""
+    from kgap_spark.job import main
+
+    nt = tmp_path / "in.nt"
+    nt.write_text(
+        "<urn:a> <urn:p> \"1\" .\n"
+        "this is not a triple\n"
+        "<urn:b> <urn:p> <urn:c> .\n"
+    )
+    rc = main(["import", "--path", str(nt), "--store", str(tmp_path / "store"),
+               "--graph", "urn:g", "--on-error", "skip", "--master", "local[2]",
+               "--shuffle-partitions", "2"])
+    assert rc == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["imported"] == 2 and out["rejected_lines"] == 1
+
+
+def test_import_fail_mode_skips_reject_scan(tmp_path, capsys, monkeypatch):
+    """Under the default ``--on-error fail`` a bad line fails the scan,
+    so the import never re-reads the input to count rejects."""
+    import kgap_spark.io.rdf as rdf
+    from kgap_spark.job import main
+
+    def no_scan(*_a, **_k):
+        raise AssertionError("ntriples_rejects called under --on-error fail")
+
+    monkeypatch.setattr(rdf, "ntriples_rejects", no_scan)
+    nt = tmp_path / "in.nt"
+    nt.write_text("<urn:a> <urn:p> \"1\" .\n<urn:b> <urn:p> <urn:c> .\n")
+    rc = main(["import", "--path", str(nt), "--store", str(tmp_path / "store"),
+               "--graph", "urn:g", "--master", "local[2]", "--shuffle-partitions", "2"])
+    assert rc == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["imported"] == 2 and "rejected_lines" not in out

@@ -16,8 +16,8 @@ from kgap_spark.session import local_frame
         # nullable long columns left NULL, as LineageLog.append writes them
         (
             [
-                ("urn:g:a", 0, "run1", 12, None, None, "ok", 40),
-                ("urn:g:b", 3, "run1", None, 7, 2, "failed", None),
+                ("urn:g:a", 0, "run1", 12, None, None, "ok"),
+                ("urn:g:b", 3, "run1", None, 7, 2, "failed"),
             ],
             S.LINEAGE,
         ),

@@ -111,7 +111,7 @@ def test_driver_frames_are_local_relations(spark, tmp_path):
     from kgap_spark.triples import TripleStore
 
     appended = local_frame(
-        spark, [("urn:g:a", 0, "run1", 3, 5, 1, "ok", None)], S.LINEAGE
+        spark, [("urn:g:a", 0, "run1", 3, 5, 1, "ok")], S.LINEAGE
     )
     for df in (
         LineageLog(spark, str(tmp_path / "lineage")).completed_graphs(),
@@ -263,9 +263,29 @@ def test_ann_signature_table_prunes_partitions(spark, tmp_path):
     assert res.collect()[0].vec_id == 7
 
 
+def test_lucene_plan_has_no_sort(spark):
+    """luc:searchIndex keeps every match: its plan sorts nothing and
+    takes no top-k, the exclusion included."""
+    from kgap_spark import schemas as S
+    from kgap_spark.query.sparql import execute_sparql
+
+    kb = spark.createDataFrame(
+        [("urn:a", "rdfs:label", "marine sensor", "en", None, "urn:g", None),
+         ("urn:b", "rdfs:label", "marine buoy", "en", None, "urn:g", None)],
+        S.TRIPLES)
+    plan = _plan(execute_sparql(kb, """
+        PREFIX luc: <http://www.ontotext.com/owlim/lucene#>
+        SELECT ?e ?s WHERE { ?e luc:searchIndex "+marine -sensor" ;
+                                luc:score ?s . }
+    """))
+    assert "TakeOrderedAndProject" not in plan, plan
+    assert "Sort" not in plan, plan
+
+
 def test_fts_indexed_prunes_token_buckets(spark, tmp_path):
     """The materialized posting table must prune to the query tokens'
-    buckets (PartitionFilters on _bucket) — never a full index scan."""
+    buckets (PartitionFilters on _crc_bucket) — never a full index
+    scan."""
     from kgap_spark.index.fts import (
         build_posting_table,
         fts_search_indexed,
@@ -282,6 +302,6 @@ def test_fts_indexed_prunes_token_buckets(spark, tmp_path):
     res = fts_search_indexed(spark, path, "spark streams", k=10)
     plan = _plan(res)
     assert "PartitionFilters" in plan
-    assert "_bucket" in plan.split("PartitionFilters")[1][:200]
+    assert "_crc_bucket" in plan.split("PartitionFilters")[1][:200]
     top = res.collect()
     assert top[0].subj in (0, 2) and top[0].score == 2

@@ -113,6 +113,34 @@ def test_fulltext_search_magic_predicate(kb):
     assert rows[0].score >= 1.0
 
 
+@pytest.mark.parametrize("query, want", [
+    ("+marine -sensor", {"urn:b"}),
+    ("marine AND sensor", {"urn:a"}),
+    ("marine NOT sensor", {"urn:b"}),
+])
+def test_lucene_operators_match_fts_search(spark, query, want):
+    """luc:searchIndex reads its query text as the Lucene subset, the
+    same way as fts_search over the same labels."""
+    from kgap_spark.index.fts import build_posting_table, fts_search
+
+    labels = {"urn:a": "marine sensor", "urn:b": "marine buoy",
+              "urn:c": "river sensor"}
+    kb = spark.createDataFrame(
+        [(s, RDFS + "label", o, "en", None, "urn:g", None)
+         for s, o in labels.items()], S.TRIPLES)
+    df = execute_sparql(kb, f"""
+        PREFIX luc: <http://www.ontotext.com/owlim/lucene#>
+        SELECT ?e ?score WHERE {{
+          ?e luc:searchIndex "{query}" ; luc:score ?score .
+        }}
+    """)
+    got = {r.e: r.score for r in df.collect()}
+    assert set(got) == want
+    docs = spark.createDataFrame(list(labels.items()), "s string, text string")
+    hits = fts_search(build_posting_table(docs, "s", "text"), query).collect()
+    assert got == {r.subj: float(r.score) for r in hits}
+
+
 def test_missing_labels_not_exists(kb):
     # jupyter.md:557-566 — verbatim (data-quality pattern 2)
     df = execute_sparql(kb, """
