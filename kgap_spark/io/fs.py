@@ -23,13 +23,6 @@ def _jfs(spark: SparkSession, path: str):
     return fs, jpath
 
 
-def scheme(spark: SparkSession, path: str) -> str:
-    """Scheme of the file system ``path`` resolves to (``file``,
-    ``hdfs``, ``s3a``, …); a scheme-less path takes the default FS's."""
-    fs, _ = _jfs(spark, path)
-    return str(fs.getUri().getScheme())
-
-
 def exists(spark: SparkSession, path: str) -> bool:
     fs, p = _jfs(spark, path)
     return bool(fs.exists(p))
@@ -56,12 +49,12 @@ def delete(spark: SparkSession, path: str, recursive: bool = True) -> bool:
 def create_text_file(spark: SparkSession, path: str, content: str) -> bool:
     """Create-if-absent write; ``False`` if the path already exists.
 
-    This is the commit primitive of the snapshot store: Hadoop's
+    This is the triple store's manifest commit primitive: Hadoop's
     ``create(path, overwrite=false)`` fails when the file exists, which
     on HDFS is an atomic compare-and-swap — two racing writers get a
     deterministic winner. On ``file://`` (tests) the check-then-create
     window is not atomic and on S3 the guarantee needs a catalog or
-    conditional PUT; both seams are documented on ``SnapshotStore``.
+    conditional PUT.
     """
     from py4j.protocol import Py4JJavaError
 
@@ -95,12 +88,28 @@ def list_status(spark: SparkSession, path: str) -> list[dict]:
             "name": st.getPath().getName(),
             "is_dir": bool(st.isDirectory()),
             "length": int(st.getLen()),
-            # epoch seconds; drives the snapshot store's grace windows
+            # epoch seconds; drives the triple store's grace windows
             # (torn-manifest recovery, orphan-dir sweep)
             "mtime": st.getModificationTime() / 1000.0,
         }
         for st in fs.listStatus(p)
     ]
+
+
+def list_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
+    """``(path, length)`` of every file directly in a directory or in
+    one of its subdirectories ([] if it doesn't exist) — the layout of
+    a Hive-style partitioned write. Two listing calls cover the tree
+    and Python pays a few py4j calls per file; one ``list_status`` per
+    subdirectory, or a recursive ``listFiles``, is several times slower
+    on local disk."""
+    fs, p = _jfs(spark, path)
+    if not fs.exists(p):
+        return []
+    children = spark._jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(
+        fs.listStatus(p))
+    return [(str(st.getPath().toString()), int(st.getLen()))
+            for st in fs.listStatus(children) if st.isFile()]
 
 
 def write_text_file(spark: SparkSession, path: str, content: str) -> None:

@@ -23,7 +23,7 @@ The other subcommands mirror the reference's repository-ops surface
                optional ``--graph`` context, append or merge mode
     export   — store/graph → N-Quads text or csv/json/parquet/xlsx
     validate — SHACL shape file → violations (exit 1 if any)
-    clear    — drop one graph (or --all)
+    clear    — drop one graph (or --all: one metadata commit)
     sparql   — run a SPARQL SELECT/ASK/CONSTRUCT/DESCRIBE string or
                .sparql file against the store (GDB.query analog)
 """
@@ -199,7 +199,7 @@ def _clear(rest: list[str]) -> int:
     spark = _session(args)
     store = TripleStore(spark, args.store)
     if args.all:
-        graphs = store.graphs()   # a partition listing, no job
+        graphs = store.graphs()   # a manifest read, no job
         store.delete_graphs(graphs)
         print(json.dumps({"cleared": graphs}))
     else:

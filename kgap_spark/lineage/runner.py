@@ -15,9 +15,11 @@ logs on death (``app.py:394-426``). Here:
   job serves every graph of a run, so wall time is measured per run
   (the returned ``wall_ms``), not per graph;
 - a re-run anti-joins pending graphs against ``status='ok'`` lineage
-  rows, processes only the remainder in ONE Spark job, and commits each
-  graph partition idempotently with dynamic partition overwrite — so a
-  crash between graphs loses nothing and repeats nothing (T3);
+  rows, processes only the remainder in ONE Spark job, and commits
+  them as ONE manifest commit that replaces exactly those graphs
+  (``TripleStore.overwrite_graphs``) — a crash before the commit
+  leaves the store as it was, and a re-run repeats only the
+  unrecorded graphs (T3);
 - failures are isolated per graph and recorded with ``status='failed'``
   (the reference's ``FAILURE_IS_FATAL=false`` skip-and-continue,
   ``app.py:342``), to be retried by the next run.
@@ -101,8 +103,8 @@ def run_pipeline_resumable(
 
     One Spark job processes every pending graph together — per-graph
     driver loops would serialize the cluster (SURVEY §2.4 J9 is the
-    anti-pattern); isolation is at commit time, where dynamic partition
-    overwrite makes each graph's write independent and idempotent.
+    anti-pattern); isolation is at commit time, where one manifest
+    commit replaces exactly the written graphs, idempotently.
     Within that run, ``build_triples`` materializes its two branches
     concurrently: canonicalization of the dictionary on a second thread,
     extract → detect → link of the pending pages on this one. The

@@ -3327,9 +3327,8 @@ def _execute_graph_update(store, u, default_graph: str | None) -> dict:
             return default_graph
         return ref
 
-    # existence = "is a live graph", answered from METADATA (manifest
-    # on the snapshot store, partition listing on the plain store) —
-    # no Spark job, consistent with the NAMED/ALL enumeration
+    # existence = "is a live graph", answered from the manifest — no
+    # Spark job, consistent with the NAMED/ALL enumeration
     live = set(store.graphs())
 
     def exists(g: str) -> bool:
@@ -3381,7 +3380,7 @@ def _execute_graph_update(store, u, default_graph: str | None) -> dict:
                 graphs = []
             else:
                 graphs = [g]
-        store.delete_graphs(graphs)   # ONE commit on the snapshot store
+        store.delete_graphs(graphs)   # ONE metadata commit
         return {"op": u.op, "graphs": graphs}
 
     if u.op == "create":
@@ -3399,9 +3398,7 @@ def _execute_graph_update(store, u, default_graph: str | None) -> dict:
         raise ValueError(f"{u.op.upper()}: source graph <{src}> is empty "
                          "or does not exist")
     if u.op == "move":
-        # one atomic commit on the snapshot store; documented
-        # copy-then-delete on the plain store (writer.move_graph)
-        store.move_graph(src, dst)
+        store.move_graph(src, dst)   # one atomic commit
     elif u.op == "add":
         store.merge(store.read_graph(src)
                     .withColumn("graph", F.lit(dst)))   # quad-key dedup

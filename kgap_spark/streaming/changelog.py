@@ -1,4 +1,4 @@
-"""Incremental consumption of the SnapshotStore's commit log.
+"""Incremental consumption of the triple store's commit log.
 
 The producer side of the streaming story ingests feeds into the store
 (``stream_pages_to_triples``; reference analog: the LDES consumer's
@@ -6,10 +6,10 @@ polled micro-batches, ``ldes-consumer/app.py:333-341``). This module is
 the CONSUMER side: a downstream job — an index refresher, a replica
 sync, a materialized-view maintainer — that wants *what changed since I
 last looked*, never the full table. It pairs
-``SnapshotStore.read_changes`` (manifest-pruned changelog scan) with a
+``TripleStore.read_changes`` (manifest-pruned changelog scan) with a
 durable cursor, giving the same guarantees the reference's LDES
 continuation state gives its consumer (``docs/components/
-ldes-consumer.md:584-592``), re-expressed over the snapshot store:
+ldes-consumer.md:584-592``), re-expressed over manifest versions:
 
 - **poll/batch**       → ``poll()`` returns one window of changes
                          (cursor version → current tip)
@@ -46,7 +46,7 @@ class ChangelogExpiredError(RuntimeError):
 
 
 class ChangelogCursor:
-    """Durable position in a ``SnapshotStore``'s commit history.
+    """Durable position in a ``TripleStore``'s commit history.
 
     One cursor directory per (store, consumer) pair. The consumer
     loop::
@@ -110,7 +110,7 @@ class ChangelogCursor:
         tip = self.store.current_version()
         if tip <= pos:
             return None, tip
-        from kgap_spark.triples.snapshots import SnapshotNotFoundError
+        from kgap_spark.triples import SnapshotNotFoundError
 
         try:
             return self.store.read_changes(pos, tip), tip

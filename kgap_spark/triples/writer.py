@@ -1,71 +1,97 @@
-"""Partitioned triple store with Iceberg-style write semantics.
+"""The triple store: immutable parquet data files under versioned
+manifests.
 
-k-gap offers two sink modes (reference: ``ldes-consumer/README.md:
-147-149``): "Replication" (append-only bulk load) and "Sync"
-(create/update/delete per member). ``TripleStore`` reproduces both over
-a ``graph``-partitioned table:
+k-gap writes every feed into one transactional GraphDB repository
+(``graphdb/kgap/template-repo-config.ttl:15-41``) and offers two sink
+modes over it (``ldes-consumer/README.md:147-149``): "Replication"
+(append-only bulk load) and "Sync" (create/update/delete per member).
+``TripleStore`` reproduces both over a ``graph``-partitioned table:
 
 - ``append(df)``        → Replication mode (S3);
-- ``overwrite_graphs``  → idempotent per-partition rewrite — the MERGE
-  building block (S4/U3). Uses dynamic partition overwrite so only the
-  graphs present in ``df`` are replaced;
-- ``merge(df)``         → Sync mode: quad-level upsert = union of
-  existing rows not in the update's graphs' keyspace + the update,
-  deduplicated (A7 — "no duplicate data ingestion",
-  docs/components/ldes-consumer.md:589-590);
-- ``delete_graph``      → graph-scoped clear (S7,
+- ``overwrite_graphs``  → idempotent per-graph replace — the resume
+  building block (S4/U3): exactly the graphs present in ``df`` are
+  replaced, in one commit;
+- ``merge(df)``         → Sync mode: quad-level upsert that appends
+  only the quads the affected graphs lack (A7 — "no duplicate data
+  ingestion", docs/components/ldes-consumer.md:589-590);
+- ``delete_graph(s)``   → graph-scoped clear as a metadata commit (S7,
   docs/quick-reference.md:330-336);
 - ``delete_quads``, ``compact``, ``move_graph`` → graph-scoped
-  rewrites (U2, rewrite_data_files, SPARQL MOVE).
+  rewrites (U2, rewrite_data_files, SPARQL MOVE), one commit each.
 
-One logical layer, two physical primitives. The graph-scoped
-rewrites and ``merge``'s pruned scan are written once, here, over
-``_scan_graphs(graphs, at)`` (the store restricted to some graphs)
-and ``_replace_graphs(df, graphs, at, op)`` (afterwards exactly
-``graphs`` hold ``df``'s rows). ``SnapshotStore`` overrides only the
-primitives: a manifest file list instead of a partition filter, and
-one snapshot dir plus one manifest commit instead of checkpoint,
-dynamic overwrite and directory deletes. ``at`` is the version an
-operation pinned at its start (``_pin``); this store has none.
+Storage is kept apart from metadata (the Dremel split), with the public
+table-format design implemented from first principles:
 
-Physical format: partitioned parquet. In production this class is the
-seam where an Iceberg catalog plugs in (``writeTo(...).append()`` /
-``MERGE INTO`` / snapshot ids); the jars aren't in this image, so the
-parquet implementation keeps the exact same call surface and semantics
-(partition-granular atomicity via dynamic partition overwrite).
+- **Data files are immutable.** Every write lands in a fresh
+  ``_data/snap-<uuid>/graph=<g>/part-*.parquet`` tree; no commit ever
+  deletes or rewrites a live file. Overwrites and deletes are manifest
+  edits — the old files stay until ``expire_snapshots``. A DataFrame
+  from ``read()`` therefore stays valid, and keeps answering as of its
+  snapshot, across any number of later writes; a store-derived frame
+  can feed a write to the same graphs with no checkpoint.
+- **A two-level manifest per version.** ``_meta/v<N>.json`` names
+  immutable manifest-PART files (``_meta/p-<uuid>.json``), each
+  holding a slice of data-file entries (path, graph partition value,
+  bytes) plus an operation summary. Commits are DELTAS: an append
+  writes one new part and reuses every surviving part id verbatim —
+  O(added files) metadata per commit, never a rewrite of the full
+  table listing; graph drops rewrite only the parts containing the
+  dropped graphs; rollback reuses part ids (pure metadata); past
+  ``PART_CAP`` parts a commit merges them (the rewrite-manifests
+  analog). Reads plan from the resolved entry list (manifest-level
+  pruning: a graph-scoped read plans only that graph's files — no
+  directory listing, no Hive pruning needed).
+- **Commit = create-if-absent of the next manifest.** The committed
+  version is the largest ``v<N>.json`` that exists AND parses;
+  claiming ``v<N+1>`` with Hadoop ``create(path, overwrite=false)``
+  is the compare-and-swap (atomic on HDFS; the ``file://`` test
+  fallback and the S3 conditional-PUT seam are documented on
+  ``fs.create_text_file``). A manifest torn by a crash mid-write never
+  bricks the store: readers skip unparseable manifests, and a later
+  committer deletes one after ``torn_grace_sec`` (a crashed writer)
+  and re-claims the slot. Losing the race retries against the new
+  tip: append-style commits replay unconditionally; overwrite-style
+  commits (overwrite/compact/delete) re-validate that the affected
+  graphs' file sets are unchanged since the snapshot their input was
+  read from, else raise ``SnapshotConflictError`` — the same
+  serializable-per-partition validation Iceberg applies. Pass
+  ``expected_base=<version your read() used>`` to extend that
+  validation across the full read→commit window; without it the
+  window starts at the write call (both documented on
+  ``overwrite_graphs``).
+- **Reads are keyed by version.** Version files and parts are
+  immutable once they parse, so their parses are memoized, and
+  ``read()`` keeps the scan it planned for the current version:
+  a repeated read of an unchanged store is one ``_meta`` listing and
+  no Spark job. Any commit, by this object or another on the same
+  path, moves the version and so the key.
+- **Time travel and vacuum**: ``read(version=K)``, ``snapshots()``,
+  ``read_changes(K)``, ``rollback(K)`` (an O(metadata) commit
+  restoring K's file list) and ``expire_snapshots(keep_last=k)``, the
+  one operation that deletes data files.
 
-One semantic gap vs Iceberg in THIS class — no snapshot isolation: a
-lazy DataFrame obtained from ``read()``/``read_graph()`` pins the
-*file listing* at creation time and becomes invalid once an
-overwriting write replaces those files, whether this object or another
-one on the same path made the write. Callers that re-use a
-store-derived frame across writes must materialize it first
-(``df.localCheckpoint(eager=True)``); ``_replace_graphs`` does this
-internally for the rewrites above. ``SnapshotStore``
-(``triples/snapshots.py``) closes the gap from first principles —
-immutable data files + versioned manifests + create-if-absent commit —
-with the same call surface plus time travel / rollback / vacuum; this
-class remains the plain-parquet fast path for one-shot bulk loads.
+A directory holding ``graph=`` partitions but no manifests was written
+by the earlier plain-parquet layout. It raises ``ValueError`` rather
+than reading as an empty store; rewrite it into a new store.
 
-Reads of an unchanged store are job-free: ``read()`` keeps its planned
-scan and returns it again while the sorted ``(name, mtime)`` list of
-the root's entries is unchanged. Every write changes that key — a
-dynamic overwrite renames in fresh ``graph=`` directories, an append
-adds files (bumping the directory's mtime), ``delete_graph`` removes a
-name — and the key does not rely on a ``_SUCCESS`` marker, which
-dynamic-overwrite commits do not write. The scan is reused only on
-``file`` and ``hdfs`` paths, where a directory's mtime follows its
-entries (at millisecond resolution); on any other scheme (``s3a``,
-``gs``, …) every ``read()`` plans a fresh scan.
-
-Layout for scale: partition by ``graph`` (the query workload is
-graph-scoped: per-feed counts, graph-scoped import/export/clear —
-docs/components/ldes-consumer.md:330-336), then repartition by
-``(graph, subj)`` before writing so each file covers a subject range —
-subject-joins downstream read co-located files (bucketing analog).
+Layout for scale: within a snapshot dir, partition by ``graph`` (the
+query workload is graph-scoped: per-feed counts, graph-scoped
+import/export/clear — docs/components/ldes-consumer.md:330-336), after
+a range repartition by ``(graph, subj)`` so each file covers a subject
+range — subject-joins downstream read co-located files (bucketing
+analog). At 100 TB the manifest is the only driver-side state: one
+JSON entry per data file, bounded by that layout plus merge's
+auto-compaction.
 """
 
 from __future__ import annotations
+
+import json
+import re
+import time
+import uuid
+from collections import Counter, defaultdict
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,6 +104,8 @@ from kgap_spark.session import local_frame
 # "Paris"@en and "Paris"@fr are distinct statements, so merge/delete
 # must key on all six columns or distinct literals silently collapse.
 QUAD_KEY = ["subj", "pred", "obj", "obj_lang", "obj_datatype", "graph"]
+
+_MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
 
 
 def nullsafe_join(left: DataFrame, right: DataFrame, cols: list[str],
@@ -98,70 +126,480 @@ def _nullsafe_anti(left: DataFrame, right: DataFrame, cols: list[str]) -> DataFr
     return nullsafe_join(left, right, cols, "left_anti")
 
 
+class SnapshotConflictError(RuntimeError):
+    """A concurrent commit changed an affected graph between this
+    operation's read snapshot and its commit attempt."""
+
+
+class SnapshotNotFoundError(ValueError):
+    """The requested snapshot version has no readable manifest —
+    expired (vacuumed), aborted mid-commit, or never committed.
+    A dedicated type so consumers (e.g. the changelog cursor) can
+    classify a vacuumed window without matching message text."""
+
+
 class TripleStore:
-    def __init__(
-        self, spark: SparkSession, path: str,
-        files_per_graph: int | None = None,
-        compact_threshold: int | None = 64,
-    ):
+    # a torn (unparseable) manifest younger than this may still be
+    # mid-write by a live committer; older ones are crashed commits a
+    # new committer may delete and re-claim
+    torn_grace_sec: float = 60.0
+
+    def __init__(self, spark: SparkSession, path: str,
+                 compact_threshold: int | None = 64):
         self.spark = spark
         self.path = path
-        # write-partition count; None → session default parallelism so
-        # the encode stage uses every core
-        self.files_per_graph = files_per_graph
+        self.data_dir = fs.join(path, "_data")
+        self.meta_dir = fs.join(path, "_meta")
         # append-only merges grow a graph's file count by one delta per
         # Sync cycle; when a merged graph exceeds this many parquet
         # files it is auto-compacted after the merge (None disables —
         # callers then schedule compact() themselves)
         self.compact_threshold = compact_threshold
-        # write-amplification observability: per-graph accounting of
-        # the LAST merge's auto-compaction events (also returned by
-        # merge() itself) — an operator watching Sync cycles reads
-        # this instead of diffing fs listings
-        self.last_compactions: list[dict] = []
-        # (root listing key, planned scan) of the last read()
-        self._scan: tuple[list, DataFrame] | None = None
+        # version → parsed manifest; safe because a manifest is
+        # immutable once it parses (bounded: recent entries only)
+        self._man_cache: dict[int, dict] = {}
+        # (version, Counter) for _n_graph_files
+        self._counts_cache: tuple[int, Counter] | None = None
+        # part id → entries; parts are immutable once a version
+        # references them (bounded, cleared past 256 entries)
+        self._part_cache: dict[str, list[dict]] = {}
+        # (version, planned scan) of the last current-version read()
+        self._scan: tuple[int, DataFrame] | None = None
+
+    # -- manifest layer ----------------------------------------------
+    def _versions(self) -> list[int]:
+        """Committed-or-claimed manifest version numbers, ascending
+        (filename-based; torn manifests included — callers that need
+        readability use ``current_version``). With none, ``graph=``
+        directories at the root mean the earlier plain-parquet layout:
+        it raises, since an empty read would let a resumed run skip
+        graphs its lineage records as done."""
+        vs = sorted(
+            int(m.group(1))
+            for name in fs.list_names(self.spark, self.meta_dir)
+            if (m := _MANIFEST_RE.match(name))
+        )
+        if not vs and any(name.startswith("graph=")
+                          for name in fs.list_names(self.spark, self.path)):
+            raise ValueError(
+                f"{self.path} holds graph= partition directories but no "
+                "_meta/ manifests: it was written by the plain-parquet "
+                "store layout, which is no longer read. Rewrite it into a "
+                "new store: TripleStore(spark, new_path).overwrite_graphs("
+                "spark.read.schema(schemas.TRIPLES).parquet(old_path))."
+            )
+        return vs
+
+    def current_version(self) -> int:
+        """Largest version whose manifest exists and parses (0 = empty
+        store). A claimed-but-torn tip (crash mid-write, or a racing
+        writer not yet closed) is skipped, never fatal."""
+        for v in reversed(self._versions()):
+            if self._try_manifest(v) is not None:
+                return v
+        return 0
+
+    def _manifest_path(self, version: int) -> str:
+        return fs.join(self.meta_dir, f"v{version}.json")
+
+    def _try_manifest(self, version: int) -> dict | None:
+        """Parse manifest ``version``; None if missing or torn.
+        Positive results are memoized (manifests are immutable once
+        parseable); negatives are not (a slow writer may complete)."""
+        if version in self._man_cache:
+            return self._man_cache[version]
+        try:
+            raw = fs.read_text_file(self.spark, self._manifest_path(version))
+            man = json.loads(raw)
+        except Exception:
+            return None
+        if len(self._man_cache) > 16:
+            self._man_cache.clear()
+        self._man_cache[version] = man
+        return man
+
+    def _manifest(self, version: int) -> dict:
+        if version == 0:
+            return {"version": 0, "parent": None, "operation": "init",
+                    "files": []}
+        man = self._try_manifest(version)
+        if man is None:
+            raise SnapshotNotFoundError(
+                f"snapshot v{version} does not exist or is torn "
+                f"(expired, aborted, or never committed; "
+                f"current={self.current_version()})"
+            )
+        return man
+
+    # -- manifest parts (two-level manifests) --------------------------
+    # A version file does not embed the data-file list: it names
+    # immutable manifest-PART files (`_meta/p-<uuid>.json`), each
+    # holding a slice of entries. An append writes ONE new part and a
+    # version file listing the surviving part ids — O(added files),
+    # never O(table). Graph drops rewrite only the parts that contain
+    # the dropped graphs; rollback reuses the old version's part ids
+    # verbatim (pure metadata). When a version accumulates more than
+    # PART_CAP parts they are merged into one (the rewrite-manifests
+    # analog, amortized O(files)/PART_CAP per commit). Parts are
+    # written BEFORE the version CAS, so a crash or lost race leaves
+    # only orphan part files — swept by
+    # ``expire_snapshots(sweep_orphans=True)``, never referenced.
+
+    #: merge manifest parts when a commit would exceed this many
+    PART_CAP: int = 64
+
+    def _part_path(self, pid: str) -> str:
+        return fs.join(self.meta_dir, f"{pid}.json")
+
+    def _part_entries(self, pid: str) -> list[dict]:
+        if pid not in self._part_cache:
+            raw = fs.read_text_file(self.spark, self._part_path(pid))
+            if len(self._part_cache) > 256:
+                self._part_cache.clear()
+            self._part_cache[pid] = json.loads(raw)["entries"]
+        return self._part_cache[pid]
+
+    def _write_part(self, entries: list[dict]) -> str:
+        pid = f"p-{uuid.uuid4().hex[:12]}"
+        fs.write_text_file(self.spark, self._part_path(pid),
+                           json.dumps({"entries": entries}))
+        # bound the cache on the WRITE path too: a long-lived writer
+        # commits thousands of parts and its reads always hit, so the
+        # miss-path eviction alone never fires
+        if len(self._part_cache) > 256:
+            self._part_cache.clear()
+        self._part_cache[pid] = list(entries)
+        return pid
+
+    def _parts_of(self, man: dict) -> list[str]:
+        return list(man.get("parts", []))
+
+    def _files(self, version: int) -> list[dict]:
+        man = self._manifest(version)
+        if "parts" in man:
+            return [e for pid in man["parts"]
+                    for e in self._part_entries(pid)]
+        # v0 and legacy single-level manifests embed the list directly
+        return man["files"]
+
+    def _commit(self, op: str, add: list[dict] = (),
+                drop_graphs: set[str] | None = None,
+                replace_files: list[dict] | None = None,
+                replace_parts: list[str] | None = None,
+                expected_base: int | None = None,
+                max_retries: int = 5) -> int:
+        """Claim the next manifest version. Retries against a moved
+        tip; overwrite-style commits (``drop_graphs``/``replace_files``
+        with ``expected_base``) first validate that no affected graph
+        changed since ``expected_base``. A torn manifest blocking the
+        next slot is deleted and re-claimed once older than
+        ``torn_grace_sec``. The added entries are written as ONE part
+        file up front (reused across CAS retries); parts orphaned by a
+        failed commit are swept by the vacuum, never referenced."""
+        add = list(add)
+        add_pid = self._write_part(add) if add else None
+        for _ in range(max_retries):
+            cur = self.current_version()
+            if expected_base is not None and cur != expected_base:
+                affected = (drop_graphs if drop_graphs is not None
+                            else {e["graph"] for e in add})
+                base_set = {
+                    e["path"] for e in self._files(expected_base)
+                    if e["graph"] in affected
+                }
+                cur_set = {
+                    e["path"] for e in self._files(cur)
+                    if e["graph"] in affected
+                }
+                if base_set != cur_set:
+                    raise SnapshotConflictError(
+                        f"{op}: graphs {sorted(affected)[:5]} changed "
+                        f"between v{expected_base} and v{cur}"
+                    )
+            if replace_parts is not None:
+                parts = list(replace_parts)
+            elif replace_files is not None:
+                parts = ([self._write_part(list(replace_files))]
+                         if replace_files else [])
+            else:
+                cur_man = self._manifest(cur)
+                if "parts" in cur_man:
+                    parts = list(cur_man["parts"])
+                elif cur_man["files"]:
+                    # legacy single-level manifest: wrap once
+                    parts = [self._write_part(cur_man["files"])]
+                else:
+                    parts = []
+                if drop_graphs:
+                    kept_parts = []
+                    for pid in parts:
+                        ents = self._part_entries(pid)
+                        kept = [e for e in ents
+                                if e["graph"] not in drop_graphs]
+                        if len(kept) == len(ents):
+                            kept_parts.append(pid)    # untouched part
+                        elif kept:
+                            kept_parts.append(self._write_part(kept))
+                        # fully-dropped part: omitted
+                    parts = kept_parts
+                if add_pid is not None:
+                    parts.append(add_pid)
+                if len(parts) > self.PART_CAP:
+                    merged = [e for pid in parts
+                              for e in self._part_entries(pid)]
+                    parts = [self._write_part(merged)] if merged else []
+            total = [e for pid in parts for e in self._part_entries(pid)]
+            manifest = {
+                "version": cur + 1,
+                "parent": cur,
+                "operation": op,
+                "ts": time.time(),
+                "summary": {
+                    "added_files": len(add),
+                    "total_files": len(total),
+                    "total_bytes": sum(e.get("bytes", 0) for e in total),
+                },
+                "parts": parts,
+            }
+            if fs.create_text_file(
+                self.spark, self._manifest_path(cur + 1),
+                json.dumps(manifest),
+            ):
+                return cur + 1
+            # slot taken: by a completed commit (loop re-reads the
+            # tip) or by a torn manifest from a crashed writer —
+            # recover the latter after the grace window
+            self._recover_torn(cur + 1)
+            if (self.current_version() == cur
+                    and self._try_manifest(cur + 1) is None):
+                # the slot is blocked by a torn manifest still inside
+                # torn_grace_sec (its writer may be mid-close), not by
+                # a completed commit: back off instead of burning the
+                # remaining retries in microseconds
+                time.sleep(min(0.05 * (2 ** _), 1.0))
+        raise SnapshotConflictError(
+            f"{op}: could not claim manifest v{self.current_version() + 1} "
+            f"after {max_retries} attempts (heavy commit contention, or a "
+            f"torn manifest younger than torn_grace_sec="
+            f"{self.torn_grace_sec}s holding the slot — retry after the "
+            f"grace window)"
+        )
+
+    def _recover_torn(self, version: int) -> None:
+        """Delete a claimed-but-unparseable manifest older than
+        ``torn_grace_sec`` so its slot can be re-claimed (crashed
+        committer). Younger torn files are left alone — their writer
+        may still be mid-close."""
+        if self._try_manifest(version) is not None:
+            return
+        for ent in fs.list_status(self.spark, self.meta_dir):
+            if (ent["name"] == f"v{version}.json"
+                    and time.time() - ent["mtime"] > self.torn_grace_sec):
+                fs.delete(self.spark, self._manifest_path(version))
+                return
+
+    def _write_snap(self, df: DataFrame) -> tuple[str, list[dict]]:
+        """Write ``df`` to a fresh immutable snapshot dir; return
+        ``(snap_rel, entries)`` with manifest entries (path relative
+        to ``_data``, graph, bytes)."""
+        snap_rel = f"snap-{uuid.uuid4().hex[:12]}"
+        snap_dir = fs.join(self.data_dir, snap_rel)
+        (
+            self._prep(df)
+            .write.mode("error")
+            .partitionBy("graph")
+            .parquet(snap_dir)
+        )
+        entries = []
+        for path, length in fs.list_files(self.spark, snap_dir):
+            part, name = path.rsplit("/", 2)[-2:]
+            if part.startswith("graph=") and name.endswith(".parquet"):
+                entries.append({
+                    "path": f"{snap_rel}/{part}/{name}",
+                    "graph": _unescape_partition(part[len("graph="):]),
+                    "bytes": length,
+                })
+        return snap_rel, entries
+
+    def _commit_snap(self, op: str, snap_rel: str, add: list[dict],
+                     **kwargs) -> int:
+        """_commit, deleting the just-written snapshot dir if the
+        commit fails — a refused commit must not leak data files (the
+        vacuum only tracks files that made it into a manifest)."""
+        try:
+            return self._commit(op, add=add, **kwargs)
+        except Exception:
+            fs.delete(self.spark, fs.join(self.data_dir, snap_rel))
+            raise
 
     # -- reads --------------------------------------------------------
-    # schemes whose directory mtimes change with their entries — the
-    # only ones where read()'s listing key can prove the store unchanged
-    _MTIME_SCHEMES = frozenset({"file", "hdfs"})
-
     def exists(self) -> bool:
-        # Hadoop FS, not os.path: the store may live on s3a://hdfs://…
-        # where a false "missing" would make merge() drop existing rows.
-        return any(
-            e.startswith("graph=") for e in fs.list_names(self.spark, self.path)
-        )
+        return bool(self._files(self.current_version()))
 
-    def read(self) -> DataFrame:
-        """The whole store as a lazy scan in canonical column order,
-        planned with the explicit canonical schema: no footer-inference
-        job, and ``graph`` is always a string (a graph named ``"1.50"``
-        is never inferred to a double). On ``file``/``hdfs`` paths the
-        scan is kept and returned again while the sorted
-        ``(name, mtime)`` list of root entries is unchanged, so a
-        repeated read of an unchanged store launches no Spark job; any
-        write, by this object or another on the same path, changes
-        that key. Frames taken before a write still go stale (see the
-        module docstring)."""
-        entries = fs.list_status(self.spark, self.path)
-        if not any(e["name"].startswith("graph=") for e in entries):
+    def _load_files(self, entries: list[dict]) -> DataFrame:
+        """Plan a scan over exactly these manifest entries. Files are
+        grouped per snapshot dir (each needs its own ``basePath`` for
+        the ``graph=`` partition column to parse); every branch reads
+        with the explicit canonical schema — the partition column's
+        type is taken from it, so a numeric-looking graph name
+        ("1.50") can never be inferred to double and round-trip
+        wrong, and footer-sampling schema inference is skipped."""
+        if not entries:
             return local_frame(self.spark, [], S.TRIPLES)
-        key = sorted((e["name"], e["mtime"]) for e in entries)
-        if self._scan is not None and self._scan[0] == key:
-            return self._scan[1]
-        # partition column comes back last; restore canonical order
-        df = self.spark.read.schema(S.TRIPLES).parquet(self.path).select(
-            [f.name for f in S.TRIPLES.fields]
-        )
-        if fs.scheme(self.spark, self.path) in self._MTIME_SCHEMES:
-            self._scan = (key, df)
-        return df
+        by_dir: dict[str, list[str]] = defaultdict(list)
+        for e in entries:
+            snap_rel = e["path"].split("/", 1)[0]
+            by_dir[snap_rel].append(fs.join(self.data_dir, e["path"]))
+        cols = [f.name for f in S.TRIPLES.fields]
+        parts = []
+        for snap_rel, paths in sorted(by_dir.items()):
+            base = fs.join(self.data_dir, snap_rel)
+            parts.append(
+                self.spark.read.schema(S.TRIPLES)
+                .option("basePath", base)
+                .parquet(*paths)
+                .select(*cols)
+            )
+        return reduce(lambda a, b: a.unionByName(b), parts)
+
+    def read(self, version: int | None = None) -> DataFrame:
+        """The store as of ``version`` (default: current) in canonical
+        column order. The plan embeds the snapshot's explicit file
+        list, so it stays valid — and keeps answering as of that
+        snapshot — across later writes (until the snapshot is
+        expired). The scan of the current version is kept and returned
+        again while the version is unchanged: planning a scan of more
+        than 32 files runs a listing job, a repeated read runs none."""
+        if version is not None:
+            return self._load_files(self._files(version))
+        v = self.current_version()
+        if self._scan is None or self._scan[0] != v:
+            self._scan = (v, self._load_files(self._files(v)))
+        return self._scan[1]
 
     def read_graph(self, graph: str) -> DataFrame:
-        # predicate on the partition column → partition pruning
         return self._scan_graphs([graph])
+
+    def _scan_graphs(self, graphs: list[str] | None,
+                     at: int | None = None) -> DataFrame:
+        """Manifest-level pruning: exactly ``graphs``' files (None:
+        every graph) as of version ``at`` (default: current) enter
+        the plan — no directory listing, no partition filter."""
+        files = self._files(self.current_version() if at is None else at)
+        if graphs is not None:
+            gset = set(graphs)
+            files = [e for e in files if e["graph"] in gset]
+        return self._load_files(files)
+
+    def _n_graph_files(self, graph: str) -> int:
+        """Live file count of one graph — a manifest scan, not an fs
+        listing, memoized per version: ``merge`` and ``compact`` ask
+        once per graph, which must not re-scan the manifest each
+        time."""
+        v = self.current_version()
+        if self._counts_cache is None or self._counts_cache[0] != v:
+            self._counts_cache = (
+                v, Counter(e["graph"] for e in self._files(v)))
+        return self._counts_cache[1][graph]
+
+    def graphs(self) -> list[str]:
+        """Live graph names from the current manifest — O(metadata),
+        no data scan, no directory listing."""
+        return sorted({
+            e["graph"] for e in self._files(self.current_version())
+        })
+
+    def _diff_filesets(self, files_a: list[dict],
+                       files_b: list[dict]) -> tuple[DataFrame, DataFrame]:
+        """(inserts, deletes) going from file list ``a`` to ``b``,
+        planned with two levels of pruning so the cost is O(rows in
+        files actually touched), never O(table):
+
+        - **File-level**: a path present in both manifests is an
+          immutable file — identical content, skipped entirely.
+        - **Graph-level**: a graph whose changed files all sit on ONE
+          side needs no content diff — its rows are pure inserts (new
+          files in an appended/new graph) or pure deletes (a dropped
+          graph). Only graphs with changed files on BOTH sides (an
+          overwrite/delete-quads/compaction rewrite) pay the
+          ``exceptAll`` shuffle, and only over those graphs' changed
+          files.
+
+        ``exceptAll`` is multiset difference over all columns, so a
+        rewrite that re-emits identical content (compaction, a
+        rollback past a rollback) nets to zero changes — the changelog
+        reports LOGICAL change, not file churn."""
+        paths_a = {e["path"] for e in files_a}
+        paths_b = {e["path"] for e in files_b}
+        only_a = [e for e in files_a if e["path"] not in paths_b]
+        only_b = [e for e in files_b if e["path"] not in paths_a]
+        mixed = ({e["graph"] for e in only_a}
+                 & {e["graph"] for e in only_b})
+        ins = self._load_files(
+            [e for e in only_b if e["graph"] not in mixed])
+        dels = self._load_files(
+            [e for e in only_a if e["graph"] not in mixed])
+        if mixed:
+            new = self._load_files(
+                [e for e in only_b if e["graph"] in mixed])
+            old = self._load_files(
+                [e for e in only_a if e["graph"] in mixed])
+            ins = ins.unionByName(new.exceptAll(old))
+            dels = dels.unionByName(old.exceptAll(new))
+        return ins, dels
+
+    def read_changes(self, from_version: int,
+                     to_version: int | None = None,
+                     net: bool = True) -> DataFrame:
+        """Incremental (changelog) scan: the logical row changes going
+        from snapshot ``from_version`` to ``to_version`` (default:
+        current tip), as the table columns plus ``_change``
+        (``insert`` | ``delete``). This is what a resumable downstream
+        consumer polls instead of re-reading the table: record the
+        version you last processed, then
+        ``read_changes(last_seen)`` + ``current_version()`` on each
+        cycle — the plan touches only files that changed (public table
+        formats call this an incremental/changelog scan; same design:
+        manifest diff first, content diff only where file sets
+        overlap per graph, see ``_diff_filesets``).
+
+        ``net=True`` (default) diffs the two endpoint manifests in one
+        pass: row churn that cancels out inside the window (an insert
+        later deleted, a compaction rewrite, a rollback that restores
+        the starting file list) is absent from the result. ``net=False``
+        walks each commit in ``(from, to]`` and emits its individual
+        changes tagged with ``_commit_version`` — an audit/CDC view;
+        every intermediate manifest must still be live (a vacuumed
+        window raises, same as ``read(version=...)``)."""
+        end = self.current_version() if to_version is None else to_version
+        if from_version > end:
+            raise ValueError(
+                f"read_changes: from_version {from_version} is newer "
+                f"than to_version {end}"
+            )
+        if net:
+            ins, dels = self._diff_filesets(
+                self._files(from_version), self._files(end))
+            return (
+                ins.withColumn("_change", F.lit("insert"))
+                .unionByName(dels.withColumn("_change", F.lit("delete")))
+            )
+        parts = []
+        prev = self._files(from_version)
+        for v in range(from_version + 1, end + 1):
+            cur = self._files(v)
+            ins, dels = self._diff_filesets(prev, cur)
+            parts.append(
+                ins.withColumn("_change", F.lit("insert"))
+                .unionByName(dels.withColumn("_change", F.lit("delete")))
+                .withColumn("_commit_version", F.lit(v))
+            )
+            prev = cur
+        if not parts:
+            empty = self._load_files([]).withColumn(
+                "_change", F.lit("insert"))
+            return empty.withColumn("_commit_version", F.lit(0)).limit(0)
+        return reduce(lambda a, b: a.unionByName(b), parts)
 
     # -- writes -------------------------------------------------------
     def _prep(self, df: DataFrame) -> DataFrame:
@@ -183,14 +621,8 @@ class TripleStore:
             ).otherwise(F.col("graph")),
         )
         n = max(self.spark.sparkContext.defaultParallelism * 2, 16)
-        if self.files_per_graph and self.files_per_graph > 1:
-            # explicit override: bounded subj-hash split per graph
-            split = F.pmod(F.xxhash64("subj"), F.lit(self.files_per_graph))
-            return out.repartition(n, "graph", split).sortWithinPartitions(
-                "graph", "subj"
-            )
-        # Default: RANGE partition by (graph, subj). Three properties a
-        # plain hash-by-graph can't combine:
+        # RANGE partition by (graph, subj). Three properties a plain
+        # hash-by-graph can't combine:
         #   1. balanced tasks — ranges are cut from a sampled row-count
         #      distribution, so task sizes are even regardless of how
         #      skewed the per-graph row counts are;
@@ -201,8 +633,8 @@ class TripleStore:
         #      the stage);
         #   3. bounded file count — each task holds a CONTIGUOUS
         #      (graph, subj) range, so total files ≈ n_graphs + n_tasks,
-        #      never tasks × graphs (which would make the dynamic
-        #      partition-overwrite commit serial in the driver).
+        #      never tasks × graphs (which would make the commit's
+        #      file listing and the manifest grow by the product).
         # The within-task sort keeps subjects clustered for downstream
         # subject-join locality (bucketing analog).
         return out.repartitionByRange(n, "graph", "subj").sortWithinPartitions(
@@ -210,19 +642,35 @@ class TripleStore:
         )
 
     def append(self, df: DataFrame) -> None:
-        """Replication mode: additions only (fast path)."""
-        self._prep(df).write.mode("append").partitionBy("graph").parquet(self.path)
+        """Replication mode: immutable snapshot dir + add-files commit
+        (unconditionally replayable under concurrency)."""
+        snap_rel, entries = self._write_snap(df)
+        self._commit_snap("append", snap_rel, entries)
 
-    def overwrite_graphs(self, df: DataFrame) -> None:
-        """Replace exactly the graph partitions present in df
-        (idempotent re-run of a source — the resume building block)."""
-        (
-            self._prep(df)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("graph")
-            .parquet(self.path)
-        )
+    def overwrite_graphs(self, df: DataFrame,
+                         expected_base: int | None = None) -> None:
+        """Replace exactly the graph partitions present in ``df``
+        (idempotent re-run of a source — the resume building block).
+        The affected-graph set is derived from the written snapshot
+        dir's partition values — no driver-side collect of ``df``.
+        Readers of older snapshots are untouched (their files stay
+        live until ``expire_snapshots``), which is why ``df`` itself
+        may be derived from this store with no checkpoint.
+
+        ``expected_base`` extends the conflict validation window: pass
+        the version your input was read from
+        (``v = store.current_version(); df = store.read(version=v)``)
+        and a concurrent commit that touched the same graphs anywhere
+        in the read→commit window raises ``SnapshotConflictError``
+        instead of being silently overwritten. Without it the window
+        starts here (single-logical-writer-per-graph deployments don't
+        need more)."""
+        base = (self.current_version() if expected_base is None
+                else expected_base)
+        snap_rel, entries = self._write_snap(df)
+        self._commit_snap("overwrite", snap_rel, entries,
+                          drop_graphs={e["graph"] for e in entries},
+                          expected_base=base)
 
     def merge(self, df: DataFrame) -> dict:
         """Sync mode: quad-level upsert — `MERGE INTO triples ON
@@ -230,19 +678,15 @@ class TripleStore:
         ingestion", docs/components/ldes-consumer.md:589-590).
         Returns write-amplification accounting: affected-graph count
         and any auto-compaction events as
-        ``{"graph", "files_before", "files_after"}`` dicts (also kept
-        on ``self.last_compactions``).
+        ``{"graph", "files_before", "files_after"}`` dicts.
 
         Append-only formulation: the update is anti-joined against the
         affected graphs' existing quad keys and ONLY the new quads are
-        appended. Existing partition files are read, never rewritten —
-        O(update) write instead of the previous O(graph) rewrite-and-
-        checkpoint, which at 100 TB is the difference between a delta
-        commit and re-writing a whole feed's history. No read-overwrite
-        hazard either (append never deletes the files the anti-join is
-        scanning), so no eager localCheckpoint. True replaces go
-        through ``overwrite_graphs``; row removal through
-        ``delete_quads``."""
+        appended. Existing data files are read, never rewritten —
+        O(update) write instead of an O(graph) rewrite, which at
+        100 TB is the difference between a delta commit and
+        re-writing a whole feed's history. True replaces go through
+        ``overwrite_graphs``; row removal through ``delete_quads``."""
         update = df.select([f.name for f in S.TRIPLES.fields]).dropDuplicates(
             QUAD_KEY
         )
@@ -266,9 +710,9 @@ class TripleStore:
         self.append(new_quads)
         # compaction trigger: each Sync delta appends files; past the
         # threshold a graph's scan fans out over tiny fragments, so
-        # auto-compact it now (cheap check: one fs listing per affected
-        # graph; skipped on the >MAX_GRAPH_LIST fallback path where
-        # per-graph driver work is exactly what we're avoiding)
+        # auto-compact it now (cheap check: manifest counts; skipped on
+        # the >MAX_GRAPH_LIST fallback path where per-graph driver work
+        # is exactly what we're avoiding)
         events: list[dict] = []
         if graphs is not None and self.compact_threshold:
             over = {
@@ -282,16 +726,14 @@ class TripleStore:
                      "files_after": self._n_graph_files(g)}
                     for g, n in over.items()
                 ]
-        self.last_compactions = events
         return {
             "graphs": len(graphs) if graphs is not None else None,
             "compacted": events,
         }
 
-    # beyond this many distinct graphs, a driver-side isin list stops
-    # being "static pruning" and becomes an unbounded collect + a huge
-    # In-list plan — switch to a broadcast semi-join (graceful at
-    # graph-per-source-file imports)
+    # beyond this many distinct graphs, a driver-side graph list stops
+    # being cheap pruning and becomes an unbounded collect — switch to
+    # a broadcast semi-join (graceful at graph-per-source-file imports)
     MAX_GRAPH_LIST = 1000
 
     def _graph_list(self, update: DataFrame) -> list | None:
@@ -306,7 +748,7 @@ class TripleStore:
 
     def _live_graphs_of(self, update: DataFrame) -> list[str]:
         """``update``'s graphs that the store holds now. The live set
-        comes from ``graphs()`` (a listing, no scan); past
+        comes from ``graphs()`` (a manifest read, no scan); past
         MAX_GRAPH_LIST the intersection runs as a broadcast semi-join
         against it, so the collect is bounded by the store's own graph
         count."""
@@ -322,50 +764,19 @@ class TripleStore:
             ]
         return sorted(g for g in graphs if g in live)
 
-    # -- physical primitives (SnapshotStore overrides these three) ----
-    def _pin(self) -> int | None:
-        """The version an operation reads and validates against: None
-        here (this store keeps no versions)."""
-        return None
-
-    def _scan_graphs(self, graphs: list[str] | None,
-                     at: int | None = None) -> DataFrame:
-        """The store restricted to ``graphs`` (None: every graph). A
-        partition filter: a driver-side isin list (static pruning) up
-        to MAX_GRAPH_LIST graphs, a broadcast left-semi join (dynamic
-        pruning) past it. ``at`` is unused here."""
-        df = self.read()
-        if graphs is None:
-            return df
-        if len(graphs) <= self.MAX_GRAPH_LIST:
-            return df.filter(F.col("graph").isin(graphs))
-        keep = local_frame(self.spark, [(g,) for g in graphs], "graph string")
-        return df.join(F.broadcast(keep), "graph", "left_semi")
-
     def _replace_graphs(self, df: DataFrame, graphs: list[str],
-                        at: int | None, op: str) -> None:
-        """Afterwards exactly ``graphs`` hold ``df``'s rows (``df``
-        lies inside ``graphs``). ``df`` is materialized first: it is
-        usually derived from this store, and the overwrite deletes the
-        files its plan reads. Graphs ``df`` leaves empty produce no
-        output partition under dynamic overwrite, so they are deleted
-        after the write — two physical steps, and a crash between them
-        leaves those graphs populated (re-running the operation is the
-        recovery). ``at`` and ``op`` are unused here."""
-        df = df.localCheckpoint(eager=True)
-        self.overwrite_graphs(df)
-        kept = {r.graph for r in df.select("graph").distinct().collect()}
-        self.delete_graphs([g for g in graphs if g not in kept])
+                        at: int, op: str) -> None:
+        """Afterwards exactly ``graphs`` hold ``df``'s rows, in ONE
+        commit validated against version ``at``: ``df`` lands in a
+        fresh snapshot dir and one manifest swap drops every file of
+        ``graphs`` while adding the new ones, so graphs ``df`` leaves
+        empty leave the manifest. No checkpoint: ``df``'s plan reads
+        immutable files the commit never touches."""
+        snap_rel, entries = self._write_snap(df)
+        self._commit_snap(op, snap_rel, entries, drop_graphs=set(graphs),
+                          expected_base=at)
 
-    def _n_graph_files(self, graph: str) -> int:
-        """Parquet file count of one graph partition (one fs listing)."""
-        part = fs.join(self.path, f"graph={_escape_partition(graph)}")
-        return sum(
-            1 for name in fs.list_names(self.spark, part)
-            if name.endswith(".parquet")
-        )
-
-    # -- logical update operators (over the primitives above) ---------
+    # -- graph-scoped rewrites (each reads the version it starts at) ---
     def delete_quads(self, quads: DataFrame) -> None:
         """U2: DELETE DATA — remove specific quads
         (docs/quick-reference.md:234-237). Anti-join the affected
@@ -377,7 +788,7 @@ class TripleStore:
         The delete set is materialized FIRST: it is consumed twice
         (graph discovery, anti-join), and ``quads`` may itself be
         derived from this store (SPARQL DELETE WHERE)."""
-        at = self._pin()
+        at = self.current_version()
         dels = quads.select(*QUAD_KEY).distinct().localCheckpoint(eager=True)
         graphs = self._live_graphs_of(dels)
         if not graphs:
@@ -393,7 +804,7 @@ class TripleStore:
         files — so periodic compaction is the operational counterpart
         (Iceberg's rewrite_data_files analog): read the graphs once,
         re-``_prep``, replace them. Returns per-call file accounting."""
-        at = self._pin()
+        at = self.current_version()
         if graphs is None:
             graphs = self.graphs()
         if not graphs:
@@ -405,11 +816,9 @@ class TripleStore:
                 "files_after": sum(self._n_graph_files(g) for g in graphs)}
 
     def move_graph(self, src: str, dst: str) -> None:
-        """Rename graph ``src`` to ``dst`` (dst replaced). An absent
-        source is a no-op: it never wipes ``dst``. On this store the
-        replace is copy-then-delete (see ``_replace_graphs``); the
-        snapshot store commits it atomically."""
-        at = self._pin()
+        """Rename graph ``src`` to ``dst`` (dst replaced) in one
+        commit. An absent source is a no-op: it never wipes ``dst``."""
+        at = self.current_version()
         if src == dst or src not in self.graphs():
             return
         data = self._scan_graphs([src], at).withColumn("graph", F.lit(dst))
@@ -417,49 +826,188 @@ class TripleStore:
 
     def delete_graph(self, graph: str) -> None:
         """Graph-scoped clear (reference: DELETE ?context=graph,
-        docs/quick-reference.md:330-336). Partition drop = O(1) metadata
-        in Iceberg; here: remove the partition directory via the Hadoop
-        FS API (works on file://, hdfs://, s3a://…)."""
-        part_dir = fs.join(self.path, f"graph={_escape_partition(graph)}")
-        fs.delete(self.spark, part_dir)
+        docs/quick-reference.md:330-336) as a metadata-only commit:
+        zero data movement regardless of graph size."""
+        self._commit("delete-graph", drop_graphs={graph},
+                     expected_base=self.current_version())
 
     def delete_graphs(self, graphs: list[str]) -> None:
-        """Drop several graphs. On this store: one directory delete
-        each (the snapshot store overrides with a single atomic
-        manifest commit)."""
-        for g in graphs:
-            self.delete_graph(g)
+        """Drop several graphs in ONE metadata commit — CLEAR ALL on a
+        thousand-graph store is a single manifest swap."""
+        if graphs:
+            self._commit("delete-graphs", drop_graphs=set(graphs),
+                         expected_base=self.current_version())
 
-    def graphs(self) -> list[str]:
-        """Live graph names from the physical layout — a partition-dir
-        listing, no data scan (the snapshot store overrides with a
-        manifest read)."""
-        if not fs.exists(self.spark, self.path):
-            return []
-        return sorted(
-            _unescape_partition(name[len("graph="):])
-            for name in fs.list_names(self.spark, self.path)
-            if name.startswith("graph=")
-        )
+    # -- snapshot management ------------------------------------------
+    def snapshots(self) -> list[dict]:
+        """Commit log, oldest first: one row per live, parseable
+        manifest."""
+        out = []
+        for v in self._versions():
+            man = self._try_manifest(v)
+            if man is None:
+                continue
+            out.append({
+                "version": v,
+                "parent": man.get("parent"),
+                "operation": man.get("operation"),
+                "ts": man.get("ts"),
+                **man.get("summary", {}),
+            })
+        return out
 
+    def _validate_rollback_target(self, man: dict) -> None:
+        """Fresh (cache-bypassing) re-parse of the target's parts and
+        existence probes for every data file they reference — a
+        concurrent ``expire_snapshots`` between reading the target
+        manifest and the CAS can delete both, and committing a tip
+        over deleted metadata/data is effective data loss. Raises
+        ``SnapshotConflictError`` on any missing piece."""
+        try:
+            if "parts" in man:
+                entries = []
+                for pid in man["parts"]:
+                    raw = fs.read_text_file(self.spark,
+                                            self._part_path(pid))
+                    entries.extend(json.loads(raw)["entries"])
+            else:
+                entries = list(man["files"])
+        except Exception as e:
+            raise SnapshotConflictError(
+                f"rollback to v{man['version']}: manifest part vanished "
+                f"mid-flight (concurrent expire_snapshots?): {e}"
+            ) from e
+        for e in entries:
+            if not fs.exists(self.spark, fs.join(self.data_dir, e["path"])):
+                raise SnapshotConflictError(
+                    f"rollback to v{man['version']}: data file "
+                    f"{e['path']} was vacuumed mid-flight "
+                    "(concurrent expire_snapshots)"
+                )
 
-# Hive's exact escape set (verified against Spark's partition writer:
-# '}' is NOT escaped, '#'/'='/'?'/'\''/'*' ARE — a mismatch makes
-# delete_graph/compact target a nonexistent directory and the graph
-# silently survives a clear).
-_HIVE_ESCAPED = set('"#%\'*/:=?\\{[]^') | {chr(c) for c in range(0x20)} | {"\x7f"}
+    def rollback(self, version: int) -> int:
+        """Restore snapshot ``version``'s exact file list as a NEW
+        commit (history is preserved). With two-level manifests this
+        reuses the old version's part ids verbatim — O(1) metadata,
+        no part rewrite.
 
+        Validated against a concurrent vacuum: parts and data files
+        are re-checked both before the CAS and after it; if a vacuum
+        won the race after the CAS, the just-committed manifest is
+        removed again (the store's normal torn-tip recovery shape) and
+        ``SnapshotConflictError`` raised, so the live tip never
+        references deleted metadata or data."""
+        man = self._manifest(version)  # raises if expired/unknown
+        self._validate_rollback_target(man)
+        if "parts" in man:
+            new_v = self._commit("rollback",
+                                 replace_parts=list(man["parts"]))
+        else:
+            new_v = self._commit("rollback", replace_files=man["files"])
+        try:
+            self._validate_rollback_target(man)
+        except SnapshotConflictError:
+            # undo: drop our manifest so the tip falls back to the
+            # parent (readers see at worst a torn tip, which every
+            # path already tolerates), then surface the conflict. The
+            # slot can be claimed again with other content, so nothing
+            # keyed by new_v may survive here.
+            fs.delete(self.spark, self._manifest_path(new_v),
+                      recursive=False)
+            self._man_cache.pop(new_v, None)
+            self._scan = None
+            raise
+        return new_v
 
-def _escape_partition(value: str) -> str:
-    """Hive partition-dir escaping, matching Spark's writer exactly."""
-    return "".join(
-        f"%{ord(ch):02X}" if ch in _HIVE_ESCAPED else ch for ch in value
-    )
+    def expire_snapshots(self, keep_last: int = 1,
+                         sweep_orphans: bool = False,
+                         orphan_grace_sec: float = 3600.0) -> dict:
+        """Vacuum: drop all but the newest ``keep_last`` manifests and
+        delete every data file only they referenced. The one operation
+        that removes data files — never run it with readers holding
+        snapshots older than the kept window.
+
+        Crash-safe ordering: expired MANIFESTS are deleted first, then
+        their files — a crash mid-vacuum can only leave orphan files
+        (harmless, removable by a later ``sweep_orphans=True`` run),
+        never a live manifest referencing deleted data.
+        ``sweep_orphans`` additionally removes snapshot dirs that no
+        remaining manifest references at all (failed commits already
+        clean up after themselves; this catches crashed ones) once
+        older than ``orphan_grace_sec`` — the grace window keeps the
+        sweep from racing an in-flight ``_write_snap``."""
+        if keep_last < 1:
+            raise ValueError("keep_last must be >= 1")
+        # the keep window counts PARSEABLE manifests only: a torn
+        # (claimed-but-unreadable) tip must never displace the live
+        # snapshot out of the window — with filename-based counting,
+        # keep_last=1 under a torn tip would vacuum the current
+        # snapshot's manifest and data (total data loss). Torn
+        # manifests are not expired here either; past the grace
+        # window they are recovered like on the commit path.
+        vs = [v for v in self._versions()
+              if self._try_manifest(v) is not None]
+        keep = set(vs[-keep_last:])
+        expire = [v for v in vs if v not in keep]
+        for v in set(self._versions()) - set(vs):
+            self._recover_torn(v)
+        referenced = {e["path"] for v in keep for e in self._files(v)}
+        kept_parts = {
+            pid for v in keep for pid in self._parts_of(self._manifest(v))
+        }
+        dropped_paths = {
+            e["path"] for v in expire for e in self._files(v)
+        } - referenced
+        expired_parts = {
+            pid for v in expire
+            for pid in self._parts_of(self._manifest(v))
+        } - kept_parts
+        # manifests FIRST (see docstring), then parts, then data files
+        for v in expire:
+            fs.delete(self.spark, self._manifest_path(v))
+            self._man_cache.pop(v, None)
+        for pid in expired_parts:
+            fs.delete(self.spark, self._part_path(pid))
+            self._part_cache.pop(pid, None)
+        for rel in dropped_paths:
+            fs.delete(self.spark, fs.join(self.data_dir, rel),
+                      recursive=False)
+        # prune snapshot dirs emptied by the file deletes
+        for snap_rel in {p.split("/", 1)[0] for p in dropped_paths}:
+            self._delete_snap_dir_if_dead(snap_rel)
+        swept = 0
+        if sweep_orphans:
+            ref_dirs = {p.split("/", 1)[0] for p in referenced}
+            now = time.time()
+            for ent in fs.list_status(self.spark, self.data_dir):
+                if (ent["is_dir"] and ent["name"].startswith("snap-")
+                        and ent["name"] not in ref_dirs
+                        and now - ent["mtime"] > orphan_grace_sec):
+                    fs.delete(self.spark,
+                              fs.join(self.data_dir, ent["name"]))
+                    swept += 1
+            # orphan manifest PARTS: written by crashed/lost commits,
+            # referenced by no live version (age-gated like snap dirs)
+            for ent in fs.list_status(self.spark, self.meta_dir):
+                name = ent["name"]
+                if (name.startswith("p-") and name.endswith(".json")
+                        and name[:-5] not in kept_parts
+                        and now - ent["mtime"] > orphan_grace_sec):
+                    fs.delete(self.spark, fs.join(self.meta_dir, name))
+                    self._part_cache.pop(name[:-5], None)
+                    swept += 1
+        return {"expired": expire, "deleted_files": len(dropped_paths),
+                "swept_orphan_dirs": swept}
+
+    def _delete_snap_dir_if_dead(self, snap_rel: str) -> None:
+        snap_dir = fs.join(self.data_dir, snap_rel)
+        if not any(path.endswith(".parquet")
+                   for path, _ in fs.list_files(self.spark, snap_dir)):
+            fs.delete(self.spark, snap_dir)
 
 
 def _unescape_partition(value: str) -> str:
-    """Inverse of ``_escape_partition`` (and of Spark's writer)."""
-    import re as _re
-
-    return _re.sub(r"%([0-9A-Fa-f]{2})",
-                   lambda m: chr(int(m.group(1), 16)), value)
+    """Decode a Hive-escaped ``graph=`` directory name back to the
+    graph value Spark's partition writer escaped."""
+    return re.sub(r"%([0-9A-Fa-f]{2})",
+                  lambda m: chr(int(m.group(1), 16)), value)

@@ -2323,7 +2323,7 @@ FROM documents
 
 
 def q_kg_changelog(spark, sf_dir):
-    """Incremental (changelog/CDC) scan of the snapshot store — what a
+    """Incremental (changelog/CDC) scan of the triple store — what a
     resumable downstream consumer reads instead of the full table
     (reference analog: LDES consumers poll a feed for new members,
     ``ldes-consumer/app.py``; here the consumer polls the store's
@@ -2336,7 +2336,7 @@ def q_kg_changelog(spark, sf_dir):
     returned plan, so it is not cleaned up here (OS tmp reaping)."""
     import tempfile
 
-    from kgap_spark.triples import SnapshotStore
+    from kgap_spark.triples import TripleStore
 
     def to_quads(df, kind, key, name):
         return df.select(
@@ -2352,7 +2352,7 @@ def q_kg_changelog(spark, sf_dir):
 
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region")
-    st = SnapshotStore(
+    st = TripleStore(
         spark, tempfile.mkdtemp(prefix="kgap-changelog-") + "/store")
     st.append(to_quads(nation, "nation", "n_nationkey", "n_name"))
     st.append(to_quads(region, "region", "r_regionkey", "r_name"))

@@ -1,7 +1,7 @@
-"""SnapshotStore: manifest-based snapshot isolation over immutable
-parquet files — the from-scratch closure of TripleStore's documented
-"no snapshot isolation" gap (the transactional-store analog of the
-reference's GraphDB repository, graphdb/kgap/template-repo-config.ttl).
+"""TripleStore manifests: snapshot isolation over immutable parquet
+files, time travel, changelog scans and vacuum (the transactional-store
+analog of the reference's GraphDB repository,
+graphdb/kgap/template-repo-config.ttl).
 """
 
 from __future__ import annotations
@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgap_spark import schemas as S
-from kgap_spark.triples import SnapshotConflictError, SnapshotStore, TripleStore
+from kgap_spark.triples import SnapshotConflictError, TripleStore
 
 
 def _quads(spark, rows):
@@ -27,11 +27,10 @@ def _data_files(path: str) -> list[str]:
 
 
 def test_snapshot_isolation_read_survives_overwrite(spark, tmp_path):
-    """THE gap this class closes: a lazy DataFrame from read() stays
-    valid across an overwriting write — no localCheckpoint — and keeps
-    answering as of its snapshot (TripleStore's same sequence raises
-    FAILED_READ_FILE or returns the new data)."""
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    """A lazy DataFrame from read() stays valid across an overwriting
+    write — no localCheckpoint — and keeps answering as of its
+    snapshot."""
+    st = TripleStore(spark, str(tmp_path / "s"))
     g = "urn:g:1"
     st.append(_quads(spark, [("a", "p", "1", g), ("b", "p", "2", g)]))
 
@@ -49,7 +48,7 @@ def test_read_derived_write_needs_no_checkpoint(spark, tmp_path):
     """A store-derived DataFrame can feed an overwrite of the same
     graphs directly: the write lands in a fresh snapshot dir, so the
     input plan's files are never touched mid-job."""
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     g = "urn:g:1"
     st.append(_quads(spark, [("a", "p", "1", g), ("b", "p", "2", g)]))
     derived = st.read().withColumn(
@@ -60,8 +59,8 @@ def test_read_derived_write_needs_no_checkpoint(spark, tmp_path):
 
 
 def test_parity_with_triplestore_operation_script(spark, tmp_path):
-    """Same logical surface, same results: run one operation script
-    against both stores and compare final content and graphs."""
+    """One operation script over every logical operator lands on the
+    expected final content and graphs."""
     from kgap_spark.query.sparql import execute_sparql_update
 
     ops_rows = {
@@ -72,32 +71,28 @@ def test_parity_with_triplestore_operation_script(spark, tmp_path):
         "append2": [("f", "old:p", "6", "urn:g:4"), ("g", "p", "7", "urn:g:5"),
                     ("h", "p", "8", "urn:g:5"), ("x", "p", "0", "urn:g:6")],
     }
-    results = []
-    for cls, name in ((TripleStore, "plain"), (SnapshotStore, "snap")):
-        st = cls(spark, str(tmp_path / name))
-        st.append(_quads(spark, ops_rows["append1"]))
-        st.merge(_quads(spark, ops_rows["merge1"]))
-        st.overwrite_graphs(_quads(spark, ops_rows["over"]))
-        st.merge(_quads(spark, ops_rows["merge2"]))
-        st.delete_graph("urn:g:3")
-        st.delete_quads(_quads(spark, [("c", "p", "3", "urn:g:1")]))
-        # a delete that EMPTIES a graph must drop it entirely
-        st.delete_quads(_quads(spark, [("d", "p", "4", "urn:g:2")]))
-        st.append(_quads(spark, ops_rows["append2"]))
-        st.compact()
-        st.move_graph("urn:g:4", "urn:g:6")       # dst replaced
-        st.move_graph("urn:g:absent", "urn:g:5")  # no-op, dst kept
-        execute_sparql_update(st, """
-            DELETE { GRAPH ?g { ?s <old:p> ?o } }
-            INSERT { GRAPH ?g { ?s <new:p> ?o } }
-            WHERE  { GRAPH ?g { ?s <old:p> ?o } }""")
-        results.append((
-            sorted((r.subj, r.pred, r.obj, r.graph)
-                   for r in st.read().collect()),
-            st.graphs(),
-        ))
-    assert results[0] == results[1]
-    assert results[0] == (
+    st = TripleStore(spark, str(tmp_path / "s"))
+    st.append(_quads(spark, ops_rows["append1"]))
+    st.merge(_quads(spark, ops_rows["merge1"]))
+    st.overwrite_graphs(_quads(spark, ops_rows["over"]))
+    st.merge(_quads(spark, ops_rows["merge2"]))
+    st.delete_graph("urn:g:3")
+    st.delete_quads(_quads(spark, [("c", "p", "3", "urn:g:1")]))
+    # a delete that EMPTIES a graph must drop it entirely
+    st.delete_quads(_quads(spark, [("d", "p", "4", "urn:g:2")]))
+    st.append(_quads(spark, ops_rows["append2"]))
+    st.compact()
+    st.move_graph("urn:g:4", "urn:g:6")       # dst replaced
+    st.move_graph("urn:g:absent", "urn:g:5")  # no-op, dst kept
+    execute_sparql_update(st, """
+        DELETE { GRAPH ?g { ?s <old:p> ?o } }
+        INSERT { GRAPH ?g { ?s <new:p> ?o } }
+        WHERE  { GRAPH ?g { ?s <old:p> ?o } }""")
+    result = (
+        sorted((r.subj, r.pred, r.obj, r.graph) for r in st.read().collect()),
+        st.graphs(),
+    )
+    assert result == (
         [("a", "p", "1", "urn:g:1"), ("f", "new:p", "6", "urn:g:6"),
          ("g", "p", "7", "urn:g:5"), ("h", "p", "8", "urn:g:5")],
         ["urn:g:1", "urn:g:5", "urn:g:6"],
@@ -105,9 +100,9 @@ def test_parity_with_triplestore_operation_script(spark, tmp_path):
 
 
 def test_logical_operators_are_one_commit_each(spark, tmp_path):
-    """delete_quads, compact and move_graph each advance the snapshot
-    store by exactly one version."""
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    """delete_quads, compact and move_graph each advance the store by
+    exactly one version."""
+    st = TripleStore(spark, str(tmp_path / "s"))
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1"),
                              ("b", "p", "2", "urn:g:1"),
                              ("c", "p", "3", "urn:g:2")]))
@@ -127,7 +122,7 @@ def test_logical_operators_are_one_commit_each(spark, tmp_path):
 
 
 def test_time_travel_and_commit_log(spark, tmp_path):
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))
     st.append(_quads(spark, [("b", "p", "2", "urn:g:2")]))
     st.delete_graph("urn:g:1")
@@ -146,9 +141,9 @@ def test_time_travel_and_commit_log(spark, tmp_path):
 
 def test_delete_graph_is_metadata_only(spark, tmp_path):
     """Partition drop = manifest edit: zero data files touched (the
-    real O(1)-metadata semantics, vs the parent's directory delete)."""
+    real O(1)-metadata semantics)."""
     path = str(tmp_path / "s")
-    st = SnapshotStore(spark, path)
+    st = TripleStore(spark, path)
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1"),
                              ("b", "p", "2", "urn:g:2")]))
     before = set(_data_files(path))
@@ -161,7 +156,7 @@ def test_delete_graph_is_metadata_only(spark, tmp_path):
 
 
 def test_rollback_restores_old_file_list(spark, tmp_path):
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))
     st.overwrite_graphs(_quads(spark, [("a", "p", "9", "urn:g:1")]))
     v = st.rollback(1)
@@ -172,7 +167,7 @@ def test_rollback_restores_old_file_list(spark, tmp_path):
 
 def test_expire_snapshots_vacuums_unreferenced_files(spark, tmp_path):
     path = str(tmp_path / "s")
-    st = SnapshotStore(spark, path)
+    st = TripleStore(spark, path)
     g = "urn:g:1"
     st.append(_quads(spark, [("a", "p", "1", g)]))
     st.overwrite_graphs(_quads(spark, [("a", "p", "2", g)]))
@@ -194,7 +189,7 @@ def test_append_retries_past_claimed_version(spark, tmp_path):
     """Losing the manifest CAS is not an error for append-style
     commits: the add-files delta replays against the new tip."""
     path = str(tmp_path / "s")
-    st = SnapshotStore(spark, path)
+    st = TripleStore(spark, path)
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))
     # simulate a concurrent committer claiming v2 with an unrelated add
     v1 = json.loads(open(f"{path}/_meta/v1.json").read())
@@ -213,7 +208,7 @@ def test_overwrite_conflict_on_changed_graph_raises(spark, tmp_path):
     operation's read snapshot, the commit must fail, not silently drop
     the concurrent write (Iceberg's serializable validation)."""
     path = str(tmp_path / "s")
-    st = SnapshotStore(spark, path)
+    st = TripleStore(spark, path)
     g = "urn:g:1"
     st.append(_quads(spark, [("a", "p", "1", g)]))
     base = st.current_version()
@@ -235,7 +230,7 @@ def test_overwrite_expected_base_covers_read_window(spark, tmp_path):
     extends conflict validation across the whole read→commit window:
     a concurrent commit landing between read() and overwrite_graphs()
     raises instead of being silently dropped."""
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     g = "urn:g:1"
     st.append(_quads(spark, [("a", "p", "1", g)]))
     v = st.current_version()
@@ -256,7 +251,7 @@ def test_torn_manifest_never_bricks_and_is_recovered(spark, tmp_path):
     skipped by readers and, once past the grace window, deleted and
     re-claimed by the next committer."""
     path = str(tmp_path / "s")
-    st = SnapshotStore(spark, path)
+    st = TripleStore(spark, path)
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))
     # simulate a crashed committer: v2 exists but is truncated
     with open(f"{path}/_meta/v2.json", "w") as f:
@@ -278,7 +273,7 @@ def test_expire_sweeps_orphan_snapshot_dirs(spark, tmp_path):
     """sweep_orphans removes snapshot dirs no live manifest references
     (crashed commits) once older than the grace window."""
     path = str(tmp_path / "s")
-    st = SnapshotStore(spark, path)
+    st = TripleStore(spark, path)
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))
     # simulate a crashed commit: data landed, no manifest references it
     orphan_rel, _ = st._write_snap(_quads(spark, [("x", "p", "0",
@@ -291,15 +286,12 @@ def test_expire_sweeps_orphan_snapshot_dirs(spark, tmp_path):
     assert st.read().count() == 1  # live data untouched
 
 
-@pytest.mark.parametrize("store_cls", ["plain", "snapshot"])
-def test_graph_names_roundtrip_escaping_and_types(spark, tmp_path,
-                                                  store_cls):
-    """Hive-escaped partition values unescape on read (the manifest's
-    or the partition directories'), and a numeric-looking graph name
-    stays a string on both stores (explicit read schema — no
-    partition-type inference), also once it is the only graph left."""
-    cls = TripleStore if store_cls == "plain" else SnapshotStore
-    st = cls(spark, str(tmp_path / "s"))
+def test_graph_names_roundtrip_escaping_and_types(spark, tmp_path):
+    """Hive-escaped partition values unescape into the manifest, and a
+    numeric-looking graph name stays a string (explicit read schema —
+    no partition-type inference), also once it is the only graph
+    left."""
+    st = TripleStore(spark, str(tmp_path / "s"))
     weird = "urn:g:x?f=1#frag"
     st.append(_quads(spark, [("a", "p", "1", weird),
                              ("b", "p", "2", "1.50")]))
@@ -310,27 +302,27 @@ def test_graph_names_roundtrip_escaping_and_types(spark, tmp_path,
 
 
 def test_merge_auto_compaction_uses_manifest_counts(spark, tmp_path):
-    """The inherited Sync-merge auto-compaction works over manifest
-    file counts (no fs listing) and reports the same accounting."""
-    st = SnapshotStore(spark, str(tmp_path / "s"), files_per_graph=2,
-                       compact_threshold=5)
+    """Sync-merge auto-compaction counts files in the manifest (no fs
+    listing) and reports its accounting."""
+    st = TripleStore(spark, str(tmp_path / "s"), compact_threshold=5)
     g = "urn:g:1"
+    # one subject: each merge appends one file, a compaction writes one
     for i in range(8):
-        out = st.merge(_quads(spark, [(f"s{i}", "p", str(i), g)]))
+        out = st.merge(_quads(spark, [("s", "p", str(i), g)]))
     assert st.read_graph(g).count() == 8
-    # the trigger compacted back to the canonical 2-file layout
-    # whenever the live count passed 5 (same bound as the parent test)
+    # the trigger compacted back to one file whenever the live count
+    # passed 5 (same bound as test_writer's)
     assert st._n_graph_files(g) <= 6
     assert isinstance(out["compacted"], list)
 
 
 def test_resumable_pipeline_runs_on_snapshot_store(spark, tiny, tmp_path):
-    """Drop-in for the KG-construction pipeline: fail/resume semantics
-    and P/R 1.0 hold unchanged on the snapshot store."""
+    """The KG-construction pipeline's fail/resume semantics and P/R
+    1.0 hold, with each run a recorded manifest commit."""
     from kgap_spark.lineage import LineageLog, run_pipeline_resumable
     from kgap_spark.metrics import precision_recall
 
-    st = SnapshotStore(spark, str(tmp_path / "triples"))
+    st = TripleStore(spark, str(tmp_path / "triples"))
     lin = LineageLog(spark, str(tmp_path / "lineage"))
     pages, alias = tiny["web_pages"], tiny["alias_dict"]
 
@@ -362,7 +354,7 @@ def test_read_changes_append_is_pure_inserts(spark, tmp_path):
     exactly the appended rows (and the plan, by construction, scans
     only the new snapshot's files — _diff_filesets routes one-sided
     graphs straight to a scan, no exceptAll)."""
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))   # v1
     st.append(_quads(spark, [("b", "p", "2", "urn:g:1"),
                              ("c", "p", "3", "urn:g:2")]))   # v2
@@ -379,7 +371,7 @@ def test_read_changes_append_is_pure_inserts(spark, tmp_path):
 def test_read_changes_overwrite_and_delete(spark, tmp_path):
     """Overwrites and quad deletes produce insert+delete pairs scoped
     to the touched graphs; untouched graphs contribute nothing."""
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1"),
                              ("keep", "p", "9", "urn:g:2")]))  # v1
     st.overwrite_graphs(_quads(spark, [("a", "p", "2", "urn:g:1")]))  # v2
@@ -395,7 +387,7 @@ def test_read_changes_nets_out_churn(spark, tmp_path):
     """net=True reports logical change only: an insert deleted inside
     the window, a compaction rewrite, and a rollback to the starting
     version all net to zero."""
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     g = "urn:g:1"
     st.append(_quads(spark, [("a", "p", "1", g)]))            # v1
     base = st.current_version()
@@ -412,7 +404,7 @@ def test_read_changes_per_commit_mode(spark, tmp_path):
     """net=False is the CDC/audit view: every commit's own changes,
     tagged with _commit_version — churn is visible, compaction is
     still content-neutral (empty contribution)."""
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     g = "urn:g:1"
     st.append(_quads(spark, [("a", "p", "1", g)]))            # v1
     st.append(_quads(spark, [("b", "p", "2", g)]))            # v2
@@ -429,7 +421,7 @@ def test_read_changes_per_commit_mode(spark, tmp_path):
 
 
 def test_read_changes_validates_window(spark, tmp_path):
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))
     with pytest.raises(ValueError, match="newer than"):
         st.read_changes(1, 0)
@@ -444,7 +436,7 @@ def test_expire_with_torn_tip_never_vacuums_live_data(spark, tmp_path):
     manifest must not count toward keep_last — with filename counting,
     expire(keep_last=1) under a torn v2 kept only the torn file and
     deleted the LIVE snapshot's manifest and data."""
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))   # v1 (live)
     # simulate a writer crash mid-commit: torn v2, recent mtime
     (tmp_path / "s" / "_meta" / "v2.json").write_text("{ torn")
@@ -464,7 +456,7 @@ def test_commit_blocked_by_young_torn_manifest_backs_off(spark, tmp_path):
     """A torn manifest inside the grace window makes commits fail with
     an explanatory error (after bounded backoff), and succeed again
     once the grace window passes."""
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))
     (tmp_path / "s" / "_meta" / "v2.json").write_text("{ torn")
     with pytest.raises(SnapshotConflictError, match="torn manifest"):
@@ -478,7 +470,7 @@ def test_delete_quads_ignores_graphs_not_in_store(spark, tmp_path):
     """A delete set naming only absent graphs is a no-op (no empty
     commit), and one mixing live and absent graphs touches only the
     live ones."""
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))   # v1
     st.delete_quads(_quads(spark, [("x", "p", "9", "urn:g:ghost")]))
     assert st.current_version() == 1  # no commit happened
@@ -492,18 +484,18 @@ def test_delete_quads_unbounded_graph_list_falls_back(spark, tmp_path):
     """Past MAX_GRAPH_LIST distinct graphs in the delete set, the
     affected-graph discovery switches to the broadcast semi-join
     against the manifest's live graphs (bounded driver memory)."""
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1"),
                              ("b", "p", "2", "urn:g:2")]))
-    old_max = SnapshotStore.MAX_GRAPH_LIST
-    SnapshotStore.MAX_GRAPH_LIST = 2
+    old_max = TripleStore.MAX_GRAPH_LIST
+    TripleStore.MAX_GRAPH_LIST = 2
     try:
         dels = [("a", "p", "1", "urn:g:1")] + [
             ("x", "p", "9", f"urn:g:ghost{i}") for i in range(5)
         ]
         st.delete_quads(_quads(spark, dels))
     finally:
-        SnapshotStore.MAX_GRAPH_LIST = old_max
+        TripleStore.MAX_GRAPH_LIST = old_max
     assert {(r.subj, r.graph) for r in st.read().collect()} == {
         ("b", "urn:g:2")
     }
@@ -518,7 +510,7 @@ def test_changelog_cursor_poll_commit_resume(spark, tmp_path):
     position), and an idle store polls cheaply to (None, tip)."""
     from kgap_spark.streaming import ChangelogCursor
 
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     cdir = str(tmp_path / "cursor")
     delivered: list[set] = []
 
@@ -548,7 +540,7 @@ def test_changelog_cursor_crash_between_sink_and_commit_replays(
     that is exactly-once end-to-end."""
     from kgap_spark.streaming import ChangelogCursor
 
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     cdir = str(tmp_path / "cursor")
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))
 
@@ -572,7 +564,7 @@ def test_changelog_cursor_vacuumed_window_raises_then_bootstraps(
 
     from kgap_spark.streaming import ChangelogCursor, ChangelogExpiredError
 
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     cdir = str(tmp_path / "cursor")
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))   # v1
     cur = ChangelogCursor(st, cdir)
@@ -593,7 +585,7 @@ def test_changelog_cursor_commit_is_idempotent_and_monotonic(
         spark, tmp_path):
     from kgap_spark.streaming import ChangelogCursor
 
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))
     cur = ChangelogCursor(st, str(tmp_path / "cursor"))
     cur.commit(1)
@@ -617,7 +609,7 @@ def test_append_commits_are_delta_not_full_rewrite(spark, tmp_path):
     listing the surviving part ids — O(added files) metadata per
     commit, never a rewrite of the full file list (the two-level
     design public table formats use)."""
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     for i in range(3):
         st.append(_quads(spark, [(f"s{i}", "p", str(i), "urn:g:1")]))
     m2, m3 = _manifest_json(tmp_path, 2), _manifest_json(tmp_path, 3)
@@ -631,7 +623,7 @@ def test_append_commits_are_delta_not_full_rewrite(spark, tmp_path):
 def test_drop_rewrites_only_affected_parts(spark, tmp_path):
     """delete_graph keeps untouched parts by id; only parts holding
     the dropped graph are rewritten/omitted."""
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     st.append(_quads(spark, [("a", "p", "1", "urn:g:keep")]))   # part A
     st.append(_quads(spark, [("b", "p", "2", "urn:g:drop")]))   # part B
     keep_part = _manifest_json(tmp_path, 2)["parts"][0]
@@ -642,7 +634,7 @@ def test_drop_rewrites_only_affected_parts(spark, tmp_path):
 
 
 def test_rollback_reuses_part_ids(spark, tmp_path):
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))      # v1
     st.append(_quads(spark, [("b", "p", "2", "urn:g:1")]))      # v2
     st.rollback(1)                                              # v3
@@ -656,9 +648,9 @@ def test_rollback_detects_mid_flight_vacuum(spark, tmp_path):
     AND data files still exist around the CAS — a concurrent
     expire_snapshots between reading the manifest and committing
     would otherwise leave a live tip referencing deleted files."""
-    from kgap_spark.triples.snapshots import SnapshotConflictError
+    from kgap_spark.triples import SnapshotConflictError
 
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))      # v1
     # v2 REWRITES the graph, so v1's data files are only referenced
     # by v1 — expiring v1 really deletes them
@@ -674,7 +666,7 @@ def test_rollback_detects_mid_flight_vacuum(spark, tmp_path):
     # post-CAS detection path: monkeypatch the second validation to
     # fire after commit — the just-committed manifest must be removed
     # again so the tip falls back (torn-tip recovery shape)
-    st2 = SnapshotStore(spark, str(tmp_path / "s2"))
+    st2 = TripleStore(spark, str(tmp_path / "s2"))
     st2.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))     # v1
     st2.append(_quads(spark, [("b", "p", "2", "urn:g:1")]))     # v2
     calls = {"n": 0}
@@ -705,9 +697,9 @@ def test_snapshot_not_found_is_typed(spark, tmp_path):
     """_manifest raises the dedicated SnapshotNotFoundError (still a
     ValueError for compatibility) — the changelog cursor classifies a
     vacuumed window by TYPE, not by message text."""
-    from kgap_spark.triples.snapshots import SnapshotNotFoundError
+    from kgap_spark.triples import SnapshotNotFoundError
 
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))
     with pytest.raises(SnapshotNotFoundError):
         st._manifest(9)
@@ -715,10 +707,10 @@ def test_snapshot_not_found_is_typed(spark, tmp_path):
 
 
 def test_part_cap_merges_fragmented_manifests(spark, tmp_path):
-    old = SnapshotStore.PART_CAP
-    SnapshotStore.PART_CAP = 3
+    old = TripleStore.PART_CAP
+    TripleStore.PART_CAP = 3
     try:
-        st = SnapshotStore(spark, str(tmp_path / "s"))
+        st = TripleStore(spark, str(tmp_path / "s"))
         for i in range(5):
             st.append(_quads(spark, [(f"s{i}", "p", str(i), "urn:g:1")]))
         tip = _manifest_json(tmp_path, st.current_version())
@@ -729,11 +721,11 @@ def test_part_cap_merges_fragmented_manifests(spark, tmp_path):
                            .read_text())["entries"])
             for p in tip["parts"])
     finally:
-        SnapshotStore.PART_CAP = old
+        TripleStore.PART_CAP = old
 
 
 def test_vacuum_deletes_expired_and_orphan_parts(spark, tmp_path):
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))      # v1
     st.overwrite_graphs(_quads(spark, [("b", "p", "2", "urn:g:1")]))
     # an orphan part from a crashed commit
@@ -752,7 +744,7 @@ def test_vacuum_deletes_expired_and_orphan_parts(spark, tmp_path):
 def test_legacy_single_level_manifest_still_reads(spark, tmp_path):
     """A pre-upgrade manifest embedding `files` directly keeps
     reading, and the next commit wraps it into a part."""
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     st.append(_quads(spark, [("a", "p", "1", "urn:g:1")]))      # v1
     m1 = _manifest_json(tmp_path, 1)
     files = [e for p in m1["parts"]
@@ -766,7 +758,7 @@ def test_legacy_single_level_manifest_still_reads(spark, tmp_path):
     crc = tmp_path / "s" / "_meta" / ".v1.json.crc"
     if crc.exists():
         crc.unlink()
-    st2 = SnapshotStore(spark, str(tmp_path / "s"))
+    st2 = TripleStore(spark, str(tmp_path / "s"))
     assert {r.subj for r in st2.read().collect()} == {"a"}
     st2.append(_quads(spark, [("b", "p", "2", "urn:g:1")]))     # v2
     m2 = _manifest_json(tmp_path, 2)

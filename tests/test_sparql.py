@@ -2626,15 +2626,13 @@ def test_concat_and_if_builtins(spark):
     assert (r.m, r.i, r.c) == (None, None, None)
 
 
-@pytest.mark.parametrize("store_cls", ["plain", "snapshot"])
-def test_graph_management_updates(spark, tmp_path, store_cls):
+def test_graph_management_updates(spark, tmp_path):
     """SPARQL 1.1 Update §3.2 graph management: CLEAR/DROP/CREATE/
-    COPY/MOVE/ADD/LOAD over both store implementations."""
+    COPY/MOVE/ADD/LOAD over the store."""
     from kgap_spark.query.sparql import execute_sparql_update
-    from kgap_spark.triples import SnapshotStore, TripleStore
+    from kgap_spark.triples import TripleStore
 
-    cls = TripleStore if store_cls == "plain" else SnapshotStore
-    st = cls(spark, str(tmp_path / "store"))
+    st = TripleStore(spark, str(tmp_path / "store"))
 
     def seed(rows):
         st.merge(spark.createDataFrame(
@@ -2763,15 +2761,15 @@ def test_graph_management_parse_rejects(spark, tmp_path):
 
 
 def test_graph_management_review_fixes(spark, tmp_path):
-    """Round-6 review-pass pins: atomic MOVE / single-commit CLEAR ALL
-    on the snapshot store, DROP DEFAULT never fails (§3.2.2 ≡ CLEAR),
+    """Round-6 review-pass pins: atomic MOVE / single-commit CLEAR ALL,
+    DROP DEFAULT never fails (§3.2.2 ≡ CLEAR),
     bare-IRI GraphOrDefault (the spec's own COPY example), LOAD SILENT
     not swallowing config errors, and bare keyword terms."""
     from kgap_spark.query.sparql import (execute_sparql_update,
                                          parse_sparql)
-    from kgap_spark.triples import SnapshotStore
+    from kgap_spark.triples import TripleStore
 
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     rows = [("a", "p", "1", None, None, "urn:g:1", None),
             ("b", "p", "2", None, None, "urn:g:2", None)]
     st.merge(spark.createDataFrame(rows, S.TRIPLES))       # v1
@@ -2822,10 +2820,10 @@ def test_clear_named_excludes_default_graph(spark, tmp_path):
     default_graph configured, NAMED == ALL (documented store model)."""
     from kgap_spark import schemas as S
     from kgap_spark.query.sparql import execute_sparql_update
-    from kgap_spark.triples import SnapshotStore
+    from kgap_spark.triples import TripleStore
 
     def fresh(name):
-        st = SnapshotStore(spark, str(tmp_path / name))
+        st = TripleStore(spark, str(tmp_path / name))
         rows = [("a", "p", "1", None, None, "urn:g:default", None),
                 ("b", "p", "2", None, None, "urn:g:named1", None),
                 ("c", "p", "3", None, None, "urn:g:named2", None)]
@@ -2866,12 +2864,12 @@ def test_select_star_column_order_stable_under_reorder(spark):
 def test_graph_management_sentinel_collision_and_absent_move(spark, tmp_path):
     """Review-pass pins: a graph literally named ALL/DEFAULT can never
     collide with the keyword forms (NUL sentinels), and
-    SnapshotStore.move_graph of an absent source no-ops instead of
+    TripleStore.move_graph of an absent source no-ops instead of
     wiping the destination."""
     from kgap_spark.query.sparql import execute_sparql_update
-    from kgap_spark.triples import SnapshotStore
+    from kgap_spark.triples import TripleStore
 
-    st = SnapshotStore(spark, str(tmp_path / "s"))
+    st = TripleStore(spark, str(tmp_path / "s"))
     rows = [("a", "p", "1", None, None, "ALL", None),
             ("b", "p", "2", None, None, "urn:g:keep", None)]
     st.merge(spark.createDataFrame(rows, S.TRIPLES))

@@ -5,18 +5,15 @@ compared after every sequence with a naive in-memory quad-set model.
 
 This is the state-mutation counterpart of the query fuzzers: it
 exercises the parser's graph-management grammar, the store's
-merge/delete/overwrite paths, and (on the snapshot store) the
-manifest commit protocol — under interleavings no example-based test
-enumerates. Both store implementations run the same sequences; the
-plain store's Hive layout and the snapshot store's manifest layer
-must land on identical logical content.
+merge/delete/overwrite paths and its manifest commit protocol — under
+interleavings no example-based test enumerates. The naive model is
+the reference the store's logical content must match.
 """
 
 from __future__ import annotations
 
 import os
 
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -96,17 +93,14 @@ def _render(op) -> str:
             f"TO GRAPH <{op[2]}>")
 
 
-@pytest.mark.parametrize("store_kind", ["plain", "snapshot"])
 @given(_seq_st)
 @settings(max_examples=_EXAMPLES, deadline=None)
-def test_update_sequences_match_naive_model(spark, tmp_path_factory,
-                                            store_kind, case):
+def test_update_sequences_match_naive_model(spark, tmp_path_factory, case):
     from kgap_spark.query.sparql import execute_sparql_update
-    from kgap_spark.triples import SnapshotStore, TripleStore
+    from kgap_spark.triples import TripleStore
 
-    cls = TripleStore if store_kind == "plain" else SnapshotStore
     root = tmp_path_factory.mktemp("updfuzz")
-    st_ = cls(spark, str(root / "store"))
+    st_ = TripleStore(spark, str(root / "store"))
     model: set = set()
 
     for op in case:

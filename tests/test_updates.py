@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 
 from kgap_spark import schemas as S
-from kgap_spark.triples import SnapshotStore, TripleStore
+from kgap_spark.triples import TripleStore
 
 
 def _quads(spark, rows):
@@ -41,12 +41,10 @@ RENAME_PRED = """
 """
 
 
-@pytest.mark.parametrize("store_kind", ["plain", "snapshot"])
-def test_rewrite_predicate(spark, tmp_path, store_kind):
+def test_rewrite_predicate(spark, tmp_path):
     from kgap_spark.query.sparql import execute_sparql_update
 
-    cls = TripleStore if store_kind == "plain" else SnapshotStore
-    store = cls(spark, str(tmp_path / "t"))
+    store = TripleStore(spark, str(tmp_path / "t"))
     store.append(_quads(spark, [
         ("a", "old:p", "1", "urn:g:1"), ("b", "keep:p", "2", "urn:g:1"),
         ("c", "old:p", "3", "urn:g:2"), ("d", "keep:p", "4", "urn:g:3"),

@@ -134,8 +134,9 @@ def test_quad_key_distinguishes_lang_and_datatype(spark, tmp_path):
 
 
 def test_graph_iri_with_fragment_clears(spark, tmp_path):
-    """'#' is in Hive's partition-escape set: delete_graph/compact must
-    find the directory Spark actually wrote (data-resurrection guard)."""
+    """'#' is in Hive's partition-escape set: the manifest must record
+    the graph that Spark's escaped directory name stands for, so
+    delete_graph/compact find it (data-resurrection guard)."""
     store = TripleStore(spark, str(tmp_path / "t6"))
     g = "http://example.org/ns#g1"
     store.append(_quads(spark, [("a", "p", "1", g), ("b", "p", "2", "urn:ok")]))
@@ -143,7 +144,7 @@ def test_graph_iri_with_fragment_clears(spark, tmp_path):
     store.delete_graph(g)
     assert store.read_graph(g).count() == 0
     assert store.read_graph("urn:ok").count() == 1
-    # compact sees the escaped dir too
+    # compact sees the escaped graph too
     stats = store.compact(["urn:ok"])
     assert stats["files_before"] > 0
 
@@ -164,14 +165,23 @@ def test_null_graph_fails_loudly(spark, tmp_path):
 
 
 def test_partition_pruning_in_plan(spark, tmp_path):
-    """read_graph must prune to one partition (PartitionFilters in the
-    scan, not a post-scan filter)."""
+    """read_graph prunes at the manifest: its scan reads exactly the
+    files the manifest lists for that graph, and no other graph's."""
+    import os
+    from urllib.parse import unquote, urlparse
+
     store = TripleStore(spark, str(tmp_path / "t2"))
     store.append(
         _quads(spark, [("a", "p", "1", "urn:g:1"), ("b", "p", "2", "urn:g:2")])
     )
-    plan = store.read_graph("urn:g:1")._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "urn:g:1" in plan
+    g1_files = {os.path.join(store.data_dir, e["path"])
+                for e in store._files(store.current_version())
+                if e["graph"] == "urn:g:1"}
+    assert g1_files
+    # inputFiles() are URIs: file:///…/graph=urn%253Ag%253A1/…
+    got = {unquote(urlparse(f).path)
+           for f in store.read_graph("urn:g:1").inputFiles()}
+    assert got == g1_files
 
 
 def test_store_ops_work_with_uri_scheme(spark, tiny, tmp_path):
@@ -233,8 +243,9 @@ def test_write_layout_splits_hub_graph_bounds_files(spark, tmp_path):
     store = TripleStore(spark, str(tmp_path / "t"))
     store.overwrite_graphs(hub.unionByName(small))
 
-    hub_files = glob.glob(str(tmp_path / "t" / "graph=urn%3Ahub" / "*.parquet"))
-    all_files = glob.glob(str(tmp_path / "t" / "graph=*" / "*.parquet"))
+    snaps = tmp_path / "t" / "_data" / "snap-*"
+    hub_files = glob.glob(str(snaps / "graph=urn%3Ahub" / "*.parquet"))
+    all_files = glob.glob(str(snaps / "graph=*" / "*.parquet"))
     n_tasks = max(spark.sparkContext.defaultParallelism * 2, 16)
     assert len(hub_files) > 1                       # hub is split
     assert len(all_files) <= 21 + n_tasks           # bounded, not tasks*graphs
@@ -263,44 +274,45 @@ def test_merge_many_graphs_broadcast_fallback(spark, tmp_path, monkeypatch):
     assert left == {f"urn:g:{i}" for i in range(5, 9)}
 
 
+def _fragment(spark, store, g, n):
+    """``n`` single-quad merges into graph ``g``: each appends one
+    file. The quads share one subject, so the range-partitioned
+    layout a compaction writes holds them in a single file."""
+    return [store.merge(_quads(spark, [("s", "p", str(i), g)]))
+            for i in range(n)]
+
+
 def test_merge_auto_compacts_past_threshold(spark, tmp_path):
     """VERDICT r3 #7: repeated small merges fragment a graph; once its
     file count passes compact_threshold the merge auto-compacts it —
-    file count drops back to ~tasks, results unchanged."""
-    store = TripleStore(spark, str(tmp_path / "t"), files_per_graph=2,
-                        compact_threshold=5)
+    file count drops back to the canonical layout, results unchanged."""
+    store = TripleStore(spark, str(tmp_path / "t"), compact_threshold=5)
     g = "urn:g:feed"
-    for i in range(8):
-        store.merge(_quads(spark, [(f"s{i}", "p", str(i), g)]))
-    # every merge appended ≥1 file; the trigger compacted back to the
-    # canonical 2-file layout whenever the count passed 5
+    _fragment(spark, store, g, 8)
+    # every merge appended one file; the trigger compacted back to one
+    # file whenever the count passed 5
     assert store._n_graph_files(g) <= 6
     got = {(r.subj, r.obj) for r in store.read_graph(g).collect()}
-    assert got == {(f"s{i}", str(i)) for i in range(8)}
+    assert got == {("s", str(i)) for i in range(8)}
 
     # threshold=None disables the trigger: fragments accumulate
-    store2 = TripleStore(spark, str(tmp_path / "t2"), files_per_graph=2,
-                         compact_threshold=None)
-    for i in range(8):
-        store2.merge(_quads(spark, [(f"s{i}", "p", str(i), g)]))
+    store2 = TripleStore(spark, str(tmp_path / "t2"), compact_threshold=None)
+    _fragment(spark, store2, g, 8)
     assert store2._n_graph_files(g) >= 7
 
 
 def test_merge_reports_compaction_events(spark, tmp_path):
-    """Round-5 observability: merge() returns (and keeps on
-    last_compactions) per-graph {graph, files_before, files_after}
-    accounting whenever the auto-compaction trigger fires — the
-    write-amplification signal an operator watches on Sync cycles."""
-    store = TripleStore(spark, str(tmp_path / "t"), files_per_graph=2,
-                        compact_threshold=3)
+    """Round-5 observability: merge() returns per-graph
+    {graph, files_before, files_after} accounting whenever the
+    auto-compaction trigger fires — the write-amplification signal an
+    operator watches on Sync cycles."""
+    store = TripleStore(spark, str(tmp_path / "t"), compact_threshold=3)
     g = "urn:g:feed"
     fired = []
-    for i in range(6):
-        stats = store.merge(_quads(spark, [(f"s{i}", "p", str(i), g)]))
+    for i, stats in enumerate(_fragment(spark, store, g, 6)):
         # the very first merge takes the fresh-store fast path (no
         # graph-list collect) and reports graphs=None
         assert stats["graphs"] == (None if i == 0 else 1)
-        assert stats["compacted"] == store.last_compactions
         fired.extend(stats["compacted"])
     assert fired, "threshold=3 over 6 single-file merges must trigger"
     for ev in fired:
@@ -308,20 +320,17 @@ def test_merge_reports_compaction_events(spark, tmp_path):
         assert ev["files_before"] > 3
         assert ev["files_after"] <= ev["files_before"]
     # a merge that does not trigger reports an empty event list
-    store2 = TripleStore(spark, str(tmp_path / "t2"), files_per_graph=2,
-                         compact_threshold=None)
+    store2 = TripleStore(spark, str(tmp_path / "t2"), compact_threshold=None)
     stats = store2.merge(_quads(spark, [("s", "p", "o", g)]))
-    assert stats["compacted"] == [] and store2.last_compactions == []
+    assert stats["compacted"] == []
 
 
 def test_repeated_read_of_unchanged_store_launches_no_job(spark, tmp_path,
-                                                          monkeypatch,
                                                           jobs_launched):
-    """40 graphs put the root listing above Spark's 32-path parallel
-    discovery threshold, so planning a scan runs a listing job. Once a
-    warm read has planned it, reading the unchanged store again reuses
-    the scan and launches nothing; on a scheme outside the reuse rule
-    every read plans (and lists) afresh."""
+    """40 graphs put the scan's file list above Spark's 32-path
+    parallel discovery threshold, so planning a scan runs a listing
+    job. Once a warm read has planned it, reading the unchanged
+    version again reuses the scan and launches nothing."""
     store = TripleStore(spark, str(tmp_path / "t"))
     store.append(_quads(spark, [(f"s{i}", "p", str(i), f"urn:g:{i}")
                                 for i in range(40)]))
@@ -329,16 +338,11 @@ def test_repeated_read_of_unchanged_store_launches_no_job(spark, tmp_path,
     assert jobs_launched(store.read) == 0
     assert store.read().count() == 40
 
-    monkeypatch.setattr(TripleStore, "_MTIME_SCHEMES", frozenset())
-    fresh = TripleStore(spark, store.path)
-    fresh.read()
-    assert jobs_launched(fresh.read) >= 1
-
 
 def test_reused_read_sees_every_write(spark, tmp_path):
-    """The reuse key is the root listing, so a read reflects each write
-    — including writes made through a second store object on the same
-    path, and this object's own read → merge → read."""
+    """The reuse key is the manifest version, so a read reflects each
+    write — including writes made through a second store object on the
+    same path, and this object's own read → merge → read."""
     path = str(tmp_path / "t")
     a, b = TripleStore(spark, path), TripleStore(spark, path)
     g1, g2 = "urn:g:1", "urn:g:2"
@@ -361,3 +365,34 @@ def test_reused_read_sees_every_write(spark, tmp_path):
     a.merge(_quads(spark, [("d", "p", "4", g2), ("e", "p", "5", g1)]))
     assert rows(a) == {("b", "2", g2), ("c", "3", g2), ("d", "4", g2),
                        ("e", "5", g1)}
+
+
+def test_plain_layout_directory_fails_loudly(spark, tmp_path):
+    """A directory of ``graph=`` partitions with no ``_meta/`` was
+    written by the earlier plain-parquet layout. Reading it raises a
+    ValueError naming the path — an empty read would let a resumed
+    run see no data while its lineage says the graphs are done — and
+    the CLI's export fails the same way."""
+    import re
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from kgap_spark.job import main
+
+    path = tmp_path / "old"
+    part = path / "graph=urn%3Ag"
+    part.mkdir(parents=True)
+    pq.write_table(pa.table({
+        "subj": ["a"], "pred": ["p"], "obj": ["1"],
+        "obj_lang": pa.array([None], pa.string()),
+        "obj_datatype": pa.array([None], pa.string()),
+        "src_url": pa.array([None], pa.string()),
+    }), str(part / "part-0.parquet"))
+
+    with pytest.raises(ValueError, match=re.escape(str(path))):
+        TripleStore(spark, str(path)).read()
+    with pytest.raises(ValueError, match=re.escape(str(path))):
+        main(["export", "--store", str(path), "--out", str(tmp_path / "out"),
+              "--master", "local[4]", "--shuffle-partitions", "4"])
