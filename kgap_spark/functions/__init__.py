@@ -22,5 +22,4 @@ from kgap_spark.functions.dedup import (  # noqa: F401
 )
 from kgap_spark.functions.similarity import (  # noqa: F401
     cosine_topk,
-    lsh_bucketed_topk,
 )

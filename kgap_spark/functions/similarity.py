@@ -1,9 +1,11 @@
 """Similarity search over embedding columns (array<float>).
 
 Brute-force cosine top-k is the exact baseline (one scan, no shuffle
-until the top-k, which TakeOrderedAndProject handles); the LSH-bucketed
-variant is the scale path — sign-random-projection buckets shrink the
-candidate set so each query touches one bucket instead of the corpus.
+until the top-k, which TakeOrderedAndProject handles); the LSH
+signature table (``build_signature_table`` +
+``lsh_topk_from_signature_table``) is the scale path —
+sign-random-projection buckets shrink the candidate set so each query
+touches a few buckets instead of the corpus.
 
 All arithmetic is native Catalyst (``zip_with`` + ``aggregate`` in
 double precision, sequential index order) so results are deterministic
@@ -245,30 +247,3 @@ def embedding_near_dup_pairs(
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
-
-
-def lsh_bucketed_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_planes: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    multiprobe_hamming: int = 1,
-) -> DataFrame:
-    """Approximate cosine top-k with the signature computed inline: only
-    vectors whose sign-random-projection bucket is within
-    ``multiprobe_hamming`` bits of the query's are scored.
-
-    NOTE: this variant scans the whole table once to compute `_sig` —
-    it is the ad-hoc/one-shot path. For repeated queries at corpus
-    scale use ``build_signature_table`` + ``lsh_topk_from_signature_
-    table``, which prunes partitions instead of scanning."""
-    dim = len(query_vec)
-    planes = _hyperplanes(dim, n_planes)
-    qsig = query_signature([float(x) for x in query_vec], n_planes)
-    probe = probe_signatures(qsig, n_planes, multiprobe_hamming)
-
-    with_sig = embeddings.withColumn("_sig", signature_col(F.col(vec_col), planes))
-    cands = with_sig.filter(F.col("_sig").isin(probe))
-    return cosine_topk(cands, query_vec, k, id_col, vec_col)

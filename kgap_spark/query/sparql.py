@@ -26,11 +26,12 @@ joined back on the entity variable.
 
 Unbound-compatible joins: the compiler tracks which variables may be
 unbound (NULL) — OPTIONAL bindings, arm-local UNION variables, BINDs
-over them — and every join touching such a variable (later OPTIONALs,
-group merges, UNION joins, MINUS/NOT EXISTS) uses SPARQL's
-unbound-is-compatible condition via ``_compat_join`` instead of SQL
-equality, so no solution is silently dropped. Fully-bound variables
-stay plain equi keys (hash-joinable).
+over them — and every group element joins through one function,
+``_join``: a variable that may be unbound on either side matches with
+SPARQL's unbound-is-compatible condition instead of SQL equality (no
+solution is silently dropped) and fills from the side that bound it,
+@lang/^^datatype included. Fully-bound variables stay plain equi keys
+(hash-joinable).
 
 Property paths (SPARQL 1.1 §9 subset): ``p+``, ``p*``, ``p?``,
 inverse ``^elt``, sequences ``p1/p2``, negated sets ``!p``/``!(p1|p2)``
@@ -58,6 +59,9 @@ from dataclasses import dataclass, field, replace as _dc_replace
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# string literals share Turtle's UCHAR / ECHAR escapes (SPARQL 1.1
+# §19.2, §19.7)
+from kgap_spark.io.turtle import _unescape_string
 from kgap_spark.query.patterns import (
     Var, bgp, _is_meta, PathNeg, TypedLit, XSD_STRING,
 )
@@ -1441,22 +1445,6 @@ class _Parser:
         return fn
 
 
-_STR_ESC = {"n": "\n", "t": "\t", "r": "\r", '"': '"', "\\": "\\", "'": "'"}
-
-
-def _unescape_string(s: str) -> str:
-    out, i = [], 0
-    while i < len(s):
-        c = s[i]
-        if c == "\\" and i + 1 < len(s):
-            out.append(_STR_ESC.get(s[i + 1], s[i + 1]))
-            i += 2
-        else:
-            out.append(c)
-            i += 1
-    return "".join(out)
-
-
 def parse_sparql(text: str) -> Query:
     return _Parser(_tokenize(text)).parse()
 
@@ -2370,84 +2358,83 @@ def _path_pairs(triples: DataFrame, p, s_term, o_term,
     return step.unionByName(ident).distinct()
 
 
-def _compat_join(df: DataFrame, right: DataFrame, total: list[str],
-                 partial: list[str], how: str = "inner") -> DataFrame:
-    """SPARQL solution-compatibility join: ``total`` columns are bound
-    on both sides (plain equi keys); ``partial`` columns may be NULL
-    (unbound) on either side — unbound matches anything, and the merged
-    value is COALESCE of the two sides. The equi keys keep this a hash
-    join; the partial conditions ride along as join residuals.
-    ``how='left'`` is the OPTIONAL form: unmatched outer rows survive
-    with the right side's variables unbound."""
-    r = right
-    for c in partial:
-        r = r.withColumnRenamed(c, f"__r_{c}")
-    cond = F.lit(True)
-    for c in total:
-        cond = cond & (df[c] == r[c])
-    for c in partial:
-        rc = r[f"__r_{c}"]
-        cond = cond & (df[c].isNull() | rc.isNull() | (df[c] == rc))
-    out = df.join(r, cond, how)
-    # merge partial bindings; drop the duplicated total columns
-    merged = out
-    for c in partial:
-        merged = merged.withColumn(c, F.coalesce(df[c], F.col(f"__r_{c}")))
-        merged = merged.drop(f"__r_{c}")
-    for c in total:
-        merged = merged.drop(r[c])
-    return merged
+def _join(df: DataFrame | None, maybe: set, right: DataFrame,
+          right_maybe: set, how: str = "inner", on=None):
+    """The SPARQL 1.1 §18.2 join of two solution sets (compatible
+    mappings), written once for every group element: a triples block,
+    sub-SELECT, GRAPH, UNION and VALUES join ``inner``, OPTIONAL
+    ``left``, FILTER EXISTS ``left_semi``, FILTER NOT EXISTS and MINUS
+    ``left_anti``.
 
+    ``maybe`` / ``right_maybe`` name the columns that can be NULL
+    (unbound) on each side. A shared variable bound on both sides is a
+    plain equi key (hash-joinable). A partial key — maybe-unbound on
+    either side — matches when either side is unbound or the two are
+    equal, and its merged value is COALESCE(left, right); its
+    ``__lang`` / ``__dt`` meta follows the binding: the left's where
+    the left bound it, else the right's, created when only the right
+    carries them. A key bound on the left keeps the left's meta (first
+    binding wins, as in ``bgp``). No shared variable joins on true: a
+    cross product, a left join that keeps every left row, or a semi /
+    anti join that keeps all rows or none.
 
-def _renamed_compat(df: DataFrame, sub_df: DataFrame, shared: list[str],
-                    partial: list[str], prefix: str):
-    """Shared builder for the semi/anti-join forms: the sub-pattern's
-    ``shared`` columns renamed with ``prefix`` + the SPARQL
-    compatibility condition (equi on fully-bound keys, NULL-matches-
-    anything on ``partial`` ones). Returns (renamed_frame, condition,
-    {name: renamed_Column})."""
-    r = sub_df.select(*shared)
-    for c in shared:
-        r = r.withColumnRenamed(c, f"{prefix}{c}")
-    rcols = {c: r[f"{prefix}{c}"] for c in shared}
-    cond = F.lit(True)
-    for c in shared:
-        rc = rcols[c]
-        if c in partial:
-            cond = cond & (df[c].isNull() | rc.isNull() | (df[c] == rc))
-        else:
-            cond = cond & (df[c] == rc)
-    return r, cond, rcols
-
-
-def _merge_inner(df: DataFrame | None, maybe: set,
-                 right: DataFrame, right_maybe: set,
-                 broadcast_right: bool = False):
-    """Join a sub-solution into the accumulated one with SPARQL
-    compatibility semantics. Columns that may be unbound (NULL) on
-    either side join via ``_compat_join``; fully-bound shared columns
-    stay plain equi keys (hash-joinable). Returns the joined frame and
-    the updated maybe-unbound set."""
+    ``on(left, right, sol)`` adds a condition: ``left`` / ``right`` map
+    each side's column names to Columns (semi / anti: the shared
+    variables only), ``sol`` maps every column of the joined solution
+    to its merged value — a ``_compile_expr`` resolver. Returns the
+    joined frame and its maybe-unbound set; a semi / anti join keeps
+    ``df``'s columns. ``df`` None (nothing bound yet) yields
+    ``right``."""
     if df is None:
         return right, set(right_maybe)
-    right = right.drop(*[c for c in right.columns
-                         if _is_meta(c) and c in df.columns])
-    right_cols = {c for c in right.columns if not _is_meta(c)}
-    shared = sorted(set(df.columns) & right_cols)
-    partial = [c for c in shared if c in maybe or c in right_maybe]
-    total = [c for c in shared if c not in partial]
-    r = F.broadcast(right) if broadcast_right else right
-    if not shared:
-        out = df.crossJoin(r)
-    elif not partial:
-        out = df.join(r, on=shared, how="inner")
+    rvars = {c for c in right.columns if not _is_meta(c)}
+    shared = sorted(set(df.columns) & rvars)
+    partial = {c for c in shared if c in maybe or c in right_maybe}
+    filtering = how in ("left_semi", "left_anti")
+    if filtering:
+        right = right.select(*shared)
+        new_maybe = set(maybe)
+    elif how == "left":
+        new_maybe = maybe | (rvars - set(shared))
     else:
-        out = _compat_join(df, r, total, partial)
-    # a partial key survives unbound only when BOTH sides can be NULL
-    new_maybe = {c for c in maybe if c not in shared}
-    new_maybe |= {c for c in right_cols - set(shared) if c in right_maybe}
-    new_maybe |= {c for c in partial if c in maybe and c in right_maybe}
-    return out, new_maybe
+        # a partial key stays unbound only when BOTH sides can be NULL
+        new_maybe = ((maybe - set(shared))
+                     | (right_maybe & (rvars - set(shared)))
+                     | (partial & maybe & right_maybe))
+    if not partial and on is None:
+        right = right.drop(*[c for c in right.columns
+                             if _is_meta(c) and c in df.columns])
+        if shared:
+            out = df.join(right, on=shared, how=how)
+        elif how == "inner":
+            out = df.crossJoin(right)
+        else:
+            out = df.join(right, F.lit(True), how)
+        return out, new_maybe
+    r = right.select(*[F.col(c).alias(f"__r_{c}") for c in right.columns])
+    left = {c: df[c] for c in df.columns}
+    rcols = {c: r[f"__r_{c}"] for c in right.columns}
+    cond = F.lit(True)
+    for c in shared:
+        lc, rc = left[c], rcols[c]
+        cond = cond & ((lc.isNull() | rc.isNull() | (lc == rc))
+                       if c in partial else (lc == rc))
+    sol = dict(left)
+    for c, rc in rcols.items():
+        var = c.rsplit("__", 1)[0] if _is_meta(c) else c
+        if var in partial:
+            # a left binding without meta columns reads as untagged
+            lc = left.get(c, F.lit(None).cast("string"))
+            sol[c] = (F.coalesce(lc, rc) if c == var
+                      else F.when(left[var].isNull(), rc).otherwise(lc))
+        elif c not in left:
+            sol[c] = rc
+    if on is not None:
+        cond = cond & on(left, rcols, sol)
+    out = df.join(r, cond, how)
+    if filtering:
+        return out, new_maybe
+    return out.select(*[v.alias(c) for c, v in sol.items()]), new_maybe
 
 
 def _unit_table(spark) -> DataFrame:
@@ -2541,58 +2528,38 @@ def _compile_triples_chunk(base_triples: DataFrame, chunk: list,
 
 def _apply_minus(triples: DataFrame, df: DataFrame, maybe: set,
                  sub: Group, graph) -> DataFrame:
-    """SPARQL MINUS: remove solutions compatible with the sub-group on
-    a NON-EMPTY shared domain — an anti join when all shared keys are
-    fully bound, else the unbound-compatible condition plus the
-    dom(μ)∩dom(μ')≠∅ guard. Replayed in textual order via ``g.seq``."""
+    """SPARQL MINUS: an anti join that removes the solutions compatible
+    with the sub-group on a NON-EMPTY shared domain. Replayed in
+    textual order via ``g.seq``."""
     sub_df, sub_maybe = _compile_group_ex(triples, sub, graph=graph)
-    shared = sorted(
-        set(df.columns) & {c for c in sub_df.columns if not _is_meta(c)}
-    )
-    if not shared:
-        # SPARQL MINUS: solutions with disjoint domains are never
-        # compatible — removes nothing (unlike NOT EXISTS)
-        return df
-    partial = [c for c in shared if c in maybe or c in sub_maybe]
-    if not partial:
-        return df.join(sub_df.select(*shared), on=shared,
-                       how="left_anti")
-    r, cond, rcols = _renamed_compat(df, sub_df, shared,
-                                     partial, "__m_")
-    both_bound = F.lit(False)  # dom(μ)∩dom(μ') must be non-empty
-    for c in shared:
-        both_bound = both_bound | (
-            df[c].isNotNull() & rcols[c].isNotNull()
-        )
-    return df.join(r, cond & both_bound, "left_anti")
+
+    def overlap(left, right, _sol):
+        # dom(μ) ∩ dom(μ') ≠ ∅: disjoint solutions are never
+        # compatible, so a MINUS without shared variables removes
+        # nothing (unlike NOT EXISTS)
+        cond = F.lit(False)
+        for c in right:
+            cond = cond | (left[c].isNotNull() & right[c].isNotNull())
+        return cond
+
+    return _join(df, maybe, sub_df, sub_maybe, "left_anti", overlap)[0]
 
 
 def _apply_values(triples: DataFrame, df: DataFrame | None, maybe: set,
                   vars_: list, rows: list):
-    """Inline VALUES → broadcast-joined literal table. A column with
-    any UNDEF row is maybe-unbound (unbound-compatible join). Rows may
-    carry tagged/typed literals (``Lit`` with @lang/^^datatype): those
-    compare as exact RDF terms against the binding's meta columns —
-    the same semantics as ``tagged_eq`` / pattern-position TypedLit —
-    instead of silently matching on lexical form alone. A var bound
-    only by the VALUES table keeps its row's @lang/^^dt as its
-    ``__lang``/``__dt`` meta binding. A shared var WITHOUT meta
-    columns falls back to lexical comparison (the documented
-    plain-literal divergence)."""
+    """Inline VALUES → a broadcast literal table joined by ``_join``. A
+    column with any UNDEF row is maybe-unbound. A var with a tagged or
+    typed row (``Lit`` with @lang/^^datatype) gets ``__lang``/``__dt``
+    columns: against a binding that carries meta they compare as exact
+    RDF terms — the same semantics as ``tagged_eq`` / pattern-position
+    TypedLit — and a row that fills an unbound binding brings its tags
+    along. A shared var WITHOUT meta columns falls back to lexical
+    comparison (the documented plain-literal divergence)."""
     names = [v.name for v in vars_]
     v_maybe = {n for i, n in enumerate(names)
                if any(r[i] is None for r in rows)}
     tagged = {n for i, n in enumerate(names)
               if any(isinstance(r[i], Lit) for r in rows)}
-    spark = triples.sparkSession
-    if not tagged:
-        vdf = local_frame(
-            spark,
-            [tuple(r) for r in rows],
-            ", ".join(f"{n} string" for n in names),
-        )
-        return _merge_inner(df, maybe, vdf, v_maybe,
-                            broadcast_right=True)
     fields, out_rows = [], []
     for n in names:
         fields.append(f"{n} string")
@@ -2600,36 +2567,23 @@ def _apply_values(triples: DataFrame, df: DataFrame | None, maybe: set,
             fields += [f"{n}__lang string", f"{n}__dt string"]
     for r in rows:
         row = []
-        for i, n in enumerate(names):
-            t = r[i]
-            row.append(t.value if isinstance(t, Lit) else t)
+        for n, t in zip(names, r):
+            lit = isinstance(t, Lit)
+            row.append(t.value if lit else t)
             if n in tagged:
-                row.append(t.lang if isinstance(t, Lit) else None)
-                row.append(t.datatype if isinstance(t, Lit) else None)
+                row += [t.lang, t.datatype] if lit else [None, None]
         out_rows.append(tuple(row))
-    vdf = local_frame(spark, out_rows, ", ".join(fields))
+    vdf = local_frame(triples.sparkSession, out_rows, ", ".join(fields))
     if df is None:
-        # the VALUES table IS the solution; tagged columns' meta rides
-        # along as the binding's {var}__lang/{var}__dt
         return vdf, set(v_maybe)
-    ren = {c: f"__v_{c}" for c in vdf.columns}
-    r = vdf
-    for c, rc in ren.items():
-        r = r.withColumnRenamed(c, rc)
-    r = F.broadcast(r)
-    shared = [n for n in names if n in df.columns]
-    cond = F.lit(True)
-    for n in shared:
-        rv = F.col(ren[n])
-        dv = df[n]
-        c_val = dv == rv
-        if n in maybe or n in v_maybe:
-            c_val = dv.isNull() | rv.isNull() | c_val
-        cond = cond & c_val
-        if n in tagged and f"{n}__lang" in df.columns \
-                and f"{n}__dt" in df.columns:
-            rlang, rdt = F.col(ren[f"{n}__lang"]), F.col(ren[f"{n}__dt"])
-            dlang, ddt = df[f"{n}__lang"], df[f"{n}__dt"]
+    checked = [n for n in tagged
+               if f"{n}__lang" in df.columns and f"{n}__dt" in df.columns]
+
+    def same_term(left, right, _sol):
+        cond = F.lit(True)
+        for n in checked:
+            rlang, rdt = right[f"{n}__lang"], right[f"{n}__dt"]
+            dlang, ddt = left[f"{n}__lang"], left[f"{n}__dt"]
             meta = (
                 F.when(rlang.isNotNull(),
                        F.coalesce(dlang == rlang, F.lit(False)))
@@ -2641,43 +2595,12 @@ def _apply_values(triples: DataFrame, df: DataFrame | None, maybe: set,
                 .otherwise(F.lit(True))  # plain-literal row: lexical
             )
             # an unbound side matches anything, meta included
-            cond = cond & F.when(dv.isNotNull() & rv.isNotNull(),
+            cond = cond & F.when(left[n].isNotNull() & right[n].isNotNull(),
                                  meta).otherwise(F.lit(True))
-    out = df.join(r, cond, "inner") if shared else df.crossJoin(r)
-    for n in names:
-        if n in df.columns:
-            if n in maybe or n in v_maybe:
-                if n in tagged:
-                    # a row that FILLS an unbound binding brings its
-                    # @lang/^^dt along — LANG()/DATATYPE() on the
-                    # coalesced value must see the row's tags, not
-                    # df's NULL meta; the meta columns are CREATED if
-                    # df lacks them (subject/predicate-position vars
-                    # carry none, and their bound IRI rows correctly
-                    # read as untagged)
-                    for kind in ("lang", "dt"):
-                        mc = f"{n}__{kind}"
-                        base = (df[mc] if mc in df.columns
-                                else F.lit(None).cast("string"))
-                        out = out.withColumn(
-                            mc,
-                            F.when(df[n].isNull(),
-                                   F.col(ren[mc])).otherwise(base),
-                        )
-                out = out.withColumn(n, F.coalesce(df[n], F.col(ren[n])))
-            out = out.drop(ren[n])
-        else:
-            out = out.withColumnRenamed(ren[n], n)
-            if n in tagged:
-                for kind in ("lang", "dt"):
-                    mc = f"{n}__{kind}"
-                    out = (out.drop(ren[mc]) if mc in df.columns
-                           else out.withColumnRenamed(ren[mc], mc))
-    out = out.drop(*[c for c in out.columns if c.startswith("__v_")])
-    new_maybe = {c for c in maybe if c not in shared}
-    new_maybe |= {n for n in names if n not in shared and n in v_maybe}
-    new_maybe |= {c for c in shared if c in maybe and c in v_maybe}
-    return out, new_maybe
+        return cond
+
+    return _join(df, maybe, F.broadcast(vdf), v_maybe,
+                 on=same_term if checked else None)
 
 
 def _compile_group(triples: DataFrame, g: Group,
@@ -2694,9 +2617,13 @@ def _compile_group_ex(triples: DataFrame, g: Group, graph=None):
 
     Returns ``(df, maybe_unbound)`` where ``maybe_unbound`` is the set
     of result columns that can be NULL (SPARQL unbound) — introduced by
-    OPTIONAL, arm-local UNION variables, or BINDs over them. Joins on
-    such columns use unbound-compatible conditions instead of SQL
-    equality (which would silently drop solutions)."""
+    OPTIONAL, arm-local UNION variables, VALUES UNDEF, or BINDs over
+    them. Every element but BIND folds in through ``_join``: a triples
+    block, sub-SELECT, GRAPH, UNION and VALUES as inner joins, OPTIONAL
+    as a left join, MINUS and FILTER [NOT] EXISTS as anti / semi
+    joins, so a maybe-unbound key matches unbound-compatibly (never by
+    SQL equality, which would silently drop solutions) and carries its
+    @lang/^^datatype the same way in each."""
     graph_var = graph.name if isinstance(graph, Var) else None
     base_triples = triples
     if graph is not None and graph_var is None:
@@ -2740,7 +2667,7 @@ def _compile_group_ex(triples: DataFrame, g: Group, graph=None):
                 # Join(Ω, BGP): a BGP binding never unbinds, but the
                 # accumulated side may carry maybe-unbound shared
                 # keys → compatibility join
-                df, maybe = _merge_inner(df, maybe, cdf, set())
+                df, maybe = _join(df, maybe, cdf, set())
             continue
         if _kind == "subselect":
             # { SELECT … }: compile + project + order/limit FIRST,
@@ -2777,7 +2704,7 @@ def _compile_group_ex(triples: DataFrame, g: Group, graph=None):
                         sub_maybe.add(p[1].name)
                 elif _vars_of(p[0]) & inner_maybe:
                     sub_maybe.add(p[1].name)
-            df, maybe = _merge_inner(df, maybe, sub_df, sub_maybe)
+            df, maybe = _join(df, maybe, sub_df, sub_maybe)
             continue
         if _kind == "graph":
             # graph-scoped subgroup joins into the enclosing
@@ -2786,7 +2713,7 @@ def _compile_group_ex(triples: DataFrame, g: Group, graph=None):
             term, sub = _payload
             sub_df, sub_maybe = _compile_group_ex(triples, sub,
                                                   graph=term)
-            df, maybe = _merge_inner(df, maybe, sub_df, sub_maybe)
+            df, maybe = _join(df, maybe, sub_df, sub_maybe)
             continue
         if _kind == "union":
             # { A } UNION { B }: evaluate each arm, align columns (a
@@ -2814,7 +2741,7 @@ def _compile_group_ex(triples: DataFrame, g: Group, graph=None):
             u = arm_dfs[0]
             for other in arm_dfs[1:]:
                 u = u.unionByName(other, allowMissingColumns=True)
-            df, maybe = _merge_inner(df, maybe, u, u_maybe)
+            df, maybe = _join(df, maybe, u, u_maybe)
             continue
         if _kind == "values":
             # inline VALUES: broadcast-joined literal table; UNDEF →
@@ -2871,8 +2798,8 @@ def _compile_group_ex(triples: DataFrame, g: Group, graph=None):
         sub = _payload
         if df is None:
             # LeftJoin({μ0}, P): P's solutions, or μ0 if P is empty —
-            # the no-shared-vars left-join-on-true below gives exactly
-            # that over the unit table
+            # ``_join``'s left join on true (no shared variable) gives
+            # exactly that over the unit table
             df = _unit_table(triples.sparkSession)
         # SPARQL LeftJoin(Ω1, Ω2, expr): a FILTER at the top level of
         # an OPTIONAL group that references variables bound only in
@@ -2889,88 +2816,32 @@ def _compile_group_ex(triples: DataFrame, g: Group, graph=None):
             outer_only = _vars_of(fx) - set(sub_df.columns)
             (join_filters if outer_only & set(df.columns)
              else local_filters).append(fx)
-        for fx in local_filters:  # before meta dedup: LANG(?shared)
+        for fx in local_filters:
             sub_df = sub_df.filter(_compile_expr(fx, sub_df))
-        sub_df = sub_df.drop(*[c for c in sub_df.columns
-                               if _is_meta(c) and c in df.columns])
-        sub_cols = {c for c in sub_df.columns if not _is_meta(c)}
-        shared = sorted(set(df.columns) & sub_cols)
-        partial = [c for c in shared if c in maybe or c in sub_maybe]
-        if join_filters:
-            # conditional left join: equi/compat keys + the hoisted
-            # filter exprs, with the optional side's columns renamed
-            # so the expr can reference both frames unambiguously
-            ren = {c: f"__opt_{c}" for c in sub_df.columns}
-            r = sub_df
-            for c, rc in ren.items():
-                r = r.withColumnRenamed(c, rc)
+
+        def hoisted(_left, _right, sol):
+            # the join filters read the merged solution: a shared
+            # variable as COALESCE(outer, optional), LANG(?v) as the
+            # merged meta
             cond = F.lit(True)
-            for c in shared:
-                rc = F.col(ren[c])
-                if c in partial:
-                    cond = cond & (df[c].isNull() | rc.isNull()
-                                   | (df[c] == rc))
-                else:
-                    cond = cond & (df[c] == rc)
-            resolver = {
-                c: (F.coalesce(df[c], F.col(ren[c])) if c in shared
-                    else F.col(ren[c]))
-                for c in sub_df.columns
-            }
             for fx in join_filters:
-                cond = cond & _compile_expr(fx, df, resolver)
-            out = df.join(r, cond, "left")
-            for c in sub_df.columns:
-                if c in shared:
-                    if c in partial:
-                        out = out.withColumn(
-                            c, F.coalesce(F.col(c), F.col(ren[c]))
-                        )
-                    out = out.drop(ren[c])
-                else:
-                    out = out.withColumnRenamed(ren[c], c)
-            df = out
-        # no shared vars → SPARQL left-join-on-true: every outer row
-        # survives even when the optional side is empty
-        elif not shared:
-            df = df.join(sub_df, F.lit(True), "left")
-        elif not partial:
-            df = df.join(sub_df, on=shared, how="left")
-        else:
-            # a key left unbound by an EARLIER optional joins with
-            # unbound-compatible semantics, not SQL NULL-never-matches
-            df = _compat_join(
-                df, sub_df, [c for c in shared if c not in partial],
-                partial, how="left",
-            )
-        maybe |= sub_cols - set(shared)
+                cond = cond & _compile_expr(fx, df, sol)
+            return cond
+
+        df, maybe = _join(df, maybe, sub_df, sub_maybe, "left",
+                          hoisted if join_filters else None)
     if df is None:
         # a group that bound nothing (only MINUS elements, or empty):
         # SPARQL evaluates {} to the unit table {μ0} — one solution
         # binding nothing (§18.2.2.2); a leading MINUS removes
         # nothing from it
         df = _unit_table(triples.sparkSession)
-    # FILTER EXISTS → semi join; FILTER NOT EXISTS → anti join. Same
-    # compatibility condition either way.
+    # FILTER EXISTS → semi join, FILTER NOT EXISTS → anti join (no
+    # distinct(): both are set-semantics already)
     for how, subs in (("left_semi", g.exists), ("left_anti", g.not_exists)):
         for sub in subs:
             sub_df, sub_maybe = _compile_group_ex(triples, sub, graph=graph)
-            shared = sorted(
-                set(df.columns)
-                & {c for c in sub_df.columns if not _is_meta(c)}
-            )
-            if not shared:
-                raise ValueError(
-                    "FILTER [NOT] EXISTS with no shared variables"
-                )
-            partial = [c for c in shared if c in maybe or c in sub_maybe]
-            # no distinct(): semi/anti joins are set-semantics already
-            if not partial:
-                df = df.join(sub_df.select(*shared), on=shared, how=how)
-            else:
-                r, cond, _ = _renamed_compat(df, sub_df, shared,
-                                             partial, "__x_")
-                df = df.join(r, cond, how)
+            df, _ = _join(df, maybe, sub_df, sub_maybe, how)
     for f_expr in g.filters:
         df = df.filter(_compile_expr(f_expr, df))
     return df, maybe

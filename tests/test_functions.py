@@ -401,8 +401,10 @@ def test_fts_search_indexed_equals_fts_search(spark, tmp_path, scoring):
     assert got == want
 
 
-def test_cosine_topk_and_lsh_recall(spark):
-    from kgap_spark.functions.similarity import cosine_topk, lsh_bucketed_topk
+def test_cosine_topk_and_lsh_recall(spark, tmp_path):
+    from kgap_spark.functions.similarity import (
+        build_signature_table, cosine_topk, lsh_topk_from_signature_table,
+    )
 
     import math
     vecs = [
@@ -412,8 +414,10 @@ def test_cosine_topk_and_lsh_recall(spark):
     q = vecs[7][1]
     exact = [r.vec_id for r in cosine_topk(emb, q, k=5).collect()]
     assert exact[0] == 7  # the query vector itself ranks first
-    approx = [r.vec_id for r in
-              lsh_bucketed_topk(emb, q, k=5, n_planes=4).collect()]
+    table = str(tmp_path / "sig")
+    build_signature_table(emb, table, n_planes=4)
+    approx = [r.vec_id for r in lsh_topk_from_signature_table(
+        spark, table, q, k=5, n_planes=4).collect()]
     # LSH with multiprobe must recover most of the exact top-5
     assert len(set(exact) & set(approx)) >= 3
 

@@ -1822,6 +1822,76 @@ def test_values_fill_creates_missing_meta(spark):
     assert [(r.s, r.l) for r in df.collect()] == [("urn:s:0", "v")]
 
 
+def test_partial_key_join_carries_meta(spark):
+    """A variable left unbound by an OPTIONAL and bound by a later
+    triples block or OPTIONAL takes that binding's @lang / ^^datatype
+    along with its value — the same rule VALUES follows."""
+    xsd_int = "http://www.w3.org/2001/XMLSchema#integer"
+    rows = [
+        ("s1", "u:q", "x", None, None, "urn:g", None),
+        ("s1", "u:r", "chat", "fr", None, "urn:g", None),
+        ("s2", "u:q", "x", None, None, "urn:g", None),
+        ("s2", "u:p", "cat", "en", None, "urn:g", None),
+        ("s2", "u:r", "cat", "en", None, "urn:g", None),
+        ("s3", "u:q", "x", None, None, "urn:g", None),
+        ("s3", "u:r", "7", None, xsd_int, "urn:g", None),
+    ]
+    t = spark.createDataFrame(rows, S.TRIPLES)
+    for last in ("?s <u:r> ?o", "OPTIONAL { ?s <u:r> ?o }"):
+        df = execute_sparql(t, f"""
+            SELECT ?s ?o (LANG(?o) AS ?l) (DATATYPE(?o) AS ?d) WHERE {{
+              ?s <u:q> ?x OPTIONAL {{ ?s <u:p> ?o }} {last}
+            }} ORDER BY ?s
+        """)
+        got = [(r.s, r.o, r.l, r.d) for r in df.collect()]
+        assert [g[:3] for g in got] == [
+            ("s1", "chat", "fr"), ("s2", "cat", "en"), ("s3", "7", ""),
+        ], last
+        assert got[2][3] == xsd_int, last
+
+
+def test_filter_exists_without_shared_variables(spark):
+    """With no shared variable, FILTER EXISTS keeps every solution when
+    the sub-pattern has one and none when it has none; FILTER NOT
+    EXISTS keeps them only when it has none."""
+    rows = [
+        ("urn:s:0", "ex:p", "x", None, None, "urn:g", None),
+        ("urn:s:1", "ex:p", "y", None, None, "urn:g", None),
+        ("urn:a", "ex:q", "b", None, None, "urn:g", None),
+    ]
+    t = spark.createDataFrame(rows, S.TRIPLES)
+    both = ["urn:s:0", "urn:s:1"]
+    for pred, exists, not_exists in (("ex:q", both, []),
+                                      ("ex:none", [], both)):
+        for form, want in (("EXISTS", exists), ("NOT EXISTS", not_exists)):
+            df = execute_sparql(t, f"""
+                SELECT ?s WHERE {{
+                  ?s ex:p ?o FILTER {form} {{ ?a {pred} ?b }}
+                }} ORDER BY ?s
+            """)
+            assert [r.s for r in df.collect()] == want, (form, pred)
+
+
+def test_string_escapes_decode_uchar_and_echar(spark):
+    """String literals and the GROUP_CONCAT separator decode SPARQL's
+    UCHAR (\\u, \\U) and ECHAR (\\b, \\f, …) escapes."""
+    q = parse_sparql(
+        r'SELECT * WHERE { ?s ?p "caf\u00e9 \U0001F600\b\f\t\"\\" }'
+    )
+    assert q.where.triples[0][2].value == "caf\u00e9 \U0001F600\b\f\t\"\\"
+    agg = parse_sparql(
+        r'SELECT (GROUP_CONCAT(?o; SEPARATOR="\u00b7") AS ?c) '
+        r'WHERE { ?s ?p ?o }'
+    )
+    assert agg.projections[0][0].sep == "\u00b7"
+    t = spark.createDataFrame(
+        [("urn:s", "ex:p", "caf\u00e9", None, None, "urn:g", None)],
+        S.TRIPLES,
+    )
+    df = execute_sparql(t, r'SELECT ?s WHERE { ?s ex:p "caf\u00e9" }')
+    assert [r.s for r in df.collect()] == ["urn:s"]
+
+
 def test_langmatches_strlang_strdt(kb):
     # LANGMATCHES: prefix matching per RFC 4647 basic filtering
     df = execute_sparql(kb, f"""

@@ -3,13 +3,15 @@ evaluator (round 6 — VERDICT r5 item #8).
 
 Hypothesis generates a tiny QUAD KB (two named graphs) plus a random
 group pattern (triple patterns, OPTIONAL, MINUS, GRAPH <g>/GRAPH ?g
-scopes, FILTER — in random TEXTUAL order, which exercises the g.seq
-left-to-right fold), renders it to SPARQL text,
+scopes, UNION, VALUES with UNDEF, FILTER [NOT] EXISTS, FILTER — in
+random TEXTUAL order, which exercises the g.seq left-to-right fold),
+renders it to SPARQL text,
 runs it through parse→compile→execute on Spark, and independently
 evaluates the same structure with a ~60-line reference implementation
 of SPARQL 1.1 §18.2 group semantics (compatible-mapping joins,
-LeftJoin, Minus with the non-empty-domain guard, effective-boolean
-filters). Solutions must agree as BAGS, unbound included."""
+LeftJoin, Minus with the non-empty-domain guard, group-scoped
+[NOT] EXISTS, effective-boolean filters). Solutions must agree as
+BAGS, unbound included."""
 
 from __future__ import annotations
 
@@ -84,6 +86,15 @@ _elem_st = st.one_of(
     st.tuples(st.just("union"),
               st.tuples(st.lists(_pattern_st, min_size=1, max_size=2),
                         st.lists(_pattern_st, min_size=1, max_size=2))),
+    # VALUES ?v { … }: 1-3 rows, at most one UNDEF (None)
+    st.tuples(st.just("values"),
+              st.tuples(st.sampled_from(_VARS),
+                        st.lists(st.sampled_from(_NODES) | st.none(),
+                                 min_size=1, max_size=3)
+                        .filter(lambda rows: rows.count(None) <= 1))),
+    # FILTER [NOT] EXISTS: written in place, applies to the whole group
+    st.tuples(st.sampled_from(["exists", "not_exists"]),
+              st.lists(_pattern_st, min_size=1, max_size=2)),
 )
 
 _filter_st = st.tuples(
@@ -142,8 +153,13 @@ def _eval_group(kb, elements, filt):
     restrict to one graph (per-graph for ``GRAPH ?g``, §18.2.2.3)."""
     kb3 = [q[:3] for q in kb]
     sols = [{}]
+    exists = []
     for kind, payload in elements:
-        if kind == "triple":
+        if kind in ("exists", "not_exists"):
+            # group-scoped: applies after every element, wherever
+            # it is written
+            exists.append((kind == "exists", payload))
+        elif kind == "triple":
             sols = [m for mu in sols for m in _match(kb3, payload, mu)]
         elif kind == "optional":
             sub = _eval_patterns(kb3, payload)
@@ -176,6 +192,11 @@ def _eval_group(kb, elements, filt):
             sub = _eval_patterns(kb3, left) + _eval_patterns(kb3, right)
             sols = [dict(mu, **nu) for mu in sols for nu in sub
                     if _compatible(mu, nu)]
+        elif kind == "values":
+            var, vals = payload
+            sub = [{} if v is None else {var: v} for v in vals]
+            sols = [dict(mu, **nu) for mu in sols for nu in sub
+                    if _compatible(mu, nu)]
         else:  # minus
             sub = _eval_patterns(kb3, payload)
             sols = [
@@ -185,6 +206,11 @@ def _eval_group(kb, elements, filt):
                     for nu in sub
                 )
             ]
+    for keep_if_found, pats in exists:
+        # EXISTS over a BGP: some sub-solution is compatible with mu
+        sub = _eval_patterns(kb3, pats)
+        sols = [mu for mu in sols
+                if any(_compatible(mu, nu) for nu in sub) == keep_if_found]
     if filt is not None:
         op, var, const = filt
         def keep(mu):
@@ -218,6 +244,8 @@ def _in_scope_vars(elements):
             for pats in payload:
                 for pat in pats:
                     vs |= {t[1] for t in pat if isinstance(t, tuple)}
+        elif kind == "values":
+            vs.add(payload[0])
     return vs
 
 
@@ -241,8 +269,15 @@ def _render(elements, filt) -> str:
                 for pats in payload
             ]
             parts.append(f"{{ {arms[0]} }} UNION {{ {arms[1]} }}")
+        elif kind == "values":
+            var, vals = payload
+            rows = " ".join("UNDEF" if v is None else _render_term(v)
+                            for v in vals)
+            parts.append(f"VALUES ?{var} {{ {rows} }}")
         else:
-            kw = "OPTIONAL" if kind == "optional" else "MINUS"
+            kw = {"optional": "OPTIONAL", "minus": "MINUS",
+                  "exists": "FILTER EXISTS",
+                  "not_exists": "FILTER NOT EXISTS"}[kind]
             inner = " . ".join(
                 " ".join(_render_term(t) for t in pat) for pat in payload
             )
