@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgap_spark import schemas as S
-from kgap_spark.session import local_frame
+from kgap_spark.session import job_description, local_frame
 from kgap_spark.triples.materialize import build_triples, graph_of
 from kgap_spark.triples.writer import TripleStore
 
@@ -109,6 +109,10 @@ def run_pipeline_resumable(
     concurrently: canonicalization of the dictionary on a second thread,
     extract → detect → link of the pending pages on this one. The
     triples are then checkpointed once for the counts and the write.
+    Every job carries its stage as job description (``runner: pending
+    pages`` / ``triples`` / ``counts``, ``writer: overwrite_graphs``,
+    ``lineage: append``, and ``build_triples``' branch names), so the UI
+    and event log attribute it; the caller's description is restored.
 
     A site whose graph equals the dictionary graph (``https://dict.…``)
     raises ``ValueError`` before any triples are built: its page triples
@@ -133,11 +137,12 @@ def run_pipeline_resumable(
     # (previously three separate actions re-scanned pages + the
     # anti-join each time — the dominant cost of a mostly-done resume);
     # the groupBy keys double as the distinct graph list
-    pending_pages = pending_pages.localCheckpoint(eager=True)
-    rows_in = {
-        r.graph: r.n
-        for r in pending_pages.groupBy("graph").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
+    with job_description(spark, "runner: pending pages"):
+        pending_pages = pending_pages.localCheckpoint(eager=True)
+        rows_in = {
+            r.graph: r.n
+            for r in pending_pages.groupBy("graph").agg(F.count(F.lit(1)).alias("n")).collect()
+        }
     pending_graphs = sorted(rows_in)
     if S.GRAPH_DICT in rows_in:
         # graph_of(url) of a site named like the dictionary graph: its
@@ -158,22 +163,24 @@ def run_pipeline_resumable(
         # output holds exactly the pending graphs plus the dictionary
         # graph (a partial input still yields complete per-graph output
         # because graphs are site-disjoint)
-        triples = build_triples(pending_pages.drop("graph"), alias_dict)
-        if not include_dict_graph:
-            triples = triples.filter(F.col("graph") != S.GRAPH_DICT)
-
-        triples = triples.localCheckpoint(eager=True)  # compute once: counts + write
-        counts = (
-            triples.groupBy("graph")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("pred") == S.PRED_MENTIONS).cast("long")).alias("nm"),
+        with job_description(spark, "runner: triples"):
+            triples = build_triples(pending_pages.drop("graph"), alias_dict)
+            if not include_dict_graph:
+                triples = triples.filter(F.col("graph") != S.GRAPH_DICT)
+            triples = triples.localCheckpoint(eager=True)  # compute once: counts + write
+        with job_description(spark, "runner: counts"):
+            counts = (
+                triples.groupBy("graph")
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum((F.col("pred") == S.PRED_MENTIONS).cast("long")).alias("nm"),
+                )
+                .collect()
             )
-            .collect()
-        )
         n_triples_by_graph = {r.graph: r.n for r in counts}
         n_mentions_by_graph = {r.graph: r.nm for r in counts}
-        store.overwrite_graphs(triples)
+        with job_description(spark, "writer: overwrite_graphs"):
+            store.overwrite_graphs(triples)
 
     wall_ms = int((time.monotonic() - t0) * 1000)
     for g in pending_graphs:
@@ -194,7 +201,8 @@ def run_pipeline_resumable(
             dict(graph=g, run_id=run_id, rows_in=None, triples_out=None,
                  status="failed")
         )
-    lineage.append(metrics_rows)
+    with job_description(spark, "lineage: append"):
+        lineage.append(metrics_rows)
     return {
         "run_id": run_id,
         "graphs_done": pending_graphs,

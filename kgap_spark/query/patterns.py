@@ -11,10 +11,10 @@ then reorders/broadcasts. The canned accounting queries at the end are
 plain DataFrame aggregates the registered workload calls directly.
 
 Scale design: each pattern's slice starts with a ``pred = <iri>``
-filter — with the triple table partitioned by graph and the store
-sorted/bucketed by subj, this is a pruned scan; the joins are plain
-equi-joins AQE can re-plan (broadcast for selective slices, skew-split
-for hub subjects).
+filter — the store sorts every file by ``(graph, pred, obj, subj)``, so
+parquet pushdown skips the row groups of other predicates; the joins
+are plain equi-joins AQE can re-plan (broadcast for selective slices,
+skew-split for hub subjects).
 """
 
 from __future__ import annotations

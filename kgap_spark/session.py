@@ -12,6 +12,7 @@ default.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType, StructType
@@ -57,6 +58,20 @@ def local_frame(
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema)
+
+
+@contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Describe the jobs this thread starts inside the block as
+    ``text``, then restore the caller's description (a job group set
+    by the caller is left as it is)."""
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(caller)
 
 
 def get_spark(
@@ -127,8 +142,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("KGAP_DRIVER_MEM", "8g"))
         .config("spark.sql.parquet.compression.codec", "snappy")
         # commit v2: task outputs move to the destination at task
-        # commit instead of a serial driver-side rename pass — the
-        # dynamic-partition-overwrite commit path stays correct and the
+        # commit instead of a serial driver-side rename pass, so the
         # job-commit critical section shrinks (matters with hundreds of
         # graph partitions)
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")

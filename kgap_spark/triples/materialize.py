@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgap_spark import schemas as S
+from kgap_spark.session import job_description
 
 _SITE_RE = r"https?://([^./]+)\."
 
@@ -141,26 +142,24 @@ def build_triples(
 
     from kgap_spark.canonicalize import canonical_mapping
 
-    sc = pages.sparkSession.sparkContext
+    spark = pages.sparkSession
     out: dict = {}
 
     def canonicalize() -> None:
-        sc.setJobDescription("build_triples: canonicalize")
         try:
             # referenced twice below (mention rewrite + dict triples):
             # materialized once, so the CC iterations run once
-            out["canon"] = canonical_mapping(alias_dict).localCheckpoint(eager=True)
+            with job_description(spark, "build_triples: canonicalize"):
+                out["canon"] = canonical_mapping(alias_dict).localCheckpoint(eager=True)
         except BaseException as e:  # re-raised on the caller's thread
             out["error"] = e
 
     worker = InheritableThread(target=canonicalize)
     worker.start()
-    caller_description = sc.getLocalProperty("spark.job.description")
     try:
-        sc.setJobDescription("build_triples: mentions")
-        linked = page_mentions(pages, alias_dict).distinct().localCheckpoint(eager=True)
+        with job_description(spark, "build_triples: mentions"):
+            linked = page_mentions(pages, alias_dict).distinct().localCheckpoint(eager=True)
     finally:
-        sc.setJobDescription(caller_description)
         worker.join()
     if "error" in out:
         raise out["error"]

@@ -77,10 +77,15 @@ than reading as an empty store; rewrite it into a new store.
 Layout for scale: within a snapshot dir, partition by ``graph`` (the
 query workload is graph-scoped: per-feed counts, graph-scoped
 import/export/clear — docs/components/ldes-consumer.md:330-336), after
-a range repartition by ``(graph, subj)`` so each file covers a subject
-range — subject-joins downstream read co-located files (bucketing
-analog). At 100 TB the manifest is the only driver-side state: one
-JSON entry per data file, bounded by that layout plus merge's
+a range repartition by ``(graph, pred, obj, subj)`` into one task per
+core, each sorted by that key and written with zstd. The order is
+GraphDB's predicate list (``enablePredicateList``,
+template-repo-config.ttl:33) as a file layout: each file holds a
+contiguous predicate range, so the ``pred = <iri>`` filter that opens
+every SPARQL pattern skips the row groups of other predicates through
+parquet min/max pushdown, and the repeated ``pred``/``obj`` runs encode
+small. At 100 TB the manifest is the only driver-side state: one JSON
+entry per data file, bounded by that layout plus merge's
 auto-compaction.
 """
 
@@ -104,6 +109,12 @@ from kgap_spark.session import local_frame
 # "Paris"@en and "Paris"@fr are distinct statements, so merge/delete
 # must key on all six columns or distinct literals silently collapse.
 QUAD_KEY = ["subj", "pred", "obj", "obj_lang", "obj_datatype", "graph"]
+
+# Physical layout of every data file: row order within a snapshot and
+# the parquet codec (the session default, snappy, stays for every other
+# writer).
+SORT_KEY = ("graph", "pred", "obj", "subj")
+CODEC = "zstd"
 
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
 
@@ -407,6 +418,7 @@ class TripleStore:
         (
             self._prep(df)
             .write.mode("error")
+            .option("compression", CODEC)
             .partitionBy("graph")
             .parquet(snap_dir)
         )
@@ -620,26 +632,25 @@ class TripleStore:
                 ).cast("string"),
             ).otherwise(F.col("graph")),
         )
-        n = max(self.spark.sparkContext.defaultParallelism * 2, 16)
-        # RANGE partition by (graph, subj). Three properties a plain
-        # hash-by-graph can't combine:
+        # RANGE partition by the sort key into one task per core. Three
+        # properties a plain hash-by-graph can't combine:
         #   1. balanced tasks — ranges are cut from a sampled row-count
         #      distribution, so task sizes are even regardless of how
         #      skewed the per-graph row counts are;
         #   2. no hub-graph straggler — a graph bigger than one task is
-        #      automatically split across consecutive subject ranges
-        #      (web feeds are Zipfian across sites; hash-by-graph pins
-        #      each graph to ONE task and the biggest feed serializes
-        #      the stage);
-        #   3. bounded file count — each task holds a CONTIGUOUS
-        #      (graph, subj) range, so total files ≈ n_graphs + n_tasks,
-        #      never tasks × graphs (which would make the commit's
-        #      file listing and the manifest grow by the product).
-        # The within-task sort keeps subjects clustered for downstream
-        # subject-join locality (bucketing analog).
-        return out.repartitionByRange(n, "graph", "subj").sortWithinPartitions(
-            "graph", "subj"
-        )
+        #      automatically split across consecutive key ranges (web
+        #      feeds are Zipfian across sites; hash-by-graph pins each
+        #      graph to ONE task and the biggest feed serializes the
+        #      stage);
+        #   3. bounded file count — each task holds a CONTIGUOUS key
+        #      range, so total files ≈ n_graphs + n_tasks, never
+        #      tasks × graphs (which would make the commit's file
+        #      listing and the manifest grow by the product).
+        # Within a graph the key is predicate-major, so files and their
+        # row groups cover narrow predicate ranges (see module docstring).
+        n = self.spark.sparkContext.defaultParallelism
+        return out.repartitionByRange(n, *SORT_KEY).sortWithinPartitions(
+            *SORT_KEY)
 
     def append(self, df: DataFrame) -> None:
         """Replication mode: immutable snapshot dir + add-files commit

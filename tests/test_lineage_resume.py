@@ -49,6 +49,32 @@ def test_fail_resume_idempotent(spark, tiny, tmp_path):
     assert {r.graph for r in failed_rows.collect()} == fail
 
 
+def test_every_run_job_is_described(spark, tiny, tmp_path):
+    """Each job of a run carries a stage description (the runner's own
+    stages and build_triples' branches), and the caller's description
+    is restored afterwards."""
+    sc = spark.sparkContext
+    status = sc._jsc.sc().statusStore()
+
+    def job_ids() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = status.jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    before = job_ids()
+    caller = sc.getLocalProperty("spark.job.description")
+    run_pipeline_resumable(
+        spark, tiny["web_pages"], tiny["alias_dict"],
+        TripleStore(spark, str(tmp_path / "triples")),
+        LineageLog(spark, str(tmp_path / "lineage")))
+    launched = job_ids() - before
+    assert launched
+    undescribed = sorted(j for j in launched
+                         if not status.job(j).description().isDefined())
+    assert undescribed == []
+    assert sc.getLocalProperty("spark.job.description") == caller
+
+
 def test_latest_wins_increments(spark, tiny, tmp_path):
     """Versioned-member materialization (U6): processing the increments
     fixture batch-by-batch with merge keeps one latest row per url."""

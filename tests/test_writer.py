@@ -203,8 +203,8 @@ def test_store_ops_work_with_uri_scheme(spark, tiny, tmp_path):
 
 
 def test_write_layout_is_range_partitioned(spark, tiny):
-    """The write shuffle must be RangePartitioning on (graph, subj):
-    balanced tasks + hub-graph splitting + bounded file count."""
+    """The write shuffle must be RangePartitioning on (graph, pred, obj,
+    subj): balanced tasks + hub-graph splitting + bounded file count."""
     from kgap_spark.triples import TripleStore, build_triples
 
     store = TripleStore(spark, "/tmp/unused-layout-probe")
@@ -246,10 +246,127 @@ def test_write_layout_splits_hub_graph_bounds_files(spark, tmp_path):
     snaps = tmp_path / "t" / "_data" / "snap-*"
     hub_files = glob.glob(str(snaps / "graph=urn%3Ahub" / "*.parquet"))
     all_files = glob.glob(str(snaps / "graph=*" / "*.parquet"))
-    n_tasks = max(spark.sparkContext.defaultParallelism * 2, 16)
+    n_tasks = spark.sparkContext.defaultParallelism
     assert len(hub_files) > 1                       # hub is split
     assert len(all_files) <= 21 + n_tasks           # bounded, not tasks*graphs
     assert store.read().count() == 101_000
+
+
+def _data_files(root) -> list[str]:
+    import glob
+
+    return sorted(glob.glob(str(root / "_data" / "snap-*" / "graph=*"
+                                / "*.parquet")))
+
+
+def test_data_files_are_predicate_major_and_zstd(spark, tmp_path):
+    """Every data file of a snapshot is sorted by (pred, obj, subj)
+    within its graph and compressed with zstd."""
+    import pyarrow.parquet as pq
+
+    rows = spark.range(0, 6000).select(
+        F.concat(F.lit("urn:s:"), F.col("id")).alias("subj"),
+        F.concat(F.lit("urn:p:"), F.col("id") % 3).alias("pred"),
+        (F.col("id") % 7).cast("string").alias("obj"),
+        F.lit(None).cast("string").alias("obj_lang"),
+        F.lit(None).cast("string").alias("obj_datatype"),
+        F.concat(F.lit("urn:g:"), F.col("id") % 2).alias("graph"),
+        F.lit(None).cast("string").alias("src_url"),
+    )
+    TripleStore(spark, str(tmp_path / "t")).append(rows)
+    files = _data_files(tmp_path / "t")
+    assert files
+    n = 0
+    for path in files:
+        f = pq.ParquetFile(path)
+        t = f.read(columns=["pred", "obj", "subj"]).to_pydict()
+        keys = list(zip(t["pred"], t["obj"], t["subj"]))
+        assert keys == sorted(keys), path
+        n += len(keys)
+        meta = f.metadata
+        assert {meta.row_group(i).column(j).compression
+                for i in range(meta.num_row_groups)
+                for j in range(meta.num_columns)} == {"ZSTD"}, path
+    assert n == 6000
+
+
+def _scan_output_rows(df) -> int:
+    """Rows the parquet scans of ``df``'s executed plan emitted."""
+    stack, total = [df._jdf.queryExecution().executedPlan()], 0
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if kind == "FileSourceScanExec":
+            total += node.metrics().apply("numOutputRows").value()
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return total
+
+
+def test_predicate_filter_skips_other_predicates_row_groups(spark, tmp_path):
+    """With small row groups, a ``pred = <iri>`` scan of one graph reads
+    little more than that predicate's rows: the store's predicate-major
+    files let parquet min/max pushdown skip the other row groups."""
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    old = hconf.get("parquet.block.size")
+    hconf.set("parquet.block.size", str(16 * 1024))
+    try:
+        rows = spark.range(0, 40_000).select(
+            F.concat(F.lit("urn:s:"), F.col("id")).alias("subj"),
+            F.concat(F.lit("urn:p:"), F.col("id") % 4).alias("pred"),
+            F.concat(F.lit("value "), F.col("id")).alias("obj"),
+            F.lit(None).cast("string").alias("obj_lang"),
+            F.lit(None).cast("string").alias("obj_datatype"),
+            F.lit("urn:g:one").alias("graph"),
+            F.lit(None).cast("string").alias("src_url"),
+        )
+        store = TripleStore(spark, str(tmp_path / "t"))
+        store.append(rows)
+    finally:
+        if old is None:
+            hconf.unset("parquet.block.size")
+        else:
+            hconf.set("parquet.block.size", old)
+    one = store.read().filter(F.col("pred") == "urn:p:2")
+    assert len(one.collect()) == 10_000
+    assert _scan_output_rows(one) <= 40_000 // 2
+
+
+def test_snappy_snapshots_read_merge_and_compact_to_zstd(spark, tmp_path,
+                                                         monkeypatch):
+    """A store whose first commit was written with snappy keeps
+    answering after a zstd merge, and compaction rewrites every live
+    file as zstd with the same rows."""
+    import pyarrow.parquet as pq
+
+    import kgap_spark.triples.writer as writer
+
+    def codecs(paths) -> set[str]:
+        return {pq.ParquetFile(str(p)).metadata.row_group(0).column(0)
+                .compression for p in paths}
+
+    g = "urn:g:old"
+    store = TripleStore(spark, str(tmp_path / "t"))
+    monkeypatch.setattr(writer, "CODEC", "snappy")
+    store.append(_quads(spark, [(f"s{i}", "p", str(i), g) for i in range(50)]))
+    monkeypatch.undo()
+    assert codecs(_data_files(tmp_path / "t")) == {"SNAPPY"}
+
+    store.merge(_quads(spark, [("s0", "p", "0", g), ("new", "q", "x", g)]))
+    want = {(f"s{i}", "p", str(i)) for i in range(50)} | {("new", "q", "x")}
+    got = [(r.subj, r.pred, r.obj) for r in store.read().collect()]
+    assert sorted(got) == sorted(want)
+    assert codecs(_data_files(tmp_path / "t")) == {"SNAPPY", "ZSTD"}
+
+    store.compact()
+    live = [tmp_path / "t" / "_data" / e["path"]
+            for e in store._files(store.current_version())]
+    assert codecs(live) == {"ZSTD"}
+    got = [(r.subj, r.pred, r.obj) for r in store.read().collect()]
+    assert sorted(got) == sorted(want)
 
 
 def test_merge_many_graphs_broadcast_fallback(spark, tmp_path, monkeypatch):
